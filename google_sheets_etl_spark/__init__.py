@@ -18,8 +18,9 @@ Architecture (SURVEY.md §7):
   hashes) built on pyspark.sql.functions only (JVM-side, codegen-able).
 - ``streaming/``  — Structured Streaming ingest (extension; the
   reference is batch-polling only, SURVEY.md §2.7).
-- ``etl.py``      — orchestration: discover / filter_extractable /
-  load_sheet / verify_oldest (O1-O6).
+- ``etl.py``      — orchestration: discover / batched load pass
+  (change filter, driver-side headers, one write per target table,
+  one accounting apply) / verify_oldest (O1-O6).
 """
 
 __version__ = "0.1.0"

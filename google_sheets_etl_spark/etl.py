@@ -3,45 +3,68 @@
 The reference's ``Tasks`` class (``src/Tasks.php``) drives three passes:
 delta discovery (O1), incremental load (O2/O3), and an access-
 revocation probe (O4). This module re-expresses them over the Spark
-building blocks: watermark reads (A1/A2), the left-anti change filter
-(J2+J3), the sheet kernel (T1-T6), hash short-circuit (U3), and
+building blocks: watermark reads (A1/A2), the change filter (J2+J3),
+the sheet kernel (T1-T6), hash short-circuit (U3), and
 partition-overwrite loads (U4/U5).
+
+A load pass (``load_updated_spreadsheets``; ``load_sheet`` is its
+one-job form) costs a fixed number of Spark jobs whatever the number
+of changed sheets: one metadata query answers the change filter and
+the J1 lookups for every job; headers resolve on the driver from the
+rows the fetch already returned; each target table takes one dynamic
+partition overwrite of its changed jobs' union; one accounting upsert
+applies the whole pass. New jobs get ids past the accounting max table
+by table, in the order the tables are written (job order within a
+table). ``_rowid`` (when on) is allocated per table write: gapless past
+the table max, in ``(job id, _origin_row)`` order.
 
 Atomicity ordering (U6, SURVEY.md §7.4): the reference wraps
 hash-check + accounting + delete + insert in one RDBMS transaction
 (``DatabaseAgentMysql.php:195-292``). Across two parquet tables there is
 no multi-table transaction, so the engine makes the data write
 idempotent (dynamic partition overwrite of the job's partition) and
-commits accounting through a PER-JOB COMMIT MANIFEST: after the data
-write, the accounting row is staged as a manifest file whose atomic
-rename is THE commit point; the manifest is then applied to the
-``etl_jobs`` table and cleared. Every crash window resolves to a
-consistent state:
+commits accounting through a PER-JOB COMMIT MANIFEST: after the job's
+target-table write, its accounting row is staged as a manifest file
+whose atomic rename is THE job's commit point; at the end of the pass
+every manifest is applied to the ``etl_jobs`` table in one upsert and
+cleared. Every crash window resolves to a consistent state:
 
-- crash before the manifest rename → accounting is fully-old; the next
-  run re-selects the job and idempotently rewrites the same partition;
-- crash after the rename but before the accounting apply → the next
-  engine startup (``set_up_accounting`` / ``load_updated_spreadsheets``)
-  replays pending manifests, landing accounting fully-new without
-  re-reading the sheet;
+- a failed or crashed table write → none of that table's jobs has a
+  manifest, so their accounting is fully-old and the next run
+  re-selects them (jobs of tables written earlier in the pass are
+  unaffected). A job that already had an id rewrites its own
+  partition. A new job's id is stable across a crash: the tables
+  written before the crash hold the lowest new ids, so the retry
+  (same job list) gives the unwritten jobs the same ids and
+  overwrites whatever of theirs had landed. A table write that
+  raises is different: later tables of the pass may commit higher
+  ids, so the pass first deletes what landed under its new jobs' ids
+  (the zero-row deletes run before the overwrite, so a failure there
+  lands no new data);
+- crash after a job's rename but before the pass's accounting apply →
+  the next engine startup (``set_up_accounting`` /
+  ``load_updated_spreadsheets``) replays pending manifests, landing
+  accounting fully-new without re-reading the sheet;
 - the apply itself is an idempotent keyed upsert, so replaying an
   already-applied manifest is a no-op.
 
 Accounting consumers (change filter J2/J3, hash short-circuit U3)
-therefore observe either the fully-old or the fully-new transaction,
-never a torn one — the reference's single-txn guarantee, re-expressed.
-(Manifest files use the same local-fs atomic-``os.replace`` discipline
-as ``StateTable``'s snapshot pointer; on an object store both would
-move to a rename-capable layer together.)
+therefore observe, per job, either the fully-old or the fully-new
+transaction, never a torn one — the reference's single-txn guarantee,
+re-expressed. (Manifest files use the same local-fs atomic-``os.replace``
+discipline as ``StateTable``'s snapshot pointer; on an object store both
+would move to a rename-capable layer together.)
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType, LongType, StringType, StructField, StructType,
@@ -108,6 +131,25 @@ class LoadResult:
     skipped_unchanged: bool
     rows_loaded: int
     etl_job_id: int
+
+
+@dataclass
+class _Load:
+    """One changed job of a load pass, fetched and resolved on the
+    driver, waiting for its target table's write."""
+    job: EtlJob
+    etl_job_id: int | None  # None until the pass allocates a new job's id
+    spreadsheet_id: int
+    google_modified: str
+    content_hash: str
+    rows: list[list[str]]
+    selectors: list[int]
+    new: bool = False
+
+    @property
+    def rows_loaded(self) -> int:
+        """Raw rows at or past ``skip_rows`` — what the kernel emits."""
+        return max(0, len(self.rows) - max(0, self.job.skip_rows))
 
 
 class SheetsEtlEngine:
@@ -181,9 +223,10 @@ class SheetsEtlEngine:
                     google_modified: str, content_hash: str) -> None:
         """The load transaction's single commit point: stage the
         accounting row as a manifest file and atomically rename it into
-        place, THEN apply it to ``etl_jobs``. The rename is what makes
-        the transaction durable — everything before it is invisible to
-        accounting consumers; everything after it is replayable."""
+        place. The rename is what makes the transaction durable —
+        everything before it is invisible to accounting consumers;
+        everything after it is replayable. The load pass applies all of
+        its manifests at once (``_apply_pending_commits``)."""
         import json
 
         os.makedirs(self._commits_dir(), exist_ok=True)
@@ -203,7 +246,6 @@ class SheetsEtlEngine:
         with open(tmp, "w") as fh:
             json.dump(row, fh)
         os.replace(tmp, final)  # atomic on POSIX — the commit point
-        self._apply_pending_commits()
 
     def _apply_pending_commits(self) -> None:
         """Fold every committed manifest into ``etl_jobs`` and clear it.
@@ -417,32 +459,41 @@ class SheetsEtlEngine:
 
     def record_spreadsheets_seen(self, metas, now: int) -> None:
         """U1 bulk upsert (``DatabaseAgentMysql.php:130-149``):
-        surrogate keys preserved for existing rows via one join,
-        allocated past the current max for new ones — ONE state commit
-        for the whole discovery page (≤ discovery_cap rows) instead of
-        two driver actions + a snapshot write per file (the reference
-        pays one cheap SQL statement per row; a Spark job per row is
-        ~1 s of fixed overhead × 200)."""
+        surrogate keys preserved for existing rows, allocated past the
+        current max for new ones in ``google_spreadsheet_id`` order —
+        ONE small lookup query (the page's existing ids plus the max)
+        and ONE state commit of a driver-built frame for the whole
+        discovery page (≤ discovery_cap rows) instead of two driver
+        actions + a snapshot write per file (the reference pays one
+        cheap SQL statement per row; a Spark job per row is ~1 s of
+        fixed overhead × 200). A file listed twice on one page keeps
+        its newest ``google_modified``."""
         if not metas:
             return
+        page: dict[str, SpreadsheetMeta] = {}
+        for m in metas:
+            if m.id not in page or m.modified_time > page[m.id].modified_time:
+                page[m.id] = m
         current = self.spreadsheets.read()
-        incoming = self.spark.createDataFrame(
-            [(m.id, m.modified_time, m.name) for m in metas],
-            "google_spreadsheet_id string, google_modified string, "
-            "google_spreadsheet_name string",
-        ).withColumn("last_seen", F.lit(now).cast("long"))
-        joined = incoming.join(
-            current.select("id", "google_spreadsheet_id"),
-            "google_spreadsheet_id", "left",
-        )
-        max_id = int(current.select(
-            F.coalesce(F.max("id"), F.lit(0)).alias("m")).first()["m"])
-        w = Window.orderBy("google_spreadsheet_id")  # deterministic allocation
-        news = joined.filter(F.col("id").isNull()).withColumn(
-            "id", (F.lit(max_id) + F.row_number().over(w)).cast("long"))
-        olds = joined.filter(F.col("id").isNotNull())
-        updates = olds.unionByName(news).select(
-            *[f.name for f in SPREADSHEETS_SCHEMA.fields])
+        gid = F.col("google_spreadsheet_id")
+        found = current.filter(gid.isin(list(page))).select(gid, "id")
+        top = current.select(
+            F.lit(None).cast("string").alias("google_spreadsheet_id"),
+            F.coalesce(F.max("id"), F.lit(0)).alias("id"))
+        ids: dict[str | None, set[int]] = {}
+        for r in found.unionByName(top).collect():
+            ids.setdefault(r["google_spreadsheet_id"], set()).add(int(r["id"]))
+        [max_id] = ids.pop(None)
+        for g in sorted(g for g in page if g not in ids):
+            max_id += 1
+            ids[g] = {max_id}
+        # a file older discovery code gave two surrogate ids keeps both:
+        # the load pass fails its jobs rather than guess which one its
+        # etl_jobs rows point at
+        updates = self.spark.createDataFrame(
+            [(i, g, m.modified_time, m.name, now)
+             for g, m in page.items() for i in sorted(ids[g])],
+            SPREADSHEETS_SCHEMA)
         self.spreadsheets.upsert(updates, keys=["google_spreadsheet_id"])
 
     def set_spreadsheet_seen(self, gid: str, modified: str, name: str, now: int) -> None:
@@ -453,136 +504,246 @@ class SheetsEtlEngine:
     # -- O2: change filter -------------------------------------------------
 
     def filter_extractable(self, jobs: list[EtlJob]) -> list[EtlJob]:
-        """J2+J3 as one broadcast left-anti join (SURVEY.md §2.3)."""
-        if not jobs:
-            return []
-        configured = self.spark.createDataFrame(
-            [(j.google_spreadsheet_id, j.sheet_name) for j in jobs],
-            "google_spreadsheet_id string, sheet_name string")
-        extract = change_filter.filter_extractable(
-            configured, self.spreadsheets.read(), self.etl_jobs.read()
-        ).collect()  # metadata-sized (≤ number of configured jobs)
-        keep = {(r["google_spreadsheet_id"], r["sheet_name"]) for r in extract}
-        return [j for j in jobs if (j.google_spreadsheet_id, j.sheet_name) in keep]
+        """J2+J3 (SURVEY.md §2.3): the jobs a load pass would select,
+        in job order, from the pass's metadata query."""
+        lookups, _ = self._job_lookups(jobs)
+        selected = []
+        for job, found in zip(jobs, lookups):
+            try:
+                if not self._lookup(job, found)["extractable"]:
+                    continue
+            except ValueError:
+                pass  # the pass selects the job, then fails it
+            selected.append(job)
+        return selected
 
     def load_updated_spreadsheets(
         self, jobs: list[EtlJob], continue_on_error: bool = True
     ) -> list[LoadResult]:
-        """O2 (``Tasks.php:59-65``). Replays pending commit manifests
-        first so the change filter never re-selects a job whose load
-        committed but whose accounting apply was interrupted (U6).
+        """O2+O3 (``Tasks.php:59-65,103-143``) as one batched load pass
+        over the jobs the change filter selects; results come back in
+        job order. Replays pending commit manifests first so the change
+        filter never re-selects a job whose load committed but whose
+        accounting apply was interrupted (U6).
 
         Per-job error isolation (``continue_on_error``, default on —
         a reference fix-by-design like O4): one sheet with a renamed
-        header must not wedge every job ordered after it on every run.
-        Failures are collected on ``self.last_load_failures`` as
-        (job, exception) pairs and the batch continues; pass False for
-        the reference's abort-on-first behavior."""
+        header must not wedge every other job on every run. Failures
+        are collected on ``self.last_load_failures`` as (job,
+        exception) pairs in job order and the pass continues; pass
+        False to stop the pass at the first failure and raise it. The
+        pass's one accounting apply is not per job: if it fails, the
+        whole call raises (its manifests stay and the next run replays
+        them).
+
+        Raises ``ValueError`` when two jobs share a
+        ``(google_spreadsheet_id, sheet_name)`` key: both would load
+        into one accounting row."""
+        self.last_load_failures = []
+        seen: set[tuple[str, str]] = set()
+        for j in jobs:
+            key = (j.google_spreadsheet_id, j.sheet_name)
+            if key in seen:
+                raise ValueError(
+                    f"Duplicate job for spreadsheet {key[0]} sheet {key[1]}")
+            seen.add(key)
         self._apply_pending_commits()
-        results: list[LoadResult] = []
-        self.last_load_failures: list[tuple[EtlJob, Exception]] = []
-        for job in self.filter_extractable(jobs):
-            try:
-                results.append(self.load_sheet(job))
-            except Exception as exc:  # noqa: BLE001 — isolate per sheet
-                if not continue_on_error:
-                    raise
-                self.last_load_failures.append((job, exc))
+        results, self.last_load_failures = self._load_pass(
+            jobs, changed_only=True, continue_on_error=continue_on_error)
         return results
 
-    # -- O3: per-sheet ETL -------------------------------------------------
-
-    def _sheet_df(self, raw_rows: list[list[str]]) -> DataFrame:
-        data = [(i, [None if c is None else str(c) for c in r])
-                for i, r in enumerate(raw_rows)]
-        return self.spark.createDataFrame(data, SHEET_SCHEMA)
-
     def load_sheet(self, job: EtlJob) -> LoadResult:
-        """O3 (``Tasks.php:103-143``): fetch → resolve header → evolve
-        target → project → hash short-circuit → overwrite partition →
-        commit accounting last.
+        """O3 (``Tasks.php:103-143``) for one job, change filter or not:
+        the one-job form of the load pass. Raises the job's failure.
 
         Replays pending commit manifests first — this public entry can
-        be called directly (not only via ``load_updated_spreadsheets``),
-        and a crash in a previous run's rename→apply window would
-        otherwise leave its committed etl_job_id unknown to the
-        accounting max, letting a NEW sheet claim the same id (and,
-        sharing a target table, dynamically overwrite the committed
-        partition). Replay is idempotent and free when no manifests
-        are pending."""
+        be called directly, and a crash in a previous run's
+        rename→apply window would otherwise leave its committed
+        etl_job_id unknown to the accounting max, letting a NEW sheet
+        claim the same id (and, sharing a target table, dynamically
+        overwrite the committed partition). Replay is idempotent and
+        free when no manifests are pending."""
         self._apply_pending_commits()
-        raw_rows, content_hash = self.source.get_sheet(
-            job.google_spreadsheet_id, job.sheet_name)
+        results, _ = self._load_pass([job], changed_only=False, continue_on_error=False)
+        return results[0]
 
-        sheet = rows_ops.trim_cells(self._sheet_df(raw_rows))
+    # -- O3: the batched load pass -----------------------------------------
 
-        # T2 with the reference's contextual error wrapper (Tasks.php:116-123)
-        header = rows_ops.header_row(sheet, job.header_row)
-        out_names = list(job.column_mapping.keys())
+    def _job_lookups(self, jobs: list[EtlJob]) -> tuple[list[list], int]:
+        """The pass's one metadata query: the change filter (J2+J3) and
+        the J1 lookups, as the rows found for each job in job order,
+        plus the current max etl job id. A job has exactly one row
+        unless the accounting holds duplicates (``_lookup`` rejects
+        those)."""
+        if not jobs:
+            return [], 0
+        configured = self.spark.createDataFrame(
+            [(i, j.google_spreadsheet_id, j.sheet_name) for i, j in enumerate(jobs)],
+            "pos int, google_spreadsheet_id string, sheet_name string")
+        etl_jobs = self.etl_jobs.read()
+        top = etl_jobs.agg(F.coalesce(F.max("id"), F.lit(0)).alias("max_id"))
+        rows = change_filter.job_lookups(
+            configured, self.spreadsheets.read(), etl_jobs
+        ).crossJoin(top).collect()  # metadata-sized: one row per job
+        found: list[list] = [[] for _ in jobs]
+        for r in rows:
+            found[r["pos"]].append(r)
+        return found, max((int(r["max_id"]) for r in rows), default=0)
+
+    @staticmethod
+    def _lookup(job: EtlJob, found: list):
+        """The job's one lookup row. Several rows mean duplicated
+        accounting rows. Duplicates of one file under one surrogate id
+        differ only in ``seen_modified``: the newest wins. Any other
+        duplicate (two surrogate ids for one file, two ``etl_jobs``
+        rows for one sheet) fails the job: picking one could load the
+        sheet under another job's partition."""
+        if len({(r["spreadsheet_id"], r["etl_job_id"]) for r in found}) != 1:
+            raise ValueError(
+                f"Expected one accounting row for spreadsheet "
+                f"{job.google_spreadsheet_id} sheet {job.sheet_name}, found "
+                f"{len(found)} (spreadsheet ids "
+                f"{sorted({r['spreadsheet_id'] for r in found})}, etl job ids "
+                f"{sorted({r['etl_job_id'] for r in found}, key=str)})")
+        return max(found, key=lambda r: r["seen_modified"] or "")
+
+    def _selectors(self, job: EtlJob, raw_rows: list[list[str]]) -> list[int]:
+        """T1+T2 on the driver, with the reference's contextual error
+        wrapper (``Tasks.php:116-123``)."""
+        header = rows_ops.raw_header(raw_rows, job.header_row)
         try:
-            selectors = rows_ops.resolve_column_selectors(
+            return rows_ops.resolve_column_selectors(
                 header, list(job.column_mapping.values()))
         except Exception as e:
             raise type(e)(
                 f"{e} in spreadsheet https://docs.google.com/spreadsheets/d/"
                 f"{job.google_spreadsheet_id} sheet {job.sheet_name}") from e
 
-        # accounting lookups (J1)
-        sheets_meta = self.spreadsheets.read()
-        meta = sheets_meta.filter(
-            F.col("google_spreadsheet_id") == job.google_spreadsheet_id).first()
-        if meta is None:
-            raise KeyError(
-                f"Spreadsheet not in accounting (run discovery first): "
-                f"{job.google_spreadsheet_id}")
-        jobs_meta = self.etl_jobs.read()
-        existing = jobs_meta.filter(
-            (F.col("spreadsheet_id") == int(meta["id"]))
-            & (F.col("sheet_name") == job.sheet_name)).first()
+    def _sheet_df(self, raw_rows: list[list[str]]) -> DataFrame:
+        data = [(i, [None if c is None else str(c) for c in r])
+                for i, r in enumerate(raw_rows)]
+        return self.spark.createDataFrame(data, SHEET_SCHEMA)
 
-        # U3: hash short-circuit — advance accounting only, skip the load
-        if existing is not None and existing["raw_columns_rows_hash"] == content_hash:
-            self._commit_job(
-                int(existing["id"]), int(meta["id"]), job,
-                meta["google_modified"], content_hash)
-            return LoadResult(job, True, 0, int(existing["id"]))
-
-        if existing is None:
-            max_id = jobs_meta.select(
-                F.coalesce(F.max("id"), F.lit(0)).alias("m")).first()["m"]
-            etl_job_id = int(max_id) + 1
-        else:
-            etl_job_id = int(existing["id"])
-
-        # T3/T4/T5/T6 + VARCHAR(100) parity → partitioned write (U4/U5)
-        names = normalized_column_names(out_names)
-        data = rows_ops.project_rows(sheet, selectors, names, job.skip_rows)
+    def _kernel(self, load: _Load) -> DataFrame:
+        """T1/T3/T4/T6 + VARCHAR(100) parity for one job's rows."""
+        job = load.job
+        sheet = rows_ops.trim_cells(self._sheet_df(load.rows))
+        names = normalized_column_names(list(job.column_mapping.keys()))
+        data = rows_ops.project_rows(sheet, load.selectors, names, job.skip_rows)
         data = rows_ops.enforce_cell_width(data, 100)
-        data = rows_ops.with_provenance(data, etl_job_id)
-        # single-pass load: the row count rides the WRITE action as an
-        # observed metric instead of a separate count() action — the
-        # previous two-action form computed the whole trim/project/
-        # provenance pipeline twice per sheet. Write-first is safe:
-        # a dynamic overwrite of an empty frame replaces NOTHING, so
-        # when the observed count is 0 the partition is then cleared
-        # explicitly (reference semantics: unconditional DELETE — the
-        # reload-to-empty case keeps its r3 regression test).
-        from pyspark.sql import Observation
+        return rows_ops.with_provenance(data, load.etl_job_id)
 
-        obs = Observation(f"load_{etl_job_id}")
-        data = data.observe(obs, F.count(F.lit(1)).alias("n"))
-        self.target(job.target_table).overwrite_job_partition(
-            data, with_rowid=self.rowid)
-        rows_loaded = int(obs.get["n"])
-        if rows_loaded == 0:
-            self.target(job.target_table).delete_job_partition(etl_job_id)
+    def _write_table(self, table: str, loads: list[_Load]) -> None:
+        """U4/U5 for every changed job of one target table: the DELETE
+        of each zero-row job's partition (an empty frame replaces
+        nothing, and the reference's DELETE has no incoming-rows
+        precondition), then one dynamic partition overwrite of the
+        other jobs' union. The deletes go first so that a failure
+        before the overwrite lands no new data."""
+        target = self.target(table)
+        for ld in loads:
+            if not ld.rows_loaded:
+                target.delete_job_partition(ld.etl_job_id)
+        written = [ld for ld in loads if ld.rows_loaded]
+        if written:
+            data = functools.reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                [self._kernel(ld) for ld in written])
+            target.overwrite_job_partition(
+                data, with_rowid=self.rowid,
+                job_rows={ld.etl_job_id: ld.rows_loaded for ld in written})
 
-        # U2/U6: the commit manifest lands LAST — its atomic rename is
-        # the transaction's commit point; the accounting apply it
-        # triggers is replayable from the manifest after any crash
-        self._commit_job(
-            etl_job_id, int(meta["id"]), job, meta["google_modified"], content_hash)
-        return LoadResult(job, False, rows_loaded, etl_job_id)
+    def _drop_new_partitions(self, table: str, loads: list[_Load]) -> None:
+        """After a failed table write: remove whatever landed for its
+        new jobs. Their ids are uncommitted, and a retry may give them
+        other ids, so a landed partition would duplicate their rows."""
+        target = self.target(table)
+        for ld in loads:
+            if ld.new:
+                with contextlib.suppress(Exception):  # the write's error is reported
+                    target.delete_job_partition(ld.etl_job_id)
+
+    def _load_pass(
+        self, jobs: list[EtlJob], changed_only: bool, continue_on_error: bool
+    ) -> tuple[list[LoadResult], list[tuple[EtlJob, Exception]]]:
+        """Fetch each selected sheet and resolve its header on the
+        driver; hash-skip (U3) or queue it for its target table; give
+        new jobs ``max+1, max+2, …`` table by table in write order (job
+        order within a table); write each target table once; stage one
+        commit manifest per job after its table's write; apply every
+        manifest with one accounting upsert."""
+        results: dict[int, LoadResult] = {}
+        failures: dict[int, tuple[EtlJob, Exception]] = {}
+        by_table: dict[str, list[tuple[int, _Load]]] = {}
+        try:
+            lookups, max_id = self._job_lookups(jobs)
+            for pos, (job, found) in enumerate(zip(jobs, lookups)):
+                try:
+                    m = self._lookup(job, found)
+                    if changed_only and not m["extractable"]:
+                        continue
+                    raw_rows, content_hash = self.source.get_sheet(
+                        job.google_spreadsheet_id, job.sheet_name)
+                    selectors = self._selectors(job, raw_rows)
+                    if m["spreadsheet_id"] is None:
+                        raise KeyError(
+                            f"Spreadsheet not in accounting (run discovery first): "
+                            f"{job.google_spreadsheet_id}")
+                    etl_job_id = m["etl_job_id"]
+                    if etl_job_id is not None and m["raw_columns_rows_hash"] == content_hash:
+                        # U3: hash short-circuit — advance accounting only
+                        self._commit_job(etl_job_id, m["spreadsheet_id"], job,
+                                         m["seen_modified"], content_hash)
+                        results[pos] = LoadResult(job, True, 0, etl_job_id)
+                        continue
+                    by_table.setdefault(job.target_table, []).append((pos, _Load(
+                        job, etl_job_id, m["spreadsheet_id"], m["seen_modified"],
+                        content_hash, raw_rows, selectors)))
+                except Exception as exc:  # noqa: BLE001 — isolate per sheet
+                    if not continue_on_error:
+                        raise
+                    failures[pos] = (job, exc)
+
+            # ids in write order: a crash leaves the committed new ids a
+            # prefix, so the retry gives the uncommitted jobs the same ids
+            # and its overwrite replaces whatever of theirs had landed
+            for loads in by_table.values():
+                for _pos, ld in loads:
+                    if ld.etl_job_id is None:
+                        max_id += 1
+                        ld.etl_job_id, ld.new = max_id, True
+
+            for table, loads in by_table.items():
+                try:
+                    self._write_table(table, [ld for _pos, ld in loads])
+                except Exception as exc:  # noqa: BLE001 — isolate per table
+                    self._drop_new_partitions(table, [ld for _pos, ld in loads])
+                    if not continue_on_error:
+                        raise
+                    failures.update((pos, (ld.job, exc)) for pos, ld in loads)
+                    continue
+                for pos, ld in loads:
+                    # U2/U6: the manifest lands after the table's write —
+                    # its atomic rename is the job's commit point
+                    try:
+                        self._commit_job(ld.etl_job_id, ld.spreadsheet_id, ld.job,
+                                         ld.google_modified, ld.content_hash)
+                    except Exception as exc:  # noqa: BLE001
+                        if not continue_on_error:
+                            raise
+                        failures[pos] = (ld.job, exc)
+                        continue
+                    results[pos] = LoadResult(ld.job, False, ld.rows_loaded, ld.etl_job_id)
+        except BaseException:
+            # apply what committed, but report the pass's own error; a
+            # failed apply is replayed by the next run
+            with contextlib.suppress(Exception):
+                self._apply_pending_commits()
+            raise
+        # the pass's one accounting apply, replayable after any crash
+        self._apply_pending_commits()
+        return ([results[p] for p in sorted(results)],
+                [failures[p] for p in sorted(failures)])
 
     # -- O4: access-revocation probe --------------------------------------
 

@@ -3,14 +3,16 @@
 The reference answers this with a SQL left-join + row-value ``IN``
 returning *up-to-date* jobs, then a PHP set-difference keeping the rest
 (``src/DatabaseAgentMysql.php:52-87``). Both halves collapse into one
-Catalyst-native ``left_anti`` join here (SURVEY.md §2.3 J2/J3):
+Catalyst-native plan here (SURVEY.md §2.3 J2/J3):
 
-    configured jobs  ANTI JOIN  up-to-date jobs
-    where up-to-date = etl_jobs ⋈ spreadsheets ON spreadsheet_id
-                       AND loaded google_modified == seen google_modified
+    configured jobs  LEFT JOIN  spreadsheets  LEFT JOIN  etl_jobs
+    up-to-date = loaded google_modified == seen google_modified
 
 A job is extractable when it was never loaded OR its spreadsheet's
 seen ``google_modified`` differs from the one recorded at last load.
+The same left joins carry the J1 lookups a load needs (the
+spreadsheet's surrogate id, the job's etl id and content hash), so one
+metadata query answers the filter and the lookups together.
 
 Scale: configs and accounting are metadata tables (≤ millions of rows,
 small relative to data) — Catalyst picks broadcast-hash for both joins
@@ -22,21 +24,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def up_to_date_jobs(spreadsheets: DataFrame, etl_jobs: DataFrame) -> DataFrame:
-    """J2 (SQL half): configured pairs whose recorded load matches the
-    currently-seen ``google_modified`` (``DatabaseAgentMysql.php:64-71``)."""
+def job_lookups(
+    configured: DataFrame, spreadsheets: DataFrame, etl_jobs: DataFrame
+) -> DataFrame:
+    """J1+J2+J3: every configured ``(google_spreadsheet_id,
+    sheet_name)`` row with ``spreadsheet_id`` and ``seen_modified``
+    (null when discovery never saw the file), ``etl_job_id``,
+    ``loaded_modified`` and ``raw_columns_rows_hash`` (null when never
+    loaded), and ``extractable``. Up-to-date is the SQL equality of the
+    two ``google_modified`` values (``DatabaseAgentMysql.php:64-71``),
+    so a null on either side is extractable."""
+    seen = spreadsheets.select(
+        "google_spreadsheet_id",
+        F.col("id").alias("spreadsheet_id"),
+        F.col("google_modified").alias("seen_modified"),
+    )
+    loaded = etl_jobs.select(
+        "spreadsheet_id",
+        "sheet_name",
+        F.col("id").alias("etl_job_id"),
+        F.col("google_modified").alias("loaded_modified"),
+        "raw_columns_rows_hash",
+    )
     return (
-        etl_jobs.alias("j")
-        .join(
-            F.broadcast(spreadsheets.alias("s")),
-            F.col("j.spreadsheet_id") == F.col("s.id"),
-            "inner",
-        )
-        .filter(F.col("j.google_modified") == F.col("s.google_modified"))
-        .select(
-            F.col("s.google_spreadsheet_id").alias("google_spreadsheet_id"),
-            F.col("j.sheet_name").alias("sheet_name"),
+        configured.join(F.broadcast(seen), "google_spreadsheet_id", "left")
+        .join(F.broadcast(loaded), ["spreadsheet_id", "sheet_name"], "left")
+        .withColumn(
+            "extractable",
+            ~F.coalesce(F.col("loaded_modified") == F.col("seen_modified"), F.lit(False)),
         )
     )
 
@@ -44,12 +59,11 @@ def up_to_date_jobs(spreadsheets: DataFrame, etl_jobs: DataFrame) -> DataFrame:
 def filter_extractable(
     configured: DataFrame, spreadsheets: DataFrame, etl_jobs: DataFrame
 ) -> DataFrame:
-    """J2+J3 as a single ``left_anti``: configured jobs *not* in the
-    up-to-date set (the reference's PHP hash-map filter,
-    ``DatabaseAgentMysql.php:75-86``, folded into the plan)."""
-    current = up_to_date_jobs(spreadsheets, etl_jobs)
-    return configured.join(
-        F.broadcast(current),
-        on=["google_spreadsheet_id", "sheet_name"],
-        how="left_anti",
+    """J2+J3: configured jobs *not* up to date (the reference's PHP
+    hash-map filter, ``DatabaseAgentMysql.php:75-86``, folded into the
+    plan)."""
+    return (
+        job_lookups(configured, spreadsheets, etl_jobs)
+        .filter("extractable")
+        .select(*configured.columns)
     )

@@ -5,7 +5,9 @@ array<string>)`` — one row per physical sheet row, ragged (trailing
 cells absent), all values strings. This mirrors the reference's
 universal in-memory structure ``RowsOfColumns`` (reference:
 ``src/RowsOfColumns.php:7-28``) but stays distributed: nothing here
-collects data except the single header row.
+collects data except the single header row (and the sync loop, which
+fetches rows to the driver anyway, resolves headers there with
+:func:`raw_header` instead).
 
 Operator map (SURVEY.md §2.2):
 
@@ -70,6 +72,18 @@ def header_row(sheet: DataFrame, header_row_idx: int = 0) -> list[str]:
     if not row:
         raise RequiredColumnNotFound(f"Header row not found: {header_row_idx}")
     return list(row[0][0])
+
+
+def raw_header(raw_rows: list[list], header_row_idx: int = 0) -> list[str | None]:
+    """T1+T2 input for rows the driver already holds: the header row of
+    a fetched sheet, trimmed the way :func:`trim_cells` trims it, with
+    no Spark job. ``F.trim`` strips only U+0020, so this is
+    ``str.strip(" ")``, not ``str.strip()`` (which would also strip
+    tabs, newlines and U+00A0)."""
+    if not 0 <= header_row_idx < len(raw_rows):
+        raise RequiredColumnNotFound(f"Header row not found: {header_row_idx}")
+    return [None if c is None else str(c).strip(" ")
+            for c in raw_rows[header_row_idx]]
 
 
 def resolve_column_selectors(

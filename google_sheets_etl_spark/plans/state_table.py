@@ -117,7 +117,15 @@ class StateTable:
         fs.rename(tmp, dst)
 
     def _commit(self, df: DataFrame) -> None:
-        """Write the next snapshot, then atomically flip the pointer."""
+        """Write the next snapshot, then atomically flip the pointer.
+
+        ``df`` may read this table lazily (an upsert's current rows, an
+        overwrite of a frame derived from ``read()``): the write goes to
+        a new ``_v{n+1}`` directory while the plan reads ``_v{n}`` or
+        older, and ``_gc`` runs only after the write and deletes only
+        versions at or below ``latest - _KEEP_VERSIONS``. So a snapshot
+        read before a commit can feed each of the next
+        ``_KEEP_VERSIONS`` commits, and needs no materialization first."""
         v = (self.current_version() or 0) + 1
         df.write.mode("overwrite").parquet(self._version_dir(v))
         self._flip_pointer(v)
@@ -190,12 +198,7 @@ class StateTable:
             return df.select(*cols)
 
         kept = current.join(F.broadcast(updates.select(*keys)), on=keys, how="left_anti")
-        merged = conform(kept).unionByName(conform(updates))
-        # Materialize BEFORE the commit flips the pointer: `merged` reads
-        # the current snapshot lazily, and _gc could otherwise delete the
-        # files under it. localCheckpoint cuts the lineage to the old dir.
-        merged = merged.localCheckpoint(eager=True)
-        self._commit(merged)
+        self._commit(conform(kept).unionByName(conform(updates)))
 
     def overwrite(self, df: DataFrame) -> None:
-        self._commit(df.localCheckpoint(eager=True))
+        self._commit(df)

@@ -77,7 +77,10 @@ class TargetTable:
                 return True
         return False
 
-    def overwrite_job_partition(self, data: DataFrame, with_rowid: bool = False) -> None:
+    def overwrite_job_partition(
+        self, data: DataFrame, with_rowid: bool = False,
+        job_rows: dict[int, int] | None = None,
+    ) -> None:
         """U4+U5: replace exactly the ``_origin_etl_job_id`` partitions
         present in ``data``. The dynamic-overwrite mode is a PER-WRITE
         option, not an assumed session conf — under a vanilla session a
@@ -87,12 +90,15 @@ class TargetTable:
         ``with_rowid`` mirrors the reference's auto-increment surrogate
         key (``DatabaseAgentMysql.php:159``): new rows continue from the
         current table max, like MySQL never reusing deleted ids when a
-        job's partition is replaced. The numbering window is
-        unpartitioned (single reducer) — fine because one load is one
-        sheet's rows, metadata-scale next to the table.
+        job's partition is replaced. One write numbers all of its jobs'
+        rows gaplessly past the table max, in ``(_origin_etl_job_id,
+        _origin_row)`` order; ``job_rows`` (required with it) is each
+        job's row count in ``data``, which the caller knows.
         """
         if PARTITION_COL not in data.columns:
             raise ValueError(f"data must carry {PARTITION_COL}")
+        if with_rowid and job_rows is None:
+            raise ValueError("with_rowid needs job_rows")
         if with_rowid:
             base = 0
             if self.exists():
@@ -108,14 +114,17 @@ class TargetTable:
                         base = existing.agg(
                             F.coalesce(F.max(ROWID_COL), F.lit(0))
                         ).first()[0]
-            # single-partition window is deliberate and BOUNDED: the
-            # frame is one load batch — one spreadsheet's rows (the
-            # Sheets product caps a file at ~10M cells), never the
-            # accumulated table — and _rowid must be a gapless
-            # sequential allocation over exactly that batch
-            w = Window.orderBy(PARTITION_COL, "_origin_row")
+            # each job's rows start past the rows of the lower job ids,
+            # so the window partitions by job: one window spans one sheet
+            # (the Sheets product caps a file at ~10M cells), not the batch
+            offsets, total = [], int(base)
+            for job_id in sorted(job_rows):
+                offsets += [F.lit(job_id).cast("long"), F.lit(total).cast("long")]
+                total += job_rows[job_id]
+            offset = F.create_map(*offsets)[F.col(PARTITION_COL)]
+            w = Window.partitionBy(PARTITION_COL).orderBy("_origin_row")
             data = data.withColumn(
-                ROWID_COL, (F.lit(int(base)) + F.row_number().over(w)).cast("long")
+                ROWID_COL, (offset + F.row_number().over(w)).cast("long")
             )
         (
             data.write.mode("overwrite")

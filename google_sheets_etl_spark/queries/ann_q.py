@@ -22,9 +22,11 @@ def _variant_pool_size(n_variants: int, spark: SparkSession) -> int:
     import os as _os
 
     cores = spark.sparkContext.defaultParallelism
+    # getloadavg is absent on some platforms (Windows) and raises
+    # OSError where the load average is unobtainable: no backoff then
+    loadavg = getattr(_os, "getloadavg", None)
     try:
-        host_cpus = _os.cpu_count() or cores
-        if _os.getloadavg()[0] >= 0.75 * host_cpus:
+        if loadavg is not None and loadavg()[0] >= 0.75 * (_os.cpu_count() or cores):
             return 1
     except OSError:
         pass

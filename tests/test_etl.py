@@ -4,10 +4,14 @@ change one cell → exactly that job's partition rewritten."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import functions as F
 
 from google_sheets_etl_spark.config import EtlJob, parse_config
 from google_sheets_etl_spark.etl import SheetsEtlEngine
+from google_sheets_etl_spark.operators import change_filter
 from google_sheets_etl_spark.sources.sheet_source import (
     FixtureSheetSource, SpreadsheetMeta,
 )
@@ -512,3 +516,344 @@ def test_batch_load_isolates_per_job_failures(spark, tmp_path, source, jobs):
     assert "No Such Header" in str(exc)
     # the healthy sheet actually landed
     assert eng.target(ok.target_table).read().count() > 0
+
+
+# -- the batched load pass ---------------------------------------------------
+
+
+def _sheet(i: int, modified: str) -> tuple[SpreadsheetMeta, list[list[str]]]:
+    gid = f"SSP{i:02d}" + "p" * 39
+    rows = [["Name", "Qty"], [f"n{i}", modified[:10]], [f"m{i}", "1"]]
+    return SpreadsheetMeta(gid, modified, f"P{i}"), rows
+
+
+def _pass_jobs(spark, engine, jobs, group: str) -> int:
+    """Spark jobs one load pass runs, counted by a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        engine.load_updated_spreadsheets(jobs)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_pass_job_count_flat_in_changed_sheets(spark, tmp_path):
+    """A pass costs the same Spark jobs for 2 and for 6 changed sheets
+    of one target table."""
+    src = FixtureSheetSource()
+    jobs = []
+    for i in range(6):
+        meta, rows = _sheet(i, "2026-03-01T00:00:00.000Z")
+        src.put_sheet(meta, "S", rows)
+        jobs.append(EtlJob(meta.id, "S", "flat", {"name": "Name", "qty": 1}))
+    eng = SheetsEtlEngine(spark, str(tmp_path / "wh_flat"), src)
+    eng.set_up_accounting()
+    eng.find_updated_spreadsheets(now=1)
+    eng.load_updated_spreadsheets(jobs)
+
+    counts = []
+    for n, stamp in ((2, "2026-03-02T00:00:00.000Z"), (6, "2026-03-03T00:00:00.000Z")):
+        for i in range(n):
+            meta, rows = _sheet(i, stamp)
+            src.put_sheet(meta, "S", rows)
+        eng.find_updated_spreadsheets(now=2)
+        counts.append(_pass_jobs(spark, eng, jobs, f"load-pass-{n}-changed"))
+        assert not eng.last_load_failures
+    assert counts[0] == counts[1] > 0
+    assert eng.target("flat").read().count() == 12
+
+
+def test_one_pass_into_one_table_equals_serial_passes(spark, tmp_path):
+    """Two jobs with different mappings into one table: one batched
+    write reads back (rows and _rowid) as two serial passes do."""
+    src = FixtureSheetSource()
+    src.put_sheet(SpreadsheetMeta("SSX" + "x" * 41, "2026-01-02T00:00:00.000Z", "X"),
+                  "S", [["A", "B"], ["a1", "b1"], ["a2"]])
+    src.put_sheet(SpreadsheetMeta("SSY" + "y" * 41, "2026-01-03T00:00:00.000Z", "Y"),
+                  "S", [["D", "A"], ["d1", "a3"], [" d2 ", "a4"], ["d3", "a5"]])
+    jx = EtlJob("SSX" + "x" * 41, "S", "mixed", {"a": "A", "b": "B"})
+    jy = EtlJob("SSY" + "y" * 41, "S", "mixed", {"a": "A", "d": 0})
+
+    def table(name, passes):
+        eng = SheetsEtlEngine(spark, str(tmp_path / name), src, rowid=True)
+        eng.set_up_accounting()
+        eng.find_updated_spreadsheets(now=1)
+        results = [r for p in passes for r in eng.load_updated_spreadsheets(p)]
+        assert [(r.etl_job_id, r.rows_loaded) for r in results] == [(1, 2), (2, 3)]
+        return sorted(tuple(sorted(r.asDict().items()))
+                      for r in eng.target("mixed").read().collect())
+
+    batched = table("wh_batched", [[jx, jy]])
+    assert batched == table("wh_serial", [[jx], [jy]])
+    assert len(batched) == 5
+    assert {dict(r)["d"] for r in batched} == {None, "d1", "d2", "d3"}
+
+
+def test_new_jobs_get_consecutive_ids_past_pending_manifest(
+    engine, jobs, source,
+):
+    """Never-seen sheets of one pass get max+1, max+2 in job order,
+    where the max counts a manifest committed but not yet applied."""
+    engine.find_updated_spreadsheets(now=1)
+    [first] = engine.load_updated_spreadsheets(jobs[:1])
+    assert first.etl_job_id == 1
+    ssb = engine.spreadsheets.read().filter(
+        "google_spreadsheet_id LIKE 'SSB%'").first()
+    engine._commit_job(2, ssb["id"], jobs[1], ssb["google_modified"], "pending")
+
+    new = []
+    for i, stamp in ((0, "2026-01-06T00:00:00.000Z"), (1, "2026-01-07T00:00:00.000Z")):
+        meta, rows = _sheet(i, stamp)
+        source.put_sheet(meta, "S", rows)
+        new.append(EtlJob(meta.id, "S", "table_new", {"name": "Name"}))
+    engine.find_updated_spreadsheets(now=2)
+    results = engine.load_updated_spreadsheets(new)
+    assert [r.etl_job_id for r in results] == [3, 4]
+    assert sorted(r["id"] for r in engine.etl_jobs.read().collect()) == [1, 2, 3, 4]
+
+
+def test_header_trim_matches_spark_trim(spark, tmp_path):
+    """Headers resolve on the driver with F.trim's rule (U+0020 only):
+    a tab-led header does not match, a space-padded one does."""
+    from google_sheets_etl_spark.operators import rows as K
+    from google_sheets_etl_spark.operators.rows import RequiredColumnNotFound
+
+    raw = [["\tName", " Name ", "Name ", "\nQty"], ["t", "s", "n", "q"]]
+    header = K.raw_header(raw, 0)
+    assert header == ["\tName", "Name", "Name ", "\nQty"]
+    sheet = spark.createDataFrame(list(enumerate(raw)), "row_idx long, cells array<string>")
+    assert K.header_row(K.trim_cells(sheet), 0) == header
+    with pytest.raises(RequiredColumnNotFound, match="Header row not found: 2"):
+        K.raw_header(raw, 2)
+
+    src = FixtureSheetSource()
+    src.put_sheet(SpreadsheetMeta("SST" + "t" * 41, "2026-01-02T00:00:00.000Z", "T"), "S", raw)
+    eng = SheetsEtlEngine(spark, str(tmp_path / "wh_trim"), src)
+    eng.set_up_accounting()
+    eng.find_updated_spreadsheets(now=1)
+    ok = EtlJob("SST" + "t" * 41, "S", "trim_ok", {"name": "Name"})
+    bad = EtlJob("SST" + "t" * 41, "S", "trim_bad", {"qty": "Qty"})
+    eng.load_updated_spreadsheets([ok])
+    assert [r["name"] for r in eng.target("trim_ok").read().collect()] == ["s"]
+    with pytest.raises(RequiredColumnNotFound, match="Required column not found: Qty"):
+        eng.load_sheet(bad)
+
+
+def test_failed_table_write_fails_only_its_jobs(
+    engine, jobs, monkeypatch,
+):
+    """One target table's write raises: its jobs fail and commit no
+    manifest; the other table's jobs load; the next pass retries."""
+    from google_sheets_etl_spark.plans.target_table import TargetTable
+
+    real_write = TargetTable.overwrite_job_partition
+
+    def write(self, data, **kw):
+        if self.path.endswith("table_a"):
+            raise OSError("injected table_a write failure")
+        return real_write(self, data, **kw)
+
+    committed = []
+    real_commit = SheetsEtlEngine._commit_job
+
+    def commit(self, job_id, *a):
+        committed.append(job_id)
+        return real_commit(self, job_id, *a)
+
+    monkeypatch.setattr(TargetTable, "overwrite_job_partition", write)
+    monkeypatch.setattr(SheetsEtlEngine, "_commit_job", commit)
+    engine.find_updated_spreadsheets(now=1)
+    results = engine.load_updated_spreadsheets(jobs)
+    assert [r.job.target_table for r in results] == ["table_b"]
+    assert [(j.target_table, str(e)) for j, e in engine.last_load_failures] == [
+        ("table_a", "injected table_a write failure")]
+    assert committed == [results[0].etl_job_id]
+    assert [r["sheet_name"] for r in engine.etl_jobs.read().collect()] == ["Tab2"]
+
+    monkeypatch.setattr(TargetTable, "overwrite_job_partition", real_write)
+    retry = engine.load_updated_spreadsheets(jobs)
+    assert [r.job.target_table for r in retry] == ["table_a"]
+    assert engine.target("table_a").read().count() == 3
+
+
+def test_duplicate_job_keys_rejected(engine, jobs):
+    with pytest.raises(ValueError, match="SSA.* sheet Tab1"):
+        engine.load_updated_spreadsheets([jobs[0], jobs[1], jobs[0]])
+
+
+def test_duplicate_accounting_rows_fail_only_their_job(engine, jobs, source):
+    """A file recorded twice under two surrogate ids fails its job; the
+    later jobs of the pass keep their own ids and partitions. A file
+    recorded twice under one id loads, with its newest modified time."""
+    meta, rows = _sheet(0, "2026-01-04T00:00:00.000Z")
+    source.put_sheet(meta, "S", rows)
+    job_c = EtlJob(meta.id, "S", "table_c", {"name": "Name"})
+    engine.find_updated_spreadsheets(now=1)
+    current = engine.spreadsheets.read()
+    ssa = current.filter("google_spreadsheet_id LIKE 'SSA%'")
+    ssb = current.filter("google_spreadsheet_id LIKE 'SSB%'")
+    engine.spreadsheets.overwrite(
+        current.unionByName(ssa.withColumn("id", F.lit(99).cast("long")))
+        .unionByName(ssb.withColumn("google_modified", F.lit("2026-01-01T00:00:00.000Z"))))
+
+    results = engine.load_updated_spreadsheets([jobs[0], jobs[1], job_c])
+    [(failed, exc)] = engine.last_load_failures
+    assert failed is jobs[0]
+    assert "found 2 (spreadsheet ids [1, 99]" in str(exc)
+    assert [(r.job.target_table, r.etl_job_id) for r in results] == [
+        ("table_b", 1), ("table_c", 2)]
+    sids = {r["google_spreadsheet_id"][:3]: r["id"]
+            for r in engine.spreadsheets.read().collect()}
+    assert sorted((r["id"], r["spreadsheet_id"], r["google_modified"])
+                  for r in engine.etl_jobs.read().collect()) == [
+        (1, sids["SSB"], "2026-01-03T00:00:00.000Z"),
+        (2, sids["SSP"], "2026-01-04T00:00:00.000Z")]
+    for table, job_id in (("table_b", 1), ("table_c", 2)):
+        assert {r["_origin_etl_job_id"]
+                for r in engine.target(table).read().collect()} == {job_id}
+    assert not engine.target("table_a").exists()
+
+    # discovery keeps both ids of the file (and stamps both), so its
+    # job keeps failing rather than guessing
+    source.put_sheet(SpreadsheetMeta(jobs[0].google_spreadsheet_id,
+                                     "2026-01-08T00:00:00.000Z", "Sheet A"),
+                     "Tab1", SHEET_A)
+    engine.find_updated_spreadsheets(now=2)
+    assert sorted((r["id"], r["google_modified"]) for r in engine.spreadsheets.read()
+                  .filter("google_spreadsheet_id LIKE 'SSA%'").collect()) == [
+        (1, "2026-01-08T00:00:00.000Z"), (99, "2026-01-08T00:00:00.000Z")]
+    assert engine.load_updated_spreadsheets(jobs[:1]) == []
+    assert "found 2" in str(engine.last_load_failures[0][1])
+
+
+def test_new_job_ids_stable_across_crash_after_table_write(
+    spark, tmp_path, monkeypatch,
+):
+    """New jobs of two interleaved tables: a crash after the second
+    table's write, before its manifest, leaves the first table
+    committed; the retry gives the second table's job the same id, so
+    its overwrite replaces what had landed instead of duplicating it."""
+    src = FixtureSheetSource()
+    jobs = []
+    for i, table in enumerate(("t1", "t2", "t1")):
+        meta, rows = _sheet(i, f"2026-02-0{i + 1}T00:00:00.000Z")
+        src.put_sheet(meta, "S", rows)
+        jobs.append(EtlJob(meta.id, "S", table, {"name": "Name"}))
+    eng = SheetsEtlEngine(spark, str(tmp_path / "wh_crash"), src)
+    eng.set_up_accounting()
+    eng.find_updated_spreadsheets(now=1)
+
+    real_commit = SheetsEtlEngine._commit_job
+
+    def commit(self, job_id, spreadsheet_id, job, *a):
+        if job.target_table == "t2":
+            raise RuntimeError("injected crash before t2 manifest")
+        return real_commit(self, job_id, spreadsheet_id, job, *a)
+
+    monkeypatch.setattr(SheetsEtlEngine, "_commit_job", commit)
+    with pytest.raises(RuntimeError, match="t2 manifest"):
+        eng.load_updated_spreadsheets(jobs, continue_on_error=False)
+    monkeypatch.undo()
+    assert {r["_origin_etl_job_id"] for r in eng.target("t2").read().collect()} == {3}
+
+    retry = eng.load_updated_spreadsheets(jobs)
+    assert [(r.job.target_table, r.etl_job_id) for r in retry] == [("t2", 3)]
+    assert eng.target("t2").read().count() == 2
+    assert sorted(r["id"] for r in eng.etl_jobs.read().collect()) == [1, 2, 3]
+
+
+def test_failed_table_write_drops_its_landed_new_partitions(
+    engine, jobs, monkeypatch,
+):
+    """A table write that raises after its data landed: the pass
+    deletes its new jobs' partitions, so the retry, which gives them
+    other ids (a later table committed a higher one), does not
+    duplicate their rows."""
+    from google_sheets_etl_spark.plans.target_table import TargetTable
+
+    real_write = TargetTable.overwrite_job_partition
+
+    def write(self, data, **kw):
+        real_write(self, data, **kw)
+        if self.path.endswith("table_a"):
+            raise OSError("injected failure after table_a landed")
+
+    monkeypatch.setattr(TargetTable, "overwrite_job_partition", write)
+    engine.find_updated_spreadsheets(now=1)
+    results = engine.load_updated_spreadsheets(jobs)
+    assert [(r.job.target_table, r.etl_job_id) for r in results] == [("table_b", 2)]
+    assert not engine.target("table_a").exists()
+
+    monkeypatch.setattr(TargetTable, "overwrite_job_partition", real_write)
+    retry = engine.load_updated_spreadsheets(jobs)
+    assert [(r.job.target_table, r.etl_job_id) for r in retry] == [("table_a", 3)]
+    assert engine.target("table_a").read().count() == 3
+
+
+def test_failed_zero_row_delete_lands_no_new_data(spark, tmp_path, monkeypatch):
+    """One table holds a sheet shrunk to its header and a new sheet. The
+    shrunk sheet's partition delete raises: both jobs fail, the new
+    sheet's rows never land, and the retry loads each sheet once."""
+    from google_sheets_etl_spark.plans.target_table import TargetTable
+
+    src = FixtureSheetSource()
+    meta_x, rows_x = _sheet(0, "2026-02-01T00:00:00.000Z")
+    src.put_sheet(meta_x, "S", rows_x)
+    job_x = EtlJob(meta_x.id, "S", "t", {"name": "Name"})
+    eng = SheetsEtlEngine(spark, str(tmp_path / "wh_delete"), src)
+    eng.set_up_accounting()
+    eng.find_updated_spreadsheets(now=1)
+    [loaded_x] = eng.load_updated_spreadsheets([job_x])
+
+    src.put_sheet(SpreadsheetMeta(meta_x.id, "2026-02-02T00:00:00.000Z", meta_x.name),
+                  "S", rows_x[:1])
+    meta_y, rows_y = _sheet(1, "2026-02-03T00:00:00.000Z")
+    src.put_sheet(meta_y, "S", rows_y)
+    job_y = EtlJob(meta_y.id, "S", "t", {"name": "Name"})
+    eng.find_updated_spreadsheets(now=2)
+
+    real_delete = TargetTable.delete_job_partition
+
+    def delete(self, job_id):
+        if job_id == loaded_x.etl_job_id:
+            raise OSError("injected delete failure")
+        return real_delete(self, job_id)
+
+    monkeypatch.setattr(TargetTable, "delete_job_partition", delete)
+    assert eng.load_updated_spreadsheets([job_x, job_y]) == []
+    assert [j for j, _e in eng.last_load_failures] == [job_x, job_y]
+    assert sorted(r["name"] for r in eng.target("t").read().collect()) == ["m0", "n0"]
+    assert not os.listdir(eng._commits_dir())
+
+    monkeypatch.setattr(TargetTable, "delete_job_partition", real_delete)
+    retry = eng.load_updated_spreadsheets([job_x, job_y])
+    assert [(r.rows_loaded, r.etl_job_id) for r in retry] == [(0, 1), (2, 2)]
+    assert sorted(r["name"] for r in eng.target("t").read().collect()) == ["m1", "n1"]
+
+
+def test_load_pass_error_not_masked_and_failures_reset(engine, jobs, monkeypatch):
+    """A pass that raises resets ``last_load_failures`` and reports its
+    own error even when the closing accounting apply fails too."""
+    engine.find_updated_spreadsheets(now=1)
+    engine.last_load_failures = [("stale", None)]
+    real_apply = SheetsEtlEngine._apply_pending_commits
+    calls = []
+
+    def apply(self):
+        calls.append(1)
+        if len(calls) > 1:
+            raise OSError("injected apply failure")
+        return real_apply(self)
+
+    def lookups(*a):
+        raise RuntimeError("injected metadata query failure")
+
+    monkeypatch.setattr(SheetsEtlEngine, "_apply_pending_commits", apply)
+    monkeypatch.setattr(change_filter, "job_lookups", lookups)
+    with pytest.raises(RuntimeError, match="metadata query"):
+        engine.load_updated_spreadsheets(jobs)
+    assert len(calls) == 2
+    assert engine.last_load_failures == []

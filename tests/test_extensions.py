@@ -5580,3 +5580,21 @@ def test_webp_strict_rejects_and_dispatch():
     bad[20 + 1 + 3] |= 0x20
     with _pt.raises(ValueError, match="bad vp8l header"):
         parse_webp(bytes(bad))
+
+
+def test_variant_pool_size_without_getloadavg(spark, monkeypatch):
+    """Hosts without ``os.getloadavg`` (Windows) or where it raises
+    OSError get the plain width, not an AttributeError."""
+    import os
+
+    from google_sheets_etl_spark.queries.ann_q import _variant_pool_size
+
+    width = min(5, 3 if spark.sparkContext.defaultParallelism >= 16 else 2)
+    monkeypatch.delattr(os, "getloadavg", raising=False)
+    assert _variant_pool_size(5, spark) == width
+
+    def unobtainable():
+        raise OSError("load average unobtainable")
+
+    monkeypatch.setattr(os, "getloadavg", unobtainable, raising=False)
+    assert _variant_pool_size(5, spark) == width

@@ -983,3 +983,38 @@ def test_webdataset_pipeline_plan_shape(spark, sf_dir):
     assert "MapInPandas" in plan
     audit = explain_str(QUERIES["tar_decode_audit"](spark, sf_dir))
     assert_manifest_repartition_only(audit, "tar_decode_audit")
+
+
+def test_state_table_snapshots_outlive_lazy_commits(spark, tmp_path):
+    """Upserts and overwrites commit lazily planned frames (no eager
+    materialization): back-to-back commits, including an overwrite of
+    a frame derived from ``read()``, give exact rows, and a snapshot
+    read before a commit still feeds each of the next
+    ``_KEEP_VERSIONS`` commits."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from google_sheets_etl_spark.plans.state_table import _KEEP_VERSIONS, StateTable
+
+    st = StateTable(spark, str(tmp_path / "st"), "k long, v string")
+    st.create_if_not_exists()
+    for i in range(6):
+        st.upsert(spark.createDataFrame([(i % 4, f"v{i}")], "k long, v string"), ["k"])
+    want = {0: "v4", 1: "v5", 2: "v2", 3: "v3"}
+    assert {r["k"]: r["v"] for r in st.read().collect()} == want
+
+    st.overwrite(st.read().withColumn("v", F.upper("v")).filter("k < 3"))
+    assert sorted(map(tuple, st.read().collect())) == [(0, "V4"), (1, "V5"), (2, "V2")]
+
+    stale, version = st.read(), st.current_version()
+    rows = sorted(map(tuple, stale.collect()))
+    for i in range(_KEEP_VERSIONS):
+        # each commit reads the snapshot taken before the first one
+        assert os.path.isdir(st._version_dir(version))
+        st.overwrite(stale.withColumn("v", F.concat("v", F.lit(str(i)))))
+        assert sorted(map(tuple, st.read().collect())) == [
+            (k, v + str(i)) for k, v in rows
+        ]
+    # the last of those commits is the first one free to drop it
+    assert not os.path.isdir(st._version_dir(version))
