@@ -18,6 +18,11 @@ by table, in the order the tables are written (job order within a
 table). ``_rowid`` (when on) is allocated per table write: gapless past
 the table max, in ``(job id, _origin_row)`` order.
 
+Every frame the engine builds from driver rows (a fetched sheet, the
+pass's job list, discovery's page, the accounting and profile updates)
+goes through ``session.local_frame``: an Arrow table handed to the JVM,
+so none of the loop's jobs runs a Python worker to produce it.
+
 Atomicity ordering (U6, SURVEY.md §7.4): the reference wraps
 hash-check + accounting + delete + insert in one RDBMS transaction
 (``DatabaseAgentMysql.php:195-292``). Across two parquet tables there is
@@ -73,8 +78,10 @@ from pyspark.sql.types import (
 from .config import EtlJob
 from .operators import change_filter, rows as rows_ops, watermark
 from .operators.normalize import normalized_column_names
+from .plans.paths import local_path
 from .plans.state_table import StateTable
 from .plans.target_table import PARTITION_COL, TargetTable
+from .session import local_frame
 from .sources.sheet_source import SheetSource, SpreadsheetMeta
 
 SPREADSHEETS_SCHEMA = StructType([
@@ -217,7 +224,7 @@ class SheetsEtlEngine:
     # -- U6: per-job commit manifests ---------------------------------------
 
     def _commits_dir(self) -> str:
-        return os.path.join(self.warehouse, "_commits")
+        return os.path.join(local_path(self.warehouse) or self.warehouse, "_commits")
 
     def _commit_job(self, job_id: int, spreadsheet_id: int, job: EtlJob,
                     google_modified: str, content_hash: str) -> None:
@@ -266,7 +273,7 @@ class SheetsEtlEngine:
             rows.append((int(r["id"]), int(r["spreadsheet_id"]),
                          r["sheet_name"], r["target_table"],
                          r["google_modified"], r["raw_columns_rows_hash"]))
-        updates = self.spark.createDataFrame(rows, ETL_JOBS_SCHEMA)
+        updates = local_frame(self.spark, rows, ETL_JOBS_SCHEMA)
         self.etl_jobs.upsert(updates, keys=["spreadsheet_id", "sheet_name"])
         for n in names:
             os.remove(os.path.join(d, n))
@@ -360,7 +367,7 @@ class SheetsEtlEngine:
             for j in stale
             if j not in profiled  # empty load → sentinel
         ]
-        updates = self.spark.createDataFrame(rows, _profiles_schema())
+        updates = local_frame(self.spark, rows, _profiles_schema())
         # per-(table, job) REPLACE, not keyed upsert: a reload must
         # shed counters for columns (or rows) it no longer has
         kept = current.filter(
@@ -490,7 +497,8 @@ class SheetsEtlEngine:
         # a file older discovery code gave two surrogate ids keeps both:
         # the load pass fails its jobs rather than guess which one its
         # etl_jobs rows point at
-        updates = self.spark.createDataFrame(
+        updates = local_frame(
+            self.spark,
             [(i, g, m.modified_time, m.name, now)
              for g, m in page.items() for i in sorted(ids[g])],
             SPREADSHEETS_SCHEMA)
@@ -577,7 +585,8 @@ class SheetsEtlEngine:
         those)."""
         if not jobs:
             return [], 0
-        configured = self.spark.createDataFrame(
+        configured = local_frame(
+            self.spark,
             [(i, j.google_spreadsheet_id, j.sheet_name) for i, j in enumerate(jobs)],
             "pos int, google_spreadsheet_id string, sheet_name string")
         etl_jobs = self.etl_jobs.read()
@@ -622,7 +631,7 @@ class SheetsEtlEngine:
     def _sheet_df(self, raw_rows: list[list[str]]) -> DataFrame:
         data = [(i, [None if c is None else str(c) for c in r])
                 for i, r in enumerate(raw_rows)]
-        return self.spark.createDataFrame(data, SHEET_SCHEMA)
+        return local_frame(self.spark, data, SHEET_SCHEMA)
 
     def _kernel(self, load: _Load) -> DataFrame:
         """T1/T3/T4/T6 + VARCHAR(100) parity for one job's rows."""

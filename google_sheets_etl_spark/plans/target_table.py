@@ -32,6 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .paths import local_path
+
 PARTITION_COL = "_origin_etl_job_id"
 ROWID_COL = "_rowid"
 
@@ -52,10 +54,6 @@ class TargetTable:
         hpath = jvm.org.apache.hadoop.fs.Path(self.path)
         fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return hpath, fs
-
-    def _is_local(self) -> bool:
-        scheme = self.path.split("://", 1)[0] if "://" in self.path else ""
-        return scheme in ("", "file")
 
     def exists(self) -> bool:
         """True when the table holds DATA: partition dirs are named
@@ -138,7 +136,8 @@ class TargetTable:
         per file, zero data pages. None when any file lacks usable
         stats (caller falls back to the full aggregate) or no file
         carries the column (legacy pre-rowid table → base 0)."""
-        if not self._is_local():
+        root = local_path(self.path)
+        if root is None:
             # pyarrow footer reads below are local-fs; a remote table
             # takes the exact Spark aggregate fallback (still cheap —
             # column-pruned scan of one int64 column)
@@ -151,9 +150,9 @@ class TargetTable:
             # underscore-prefixed paths as hidden, silently yielding
             # zero fragments
             files = []
-            for root, _dirs, names in os.walk(self.path):
+            for d, _dirs, names in os.walk(root):
                 files += [
-                    os.path.join(root, n)
+                    os.path.join(d, n)
                     for n in names
                     if n.endswith(".parquet") and not n.startswith((".", "_"))
                 ]

@@ -11,13 +11,18 @@ chosen so the same code is correct on a multi-executor cluster:
   full-table rewrite.
 - Arrow enabled — every Python-side exchange (Pandas UDFs in the
   multimodal/text operators) is Arrow-batched, never row-at-a-time.
+
+``local_frame`` is the one way the sync loop turns driver rows into a
+DataFrame: an Arrow table handed to the JVM, so evaluating the frame
+runs no Python worker.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType, _make_type_verifier
 
 
 def _env_positive_int(name: str) -> int | None:
@@ -87,3 +92,34 @@ def get_spark(app_name: str = "sheets-etl-spark", shuffle_partitions: int | None
             str(env_ip),
         )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame of driver-held ``rows`` (tuples in ``schema``'s
+    column order; ``schema`` a ``StructType`` or a DDL string).
+
+    ``spark.createDataFrame(list, schema)`` parallelizes the list as a
+    Python RDD, so every job that evaluates the frame sends its
+    ``defaultParallelism`` tasks through Python workers. This builds a
+    ``pyarrow.Table`` column by column instead; ``createDataFrame`` hands
+    an Arrow table to the JVM, which makes the frame with no Python
+    worker. Each row is verified against the schema first, as
+    ``createDataFrame``'s ``verifySchema`` does: a row of the wrong
+    arity raises ``ValueError``, a wrongly typed cell ``TypeError``
+    (Arrow alone would truncate a float into a long column, or split a
+    string into an array column)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    rows = list(rows)
+    verify = _make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

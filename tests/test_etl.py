@@ -857,3 +857,106 @@ def test_load_pass_error_not_masked_and_failures_reset(engine, jobs, monkeypatch
         engine.load_updated_spreadsheets(jobs)
     assert len(calls) == 2
     assert engine.last_load_failures == []
+
+
+# -- driver-built frames: one Arrow builder, no Python workers ----------------
+
+_LONG = "é" * 150 + "x" * 150  # a 300-character non-ASCII cell
+
+
+@pytest.mark.parametrize("schema,rows", [
+    ("sheet", [(0, ["Name", " Amount Due ", "Café"]), (1, ["bob", "20"]),
+               (2, ["carol", None, _LONG]), (3, None), (4, [])]),
+    ("etl_jobs", [(1, 10, "Tab1", "table_a", "2026-01-02T00:00:00.000Z", "ab" * 32),
+                  (2, 11, "Straße", None, None, None)]),
+    ("spreadsheets", [(7, "SS" + "x" * 42, "2026-01-02T00:00:00.000Z", "名前", 1000),
+                      (8, "SSy", None, _LONG, None)]),
+    ("k long, v string, a array<string>", [(1, "v", ["a", None]), (None, None, None)]),
+    ("sheet", []),
+    ("k long, v string, a array<string>", []),
+])
+def test_local_frame_matches_create_data_frame(spark, schema, rows):
+    """``local_frame`` gives ``createDataFrame``'s rows and schema, over
+    the engine's schemas and a DDL string, and its plan has no
+    ``PythonRDD``: evaluating it runs no Python worker."""
+    from google_sheets_etl_spark.etl import (
+        ETL_JOBS_SCHEMA, SHEET_SCHEMA, SPREADSHEETS_SCHEMA,
+    )
+    from google_sheets_etl_spark.session import local_frame
+
+    schema = {"sheet": SHEET_SCHEMA, "etl_jobs": ETL_JOBS_SCHEMA,
+              "spreadsheets": SPREADSHEETS_SCHEMA}.get(schema, schema)
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+    def lineage(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    assert "PythonRDD" not in lineage(got)
+    if rows:
+        assert "PythonRDD" in lineage(want)  # what the builder replaces
+
+
+@pytest.mark.parametrize("row,error", [
+    ((1,), ValueError),                         # too few cells
+    ((1, "v", ["a"], "extra"), ValueError),     # too many cells
+    (("1", "v", ["a"]), TypeError),
+    ((1.5, "v", ["a"]), TypeError),             # Arrow alone would truncate it
+    ((1, "v", "abc"), TypeError),               # Arrow alone would split it
+    ((1, ["v"], ["a"]), TypeError),
+])
+def test_local_frame_rejects_malformed_rows(spark, row, error):
+    """A row of the wrong arity or a wrongly typed cell raises, as
+    ``createDataFrame``'s ``verifySchema`` did, instead of a silently
+    truncated or coerced frame."""
+    from google_sheets_etl_spark.session import local_frame
+
+    with pytest.raises(error):
+        local_frame(spark, [(0, "ok", []), row], "k long, v string, a array<string>")
+
+
+def test_sync_loop_builds_frames_only_through_local_frame():
+    """No ``createDataFrame`` call in the sync loop's modules: a frame
+    built there from a Python list would put Python workers back into
+    every job that reads it."""
+    import ast
+
+    import google_sheets_etl_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    for rel in ("etl.py", "plans/state_table.py", "plans/target_table.py"):
+        with open(os.path.join(root, rel)) as fh:
+            tree = ast.parse(fh.read(), rel)
+        calls = [
+            n.lineno for n in ast.walk(tree)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame"
+        ]
+        assert not calls, (rel, calls)
+
+
+# -- file: URIs map to their paths for the POSIX calls ------------------------
+
+def test_file_uri_target_table_continues_rowid(spark, tmp_path):
+    """A ``file://`` target table reads its ``_rowid`` max from its own
+    footers, so a second write's ids continue past the first's."""
+    from google_sheets_etl_spark.plans.target_table import TargetTable
+
+    tt = TargetTable(spark, (tmp_path / "t").as_uri())
+    mk = lambda job, vals: spark.createDataFrame(
+        [(job, i, v) for i, v in enumerate(vals)],
+        "_origin_etl_job_id long, _origin_row long, v string")
+    tt.overwrite_job_partition(mk(1, ["a", "b", "c"]), with_rowid=True, job_rows={1: 3})
+    assert tt._rowid_max_from_footers() == 3
+    tt.overwrite_job_partition(mk(2, ["d", "e"]), with_rowid=True, job_rows={2: 2})
+    got = sorted((r["v"], r["_rowid"]) for r in tt.read().collect())
+    assert got == [("a", 1), ("b", 2), ("c", 3), ("d", 4), ("e", 5)]
+
+
+def test_file_uri_warehouse_keeps_manifests_inside(spark, tmp_path, source):
+    """An engine on a ``file://`` warehouse stages its commit manifests
+    under the warehouse, not in a relative ``file:`` directory."""
+    eng = SheetsEtlEngine(spark, (tmp_path / "wh").as_uri(), source)
+    assert eng._commits_dir() == str(tmp_path / "wh" / "_commits")

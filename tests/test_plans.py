@@ -1018,3 +1018,108 @@ def test_state_table_snapshots_outlive_lazy_commits(spark, tmp_path):
         ]
     # the last of those commits is the first one free to drop it
     assert not os.path.isdir(st._version_dir(version))
+
+
+def test_state_table_sidecar_schema_equals_inferred(spark, tmp_path):
+    """Each snapshot's sidecar schema is what footer inference would
+    give, nullability included, after the empty create, an upsert, an
+    upsert that adds a column (U7) and an overwrite."""
+    from pyspark.sql import functions as F
+
+    from google_sheets_etl_spark.etl import ETL_JOBS_SCHEMA
+    from google_sheets_etl_spark.plans.state_table import StateTable
+
+    st = StateTable(spark, str(tmp_path / "st"), ETL_JOBS_SCHEMA)
+
+    def check():
+        inferred = spark.read.parquet(st._version_dir(st.current_version())).schema
+        assert st.read().schema == inferred
+        return inferred
+
+    st.create_if_not_exists()
+    assert [f.name for f in check().fields] == ETL_JOBS_SCHEMA.fieldNames()
+    st.upsert(spark.createDataFrame(
+        [(1, 10, "Tab1", "t", "2026-01-01", "h1")], ETL_JOBS_SCHEMA), ["id"])
+    check()
+    wider = spark.createDataFrame(
+        [(2, 11, "Tab2", "t", "2026-01-02", "h2", 5)],
+        "id long, spreadsheet_id long, sheet_name string, target_table string, "
+        "google_modified string, raw_columns_rows_hash string, extra int")
+    st.upsert(wider, ["id"])
+    assert check()["extra"].dataType.simpleString() == "int"
+    assert sorted((r["id"], r["extra"]) for r in st.read().collect()) == [(1, None), (2, 5)]
+    st.overwrite(st.read().withColumn("n", F.lit(1)))  # a non-nullable literal
+    assert "n" in check().fieldNames()
+
+
+def test_state_table_read_without_sidecar_and_job_free(spark, tmp_path):
+    """``read()`` starts no Spark job; a snapshot whose sidecar is
+    missing (written before sidecars existed) reads the same rows by
+    inference, and the next commit writes a sidecar again."""
+    import os
+
+    from google_sheets_etl_spark.plans.state_table import _SCHEMA, StateTable
+
+    st = StateTable(spark, str(tmp_path / "st"), "k long, v string")
+    st.create_if_not_exists()
+    st.upsert(spark.createDataFrame([(1, "a"), (2, None)], "k long, v string"), ["k"])
+    want = sorted(map(tuple, st.read().collect()))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("state-table-read", "state-table-read")
+    try:
+        df = st.read()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup("state-table-read") == []
+    assert sorted(map(tuple, df.collect())) == want
+
+    sidecar = os.path.join(st._version_dir(st.current_version()), _SCHEMA)
+    os.remove(sidecar)
+    assert sorted(map(tuple, st.read().collect())) == want
+    st.upsert(spark.createDataFrame([(3, "c")], "k long, v string"), ["k"])
+    assert os.path.exists(os.path.join(st._version_dir(st.current_version()), _SCHEMA))
+    assert sorted(map(tuple, st.read().collect())) == want + [(3, "c")]
+
+
+def test_file_uri_state_table_stays_inside_table(spark, tmp_path, monkeypatch):
+    """A ``file://`` state table keeps its pointer, sidecars and GC
+    inside the table directory, whatever the working directory, and
+    the Hadoop FileSystem branch (the one ``hdfs://`` takes) reads and
+    writes the same pointer and sidecar files."""
+    import os
+
+    from google_sheets_etl_spark.plans.state_table import _KEEP_VERSIONS, StateTable
+
+    root = tmp_path / "t"
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    st = StateTable(spark, root.as_uri(), "k long, v string")
+    st.create_if_not_exists()
+    for i in range(5):
+        st.upsert(spark.createDataFrame([(i, f"v{i}")], "k long, v string"), ["k"])
+    assert os.listdir(cwd) == []
+    assert (root / "_LATEST").read_text() == "6"
+    versions = sorted(n for n in os.listdir(root) if n.startswith("_v"))
+    assert versions == [f"_v{v}" for v in range(7 - _KEEP_VERSIONS, 7)]
+    assert all((root / v / "_schema.json").exists() for v in versions)
+    want = [(i, f"v{i}") for i in range(5)]
+
+    other = tmp_path / "elsewhere"
+    other.mkdir()
+    monkeypatch.chdir(other)
+    st = StateTable(spark, root.as_uri(), "k long, v string")
+    assert sorted(map(tuple, st.read().collect())) == want
+
+    hadoop = StateTable(spark, root.as_uri(), "k long, v string")
+    hadoop._local = None  # the off-box branch, over the same files
+    assert hadoop.current_version() == 6
+    assert sorted(map(tuple, hadoop.read().collect())) == want
+    hadoop.upsert(spark.createDataFrame([(9, "h")], "k long, v string"), ["k"])
+    assert (root / "_LATEST").read_text() == "7"
+    assert (root / "_v7" / "_schema.json").exists()
+    assert sorted(map(tuple, st.read().collect())) == want + [(9, "h")]
+    assert os.listdir(other) == []
