@@ -9,19 +9,27 @@ partition-overwrite loads (U4/U5).
 
 A load pass (``load_updated_spreadsheets``; ``load_sheet`` is its
 one-job form) costs a fixed number of Spark jobs whatever the number
-of changed sheets: one metadata query answers the change filter and
-the J1 lookups for every job; headers resolve on the driver from the
-rows the fetch already returned; each target table takes one dynamic
-partition overwrite of its changed jobs' union; one accounting upsert
-applies the whole pass. New jobs get ids past the accounting max table
+of changed sheets: one driver-side metadata query answers the change
+filter and the J1 lookups for every job; headers resolve on the driver
+from the rows the fetch already returned; each target table takes one
+dynamic partition overwrite of its changed jobs' union; one accounting
+upsert applies the whole pass. New jobs get ids past the accounting max table
 by table, in the order the tables are written (job order within a
 table). ``_rowid`` (when on) is allocated per table write: gapless past
 the table max, in ``(job id, _origin_row)`` order.
 
-Every frame the engine builds from driver rows (a fetched sheet, the
-pass's job list, discovery's page, the accounting and profile updates)
-goes through ``session.local_frame``: an Arrow table handed to the JVM,
-so none of the loop's jobs runs a Python worker to produce it.
+The loop's metadata questions (discovery's watermark and id lookup,
+the change filter and J1 lookups, the max ids, the profile store's
+staleness check and the stored counters, the O4 probe's pick) start no
+Spark job: each accounting table's current snapshot is held on the
+driver as a ``pyarrow.Table`` (``StateTable.snapshot()``, cached per
+version, filled by the table's own commits) and answered with Arrow
+compute. The accounting updates merge on the driver too, so Spark runs
+only the commits (one write each), the target writes, the profile scan
+and the typed view. Every frame the engine hands Spark from driver
+data (a fetched sheet, a commit, the stored counters) goes through
+``session.local_frame``: an Arrow table handed to the JVM, so none of
+the loop's jobs runs a Python worker to produce it.
 
 Atomicity ordering (U6, SURVEY.md §7.4): the reference wraps
 hash-check + accounting + delete + insert in one RDBMS transaction
@@ -56,19 +64,24 @@ cleared. Every crash window resolves to a consistent state:
 Accounting consumers (change filter J2/J3, hash short-circuit U3)
 therefore observe, per job, either the fully-old or the fully-new
 transaction, never a torn one — the reference's single-txn guarantee,
-re-expressed. (Manifest files use the same local-fs atomic-``os.replace``
-discipline as ``StateTable``'s snapshot pointer; on an object store both
-would move to a rename-capable layer together.)
+re-expressed. (Manifests live under ``<warehouse>/_commits`` and use
+the same small-file layer as ``StateTable``'s snapshot pointer,
+``plans.paths.SmallFiles``: an atomic ``os.replace`` locally, a Hadoop
+FileSystem rename on ``hdfs://`` or ``s3a://``, so any host replays
+them.)
 """
 
 from __future__ import annotations
 
 import contextlib
 import functools
+import json
 import os
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -78,10 +91,10 @@ from pyspark.sql.types import (
 from .config import EtlJob
 from .operators import change_filter, rows as rows_ops, watermark
 from .operators.normalize import normalized_column_names
-from .plans.paths import local_path
+from .plans.paths import SmallFiles, local_path
 from .plans.state_table import StateTable
 from .plans.target_table import PARTITION_COL, TargetTable
-from .session import local_frame
+from .session import arrow_rows, local_frame
 from .sources.sheet_source import SheetSource, SpreadsheetMeta
 
 SPREADSHEETS_SCHEMA = StructType([
@@ -189,6 +202,8 @@ class SheetsEtlEngine:
             spark, self.table_path(self.ETL_JOBS_TABLE), ETL_JOBS_SCHEMA)
         self.profiles = StateTable(
             spark, self.table_path(self.PROFILES_TABLE), _profiles_schema())
+        commits = self._commits_dir()
+        self._commits = SmallFiles(spark, commits, local_path(commits))
 
     # -- U8: identifier qualification ---------------------------------------
 
@@ -234,9 +249,7 @@ class SheetsEtlEngine:
         everything before it is invisible to accounting consumers;
         everything after it is replayable. The load pass applies all of
         its manifests at once (``_apply_pending_commits``)."""
-        import json
-
-        os.makedirs(self._commits_dir(), exist_ok=True)
+        self._commits.mkdirs()
         row = {
             "id": job_id,
             "spreadsheet_id": spreadsheet_id,
@@ -248,35 +261,26 @@ class SheetsEtlEngine:
         # one manifest per job id (job_id is unique per (spreadsheet,
         # sheet)); a newer commit atomically replaces an unapplied older
         # one, and the keyed upsert makes replays idempotent either way
-        tmp = os.path.join(self._commits_dir(), f"_tmp_commit_{job_id}.json")
-        final = os.path.join(self._commits_dir(), f"commit_{job_id}.json")
-        with open(tmp, "w") as fh:
-            json.dump(row, fh)
-        os.replace(tmp, final)  # atomic on POSIX — the commit point
+        self._commits.write_text(f"commit_{job_id}.json", json.dumps(row))
 
     def _apply_pending_commits(self) -> None:
         """Fold every committed manifest into ``etl_jobs`` and clear it.
         Apply-then-delete: a crash between the two replays the same
         manifest next time, which the keyed upsert absorbs."""
-        import json
-
-        d = self._commits_dir()
-        if not os.path.isdir(d):
-            return
-        names = sorted(n for n in os.listdir(d) if n.startswith("commit_"))
+        names = sorted(n for n in self._commits.listdir()
+                       if n.startswith("commit_") and n.endswith(".json"))
         if not names:
             return
         rows = []
         for n in names:
-            with open(os.path.join(d, n)) as fh:
-                r = json.load(fh)
+            r = json.loads(self._commits.read_text(n))
             rows.append((int(r["id"]), int(r["spreadsheet_id"]),
                          r["sheet_name"], r["target_table"],
                          r["google_modified"], r["raw_columns_rows_hash"]))
-        updates = local_frame(self.spark, rows, ETL_JOBS_SCHEMA)
+        updates = arrow_rows(rows, ETL_JOBS_SCHEMA)
         self.etl_jobs.upsert(updates, keys=["spreadsheet_id", "sheet_name"])
         for n in names:
-            os.remove(os.path.join(d, n))
+            self._commits.delete(n)
 
     def target(self, table: str) -> TargetTable:
         return TargetTable(self.spark, self.table_path(table))
@@ -305,21 +309,13 @@ class SheetsEtlEngine:
         from .operators import typed_views
         from .operators.typed_views import _MAX_COUNTERS, _SUM_COUNTERS
 
-        jobs = (
-            self.etl_jobs.read()
-            .filter(F.col("target_table") == table)
-            .select("id", "raw_columns_rows_hash")
-            .collect()
-        )  # metadata-scale: one row per (spreadsheet, sheet) job
-        want = {int(r["id"]): r["raw_columns_rows_hash"] for r in jobs}
-        current = self.profiles.read()
-        have = {
-            int(r["etl_job_id"]): r["raw_columns_rows_hash"]
-            for r in current.filter(F.col("target_table") == table)
-            .select("etl_job_id", "raw_columns_rows_hash")
-            .distinct()
-            .collect()
-        }
+        jobs = self.etl_jobs.snapshot()
+        jobs = jobs.filter(pc.equal(jobs["target_table"], table))
+        want = dict(zip(jobs["id"].to_pylist(), jobs["raw_columns_rows_hash"].to_pylist()))
+        current = self.profiles.snapshot()
+        ours = current.filter(pc.equal(current["target_table"], table))
+        have = dict(zip(ours["etl_job_id"].to_pylist(),
+                        ours["raw_columns_rows_hash"].to_pylist()))
         stale = sorted(j for j, h in want.items() if have.get(j) != h)
         # profile rows whose job no longer exists in etl_jobs (a
         # deregistered / replaced load) must be SHED, not merged —
@@ -329,13 +325,12 @@ class SheetsEtlEngine:
         self.last_profiled_job_ids = stale
         if not stale and not orphans:
             return []
+        # per-(table, job) REPLACE, not keyed upsert: a reload must
+        # shed counters for columns (or rows) it no longer has
+        kept = current.filter(pc.invert(pc.and_kleene(
+            pc.equal(current["target_table"], table),
+            pc.is_in(current["etl_job_id"], pa.array(stale + orphans, pa.int64())))))
         if not stale:
-            kept = current.filter(
-                ~(
-                    (F.col("target_table") == table)
-                    & F.col("etl_job_id").isin(orphans)
-                )
-            )
             self.profiles.overwrite(kept)
             return []
         slice_df = (
@@ -367,16 +362,9 @@ class SheetsEtlEngine:
             for j in stale
             if j not in profiled  # empty load → sentinel
         ]
-        updates = local_frame(self.spark, rows, _profiles_schema())
-        # per-(table, job) REPLACE, not keyed upsert: a reload must
-        # shed counters for columns (or rows) it no longer has
-        kept = current.filter(
-            ~(
-                (F.col("target_table") == table)
-                & F.col("etl_job_id").isin(stale + orphans)
-            )
-        )
-        self.profiles.overwrite(kept.unionByName(updates))
+        updates = arrow_rows(rows, _profiles_schema())
+        self.profiles.overwrite(
+            pa.concat_tables([kept, updates], promote_options="permissive"))
         return stale
 
     def typed_target(
@@ -424,15 +412,12 @@ class SheetsEtlEngine:
         data_cols = [c for c in df.columns if not c.startswith("_")]
         if incremental and self.profiles.exists():
             self.refresh_load_profiles(table)
-            stored = (
-                self.profiles.read()
-                .filter(
-                    (F.col("target_table") == table)
-                    & F.col("column_name").isNotNull()  # sentinels out
-                )
-                .select("column_name", *_SUM_COUNTERS, *_MAX_COUNTERS)
-            )
-            merged = typed_views.merge_profiles(stored)
+            stored = self.profiles.snapshot()
+            stored = stored.filter(pc.and_(
+                pc.equal(stored["target_table"], table),
+                pc.is_valid(stored["column_name"]),  # sentinels out
+            )).select(["column_name", *_SUM_COUNTERS, *_MAX_COUNTERS])
+            merged = typed_views.merge_profiles(local_frame(self.spark, stored))
             types = {
                 r["column_name"]: r["decided_type"]
                 for r in typed_views.decide_profile(
@@ -458,7 +443,7 @@ class SheetsEtlEngine:
         list newer files from the source (pushdown by construction),
         record the whole page as seen (U1/O6). Returns number
         discovered."""
-        wm, cursor = watermark.greatest_modified(self.spreadsheets.read())
+        wm, cursor = watermark.greatest_modified(self.spreadsheets.snapshot())
         metas = self.source.list_spreadsheets(wm, cursor, self.discovery_cap)
         now = int(time.time()) if now is None else now
         self.record_spreadsheets_seen(metas, now)
@@ -468,8 +453,8 @@ class SheetsEtlEngine:
         """U1 bulk upsert (``DatabaseAgentMysql.php:130-149``):
         surrogate keys preserved for existing rows, allocated past the
         current max for new ones in ``google_spreadsheet_id`` order —
-        ONE small lookup query (the page's existing ids plus the max)
-        and ONE state commit of a driver-built frame for the whole
+        the page's existing ids and the max looked up in the driver's
+        snapshot, and ONE state commit (one Spark job) for the whole
         discovery page (≤ discovery_cap rows) instead of two driver
         actions + a snapshot write per file (the reference pays one
         cheap SQL statement per row; a Spark job per row is ~1 s of
@@ -481,24 +466,20 @@ class SheetsEtlEngine:
         for m in metas:
             if m.id not in page or m.modified_time > page[m.id].modified_time:
                 page[m.id] = m
-        current = self.spreadsheets.read()
-        gid = F.col("google_spreadsheet_id")
-        found = current.filter(gid.isin(list(page))).select(gid, "id")
-        top = current.select(
-            F.lit(None).cast("string").alias("google_spreadsheet_id"),
-            F.coalesce(F.max("id"), F.lit(0)).alias("id"))
-        ids: dict[str | None, set[int]] = {}
-        for r in found.unionByName(top).collect():
-            ids.setdefault(r["google_spreadsheet_id"], set()).add(int(r["id"]))
-        [max_id] = ids.pop(None)
+        current = self.spreadsheets.snapshot()
+        found = current.filter(pc.is_in(current["google_spreadsheet_id"],
+                                        pa.array(list(page), pa.string())))
+        ids: dict[str, set[int]] = {}
+        for g, i in zip(found["google_spreadsheet_id"].to_pylist(), found["id"].to_pylist()):
+            ids.setdefault(g, set()).add(int(i))
+        max_id = pc.max(current["id"]).as_py() or 0
         for g in sorted(g for g in page if g not in ids):
             max_id += 1
             ids[g] = {max_id}
         # a file older discovery code gave two surrogate ids keeps both:
         # the load pass fails its jobs rather than guess which one its
         # etl_jobs rows point at
-        updates = local_frame(
-            self.spark,
+        updates = arrow_rows(
             [(i, g, m.modified_time, m.name, now)
              for g, m in page.items() for i in sorted(ids[g])],
             SPREADSHEETS_SCHEMA)
@@ -578,26 +559,25 @@ class SheetsEtlEngine:
     # -- O3: the batched load pass -----------------------------------------
 
     def _job_lookups(self, jobs: list[EtlJob]) -> tuple[list[list], int]:
-        """The pass's one metadata query: the change filter (J2+J3) and
-        the J1 lookups, as the rows found for each job in job order,
-        plus the current max etl job id. A job has exactly one row
+        """The pass's one metadata query, on the driver's accounting
+        snapshots: the change filter (J2+J3) and the J1 lookups, as the
+        rows found for each job in job order, plus the current max etl
+        job id. A job has exactly one row
         unless the accounting holds duplicates (``_lookup`` rejects
         those)."""
         if not jobs:
             return [], 0
-        configured = local_frame(
-            self.spark,
-            [(i, j.google_spreadsheet_id, j.sheet_name) for i, j in enumerate(jobs)],
-            "pos int, google_spreadsheet_id string, sheet_name string")
-        etl_jobs = self.etl_jobs.read()
-        top = etl_jobs.agg(F.coalesce(F.max("id"), F.lit(0)).alias("max_id"))
-        rows = change_filter.job_lookups(
-            configured, self.spreadsheets.read(), etl_jobs
-        ).crossJoin(top).collect()  # metadata-sized: one row per job
+        configured = pa.table({
+            "pos": pa.array(range(len(jobs)), pa.int32()),
+            "google_spreadsheet_id": pa.array([j.google_spreadsheet_id for j in jobs], pa.string()),
+            "sheet_name": pa.array([j.sheet_name for j in jobs], pa.string()),
+        })
+        etl_jobs = self.etl_jobs.snapshot()
         found: list[list] = [[] for _ in jobs]
-        for r in rows:
+        for r in change_filter.job_lookups(
+                configured, self.spreadsheets.snapshot(), etl_jobs).to_pylist():
             found[r["pos"]].append(r)
-        return found, max((int(r["max_id"]) for r in rows), default=0)
+        return found, pc.max(etl_jobs["id"]).as_py() or 0
 
     @staticmethod
     def _lookup(job: EtlJob, found: list):
@@ -763,7 +743,8 @@ class SheetsEtlEngine:
         an undefined-variable bug on non-"not found" errors
         (``Tasks.php:87``); here any probe failure is "verify failed"
         (SURVEY.md §2.6 O4)."""
-        oldest = watermark.longest_unseen(self.spreadsheets.read())
+        seen = self.spreadsheets.snapshot()
+        oldest = watermark.longest_unseen(seen)
         if oldest is None:
             return True
         try:
@@ -780,14 +761,9 @@ class SheetsEtlEngine:
         # watermark OVER them — silently never discovered until their
         # next edit. The probe proves access; discovery owns the
         # watermark.
-        stored = (
-            self.spreadsheets.read()
-            .filter(F.col("google_spreadsheet_id") == meta.id)
-            .select("google_modified")
-            .first()
-        )
+        stored = seen.filter(pc.equal(seen["google_spreadsheet_id"], meta.id))
         recorded_modified = (
-            stored["google_modified"] if stored is not None
+            stored["google_modified"][0].as_py() if stored.num_rows
             else meta.modified_time
         )
         self.set_spreadsheet_seen(meta.id, recorded_modified, meta.name, now)

@@ -1,15 +1,19 @@
-"""Table paths: which ones the POSIX calls may touch, and where.
+"""Table paths, and the small files the engine keeps beside its tables.
 
 A table path is a plain local path, a ``file:`` URI, or a URI of
 another scheme (``hdfs://``, ``s3a://``). Spark reads and writes all
-three; the tables' own pointer, sidecar, GC and footer code uses POSIX
-calls for local tables, and those need a filesystem path, not the URI
-string (``open("file:///t/_LATEST")`` would land in a relative
+three; the engine's own small files (a state table's pointer and schema
+sidecars, the load pass's commit manifests) go through ``SmallFiles``,
+which uses POSIX calls for local paths and the Hadoop FileSystem API
+for any other scheme. The POSIX calls need a filesystem path, not the
+URI string (``open("file:///t/_LATEST")`` would land in a relative
 ``file:`` directory under the working directory).
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from urllib.parse import urlparse
 
 
@@ -20,3 +24,89 @@ def local_path(path: str) -> str | None:
         # no unquoting: Hadoop's Path takes the URI's path literally
         return urlparse(path).path
     return None if "://" in path else path
+
+
+class SmallFiles:
+    """Small files under the directory ``root``, named relative to it.
+
+    ``local`` is the root's filesystem path (``local_path(root)``);
+    when it is None every call goes through the Hadoop FileSystem API,
+    so the files live wherever the tables do. A write goes to a
+    temporary file renamed onto the name: atomic on POSIX
+    (``os.replace``) and on HDFS; an S3 rename is a copy and a delete,
+    the same caveat Delta has without a LogStore."""
+
+    def __init__(self, spark, root: str, local: str | None):
+        self.spark = spark
+        self.root = root
+        self.local = local
+
+    def _hadoop(self, name: str = ""):
+        """(Path, FileSystem) of ``name`` under the root."""
+        jvm = self.spark._jvm
+        p = jvm.org.apache.hadoop.fs.Path(self.root + ("/" + name if name else ""))
+        return p, p.getFileSystem(self.spark._jsc.hadoopConfiguration())
+
+    def read_text(self, name: str) -> str | None:
+        """The file's text, or None when it does not exist."""
+        if self.local is not None:
+            try:
+                with open(os.path.join(self.local, name)) as f:
+                    return f.read()
+            except FileNotFoundError:
+                return None
+        p, fs = self._hadoop(name)
+        if not fs.exists(p):
+            return None
+        stream = fs.open(p)
+        try:
+            return self.spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        finally:
+            stream.close()
+
+    def write_text(self, name: str, text: str) -> None:
+        """Write ``name`` through ``name + ".tmp"`` and a rename."""
+        if self.local is not None:
+            dst = os.path.join(self.local, name)
+            with open(dst + ".tmp", "w") as f:
+                f.write(text)
+            os.replace(dst + ".tmp", dst)
+            return
+        tmp, fs = self._hadoop(name + ".tmp")
+        dst, _ = self._hadoop(name)
+        out = fs.create(tmp, True)
+        try:
+            out.write(bytearray(text.encode()))
+        finally:
+            out.close()
+        fs.delete(dst, False)  # rename-onto refuses an existing dst
+        fs.rename(tmp, dst)
+
+    def listdir(self) -> list[str]:
+        """Names directly under the root; empty when it does not exist."""
+        if self.local is not None:
+            return os.listdir(self.local) if os.path.isdir(self.local) else []
+        p, fs = self._hadoop()
+        if not fs.exists(p):
+            return []
+        return [st.getPath().getName() for st in fs.listStatus(p)]
+
+    def delete(self, name: str) -> None:
+        """Remove a file or a whole directory; a missing one is no error."""
+        if self.local is not None:
+            target = os.path.join(self.local, name)
+            if os.path.isdir(target):
+                shutil.rmtree(target, ignore_errors=True)
+            elif os.path.exists(target):
+                os.remove(target)
+            return
+        p, fs = self._hadoop(name)
+        fs.delete(p, True)
+
+    def mkdirs(self) -> None:
+        """Create the root (and its parents) when missing."""
+        if self.local is not None:
+            os.makedirs(self.local, exist_ok=True)
+            return
+        p, fs = self._hadoop()
+        fs.mkdirs(p)

@@ -12,9 +12,10 @@ engine needs over plain parquet:
   single pointer file (``_LATEST``) whose update is an atomic rename
   (POSIX ``os.replace`` locally; Hadoop FileSystem rename on
   hdfs:// — atomic there too; s3a rename is copy+delete, the same
-  caveat Delta has without a LogStore). Readers therefore always see
-  a complete snapshot —
-  never a partially-written one (U6 atomicity for a single table).
+  caveat Delta has without a LogStore; both through
+  ``paths.SmallFiles``). Readers therefore always see a complete
+  snapshot — never a partially-written one (U6 atomicity for a single
+  table).
 - **Schema sidecar**: a snapshot is its parquet data plus
   ``_v{n}/_schema.json``, the written frame's schema, put there after
   the data and before the pointer flip (Spark's reader skips
@@ -22,152 +23,140 @@ engine needs over plain parquet:
   reader, so it infers nothing and starts no Spark job. A snapshot
   written before sidecars existed is read by inference; the table's
   next commit writes a sidecar.
+- **Driver snapshots**: ``snapshot()`` is the current version's rows
+  as a ``pyarrow.Table`` with the Arrow schema of its sidecar, cached
+  per version. The pointer is read on every call, so another object's
+  or process's commit is seen; the table's own Arrow commits fill the
+  cache with the table they wrote, and any other version is loaded
+  once (one Spark job). The sync loop's metadata questions are
+  answered from these snapshots with Arrow compute and start no Spark
+  job; the driver holds one Arrow copy of each accounting table.
 - **MERGE upsert**: ``upsert(updates, keys)`` = matched rows take the
   update's values, unmatched current rows are kept, brand-new keys are
   inserted — expressed as ``current ANTI JOIN updates  UNION  updates``
-  (both inputs re-selected to the unioned column set → additive schema
+  (both inputs conformed to the unioned column set → additive schema
   evolution for free, U7; the unioned columns are the committed
-  frame's schema, so the sidecar carries them).
+  frame's schema, so the sidecar carries them). A ``pyarrow.Table``
+  of updates merges on the driver against ``snapshot()`` (an Arrow
+  left-anti join and a concat with column promotion) and costs one
+  Spark job, the write; a DataFrame merges in Spark, which the
+  data-scale ANN/HNSW index tables use.
 - **Idempotent create** (U7): ``create_if_not_exists`` seeds version 0
   with an empty snapshot; calling twice never loses data
   (``DatabaseAgent.php:120-124``).
 
 These tables hold *metadata* (one row per spreadsheet / per job —
 ≤10^6 rows even at 100 TB of sheet data), so full-snapshot rewrite per
-upsert is the right trade: tiny writes, zero read amplification, and
-the anti-join side is always broadcast-size. Data-plane tables never
-use this class (see ``target_table.py``).
+upsert is the right trade: tiny writes, zero read amplification, a
+driver-sized Arrow copy, and an anti-join side that is always
+broadcast-size. Data-plane tables never use this class (see
+``target_table.py``).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ..session import local_frame
-from .paths import local_path
+from .paths import SmallFiles, local_path
 
 _LATEST = "_LATEST"
 _SCHEMA = "_schema.json"
 _KEEP_VERSIONS = 3
 
 
+def _read_type(t: DataType) -> DataType:
+    """The type Spark's parquet reader gives a column written as ``t``:
+    nullable at every level."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _read_type(f.dataType), True, f.metadata)
+                           for f in t.fields])
+    if isinstance(t, ArrayType):
+        return ArrayType(_read_type(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_read_type(t.keyType), _read_type(t.valueType), True)
+    return t
+
+
+def _snapshot_schema(schema: StructType) -> pa.Schema:
+    """The Arrow schema of a snapshot whose sidecar is ``schema``: what
+    ``read().toArrow()`` gives."""
+    return to_arrow_schema(_read_type(schema))
+
+
 class StateTable:
     def __init__(self, spark: SparkSession, path: str, schema: StructType | str):
         self.spark = spark
         self.path = path
-        self.schema = schema
+        self.schema = DataType.fromDDL(schema) if isinstance(schema, str) else schema
         self._local = local_path(path)  # None off-box
+        self._snapshot: tuple[int, pa.Table] | None = None  # (version, rows)
 
     # -- snapshot plumbing -------------------------------------------------
-    #
-    # Local paths use POSIX primitives (open/os.replace — atomic rename
-    # guaranteed); any other URI scheme (hdfs://, s3a://) goes through
-    # the Hadoop FileSystem API so the table works off-box. HDFS rename
-    # is atomic; S3 rename is copy+delete — the same caveat Delta has
-    # without a LogStore, documented rather than hidden.
 
-    def _hfs(self):
-        jvm = self.spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(self.path)
-        return jvm, p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-
-    def _read_text(self, name: str) -> str | None:
-        """A small file under the table root (the pointer, a schema
-        sidecar), or None when it does not exist."""
-        if self._local is not None:
-            try:
-                with open(os.path.join(self._local, name)) as f:
-                    return f.read()
-            except FileNotFoundError:
-                return None
-        jvm, fs = self._hfs()
-        p = jvm.org.apache.hadoop.fs.Path(self.path + "/" + name)
-        if not fs.exists(p):
-            return None
-        stream = fs.open(p)
-        try:
-            return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-
-    def _write_text(self, name: str, text: str) -> None:
-        """Write a small file under the table root through a temporary
-        file and a rename onto ``name``."""
-        if self._local is not None:
-            dst = os.path.join(self._local, name)
-            with open(dst + ".tmp", "w") as f:
-                f.write(text)
-            os.replace(dst + ".tmp", dst)  # atomic on POSIX
-            return
-        jvm, fs = self._hfs()
-        tmp = jvm.org.apache.hadoop.fs.Path(self.path + "/" + name + ".tmp")
-        dst = jvm.org.apache.hadoop.fs.Path(self.path + "/" + name)
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(text.encode()))
-        finally:
-            out.close()
-        fs.delete(dst, False)  # rename-onto refuses an existing dst
-        fs.rename(tmp, dst)
+    @property
+    def _files(self) -> SmallFiles:
+        """The pointer, sidecars and version directories: POSIX calls
+        locally, the Hadoop FileSystem API off-box (``paths.SmallFiles``)."""
+        return SmallFiles(self.spark, self.path, self._local)
 
     def current_version(self) -> int | None:
         try:
-            return int((self._read_text(_LATEST) or "").strip())
+            return int((self._files.read_text(_LATEST) or "").strip())
         except ValueError:
             return None
 
     def _version_dir(self, v: int) -> str:
         return os.path.join(self.path, f"_v{v}")
 
-    def _commit(self, df: DataFrame) -> None:
+    def _commit(self, data: DataFrame | pa.Table) -> None:
         """Write the next snapshot and its schema sidecar, then
-        atomically flip the pointer.
+        atomically flip the pointer. An Arrow ``data`` becomes the
+        cached snapshot of the new version.
 
-        ``df`` may read this table lazily (an upsert's current rows, an
-        overwrite of a frame derived from ``read()``): the write goes to
-        a new ``_v{n+1}`` directory while the plan reads ``_v{n}`` or
+        ``data`` may read this table lazily (an upsert's current rows,
+        an overwrite of a frame derived from ``read()``): the write goes
+        to a new ``_v{n+1}`` directory while the plan reads ``_v{n}`` or
         older, and ``_gc`` runs only after the write and deletes only
         versions at or below ``latest - _KEEP_VERSIONS``. So a snapshot
         read before a commit can feed each of the next
         ``_KEEP_VERSIONS`` commits, and needs no materialization first."""
+        # one Arrow batch is one partition: a single chunk writes one file
+        arrow = data.combine_chunks() if isinstance(data, pa.Table) else None
+        df = local_frame(self.spark, arrow) if arrow is not None else data
         v = (self.current_version() or 0) + 1
         df.write.mode("overwrite").parquet(self._version_dir(v))
-        self._write_text(f"_v{v}/{_SCHEMA}", df.schema.json())
-        self._write_text(_LATEST, str(v))
+        schema = df.schema
+        self._files.write_text(f"_v{v}/{_SCHEMA}", schema.json())
+        self._files.write_text(_LATEST, str(v))
+        self._snapshot = None if arrow is None else (v, arrow.cast(_snapshot_schema(schema)))
         self._gc(v)
 
     def _gc(self, latest: int) -> None:
-        if self._local is not None:
-            names = os.listdir(self._local)
-        else:
-            jvm, fs = self._hfs()
-            root = jvm.org.apache.hadoop.fs.Path(self.path)
-            names = [st.getPath().getName() for st in fs.listStatus(root)]
-        for name in names:
+        for name in self._files.listdir():
             if name.startswith("_v"):
                 try:
                     v = int(name[2:])
                 except ValueError:
                     continue
                 if v <= latest - _KEEP_VERSIONS:
-                    if self._local is not None:
-                        shutil.rmtree(
-                            os.path.join(self._local, name), ignore_errors=True
-                        )
-                    else:
-                        jvm, fs = self._hfs()
-                        fs.delete(
-                            jvm.org.apache.hadoop.fs.Path(
-                                self.path + "/" + name
-                            ),
-                            True,
-                        )
+                    self._files.delete(name)
+
+    def _read_version(self, v: int | None) -> DataFrame:
+        if v is None:
+            return local_frame(self.spark, [], self.schema)
+        sidecar = self._files.read_text(f"_v{v}/{_SCHEMA}")
+        reader = self.spark.read
+        if sidecar is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(sidecar)))
+        return reader.parquet(self._version_dir(v))
 
     # -- public API --------------------------------------------------------
 
@@ -178,34 +167,45 @@ class StateTable:
         """U7: idempotent DDL (``DatabaseAgentMysql.php:92-127``)."""
         if self.exists():
             return
-        if self._local is not None:
-            os.makedirs(self._local, exist_ok=True)
-        else:
-            jvm, fs = self._hfs()
-            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(self.path))
-        self._commit(local_frame(self.spark, [], self.schema))
+        self._files.mkdirs()
+        self._commit(to_arrow_schema(self.schema).empty_table())
 
     def read(self) -> DataFrame:
         """The current snapshot, read with its sidecar schema, so no
         Spark job infers it from parquet footers. A snapshot written
         before sidecars existed falls back to inference; the table's
         next commit writes one."""
+        return self._read_version(self.current_version())
+
+    def snapshot(self) -> pa.Table:
+        """The current snapshot's rows on the driver, as the
+        ``pyarrow.Table`` ``read().toArrow()`` gives. The pointer is
+        read on every call, so another object's or process's commit is
+        seen; the rows are cached per version. The table's own Arrow
+        commits fill the cache with what they wrote; any other version
+        costs one Spark job, once."""
         v = self.current_version()
         if v is None:
-            return local_frame(self.spark, [], self.schema)
-        sidecar = self._read_text(f"_v{v}/{_SCHEMA}")
-        reader = self.spark.read
-        if sidecar is not None:
-            reader = reader.schema(StructType.fromJson(json.loads(sidecar)))
-        return reader.parquet(self._version_dir(v))
+            return _snapshot_schema(self.schema).empty_table()
+        if self._snapshot is None or self._snapshot[0] != v:
+            df = self._read_version(v)
+            self._snapshot = (v, df.toArrow().cast(_snapshot_schema(df.schema)))
+        return self._snapshot[1]
 
-    def upsert(self, updates: DataFrame, keys: list[str]) -> None:
+    def upsert(self, updates: DataFrame | pa.Table, keys: list[str]) -> None:
         """MERGE: update matched, keep unmatched, insert new (U1/U2).
 
         Column union across current/updates gives additive schema
         evolution (new columns null-padded on old rows) — the parquet
         analogue of the reference's swallowed ``ADD COLUMN`` (U7).
-        """
+
+        Arrow ``updates`` merge on the driver against ``snapshot()``;
+        a DataFrame merges in Spark (the data-scale index tables)."""
+        if isinstance(updates, pa.Table):
+            current = self.snapshot()
+            kept = current.join(updates.select(keys), keys, join_type="left anti")
+            self._commit(pa.concat_tables([kept, updates], promote_options="permissive"))
+            return
         current = self.read()
         all_cols = list(dict.fromkeys(current.columns + updates.columns))
 
@@ -218,5 +218,5 @@ class StateTable:
         kept = current.join(F.broadcast(updates.select(*keys)), on=keys, how="left_anti")
         self._commit(conform(kept).unionByName(conform(updates)))
 
-    def overwrite(self, df: DataFrame) -> None:
-        self._commit(df)
+    def overwrite(self, data: DataFrame | pa.Table) -> None:
+        self._commit(data)

@@ -12,9 +12,10 @@ chosen so the same code is correct on a multi-executor cluster:
 - Arrow enabled — every Python-side exchange (Pandas UDFs in the
   multimodal/text operators) is Arrow-batched, never row-at-a-time.
 
-``local_frame`` is the one way the sync loop turns driver rows into a
-DataFrame: an Arrow table handed to the JVM, so evaluating the frame
-runs no Python worker.
+``local_frame`` is the one way the sync loop turns driver data (rows,
+or an Arrow table such as a state table's snapshot) into a DataFrame:
+an Arrow table handed to the JVM, so evaluating the frame runs no
+Python worker.
 """
 
 from __future__ import annotations
@@ -94,16 +95,12 @@ def get_spark(app_name: str = "sheets-etl-spark", shuffle_partitions: int | None
     return builder.getOrCreate()
 
 
-def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
-    """A DataFrame of driver-held ``rows`` (tuples in ``schema``'s
-    column order; ``schema`` a ``StructType`` or a DDL string).
+def arrow_rows(rows, schema: StructType | str):
+    """A ``pyarrow.Table`` of driver-held ``rows`` (tuples in
+    ``schema``'s column order; ``schema`` a ``StructType`` or a DDL
+    string), built column by column against ``to_arrow_schema(schema)``.
 
-    ``spark.createDataFrame(list, schema)`` parallelizes the list as a
-    Python RDD, so every job that evaluates the frame sends its
-    ``defaultParallelism`` tasks through Python workers. This builds a
-    ``pyarrow.Table`` column by column instead; ``createDataFrame`` hands
-    an Arrow table to the JVM, which makes the frame with no Python
-    worker. Each row is verified against the schema first, as
+    Each row is verified against the schema first, as
     ``createDataFrame``'s ``verifySchema`` does: a row of the wrong
     arity raises ``ValueError``, a wrongly typed cell ``TypeError``
     (Arrow alone would truncate a float into a long column, or split a
@@ -118,8 +115,26 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
     for r in rows:
         verify(r)
     arrow = to_arrow_schema(schema)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
         schema=arrow,
     )
-    return spark.createDataFrame(table, schema)
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str | None = None) -> DataFrame:
+    """A DataFrame of driver-held data: a ``pyarrow.Table`` (its own
+    schema when ``schema`` is None), or ``rows`` built by
+    ``arrow_rows(rows, schema)``.
+
+    ``spark.createDataFrame(list, schema)`` parallelizes the list as a
+    Python RDD, so every job that evaluates the frame sends its
+    ``defaultParallelism`` tasks through Python workers.
+    ``createDataFrame`` hands an Arrow table to the JVM instead, which
+    makes the frame with no Python worker."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        rows = arrow_rows(rows, schema)
+    return spark.createDataFrame(rows, schema)

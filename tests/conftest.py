@@ -22,3 +22,21 @@ def spark() -> SparkSession:
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ["SPARK_GRAFT_SF_DIR"]
+
+
+@pytest.fixture()
+def jobs_started(spark):
+    """``jobs_started(group, fn)``: run ``fn()`` under the Spark job
+    group ``group`` and return how many jobs it started."""
+    def count(group: str, fn) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -5,6 +5,7 @@ change one cell → exactly that job's partition rewritten."""
 from __future__ import annotations
 
 import os
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -483,7 +484,7 @@ def test_probe_refresh_never_advances_discovery_watermark(
     eng.find_updated_spreadsheets(now=100)
     from google_sheets_etl_spark.operators import watermark as wm
 
-    before, _ = wm.greatest_modified(eng.spreadsheets.read())
+    before, _ = wm.greatest_modified(eng.spreadsheets.snapshot())
     # the probed (longest-unseen) file gets edited FAR in the future,
     # before discovery has listed that edit
     ssa = "SSA" + "a" * 41
@@ -492,7 +493,7 @@ def test_probe_refresh_never_advances_discovery_watermark(
         "Tab1", SHEET_A,
     )
     assert eng.verify_oldest_spreadsheet(now=200) is True
-    after, _ = wm.greatest_modified(eng.spreadsheets.read())
+    after, _ = wm.greatest_modified(eng.spreadsheets.snapshot())
     assert after == before  # watermark untouched; discovery owns it
 
 
@@ -527,20 +528,7 @@ def _sheet(i: int, modified: str) -> tuple[SpreadsheetMeta, list[list[str]]]:
     return SpreadsheetMeta(gid, modified, f"P{i}"), rows
 
 
-def _pass_jobs(spark, engine, jobs, group: str) -> int:
-    """Spark jobs one load pass runs, counted by a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        engine.load_updated_spreadsheets(jobs)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_load_pass_job_count_flat_in_changed_sheets(spark, tmp_path):
+def test_load_pass_job_count_flat_in_changed_sheets(spark, tmp_path, jobs_started):
     """A pass costs the same Spark jobs for 2 and for 6 changed sheets
     of one target table."""
     src = FixtureSheetSource()
@@ -560,7 +548,8 @@ def test_load_pass_job_count_flat_in_changed_sheets(spark, tmp_path):
             meta, rows = _sheet(i, stamp)
             src.put_sheet(meta, "S", rows)
         eng.find_updated_spreadsheets(now=2)
-        counts.append(_pass_jobs(spark, eng, jobs, f"load-pass-{n}-changed"))
+        counts.append(jobs_started(f"load-pass-{n}-changed",
+                                   lambda: eng.load_updated_spreadsheets(jobs)))
         assert not eng.last_load_failures
     assert counts[0] == counts[1] > 0
     assert eng.target("flat").read().count() == 12
@@ -859,6 +848,148 @@ def test_load_pass_error_not_masked_and_failures_reset(engine, jobs, monkeypatch
     assert engine.last_load_failures == []
 
 
+def test_warm_cycles_start_only_their_commits_and_writes(engine, jobs, source, jobs_started):
+    """On a warmed engine the metadata questions start no Spark job: a
+    no-change cycle starts one job (discovery's commit), and a cycle
+    that reloads one sheet starts only its writes (discovery's commit,
+    the target write, the accounting commit)."""
+    def cycle():
+        engine.find_updated_spreadsheets(now=5)
+        return engine.load_updated_spreadsheets(jobs)
+
+    engine.find_updated_spreadsheets(now=1)
+    engine.load_updated_spreadsheets(jobs)
+    cycle()
+    assert jobs_started("no-change-cycle", cycle) == 1
+
+    changed = [row[:] for row in SHEET_A]
+    changed[1][1] = "99"
+    source.put_sheet(SpreadsheetMeta("SSA" + "a" * 41, "2026-01-09T00:00:00.000Z", "Sheet A"),
+                     "Tab1", changed)
+    assert jobs_started("one-sheet-cycle", cycle) == 3
+    assert engine.target("table_a").read().filter("name = 'alice'").first()["amount"] == "99"
+    assert engine.filter_extractable(jobs) == []
+
+
+# -- the Arrow metadata operators against their Spark statements ---------------
+
+_STAMPS = [None, "2026-01-01T00:00:00Z", "2026-01-02T00:00:00Z", "2026-01-03T00:00:00Zé"]
+
+
+def _accounting_state(seed: int):
+    """Seeded accounting rows with the cases the metadata queries must
+    agree on: null ``google_modified`` on either side, files discovery
+    never saw, jobs never loaded, one file under two surrogate ids, two
+    ``etl_jobs`` rows for one sheet, ties on ``google_modified``, and
+    null ``last_seen``."""
+    rnd = random.Random(seed)
+    gids = [f"g{i}" for i in range(7)]  # g5, g6: never discovered
+    spreadsheets, sid = [], 0
+    for i, g in enumerate(gids[:5]):
+        for _ in range(2 if i == 0 else rnd.choice([1, 1, 1, 2])):  # g0: two ids
+            sid += 1
+            # g1 and g2 tie on the greatest stamp; g3 has none
+            stamp = {1: _STAMPS[-1], 2: _STAMPS[-1], 3: None}.get(i, rnd.choice(_STAMPS))
+            spreadsheets.append((sid, g, stamp, g.upper(), rnd.choice([None, 3, 5, 5, 8])))
+    etl_jobs, eid = [], 0
+    forced = {(1, "S1"): 1, (2, "S1"): 2, (sid + 1, "S1"): 1}
+    for s in range(1, sid + 2):  # sid + 1: a spreadsheet id discovery never gave
+        for sheet in ("S1", "S2"):
+            for _ in range(forced.get((s, sheet), rnd.choice([0, 1, 1, 1, 2]))):
+                eid += 1
+                stamp = None if eid == 1 else rnd.choice(_STAMPS)
+                etl_jobs.append((eid, s, sheet, "t", stamp, f"h{eid}"))
+    configured = [(pos, g, sheet) for pos, (g, sheet) in
+                  enumerate((g, sheet) for g in gids for sheet in ("S1", "S2", "S3"))]
+    return spreadsheets, etl_jobs, configured
+
+
+_CONFIGURED = "pos int, google_spreadsheet_id string, sheet_name string"
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_arrow_job_lookups_equal_reference_statement(spark, seed):
+    """``change_filter.job_lookups`` over Arrow snapshots returns, per
+    ``pos``, the rows of the reference's left-join statement run by
+    Spark over the same rows; ``filter_extractable`` keeps exactly the
+    configured rows with an extractable lookup."""
+    from google_sheets_etl_spark.etl import ETL_JOBS_SCHEMA, SPREADSHEETS_SCHEMA
+    from google_sheets_etl_spark.session import arrow_rows, local_frame
+
+    ss, ej, conf = _accounting_state(seed)
+    tables = {"spreadsheets": arrow_rows(ss, SPREADSHEETS_SCHEMA),
+              "etl_jobs": arrow_rows(ej, ETL_JOBS_SCHEMA),
+              "configured": arrow_rows(conf, _CONFIGURED)}
+    for name, t in tables.items():
+        local_frame(spark, t).createOrReplaceTempView(f"lookup_{name}")
+    cols = ["pos", "google_spreadsheet_id", "sheet_name", "spreadsheet_id", "seen_modified",
+            "etl_job_id", "loaded_modified", "raw_columns_rows_hash", "extractable"]
+    want = spark.sql("""
+        SELECT c.pos, c.google_spreadsheet_id, c.sheet_name,
+               s.id AS spreadsheet_id, s.google_modified AS seen_modified,
+               e.id AS etl_job_id, e.google_modified AS loaded_modified,
+               e.raw_columns_rows_hash,
+               NOT coalesce(e.google_modified = s.google_modified, false) AS extractable
+        FROM lookup_configured c
+        LEFT JOIN lookup_spreadsheets s ON s.google_spreadsheet_id = c.google_spreadsheet_id
+        LEFT JOIN lookup_etl_jobs e ON e.spreadsheet_id = s.id AND e.sheet_name = c.sheet_name
+    """).collect()
+    got = change_filter.job_lookups(
+        tables["configured"], tables["spreadsheets"], tables["etl_jobs"]).to_pylist()
+
+    def per_pos(rows):
+        out: dict[int, list] = {}
+        for r in rows:
+            out.setdefault(r["pos"], []).append(tuple(r[c] for c in cols))
+        return {p: sorted(v, key=repr) for p, v in out.items()}
+
+    assert per_pos(got) == per_pos(want)
+    assert sorted(per_pos(got)) == list(range(len(conf)))
+    kept = change_filter.filter_extractable(
+        tables["configured"], tables["spreadsheets"], tables["etl_jobs"])
+    assert kept.column_names == ["pos", "google_spreadsheet_id", "sheet_name"]
+    assert sorted(r["pos"] for r in kept.to_pylist()) == sorted(
+        r["pos"] for r in want if r["extractable"])
+
+
+@pytest.mark.parametrize("seed", [None] + list(range(6)))
+def test_arrow_watermark_reads_equal_spark_operators(spark, seed):
+    """``greatest_modified`` equals ``ORDER BY google_modified DESC,
+    google_spreadsheet_id DESC LIMIT 1`` and the Spark ``max(struct)``
+    operator it replaced; ``longest_unseen`` returns a row with the
+    minimum ``last_seen`` (None when no row has one)."""
+    from google_sheets_etl_spark.etl import SPREADSHEETS_SCHEMA
+    from google_sheets_etl_spark.operators import watermark
+    from google_sheets_etl_spark.session import arrow_rows, local_frame
+
+    rows = [] if seed is None else _accounting_state(seed)[0]
+    if seed == 0:
+        rows = [(i, g, None, n, None) for i, g, _m, n, _s in rows]  # every stamp null
+    table = arrow_rows(rows, SPREADSHEETS_SCHEMA)
+    df = local_frame(spark, table)
+    df.createOrReplaceTempView("wm_spreadsheets")
+    top = spark.sql("""
+        SELECT google_modified, google_spreadsheet_id FROM wm_spreadsheets
+        ORDER BY google_modified DESC, google_spreadsheet_id DESC LIMIT 1""").collect()
+    struct_max = df.select(F.max(F.struct("google_modified", "google_spreadsheet_id"))
+                           .alias("wm")).first()["wm"]
+    got = watermark.greatest_modified(table)
+    if not rows:
+        assert top == [] and struct_max is None
+        assert got == watermark.EPOCH_WATERMARK
+    else:
+        assert got == tuple(top[0]) == tuple(struct_max)
+
+    oldest = watermark.longest_unseen(table)
+    least = spark.sql("""
+        SELECT google_spreadsheet_id FROM wm_spreadsheets
+        WHERE last_seen = (SELECT min(last_seen) FROM wm_spreadsheets)""").collect()
+    if least:
+        assert oldest in {r[0] for r in least}
+    else:
+        assert oldest is None
+
+
 # -- driver-built frames: one Arrow builder, no Python workers ----------------
 
 _LONG = "é" * 150 + "x" * 150  # a 300-character non-ASCII cell
@@ -960,3 +1091,34 @@ def test_file_uri_warehouse_keeps_manifests_inside(spark, tmp_path, source):
     under the warehouse, not in a relative ``file:`` directory."""
     eng = SheetsEtlEngine(spark, (tmp_path / "wh").as_uri(), source)
     assert eng._commits_dir() == str(tmp_path / "wh" / "_commits")
+
+
+def test_commit_manifests_replay_through_hadoop_fs(spark, tmp_path, source, jobs, monkeypatch):
+    """The manifests' Hadoop FileSystem branch (the one ``hdfs://`` and
+    ``s3a://`` warehouses take), on a local directory: a manifest
+    staged there lands under the warehouse, not the working directory,
+    and a fresh engine replays and clears it."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    wh = (tmp_path / "wh").as_uri()
+    eng = SheetsEtlEngine(spark, wh, source)
+    eng._commits.local = None
+    eng.set_up_accounting()
+    eng.find_updated_spreadsheets(now=1)
+    ssa = eng.spreadsheets.read().filter("google_spreadsheet_id LIKE 'SSA%'").first()
+    eng._commit_job(7, ssa["id"], jobs[0], ssa["google_modified"], "staged")
+
+    def staged():  # the local Hadoop FS keeps a hidden .crc beside each file
+        return [n for n in os.listdir(tmp_path / "wh" / "_commits") if not n.startswith(".")]
+
+    assert staged() == ["commit_7.json"]
+    assert os.listdir(cwd) == []
+
+    fresh = SheetsEtlEngine(spark, wh, source)
+    fresh._commits.local = None
+    fresh.set_up_accounting()
+    assert [(r["id"], r["sheet_name"], r["raw_columns_rows_hash"])
+            for r in fresh.etl_jobs.read().collect()] == [(7, "Tab1", "staged")]
+    assert staged() == []
+    assert os.listdir(cwd) == []

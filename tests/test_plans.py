@@ -985,7 +985,18 @@ def test_webdataset_pipeline_plan_shape(spark, sf_dir):
     assert_manifest_repartition_only(audit, "tar_decode_audit")
 
 
-def test_state_table_snapshots_outlive_lazy_commits(spark, tmp_path):
+def _updates(kind: str, spark, rows, schema):
+    """An upsert's ``updates`` of one kind: a DataFrame (merged in
+    Spark) or a ``pyarrow.Table`` (merged on the driver)."""
+    from google_sheets_etl_spark.session import arrow_rows
+
+    if kind == "arrow":
+        return arrow_rows(rows, schema)
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize("kind", ["frame", "arrow"])
+def test_state_table_snapshots_outlive_lazy_commits(spark, tmp_path, kind):
     """Upserts and overwrites commit lazily planned frames (no eager
     materialization): back-to-back commits, including an overwrite of
     a frame derived from ``read()``, give exact rows, and a snapshot
@@ -1000,7 +1011,7 @@ def test_state_table_snapshots_outlive_lazy_commits(spark, tmp_path):
     st = StateTable(spark, str(tmp_path / "st"), "k long, v string")
     st.create_if_not_exists()
     for i in range(6):
-        st.upsert(spark.createDataFrame([(i % 4, f"v{i}")], "k long, v string"), ["k"])
+        st.upsert(_updates(kind, spark, [(i % 4, f"v{i}")], "k long, v string"), ["k"])
     want = {0: "v4", 1: "v5", 2: "v2", 3: "v3"}
     assert {r["k"]: r["v"] for r in st.read().collect()} == want
 
@@ -1020,7 +1031,8 @@ def test_state_table_snapshots_outlive_lazy_commits(spark, tmp_path):
     assert not os.path.isdir(st._version_dir(version))
 
 
-def test_state_table_sidecar_schema_equals_inferred(spark, tmp_path):
+@pytest.mark.parametrize("kind", ["frame", "arrow"])
+def test_state_table_sidecar_schema_equals_inferred(spark, tmp_path, kind):
     """Each snapshot's sidecar schema is what footer inference would
     give, nullability included, after the empty create, an upsert, an
     upsert that adds a column (U7) and an overwrite."""
@@ -1038,10 +1050,11 @@ def test_state_table_sidecar_schema_equals_inferred(spark, tmp_path):
 
     st.create_if_not_exists()
     assert [f.name for f in check().fields] == ETL_JOBS_SCHEMA.fieldNames()
-    st.upsert(spark.createDataFrame(
-        [(1, 10, "Tab1", "t", "2026-01-01", "h1")], ETL_JOBS_SCHEMA), ["id"])
+    st.upsert(_updates(
+        kind, spark, [(1, 10, "Tab1", "t", "2026-01-01", "h1")], ETL_JOBS_SCHEMA), ["id"])
     check()
-    wider = spark.createDataFrame(
+    wider = _updates(
+        kind, spark,
         [(2, 11, "Tab2", "t", "2026-01-02", "h2", 5)],
         "id long, spreadsheet_id long, sheet_name string, target_table string, "
         "google_modified string, raw_columns_rows_hash string, extra int")
@@ -1123,3 +1136,76 @@ def test_file_uri_state_table_stays_inside_table(spark, tmp_path, monkeypatch):
     assert (root / "_v7" / "_schema.json").exists()
     assert sorted(map(tuple, st.read().collect())) == want + [(9, "h")]
     assert os.listdir(other) == []
+
+
+def test_state_table_snapshot_equals_read(spark, tmp_path):
+    """``snapshot()`` holds ``read()``'s rows (as a multiset) under the
+    Arrow schema of ``read()``'s schema after create, an Arrow upsert,
+    a DataFrame upsert, a column-adding upsert (U7) and overwrites; a
+    fresh object on the same path loads the same snapshot."""
+    from collections import Counter
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from google_sheets_etl_spark.etl import ETL_JOBS_SCHEMA
+    from google_sheets_etl_spark.plans.state_table import StateTable
+    from google_sheets_etl_spark.session import arrow_rows
+
+    path = str(tmp_path / "st")
+    st = StateTable(spark, path, ETL_JOBS_SCHEMA)
+
+    def rows(table):
+        return Counter(tuple(r.values()) for r in table.to_pylist())
+
+    def check():
+        df = st.read()
+        snap = st.snapshot()
+        assert snap.schema == to_arrow_schema(df.schema)
+        assert rows(snap) == Counter(map(tuple, df.collect()))
+        fresh = StateTable(spark, path, ETL_JOBS_SCHEMA).snapshot()
+        assert fresh.schema == snap.schema and rows(fresh) == rows(snap)
+        return snap
+
+    st.create_if_not_exists()
+    assert check().num_rows == 0
+    st.upsert(arrow_rows([(1, 10, "Tab1", "t", "m1", "h1"), (2, 10, "Tab2", "t", None, None)],
+                         ETL_JOBS_SCHEMA), ["id"])
+    check()
+    st.upsert(spark.createDataFrame([(2, 10, "Tab2", "t", "m2", "h2"), (3, 11, "Tab1", "u", "m3", "h3")],
+                                    ETL_JOBS_SCHEMA), ["id"])
+    assert check().num_rows == 3
+    wider = arrow_rows(
+        [(1, 10, "Tab1", "t", "m4", "h4", 7)],
+        "id long, spreadsheet_id long, sheet_name string, target_table string, "
+        "google_modified string, raw_columns_rows_hash string, extra int")
+    st.upsert(wider, ["id"])
+    snap = check()
+    assert sorted((r["id"], r["extra"]) for r in snap.to_pylist()) == [(1, 7), (2, None), (3, None)]
+    st.overwrite(snap.slice(0, 2))
+    assert check().num_rows == 2
+    st.overwrite(st.read().filter("id > 1"))
+    check()
+
+
+def test_state_table_snapshot_sees_other_commits_and_hits_cache(spark, tmp_path, jobs_started):
+    """A commit through a second object on the same path is seen by the
+    first object's next ``snapshot()``, which loads it with one Spark
+    job; a cache hit, including the version an Arrow commit wrote,
+    starts none."""
+    from google_sheets_etl_spark.plans.state_table import StateTable
+    from google_sheets_etl_spark.session import arrow_rows
+
+    path = str(tmp_path / "st")
+    a = StateTable(spark, path, "k long, v string")
+    a.create_if_not_exists()
+    a.upsert(arrow_rows([(1, "a")], a.schema), ["k"])
+    assert jobs_started("snapshot-own-commit", a.snapshot) == 0
+
+    b = StateTable(spark, path, "k long, v string")
+    b.upsert(arrow_rows([(2, "b")], b.schema), ["k"])
+    assert jobs_started("snapshot-other-commit", a.snapshot) == 1
+    assert sorted(tuple(r.values()) for r in a.snapshot().to_pylist()) == [(1, "a"), (2, "b")]
+    assert jobs_started("snapshot-hit", a.snapshot) == 0
+
+    b.upsert(spark.createDataFrame([(1, "z")], "k long, v string"), ["k"])
+    assert sorted(tuple(r.values()) for r in a.snapshot().to_pylist()) == [(1, "z"), (2, "b")]
