@@ -31,6 +31,15 @@ class EtlJob:
     header_row: int = 0   # EtlConfig.php:16 default
     skip_rows: int = 1    # EtlConfig.php:17 default
 
+    def __post_init__(self):
+        # a negative offset has no single reading (PHP's array_slice
+        # keeps the LAST rows, the Spark kernel every row): refused
+        if (isinstance(self.skip_rows, bool) or not isinstance(self.skip_rows, int)
+                or self.skip_rows < 0):
+            raise ValueError(
+                f"skipRows must be a non-negative integer, got {self.skip_rows!r} "
+                f"(spreadsheet {self.google_spreadsheet_id} sheet {self.sheet_name})")
+
 
 def parse_config(config: dict) -> list[EtlJob]:
     """Flatten the nested JSON into jobs, skipping the ``$schema`` key
@@ -47,7 +56,7 @@ def parse_config(config: dict) -> list[EtlJob]:
                     target_table=spec["targetTable"],
                     column_mapping=dict(spec.get("columnMapping", {})),
                     header_row=int(spec.get("headerRow", 0)),
-                    skip_rows=int(spec.get("skipRows", 1)),
+                    skip_rows=spec.get("skipRows", 1),
                 )
             )
     return jobs

@@ -12,11 +12,12 @@ one-job form) costs a fixed number of Spark jobs whatever the number
 of changed sheets: one driver-side metadata query answers the change
 filter and the J1 lookups for every job; headers resolve on the driver
 from the rows the fetch already returned; each target table takes one
-dynamic partition overwrite of its changed jobs' union; one accounting
-upsert applies the whole pass. New jobs get ids past the accounting max table
+dynamic partition overwrite of one frame built on the driver from its
+changed jobs' rows (``rows.project_raw_rows``); one accounting upsert
+applies the whole pass. New jobs get ids past the accounting max table
 by table, in the order the tables are written (job order within a
-table). ``_rowid`` (when on) is allocated per table write: gapless past
-the table max, in ``(job id, _origin_row)`` order.
+table). ``_rowid`` (when on) is numbered on the driver as the frame is
+built: gapless past the table max, in ``(job id, _origin_row)`` order.
 
 The loop's metadata questions (discovery's watermark and id lookup,
 the change filter and J1 lookups, the max ids, the profile store's
@@ -27,7 +28,7 @@ version, filled by the table's own commits) and answered with Arrow
 compute. The accounting updates merge on the driver too, so Spark runs
 only the commits (one write each), the target writes, the profile scan
 and the typed view. Every frame the engine hands Spark from driver
-data (a fetched sheet, a commit, the stored counters) goes through
+data (a target table's rows, a commit, the stored counters) goes through
 ``session.local_frame``: an Arrow table handed to the JVM, so none of
 the loop's jobs runs a Python worker to produce it.
 
@@ -74,7 +75,6 @@ them.)
 from __future__ import annotations
 
 import contextlib
-import functools
 import json
 import os
 import time
@@ -84,16 +84,14 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType, LongType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .config import EtlJob
 from .operators import change_filter, rows as rows_ops, watermark
 from .operators.normalize import normalized_column_names
 from .plans.paths import SmallFiles, local_path
 from .plans.state_table import StateTable
-from .plans.target_table import PARTITION_COL, TargetTable
+from .plans.target_table import PARTITION_COL, ROWID_COL, TargetTable
 from .session import arrow_rows, local_frame
 from .sources.sheet_source import SheetSource, SpreadsheetMeta
 
@@ -112,11 +110,6 @@ ETL_JOBS_SCHEMA = StructType([
     StructField("target_table", StringType()),
     StructField("google_modified", StringType()),         # stamped from parent at load
     StructField("raw_columns_rows_hash", StringType()),   # sha256 hex
-])
-
-SHEET_SCHEMA = StructType([
-    StructField("row_idx", LongType()),
-    StructField("cells", ArrayType(StringType())),
 ])
 
 
@@ -169,7 +162,7 @@ class _Load:
     @property
     def rows_loaded(self) -> int:
         """Raw rows at or past ``skip_rows`` — what the kernel emits."""
-        return max(0, len(self.rows) - max(0, self.job.skip_rows))
+        return max(0, len(self.rows) - self.job.skip_rows)
 
 
 class SheetsEtlEngine:
@@ -608,39 +601,39 @@ class SheetsEtlEngine:
                 f"{e} in spreadsheet https://docs.google.com/spreadsheets/d/"
                 f"{job.google_spreadsheet_id} sheet {job.sheet_name}") from e
 
-    def _sheet_df(self, raw_rows: list[list[str]]) -> DataFrame:
-        data = [(i, [None if c is None else str(c) for c in r])
-                for i, r in enumerate(raw_rows)]
-        return local_frame(self.spark, data, SHEET_SCHEMA)
-
-    def _kernel(self, load: _Load) -> DataFrame:
-        """T1/T3/T4/T6 + VARCHAR(100) parity for one job's rows."""
-        job = load.job
-        sheet = rows_ops.trim_cells(self._sheet_df(load.rows))
-        names = normalized_column_names(list(job.column_mapping.keys()))
-        data = rows_ops.project_rows(sheet, load.selectors, names, job.skip_rows)
-        data = rows_ops.enforce_cell_width(data, 100)
-        return rows_ops.with_provenance(data, load.etl_job_id)
-
     def _write_table(self, table: str, loads: list[_Load]) -> None:
         """U4/U5 for every changed job of one target table: the DELETE
         of each zero-row job's partition (an empty frame replaces
         nothing, and the reference's DELETE has no incoming-rows
         precondition), then one dynamic partition overwrite of the
-        other jobs' union. The deletes go first so that a failure
-        before the overwrite lands no new data."""
+        other jobs' rows, built on the driver (null in the columns a
+        job's mapping lacks, U7). The deletes go first so that a
+        failure before the overwrite lands no new data."""
         target = self.target(table)
         for ld in loads:
             if not ld.rows_loaded:
                 target.delete_job_partition(ld.etl_job_id)
-        written = [ld for ld in loads if ld.rows_loaded]
-        if written:
-            data = functools.reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                [self._kernel(ld) for ld in written])
-            target.overwrite_job_partition(
-                data, with_rowid=self.rowid,
-                job_rows={ld.etl_job_id: ld.rows_loaded for ld in written})
+        written = [(ld, normalized_column_names(list(ld.job.column_mapping)))
+                   for ld in loads if ld.rows_loaded]
+        if not written:
+            return
+        columns = list(dict.fromkeys(n for _ld, own in written for n in own))
+        schema = StructType(
+            [StructField("_origin_row", LongType())]
+            + [StructField(c, StringType()) for c in columns]
+            + [StructField(PARTITION_COL, LongType())]
+            + ([StructField(ROWID_COL, LongType())] if self.rowid else []))
+        # each job's _rowid starts past the rows of the lower job ids
+        offset = target.max_rowid() if self.rowid else 0
+        rows = []
+        for ld, own in sorted(written, key=lambda w: w[0].etl_job_id):
+            at = [own.index(c) + 1 if c in own else None for c in columns]
+            for r in rows_ops.project_raw_rows(ld.rows, ld.selectors, ld.job.skip_rows):
+                rowid = (offset + r[0] + 1,) if self.rowid else ()
+                rows.append((r[0], *(None if i is None else r[i] for i in at),
+                             ld.etl_job_id, *rowid))
+            offset += ld.rows_loaded
+        target.overwrite_job_partition(local_frame(self.spark, rows, schema))
 
     def _drop_new_partitions(self, table: str, loads: list[_Load]) -> None:
         """After a failed table write: remove whatever landed for its

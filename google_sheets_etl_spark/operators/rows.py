@@ -1,13 +1,13 @@
 """The sheet transform kernel (T1-T4, T6) over ragged string arrays.
 
-A sheet is a DataFrame with schema ``(row_idx: long, cells:
-array<string>)`` — one row per physical sheet row, ragged (trailing
-cells absent), all values strings. This mirrors the reference's
-universal in-memory structure ``RowsOfColumns`` (reference:
-``src/RowsOfColumns.php:7-28``) but stays distributed: nothing here
-collects data except the single header row (and the sync loop, which
-fetches rows to the driver anyway, resolves headers there with
-:func:`raw_header` instead).
+A sheet is rows of cells, ragged (trailing cells absent), mirroring the
+reference's ``RowsOfColumns`` (``src/RowsOfColumns.php:7-28``). The
+sync loop holds each fetched sheet's rows on the driver, so it runs
+:func:`raw_header` and :func:`project_raw_rows` there. DataFrame input
+of schema ``(row_idx: long, cells: array<string>)`` (the ``gsheets``
+DataSource, ``reference_ops.sheet_ingest_kernel``) runs the Spark
+functions, which stay distributed: nothing collects data except
+:func:`header_row`'s one row. A seeded test pins the two equal.
 
 Operator map (SURVEY.md §2.2):
 
@@ -24,7 +24,7 @@ Operator map (SURVEY.md §2.2):
   (``DatabaseAgentMysql.php:266-273``; deterministic ``_origin_row``
   from the source row index, never ``monotonically_increasing_id``)
 
-All expressions are built-in ``pyspark.sql.functions`` — the whole
+The Spark functions are built-in ``pyspark.sql.functions`` — the whole
 kernel stays inside WholeStageCodegen; there is no Python UDF and no
 shuffle (narrow transformations only), so it scales linearly with input
 splits on any cluster.
@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 
 ROW_IDX = "row_idx"
 CELLS = "cells"
+# VARCHAR(100) parity (DatabaseAgentMysql.php:172)
+CELL_WIDTH = 100
 
 
 class ColumnIndexOutOfBounds(Exception):
@@ -74,16 +76,31 @@ def header_row(sheet: DataFrame, header_row_idx: int = 0) -> list[str]:
     return list(row[0][0])
 
 
+def _trim(cell) -> str | None:
+    """T1 for one driver-held cell, as :func:`trim_cells` trims it:
+    ``F.trim`` strips only U+0020, so this is ``str.strip(" ")``, not
+    ``str.strip()`` (which would also strip tabs, newlines and U+00A0)."""
+    return None if cell is None else str(cell).strip(" ")
+
+
 def raw_header(raw_rows: list[list], header_row_idx: int = 0) -> list[str | None]:
     """T1+T2 input for rows the driver already holds: the header row of
-    a fetched sheet, trimmed the way :func:`trim_cells` trims it, with
-    no Spark job. ``F.trim`` strips only U+0020, so this is
-    ``str.strip(" ")``, not ``str.strip()`` (which would also strip
-    tabs, newlines and U+00A0)."""
+    a fetched sheet, trimmed, with no Spark job."""
     if not 0 <= header_row_idx < len(raw_rows):
         raise RequiredColumnNotFound(f"Header row not found: {header_row_idx}")
-    return [None if c is None else str(c).strip(" ")
-            for c in raw_rows[header_row_idx]]
+    return [_trim(c) for c in raw_rows[header_row_idx]]
+
+
+def project_raw_rows(raw_rows: list[list], selectors: list[int], skip_rows: int) -> list[tuple]:
+    """T1+T3+T4 and the width rule for rows the driver already holds:
+    ``(_origin_row, *cells)`` per row at or past ``skip_rows``, as
+    ``enforce_cell_width(project_rows(trim_cells(sheet), ...))`` gives
+    them (``F.substring`` and Python slicing both count code points)."""
+    out = []
+    for i, row in enumerate(raw_rows[skip_rows:]):
+        cells = [_trim(row[s]) if s < len(row) else None for s in selectors]
+        out.append((i, *(c and c[:CELL_WIDTH] for c in cells)))
+    return out
 
 
 def resolve_column_selectors(
@@ -147,7 +164,7 @@ def with_provenance(data: DataFrame, etl_job_id: int) -> DataFrame:
     return data.withColumn("_origin_etl_job_id", F.lit(etl_job_id).cast("long"))
 
 
-def enforce_cell_width(data: DataFrame, width: int = 100) -> DataFrame:
+def enforce_cell_width(data: DataFrame, width: int = CELL_WIDTH) -> DataFrame:
     """VARCHAR(100) parity (``DatabaseAgentMysql.php:172``): truncate
     every data column (not provenance) to ``width`` chars."""
     exprs = [

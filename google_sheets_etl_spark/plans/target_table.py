@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .paths import local_path
@@ -75,61 +75,39 @@ class TargetTable:
                 return True
         return False
 
-    def overwrite_job_partition(
-        self, data: DataFrame, with_rowid: bool = False,
-        job_rows: dict[int, int] | None = None,
-    ) -> None:
+    def overwrite_job_partition(self, data: DataFrame) -> None:
         """U4+U5: replace exactly the ``_origin_etl_job_id`` partitions
         present in ``data``. The dynamic-overwrite mode is a PER-WRITE
         option, not an assumed session conf — under a vanilla session a
         plain ``mode=overwrite`` + ``partitionBy`` would silently drop
-        every other job's partitions.
-
-        ``with_rowid`` mirrors the reference's auto-increment surrogate
-        key (``DatabaseAgentMysql.php:159``): new rows continue from the
-        current table max, like MySQL never reusing deleted ids when a
-        job's partition is replaced. One write numbers all of its jobs'
-        rows gaplessly past the table max, in ``(_origin_etl_job_id,
-        _origin_row)`` order; ``job_rows`` (required with it) is each
-        job's row count in ``data``, which the caller knows.
-        """
+        every other job's partitions. ``data`` arrives complete: the
+        engine numbers ``_rowid`` (when on) past :meth:`max_rowid`."""
         if PARTITION_COL not in data.columns:
             raise ValueError(f"data must carry {PARTITION_COL}")
-        if with_rowid and job_rows is None:
-            raise ValueError("with_rowid needs job_rows")
-        if with_rowid:
-            base = 0
-            if self.exists():
-                # metadata-scale fast path: the table max comes from
-                # parquet FOOTER statistics (exact for int64), so a
-                # tiny incremental load never scans a 100 TB table's
-                # data pages for one number
-                base = self._rowid_max_from_footers()
-                if base is None:
-                    existing = self.read()
-                    base = 0
-                    if ROWID_COL in existing.columns:
-                        base = existing.agg(
-                            F.coalesce(F.max(ROWID_COL), F.lit(0))
-                        ).first()[0]
-            # each job's rows start past the rows of the lower job ids,
-            # so the window partitions by job: one window spans one sheet
-            # (the Sheets product caps a file at ~10M cells), not the batch
-            offsets, total = [], int(base)
-            for job_id in sorted(job_rows):
-                offsets += [F.lit(job_id).cast("long"), F.lit(total).cast("long")]
-                total += job_rows[job_id]
-            offset = F.create_map(*offsets)[F.col(PARTITION_COL)]
-            w = Window.partitionBy(PARTITION_COL).orderBy("_origin_row")
-            data = data.withColumn(
-                ROWID_COL, (offset + F.row_number().over(w)).cast("long")
-            )
         (
             data.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(PARTITION_COL)
             .parquet(self.path)
         )
+
+    def max_rowid(self) -> int:
+        """The table's largest ``_rowid``, 0 when it has no data or no
+        ``_rowid`` column. New rows continue past it, like MySQL's
+        auto-increment surrogate key (``DatabaseAgentMysql.php:159``)
+        never reusing the ids of a replaced job's rows."""
+        if not self.exists():
+            return 0
+        # metadata-scale fast path: parquet FOOTER statistics (exact for
+        # int64), so a tiny incremental load never scans a 100 TB
+        # table's data pages for one number
+        best = self._rowid_max_from_footers()
+        if best is None:
+            existing = self.read()
+            best = 0
+            if ROWID_COL in existing.columns:
+                best = existing.agg(F.coalesce(F.max(ROWID_COL), F.lit(0))).first()[0]
+        return int(best)
 
     def _rowid_max_from_footers(self) -> int | None:
         """max(_rowid) from parquet footer statistics — one footer read

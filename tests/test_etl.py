@@ -162,6 +162,20 @@ def test_parse_config():
     assert j.column_mapping == {"a": "A", "b": 1}
 
 
+@pytest.mark.parametrize("skip", [-1, True, 1.0, "1", None])
+def test_skip_rows_must_be_a_non_negative_int(skip):
+    """A negative ``skipRows`` has no single reading (PHP's
+    ``array_slice`` keeps the last rows; the Spark kernel kept every
+    row), and a non-integer one is malformed: both are refused, naming
+    the entry, not clamped."""
+    with pytest.raises(ValueError, match=r"skipRows.*\(spreadsheet SS1 sheet Tab\)"):
+        EtlJob("SS1", "Tab", "t", {"a": "A"}, skip_rows=skip)
+    cfg = {"SS0": {"Ok": {"targetTable": "t", "skipRows": 0}},
+           "SS1": {"Tab": {"targetTable": "t", "skipRows": skip}}}
+    with pytest.raises(ValueError, match=r"skipRows.*\(spreadsheet SS1 sheet Tab\)"):
+        parse_config(cfg)
+
+
 # -- U8: schema/tablePrefix qualification (DatabaseAgent.php:53-61,118-125) --
 
 def test_qualified_name_composition(spark, tmp_path, source):
@@ -529,8 +543,8 @@ def _sheet(i: int, modified: str) -> tuple[SpreadsheetMeta, list[list[str]]]:
 
 
 def test_load_pass_job_count_flat_in_changed_sheets(spark, tmp_path, jobs_started):
-    """A pass costs the same Spark jobs for 2 and for 6 changed sheets
-    of one target table."""
+    """A pass costs the same Spark jobs, and the same stages, for 2 and
+    for 6 changed sheets of one target table."""
     src = FixtureSheetSource()
     jobs = []
     for i in range(6):
@@ -542,16 +556,20 @@ def test_load_pass_job_count_flat_in_changed_sheets(spark, tmp_path, jobs_starte
     eng.find_updated_spreadsheets(now=1)
     eng.load_updated_spreadsheets(jobs)
 
-    counts = []
+    tracker = spark.sparkContext.statusTracker()
+    counts, stages = [], []
     for n, stamp in ((2, "2026-03-02T00:00:00.000Z"), (6, "2026-03-03T00:00:00.000Z")):
         for i in range(n):
             meta, rows = _sheet(i, stamp)
             src.put_sheet(meta, "S", rows)
         eng.find_updated_spreadsheets(now=2)
-        counts.append(jobs_started(f"load-pass-{n}-changed",
-                                   lambda: eng.load_updated_spreadsheets(jobs)))
+        group = f"load-pass-{n}-changed"
+        counts.append(jobs_started(group, lambda: eng.load_updated_spreadsheets(jobs)))
         assert not eng.last_load_failures
+        stages.append(sum(len(tracker.getJobInfo(j).stageIds)
+                          for j in tracker.getJobIdsForGroup(group)))
     assert counts[0] == counts[1] > 0
+    assert stages[0] == stages[1] >= counts[0]
     assert eng.target("flat").read().count() == 12
 
 
@@ -579,6 +597,29 @@ def test_one_pass_into_one_table_equals_serial_passes(spark, tmp_path):
     assert batched == table("wh_serial", [[jx], [jy]])
     assert len(batched) == 5
     assert {dict(r)["d"] for r in batched} == {None, "d1", "d2", "d3"}
+
+
+def test_rowid_offsets_follow_job_ids_not_job_order(spark, tmp_path):
+    """A pass reloading two jobs of one table numbers ``_rowid`` past
+    the table max in job-id order, whatever the order of its job list."""
+    src = FixtureSheetSource()
+    jobs = []
+    for i in range(2):
+        meta, rows = _sheet(i, "2026-02-01T00:00:00.000Z")
+        src.put_sheet(meta, "S", rows)
+        jobs.append(EtlJob(meta.id, "S", "t", {"name": "Name"}))
+    eng = SheetsEtlEngine(spark, str(tmp_path / "wh_order"), src, rowid=True)
+    eng.set_up_accounting()
+    eng.find_updated_spreadsheets(now=1)
+    assert [r.etl_job_id for r in eng.load_updated_spreadsheets(jobs)] == [1, 2]
+    for i in range(2):
+        meta, rows = _sheet(i, "2026-02-02T00:00:00.000Z")
+        src.put_sheet(meta, "S", rows)
+    eng.find_updated_spreadsheets(now=2)
+    eng.load_updated_spreadsheets(jobs[::-1])
+    assert sorted((r["_rowid"], r["_origin_etl_job_id"], r["_origin_row"])
+                  for r in eng.target("t").read().collect()) == [
+        (5, 1, 0), (6, 1, 1), (7, 2, 0), (8, 2, 1)]
 
 
 def test_new_jobs_get_consecutive_ids_past_pending_manifest(
@@ -1010,12 +1051,10 @@ def test_local_frame_matches_create_data_frame(spark, schema, rows):
     """``local_frame`` gives ``createDataFrame``'s rows and schema, over
     the engine's schemas and a DDL string, and its plan has no
     ``PythonRDD``: evaluating it runs no Python worker."""
-    from google_sheets_etl_spark.etl import (
-        ETL_JOBS_SCHEMA, SHEET_SCHEMA, SPREADSHEETS_SCHEMA,
-    )
+    from google_sheets_etl_spark.etl import ETL_JOBS_SCHEMA, SPREADSHEETS_SCHEMA
     from google_sheets_etl_spark.session import local_frame
 
-    schema = {"sheet": SHEET_SCHEMA, "etl_jobs": ETL_JOBS_SCHEMA,
+    schema = {"sheet": "row_idx long, cells array<string>", "etl_jobs": ETL_JOBS_SCHEMA,
               "spreadsheets": SPREADSHEETS_SCHEMA}.get(schema, schema)
     got = local_frame(spark, rows, schema)
     want = spark.createDataFrame(rows, schema)
@@ -1077,11 +1116,12 @@ def test_file_uri_target_table_continues_rowid(spark, tmp_path):
 
     tt = TargetTable(spark, (tmp_path / "t").as_uri())
     mk = lambda job, vals: spark.createDataFrame(
-        [(job, i, v) for i, v in enumerate(vals)],
-        "_origin_etl_job_id long, _origin_row long, v string")
-    tt.overwrite_job_partition(mk(1, ["a", "b", "c"]), with_rowid=True, job_rows={1: 3})
-    assert tt._rowid_max_from_footers() == 3
-    tt.overwrite_job_partition(mk(2, ["d", "e"]), with_rowid=True, job_rows={2: 2})
+        [(job, i, v, tt.max_rowid() + i + 1) for i, v in enumerate(vals)],
+        "_origin_etl_job_id long, _origin_row long, v string, _rowid long")
+    assert tt.max_rowid() == 0
+    tt.overwrite_job_partition(mk(1, ["a", "b", "c"]))
+    assert tt._rowid_max_from_footers() == tt.max_rowid() == 3
+    tt.overwrite_job_partition(mk(2, ["d", "e"]))
     got = sorted((r["v"], r["_rowid"]) for r in tt.read().collect())
     assert got == [("a", 1), ("b", 2), ("c", 3), ("d", 4), ("e", 5)]
 

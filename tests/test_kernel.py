@@ -1,5 +1,7 @@
 """Sheet kernel tests (T1-T6; reference src/RowsOfColumns.php)."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -109,3 +111,58 @@ def test_fingerprint_invariant_across_shuffle_configs(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert f_a == f_b
+
+
+_EMOJI = "\U0001F600"
+_CELLS = [
+    None, "", "  ", "plain", " padded ", "\ttab\t", "\u00a0nbsp\u00a0", " \u00a0 nb ",
+    "\u3000ideo\u3000", " \t mixed   ", "x" * 150,
+    _EMOJI * 99, _EMOJI * 100, " " + _EMOJI * 101 + " ", "é" * 101,
+    7, -3, 1.5, 2.0,
+]
+
+
+def _ragged_sheet(rnd):
+    width = rnd.randint(1, 5)
+    header = [rnd.choice(["Name", " Qty ", "\tTab", " Nb", f"h{i}"]) + str(i)
+              for i in range(width)]
+    return [header] + [[rnd.choice(_CELLS) for _ in range(rnd.randint(0, width + 2))]
+                       for _ in range(rnd.randint(0, 8))]
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_driver_kernel_equals_spark_kernel(spark, seed):
+    """``raw_header`` + ``project_raw_rows`` (the load pass, on the
+    driver) give the Spark kernel's header and, as a multiset, its
+    rows: U+0020-only trim against tab/NBSP/U+3000 edges, null-padded
+    ragged rows, ``None`` cells, non-BMP text cut at 100 code points,
+    non-string cells through ``str()``, every ``skip_rows`` edge and
+    selectors by index and by name."""
+    from collections import Counter
+    from functools import reduce
+
+    from google_sheets_etl_spark.session import local_frame
+
+    rnd = random.Random(seed)
+    want, got = [], Counter()
+    for _ in range(3):
+        raw = _ragged_sheet(rnd)
+        sheet = local_frame(
+            spark, [(i, [None if c is None else str(c) for c in r]) for i, r in enumerate(raw)],
+            "row_idx long, cells array<string>")
+        header = K.raw_header(raw, 0)
+        assert header == K.header_row(K.trim_cells(sheet), 0)
+        by_index = [rnd.randrange(len(header)) for _ in range(rnd.randint(1, 4))]
+        by_name = rnd.sample(header, rnd.randint(1, len(header)))
+        for specs in (by_index, by_name):
+            sel = K.resolve_column_selectors(header, specs)
+            for skip in (0, 1, len(raw), len(raw) + 3):
+                case = len(want)  # one Spark action for every case
+                kernel = K.with_provenance(K.enforce_cell_width(K.project_rows(
+                    K.trim_cells(sheet), sel, [f"c{i}" for i in range(len(sel))], skip),
+                    100), case)
+                want.append(kernel.select("_origin_etl_job_id", F.array(
+                    *[F.col(c) for c in kernel.columns[1:-1]]).alias("cells"), "_origin_row"))
+                got.update((case, r[1:], r[0]) for r in K.project_raw_rows(raw, sel, skip))
+    rows = reduce(lambda a, b: a.unionByName(b), want).collect()
+    assert Counter((r[0], tuple(r[1]), r[2]) for r in rows) == got
