@@ -20,6 +20,8 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 
+from .operators.normalize import RESERVED, normalized_column_names
+
 
 @dataclass(frozen=True)
 class EtlJob:
@@ -32,13 +34,19 @@ class EtlJob:
     skip_rows: int = 1    # EtlConfig.php:17 default
 
     def __post_init__(self):
-        # a negative offset has no single reading (PHP's array_slice
-        # keeps the LAST rows, the Spark kernel every row): refused
-        if (isinstance(self.skip_rows, bool) or not isinstance(self.skip_rows, int)
-                or self.skip_rows < 0):
-            raise ValueError(
-                f"skipRows must be a non-negative integer, got {self.skip_rows!r} "
-                f"(spreadsheet {self.google_spreadsheet_id} sheet {self.sheet_name})")
+        entry = f"(spreadsheet {self.google_spreadsheet_id} sheet {self.sheet_name})"
+        # a negative row offset has no single reading (PHP's
+        # array_slice keeps the LAST rows), a non-integer one is
+        # malformed: both refused, not coerced
+        for key, value in (("headerRow", self.header_row), ("skipRows", self.skip_rows)):
+            if isinstance(value, bool) or not isinstance(value, int) or value < 0:
+                raise ValueError(
+                    f"{key} must be a non-negative integer, got {value!r} {entry}")
+        # a mapping key normalizing to a provenance or partition column
+        # would collide with it in the target table
+        clash = sorted(RESERVED.intersection(normalized_column_names(list(self.column_mapping))))
+        if clash:
+            raise ValueError(f"columnMapping keys {clash} are reserved column names {entry}")
 
 
 def parse_config(config: dict) -> list[EtlJob]:
@@ -55,7 +63,7 @@ def parse_config(config: dict) -> list[EtlJob]:
                     sheet_name=sheet_name,
                     target_table=spec["targetTable"],
                     column_mapping=dict(spec.get("columnMapping", {})),
-                    header_row=int(spec.get("headerRow", 0)),
+                    header_row=spec.get("headerRow", 0),
                     skip_rows=spec.get("skipRows", 1),
                 )
             )

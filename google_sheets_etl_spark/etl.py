@@ -25,10 +25,11 @@ staleness check and the stored counters, the O4 probe's pick) start no
 Spark job: each accounting table's current snapshot is held on the
 driver as a ``pyarrow.Table`` (``StateTable.snapshot()``, cached per
 version, filled by the table's own commits) and answered with Arrow
-compute. The accounting updates merge on the driver too, so Spark runs
-only the commits (one write each), the target writes, the profile scan
-and the typed view. Every frame the engine hands Spark from driver
-data (a target table's rows, a commit, the stored counters) goes through
+compute, and the typed view's decision merges and decides the stored
+counters there too. The accounting updates merge on the driver, so
+Spark runs only the commits (one write each), the target writes, the
+profile scan and the typed view. Every frame the engine hands Spark
+from driver data (a target table's rows, a commit) goes through
 ``session.local_frame``: an Arrow table handed to the JVM, so none of
 the loop's jobs runs a Python worker to produce it.
 
@@ -364,9 +365,7 @@ class SheetsEtlEngine:
         self,
         table: str,
         overrides: dict[str, str] | None = None,
-        sample_fraction: float | str | None = "auto",
         min_frac: float = 1.0,
-        incremental: bool = True,
     ) -> DataFrame:
         """TYPED VIEW over a loaded target table (round-4 verdict
         directive #2's engine surface): the stored table stays
@@ -376,56 +375,38 @@ class SheetsEtlEngine:
         provenance columns (``_origin_*``, ``_rowid``) pass through
         with their stored types. ``overrides`` pins types the
         profile can't know (``{'zip': 'string'}`` to stop a
-        leading-zero column typing as bigint); ``sample_fraction``
-        defaults to ``"auto"`` — footer-stats-large tables profile a
-        seeded sample, small tables profile in full (see
-        decide_types for the thresholds and the safe-degradation
-        contract); pass ``None`` to force the full profile or a
-        float to pin a fraction. ``min_frac`` relaxes the totality
-        rule — a column types when at least that fraction of its
-        non-blank values cast, the minority NULLing under the same
+        leading-zero column typing as bigint). ``min_frac`` relaxes the
+        totality rule — a column types when at least that fraction of
+        its non-blank values cast, the minority NULLing under the same
         safe-degradation contract (see ``decide_profile``).
 
-        ``incremental`` (default, round-6 verdict directive #8): the
-        decision comes from the PER-LOAD profile store —
-        ``refresh_load_profiles`` profiles only loads whose counters
-        are missing or hash-stale (usually just the newest load, one
-        partition-pruned scan), and the decision merges the stored
-        counter rows (loads × columns — metadata-scale). Decisions
-        are EXACTLY the full-table profile's (the mergeable-counter
-        invariant ``typed_profile_incremental`` certifies), but after
-        N loads the Nth re-typing has scanned each load once total,
-        instead of the whole table N times. The sampled-profile path
-        (``incremental=False`` + ``sample_fraction``) remains for
-        tables not loaded through this engine's accounting."""
+        The decision comes from the PER-LOAD profile store (round-6
+        verdict directive #8): ``refresh_load_profiles`` profiles only
+        loads whose counters are missing or hash-stale (usually just
+        the newest load, one partition-pruned scan; every load when
+        the store does not exist yet), and the stored counter rows
+        (loads × columns — metadata-scale) are merged and decided on
+        the driver. Decisions are EXACTLY the full-table profile's (the
+        mergeable-counter invariant ``typed_profile_incremental``
+        certifies), but after N loads the Nth re-typing has scanned
+        each load once total, instead of the whole table N times."""
         from .operators import typed_views
-        from .operators.typed_views import _MAX_COUNTERS, _SUM_COUNTERS
 
         df = self.target(table).read()
-        data_cols = [c for c in df.columns if not c.startswith("_")]
-        if incremental and self.profiles.exists():
-            self.refresh_load_profiles(table)
-            stored = self.profiles.snapshot()
-            stored = stored.filter(pc.and_(
-                pc.equal(stored["target_table"], table),
-                pc.is_valid(stored["column_name"]),  # sentinels out
-            )).select(["column_name", *_SUM_COUNTERS, *_MAX_COUNTERS])
-            merged = typed_views.merge_profiles(local_frame(self.spark, stored))
-            types = {
-                r["column_name"]: r["decided_type"]
-                for r in typed_views.decide_profile(
-                    merged, min_frac=min_frac
-                ).collect()
-            }
-            # a data column with no stored counters (every load
-            # predates it — can't happen via refresh, but belt and
-            # braces) passes through as stored
-            types = {c: types.get(c, "string") for c in data_cols}
-        else:
-            types = typed_views.decide_types(
-                df, data_cols, sample_fraction=sample_fraction,
-                min_frac=min_frac,
-            )
+        self.refresh_load_profiles(table)
+        stored = self.profiles.snapshot()
+        stored = stored.filter(pc.and_(
+            pc.equal(stored["target_table"], table),
+            pc.is_valid(stored["column_name"]),  # sentinels out
+        ))
+        decided = typed_views.decide_profile(
+            typed_views.merge_profiles(stored), min_frac=min_frac)
+        types = dict(zip(decided["column_name"].to_pylist(),
+                         decided["decided_type"].to_pylist()))
+        # a data column with no stored counters (every load predates
+        # it — can't happen via refresh, but belt and braces) passes
+        # through as stored
+        types = {c: types.get(c, "string") for c in df.columns if not c.startswith("_")}
         types.update(overrides or {})
         return typed_views.typed_view(df, types)
 

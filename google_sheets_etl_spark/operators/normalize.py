@@ -22,7 +22,9 @@ so its dedup can never fire; the documented intent (unique identifiers)
 is implemented here, without quoting — Spark identifiers need none.
 
 Known reference edge (``DatabaseAgentMysql.php:320``): a column named
-``_rowid_`` collides with provenance columns; see ``RESERVED``.
+``_rowid_`` collides with provenance columns. Here ``EtlJob`` refuses a
+mapping whose normalized names meet ``RESERVED`` (the surrogate key,
+the provenance columns and the partition column).
 """
 
 from __future__ import annotations

@@ -12,7 +12,7 @@ loads is cheap.
 
 Design:
 
-- :func:`profile_cast_stats` — ONE aggregate pass over the table
+- :func:`profile_counters` — ONE aggregate pass over the table
   computing, per column, how many non-blank values survive
   ``try_cast`` to each candidate type (boolean, bigint, double,
   date). Map-side partial aggregation: the scan streams, the shuffle
@@ -20,7 +20,8 @@ Design:
   full-table statement possible. Blanks (``''`` after trim) are
   treated as NULL — the warehouse null-pads short rows (T3), and a
   blank cell must not block a column from typing.
-- The DECISION is in the same query (a CASE over the counts), most
+- The DECISION is driver code over the collected counter rows (one
+  row per column, never per row of data), most
   specific type first: boolean → bigint → double → date →
   timestamp → date[<locale format>] → bigint/double[grouped] →
   string. A type wins only if EVERY non-blank value
@@ -37,8 +38,9 @@ Design:
   while pure dates (and explicit midnights) stay ``date``.
 - :func:`typed_view` — applies a decided (or user-overridden) type
   map as a ``try_cast`` projection; :func:`auto_typed_view` chains
-  profile → decide → view. The profile collect is metadata-scale
-  (one row per COLUMN, never per row of data).
+  profile → decide → view. The profile's counters are collected as a
+  ``pyarrow.Table`` (metadata-scale); merging and deciding them are
+  Arrow compute and plain Python, with no Spark job of their own.
 
 Cast semantics are Spark's (``try_cast``): integral strings only for
 bigint (no silent truncation of '1.5'), 't/true/y/yes/1' (any case)
@@ -55,8 +57,11 @@ before any expression is built, so arbitrary warehouse column names
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 # candidate types, most specific first; 'string' is the implicit floor
 CANDIDATES = ("boolean", "bigint", "double", "date", "timestamp")
@@ -243,7 +248,7 @@ def profile_counters(
     if not cols:
         # nothing to profile (e.g. a table of only provenance
         # columns) → empty profile, not an agg() crash
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     lead = "('0','1','2','3','4','5','6','7','8','9','+','-')"
     # width→length: one struct per column per row, exploded. F.lit
     # keeps arbitrary column names (quotes, backticks) out of the SQL
@@ -266,8 +271,8 @@ def profile_counters(
         .select(*gcols, "s.*")
     )
     if not gcols:
-        template = spark.createDataFrame(
-            [(c, None) for c in cols], "column_name string, _raw string"
+        template = local_frame(
+            spark, [(c, None) for c in cols], "column_name string, _raw string"
         )
         long = long.unionByName(template)
     # normalize ONCE in an explicit projection: referencing
@@ -495,8 +500,7 @@ def profile_counters(
     )
 
 
-
-def merge_profiles(*profiles: DataFrame) -> DataFrame:
+def merge_profiles(*profiles: pa.Table) -> pa.Table:
     """Merge counter profiles taken over DISJOINT row sets of the same
     table (one per incremental load / partition / backfill slice):
     counts add, digit-run maxima max. Exact by construction — every
@@ -504,26 +508,75 @@ def merge_profiles(*profiles: DataFrame) -> DataFrame:
     disjoint slices is the sum of per-slice counts — which
     :func:`decide_profile` turns into exactly the decisions a
     full-table profile would make (pinned by the
-    typed_profile_incremental oracle). One small shuffle on
-    column_name (rows = columns × slices: metadata-scale)."""
+    typed_profile_incremental oracle). One Arrow ``group_by`` on
+    column_name over the collected counter rows (columns × slices:
+    metadata-scale); columns other than the counters are dropped."""
     if not profiles:
         raise ValueError("merge_profiles needs at least one profile")
-    merged = profiles[0]
-    for p in profiles[1:]:
-        merged = merged.unionByName(p)
-    return merged.groupBy("column_name").agg(
-        *[F.sum(c).alias(c) for c in _SUM_COUNTERS],
-        *[F.max(c).alias(c) for c in _MAX_COUNTERS],
+    cols = ["column_name", *_SUM_COUNTERS, *_MAX_COUNTERS]
+    merged = pa.concat_tables(
+        [p.select(cols) for p in profiles], promote_options="permissive"
+    ).group_by("column_name", use_threads=False).aggregate(
+        [(c, "sum") for c in _SUM_COUNTERS]
+        + [(c, "max") for c in _MAX_COUNTERS]
     )
+    return merged.select(
+        ["column_name"]
+        + [f"{c}_sum" for c in _SUM_COUNTERS]
+        + [f"{c}_max" for c in _MAX_COUNTERS]
+    ).rename_columns(cols)
 
 
-def decide_profile(
-    counters: DataFrame, min_frac: float = 1.0
-) -> DataFrame:
-    """Turn a counter profile (fresh from :func:`profile_counters` or
+def _decide(r: dict, a: int) -> str:
+    """One counter row's type under the threshold ``ceil(a·n/10^6)``.
+    A NULL count never clears it, as a NULL comparison never passes."""
+    n = r["n_values"]
+    if not n:
+        return "string"
+    thr = (a * n + 999_999) // 1_000_000
+
+    def ok(c: str) -> bool:
+        return r[c] is not None and r[c] >= thr
+
+    def beats(c: str, rival: str) -> bool:
+        # slash pair by EVIDENCE: clears the threshold AND out-parses
+        # its rival (equal evidence = pure ambiguity, falls through;
+        # at min_frac=1 this is us==n & eu<n)
+        return ok(c) and r[rival] is not None and r[c] > r[rival]
+
+    # decimal between bigint and double: p = int digits + frac digits,
+    # s = frac digits; only when p fits Spark's 38-digit ceiling (a
+    # longer column falls through to double)
+    s, gs = r["_ds"] or 0, r["_gds"] or 0
+    p, gp = (r["_di"] or 0) + s, (r["_gdi"] or 0) + gs
+    chain = (
+        (ok("n_boolean"), "boolean"),
+        (ok("n_bigint"), "bigint"),
+        (ok("n_decimal") and p <= DECIMAL_MAX_PRECISION, f"decimal({p},{s})"),
+        (ok("n_double"), "double"),
+        (ok("n_date"), "date"),
+        (ok("n_timestamp"), "timestamp"),
+        (beats("_f0", "_f1"), f"date[{DATE_FORMATS[0]}]"),
+        (beats("_f1", "_f0"), f"date[{DATE_FORMATS[1]}]"),
+        (ok("_f2"), f"date[{DATE_FORMATS[2]}]"),
+        (beats("_h0", "_h1"), f"timestamp[{TS_FORMATS[0]}]"),
+        (beats("_h1", "_h0"), f"timestamp[{TS_FORMATS[1]}]"),
+        (ok("_h2"), f"timestamp[{TS_FORMATS[2]}]"),
+        (ok("_g0"), "bigint[grouped]"),
+        (ok("_g1") and gp <= DECIMAL_MAX_PRECISION,
+         f"decimal({gp},{gs})[grouped]"),
+        (ok("_g1"), "double[grouped]"),
+    )
+    return next((t for hit, t in chain if hit), "string")
+
+
+def decide_profile(counters: pa.Table, min_frac: float = 1.0) -> pa.Table:
+    """Turn a counter profile (``profile_counters(...).toArrow()`` or
     merged via :func:`merge_profiles`) into the decided per-column
     types — the same most-specific-first chain documented on the
-    module.
+    module, run on the driver: ``counters`` with a ``decided_type``
+    column added and the internal counters (``_f*``, ``_h*``, ``_g*``,
+    digit maxima) dropped.
 
     ``min_frac`` (round-6 verdict directive #4) relaxes the totality
     rule: a candidate type wins when at least ``ceil(min_frac *
@@ -543,93 +596,18 @@ def decide_profile(
     ambiguity) still falls through to string at any threshold."""
     if not (0.0 < min_frac <= 1.0):
         raise ValueError(f"min_frac must be in (0, 1], got {min_frac}")
-    long = counters
-    n = F.col("n_values")
-    # ceil() would widen to double and risk ulp drift at huge n; the
-    # integer form ceil(a*n/b) = floor((a*n + b - 1)/b) over a
-    # rational min_frac = a/b (b = 10^6 fixes 6-decimal knob values
-    # exactly) keeps the threshold in exact integer arithmetic —
-    # and at min_frac=1.0 it is literally n. `div` (not `/` + floor:
-    # Spark `/` is DOUBLE division, and a*n + 999999 exceeds 2^53
-    # once a column holds ~9e9 non-blank values — real at 100 TB)
-    # keeps the whole expression in int64 end to end, matching the
-    # DuckDB oracle's integer `//`.
+    # ceil() over a float would drift by an ulp at huge n; the integer
+    # form ceil(a*n/b) = floor((a*n + b - 1)/b) over a rational
+    # min_frac = a/b (b = 10^6 fixes 6-decimal knob values exactly) is
+    # exact in Python ints — at min_frac=1.0 it is literally n — and
+    # matches the DuckDB oracle's integer `//`.
     a = int(round(min_frac * 1_000_000))
-    thr = F.expr(f"({a}L * n_values + 999999L) div 1000000L")
-    decided = F.when(n == 0, F.lit("string"))
-    decided = decided.when(F.col("n_boolean") >= thr, F.lit("boolean"))
-    decided = decided.when(F.col("n_bigint") >= thr, F.lit("bigint"))
-    # decimal between bigint and double: p = int digits + frac
-    # digits, s = frac digits; only when the precision fits Spark's
-    # 38-digit ceiling (a longer column falls through to double)
-    prec = F.coalesce(F.col("_di"), F.lit(0)) + F.coalesce(
-        F.col("_ds"), F.lit(0)
+    decided = pa.array(
+        [_decide(r, a) for r in counters.to_pylist()], pa.string()
     )
-    decided = decided.when(
-        (F.col("n_decimal") >= thr) & (prec <= DECIMAL_MAX_PRECISION),
-        F.concat(
-            F.lit("decimal("),
-            prec.cast("string"),
-            F.lit(","),
-            F.coalesce(F.col("_ds"), F.lit(0)).cast("string"),
-            F.lit(")"),
-        ),
-    )
-    decided = decided.when(F.col("n_double") >= thr, F.lit("double"))
-    decided = decided.when(F.col("n_date") >= thr, F.lit("date"))
-    decided = decided.when(F.col("n_timestamp") >= thr, F.lit("timestamp"))
-    # slash pair by EVIDENCE: a format wins only when it clears the
-    # threshold AND out-parses its rival (equal evidence = pure
-    # ambiguity, falls through; at min_frac=1 this is us==n & eu<n)
-    us, eu = F.col("_f0"), F.col("_f1")
-    decided = decided.when(
-        (us >= thr) & (us > eu), F.lit(f"date[{DATE_FORMATS[0]}]")
-    )
-    decided = decided.when(
-        (eu >= thr) & (eu > us), F.lit(f"date[{DATE_FORMATS[1]}]")
-    )
-    decided = decided.when(
-        F.col("_f2") >= thr, F.lit(f"date[{DATE_FORMATS[2]}]")
-    )
-    # HH:mm locale datetimes, same slash-evidence structure
-    tus, teu = F.col("_h0"), F.col("_h1")
-    decided = decided.when(
-        (tus >= thr) & (tus > teu), F.lit(f"timestamp[{TS_FORMATS[0]}]")
-    )
-    decided = decided.when(
-        (teu >= thr) & (teu > tus), F.lit(f"timestamp[{TS_FORMATS[1]}]")
-    )
-    decided = decided.when(
-        F.col("_h2") >= thr, F.lit(f"timestamp[{TS_FORMATS[2]}]")
-    )
-    decided = decided.when(
-        F.col("_g0") >= thr, F.lit("bigint[grouped]")
-    )
-    gprec = F.coalesce(F.col("_gdi"), F.lit(0)) + F.coalesce(
-        F.col("_gds"), F.lit(0)
-    )
-    decided = decided.when(
-        (F.col("_g1") >= thr) & (gprec <= DECIMAL_MAX_PRECISION),
-        F.concat(
-            F.lit("decimal("),
-            gprec.cast("string"),
-            F.lit(","),
-            F.coalesce(F.col("_gds"), F.lit(0)).cast("string"),
-            F.lit(")[grouped]"),
-        ),
-    )
-    decided = decided.when(F.col("_g1") >= thr, F.lit("double[grouped]"))
-    return long.withColumn(
-        "decided_type", decided.otherwise(F.lit("string"))
-    ).drop(
-        "_di",
-        "_ds",
-        "_gdi",
-        "_gds",
-        *[f"_f{j}" for j in range(len(DATE_FORMATS))],
-        *[f"_h{j}" for j in range(len(TS_FORMATS))],
-        *[f"_g{j}" for j in range(len(GROUPED_FORMATS))],
-    )
+    keep = [c for c in counters.column_names
+            if not (c.startswith("_") and c in _SUM_COUNTERS + _MAX_COUNTERS)]
+    return counters.select(keep).append_column("decided_type", decided)
 
 
 def profile_cast_stats(
@@ -639,12 +617,14 @@ def profile_cast_stats(
 ) -> DataFrame:
     """Per-column castability profile, long format: ``column_name,
     n_values, n_boolean, n_bigint, n_decimal, n_double, n_date,
-    n_timestamp, decided_type`` — counters + decision in one
-    statement (:func:`profile_counters` → :func:`decide_profile`;
-    profile per-load and :func:`merge_profiles` instead when the
-    table grows incrementally). ``min_frac`` relaxes totality (see
+    n_timestamp, decided_type`` — the counters collected once and
+    decided on the driver (:func:`profile_counters` →
+    :func:`decide_profile`), returned as a driver-built frame; profile
+    per-load and :func:`merge_profiles` instead when the table grows
+    incrementally. ``min_frac`` relaxes totality (see
     :func:`decide_profile`)."""
-    return decide_profile(profile_counters(df, columns), min_frac)
+    counters = profile_counters(df, columns).toArrow()
+    return local_frame(df.sparkSession, decide_profile(counters, min_frac))
 
 
 # The auto-sampling contract (round-5 verdict directive #8): tables
@@ -685,8 +665,8 @@ def decide_types(
     ``AUTO_SAMPLE_THRESHOLD_ROWS`` profile a seeded
     ~``AUTO_SAMPLE_TARGET_ROWS``-row sample; smaller or
     unmeasurable tables profile in full. This is the documented
-    default for the view-building entry points
-    (:func:`auto_typed_view`, ``engine.typed_target``)."""
+    default for :func:`auto_typed_view`; ``engine.typed_target``
+    decides from its per-load profile store instead."""
     if sample_fraction == "auto":
         from .similarity import estimate_row_count
 
@@ -701,8 +681,9 @@ def decide_types(
         if sample_fraction is not None
         else df
     )
-    rows = profile_cast_stats(src, columns, min_frac).collect()
-    return {r["column_name"]: r["decided_type"] for r in rows}
+    decided = decide_profile(profile_counters(src, columns).toArrow(), min_frac)
+    return dict(zip(decided["column_name"].to_pylist(),
+                    decided["decided_type"].to_pylist()))
 
 
 def typed_view(df: DataFrame, types: dict[str, str]) -> DataFrame:

@@ -318,7 +318,8 @@ def typed_view_cast_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Castability profile over a reference-shaped VARCHAR warehouse
     (operators/typed_views.py, round-4 verdict directive #2): one
     partial-aggregated scan counts try_cast survivors per column per
-    candidate type and decides the most specific safe type in-query.
+    candidate type; the counter rows are collected and the most
+    specific safe type is decided on the driver.
     The DuckDB twin re-expresses SPARK's cast semantics (boolean
     token set incl. 'yes', integral-only bigint) — the gate certifies
     documented semantics, not engine cast defaults."""
@@ -338,7 +339,10 @@ def typed_profile_incremental(spark: SparkSession, sf: str) -> DataFrame:
     profile-everything exactly, which is what makes re-profiling
     after a new load an O(new data) statement at 100 TB instead of a
     table rescan."""
+    import pyarrow.compute as pc
+
     from ..operators import typed_views
+    from ..session import local_frame
 
     # r12: ONE grouped scan (profile_counters' group_cols — the
     # per-load profiling primitive) replaces two full profile scans
@@ -346,19 +350,19 @@ def typed_profile_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # exactly what the two filtered profiles computed, and
     # merge_profiles over them is bit-identical (sums add, maxima
     # max). The grouped profile is metadata-scale (one row per
-    # (slice, column)) — localCheckpoint so the two slice reads
-    # don't re-run the scan.
+    # (slice, column)), collected once; the slices, the merge and
+    # the decision are driver work over that Arrow table.
     wh = _varchar_warehouse(spark, sf)
     prof = typed_views.profile_counters(
         wh.withColumn("_par", F.col("order_key").cast("long") % 2),
         columns=list(wh.columns),
         group_cols=["_par"],
-    ).localCheckpoint(eager=True)
+    ).toArrow()
     merged = typed_views.merge_profiles(
-        prof.filter(F.col("_par") == 0).drop("_par"),
-        prof.filter(F.col("_par") != 0).drop("_par"),
+        prof.filter(pc.equal(prof["_par"], 0)),
+        prof.filter(pc.not_equal(prof["_par"], 0)),
     )
-    return typed_views.decide_profile(merged)
+    return local_frame(spark, typed_views.decide_profile(merged))
 
 
 _MIN_FRAC_ORACLE = f"""WITH wh AS ({_VARCHAR_WAREHOUSE_SQL}),
@@ -413,6 +417,7 @@ def typed_profile_min_frac(spark: SparkSession, sf: str) -> DataFrame:
     threshold rule (exact integer ceil(min_frac·n)) and the same
     most-specific-first chain."""
     from ..operators import typed_views
+    from ..session import local_frame
 
     wh = _varchar_warehouse(spark, sf)
     dirty = typed_views.ensure_parallelism(
@@ -424,12 +429,11 @@ def typed_profile_min_frac(spark: SparkSession, sf: str) -> DataFrame:
             .alias("almost_int")
         )
     )
-    counters = typed_views.profile_counters(dirty).localCheckpoint(
-        eager=True
-    )  # one scan, two decisions
+    counters = typed_views.profile_counters(dirty).toArrow()  # one scan, two decisions
 
     def decide(mf: float) -> DataFrame:
-        return typed_views.decide_profile(counters, min_frac=mf).select(
+        decided = typed_views.decide_profile(counters, min_frac=mf)
+        return local_frame(spark, decided).select(
             F.lit(mf).alias("min_frac"),
             "column_name",
             "n_values",

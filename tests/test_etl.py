@@ -162,18 +162,38 @@ def test_parse_config():
     assert j.column_mapping == {"a": "A", "b": 1}
 
 
-@pytest.mark.parametrize("skip", [-1, True, 1.0, "1", None])
-def test_skip_rows_must_be_a_non_negative_int(skip):
+_BAD_OFFSETS = [-1, True, 1.0, "1", None]
+
+
+@pytest.mark.parametrize(
+    "key, skip",
+    [pytest.param("skipRows", v, id=str(v)) for v in _BAD_OFFSETS]
+    + [pytest.param("headerRow", v, id=f"headerRow-{v}") for v in _BAD_OFFSETS])
+def test_skip_rows_must_be_a_non_negative_int(key, skip):
     """A negative ``skipRows`` has no single reading (PHP's
     ``array_slice`` keeps the last rows; the Spark kernel kept every
     row), and a non-integer one is malformed: both are refused, naming
-    the entry, not clamped."""
-    with pytest.raises(ValueError, match=r"skipRows.*\(spreadsheet SS1 sheet Tab\)"):
-        EtlJob("SS1", "Tab", "t", {"a": "A"}, skip_rows=skip)
-    cfg = {"SS0": {"Ok": {"targetTable": "t", "skipRows": 0}},
-           "SS1": {"Tab": {"targetTable": "t", "skipRows": skip}}}
-    with pytest.raises(ValueError, match=r"skipRows.*\(spreadsheet SS1 sheet Tab\)"):
+    the entry, not clamped. ``headerRow`` is refused alike."""
+    arg = {"skipRows": "skip_rows", "headerRow": "header_row"}[key]
+    with pytest.raises(ValueError, match=rf"{key}.*\(spreadsheet SS1 sheet Tab\)"):
+        EtlJob("SS1", "Tab", "t", {"a": "A"}, **{arg: skip})
+    cfg = {"SS0": {"Ok": {"targetTable": "t", key: 0}},
+           "SS1": {"Tab": {"targetTable": "t", key: skip}}}
+    with pytest.raises(ValueError, match=rf"{key}.*\(spreadsheet SS1 sheet Tab\)"):
         parse_config(cfg)
+
+
+@pytest.mark.parametrize("key", ["_rowid", "_Origin_Row", " _origin_etl_job_id"])
+def test_mapping_keys_must_not_name_reserved_columns(key):
+    """A ``columnMapping`` key that normalizes to the surrogate key, a
+    provenance column or the partition column would collide with it in
+    the target table: refused, naming the entry."""
+    with pytest.raises(ValueError, match=r"reserved.*\(spreadsheet SS1 sheet Tab\)"):
+        EtlJob("SS1", "Tab", "t", {"a": "A", key: "B"})
+    cfg = {"SS1": {"Tab": {"targetTable": "t", "columnMapping": {key: 0}}}}
+    with pytest.raises(ValueError, match=r"reserved.*\(spreadsheet SS1 sheet Tab\)"):
+        parse_config(cfg)
+    assert EtlJob("SS1", "Tab", "t", {"_origin note": "B"}).column_mapping
 
 
 # -- U8: schema/tablePrefix qualification (DatabaseAgent.php:53-61,118-125) --
@@ -912,6 +932,40 @@ def test_warm_cycles_start_only_their_commits_and_writes(engine, jobs, source, j
     assert engine.filter_extractable(jobs) == []
 
 
+def test_warm_typed_target_starts_only_the_reads_jobs(engine, jobs, jobs_started):
+    """With no stale profile, the typed view's decision is driver work:
+    ``typed_target`` starts as many Spark jobs as reading the table."""
+    engine.find_updated_spreadsheets(now=1)
+    engine.load_updated_spreadsheets(jobs)
+    engine.typed_target("table_a")
+    read = jobs_started("table-read", lambda: engine.target("table_a").read())
+    typed = jobs_started("typed-target", lambda: engine.typed_target("table_a"))
+    assert engine.last_profiled_job_ids == []
+    assert typed == read
+
+
+def test_typed_target_without_profile_store(spark, tmp_path, source, jobs):
+    """A warehouse whose ``__meta_profiles`` was never created gets
+    every load profiled by the first typed view: the full-table
+    decision."""
+    from google_sheets_etl_spark.operators import typed_views
+
+    eng = SheetsEtlEngine(spark, str(tmp_path / "wh_noprof"), source)
+    eng.spreadsheets.create_if_not_exists()
+    eng.etl_jobs.create_if_not_exists()
+    eng.find_updated_spreadsheets(now=1)
+    eng.load_updated_spreadsheets(jobs)
+    assert not eng.profiles.exists()
+    tv = eng.typed_target("table_a")
+    assert eng.profiles.exists()
+    assert len(eng.last_profiled_job_ids) == 1
+    stored = eng.target("table_a").read()
+    full = typed_views.decide_types(stored, ["name", "amount", "cafe"])
+    assert full["amount"] == "bigint"
+    assert tv.dtypes == typed_views.typed_view(stored, full).dtypes
+    assert sorted(tv.collect()) == sorted(typed_views.typed_view(stored, full).collect())
+
+
 # -- the Arrow metadata operators against their Spark statements ---------------
 
 _STAMPS = [None, "2026-01-01T00:00:00Z", "2026-01-02T00:00:00Z", "2026-01-03T00:00:00Zé"]
@@ -1096,7 +1150,8 @@ def test_sync_loop_builds_frames_only_through_local_frame():
     import google_sheets_etl_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
-    for rel in ("etl.py", "plans/state_table.py", "plans/target_table.py"):
+    for rel in ("etl.py", "plans/state_table.py", "plans/target_table.py",
+                "operators/typed_views.py"):
         with open(os.path.join(root, rel)) as fh:
             tree = ast.parse(fh.read(), rel)
         calls = [

@@ -399,8 +399,18 @@ def test_span_dedup_minlen_no_extra_exchange_for_run_windows(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_typed_view_profile_is_one_scan_partial_aggregate(spark, sf_dir):
-    plan = explain_str(QUERIES["typed_view_cast_stats"](spark, sf_dir))
+def test_typed_view_profile_is_one_scan_partial_aggregate(spark, sf_dir, monkeypatch):
+    from google_sheets_etl_spark.operators import typed_views
+
+    # the query decides on the driver from the counters it collects, so
+    # its one Spark statement is the profile: pin that statement's plan
+    profiles = []
+    real = typed_views.profile_counters
+    monkeypatch.setattr(typed_views, "profile_counters",
+                        lambda *a, **kw: profiles.append(real(*a, **kw)) or profiles[-1])
+    QUERIES["typed_view_cast_stats"](spark, sf_dir)
+    assert len(profiles) == 1
+    plan = explain_str(profiles[0])
     # ONE table scan; the cells explode to LONG (column_name, value)
     # rows consumed by a partial-aggregated groupBy(column_name) —
     # the round-7 shape that keeps every probe inside whole-stage

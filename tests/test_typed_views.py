@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
+
 from google_sheets_etl_spark.operators import typed_views
+from google_sheets_etl_spark.session import arrow_rows
 
 
 def _wh(spark, rows, schema):
@@ -480,16 +483,16 @@ def test_merge_profiles_equals_full_profile(spark):
         (r["column_name"], r["decided_type"])
         for r in typed_views.profile_cast_stats(df).collect()
     }
-    half1 = typed_views.profile_counters(df.limit(2))
+    half1 = typed_views.profile_counters(df.limit(2)).toArrow()
     # disjoint complement via anti-join on all columns
     half2 = typed_views.profile_counters(
         df.exceptAll(df.limit(2))
-    )
+    ).toArrow()
     merged = {
         (r["column_name"], r["decided_type"])
         for r in typed_views.decide_profile(
             typed_views.merge_profiles(half1, half2)
-        ).collect()
+        ).to_pylist()
     }
     assert merged == full
     assert dict(full)["b"] == "decimal(6,3)"
@@ -616,7 +619,7 @@ def test_incremental_profile_store_lifecycle(spark, tmp_path):
                  engine.profiles.read()
                  .filter(F.col("column_name").isNotNull())
                  .drop("target_table", "etl_job_id",
-                       "raw_columns_rows_hash"))).collect())
+                       "raw_columns_rows_hash").toArrow())).to_pylist())
     }
     assert inc == full
 
@@ -744,7 +747,7 @@ def test_min_frac_monotone_specificity(spark):
         + ", "
         + ", ".join(f"{c} int" for c in MAX)
     )
-    df = spark.createDataFrame(rows, schema)
+    counters = arrow_rows(rows, schema)
 
     chain = [
         "boolean", "bigint", "decimal(", "double", "date", "timestamp",
@@ -765,7 +768,7 @@ def test_min_frac_monotone_specificity(spark):
     for mf in (0.6, 0.8, 1.0):
         decided[mf] = {
             r["column_name"]: r["decided_type"]
-            for r in typed_views.decide_profile(df, min_frac=mf).collect()
+            for r in typed_views.decide_profile(counters, min_frac=mf).to_pylist()
         }
     for c in decided[1.0]:
         r06, r08, r10 = (rank(decided[m][c]) for m in (0.6, 0.8, 1.0))
@@ -786,7 +789,7 @@ def test_min_frac_threshold_exact_int64_at_huge_n(spark):
     import math
     assert math.floor((999_999 * n + 999_999) / 10**6) == thr + 1
 
-    counters = spark.createDataFrame(
+    counters = arrow_rows(
         [("c", n, 0, thr, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
           None, None, None, None)],
         "column_name string, n_values long, n_boolean long, "
@@ -799,10 +802,80 @@ def test_min_frac_threshold_exact_int64_at_huge_n(spark):
         r["column_name"]: r["decided_type"]
         for r in typed_views.decide_profile(
             counters, min_frac=0.999999
-        ).collect()
+        ).to_pylist()
     }
     assert got == {"c": "bigint"}  # double division would say string
 
+
+# One hand-built counter row per branch of the decision chain, plus its
+# edges: (id, counters set on an all-zero row of n_values=10 with NULL
+# digit maxima, min_frac, decided type).
+_BRANCHES = [
+    ("boolean", {"n_boolean": 10, "n_bigint": 10}, 1.0, "boolean"),
+    ("bigint", {"n_bigint": 10, "n_double": 10}, 1.0, "bigint"),
+    ("decimal", {"n_decimal": 10, "_di": 4, "_ds": 2}, 1.0, "decimal(6,2)"),
+    ("decimal-p38", {"n_decimal": 10, "_di": 36, "_ds": 2}, 1.0, "decimal(38,2)"),
+    ("decimal-p39-to-double",
+     {"n_decimal": 10, "_di": 37, "_ds": 2, "n_double": 10}, 1.0, "double"),
+    ("decimal-p39-to-string", {"n_decimal": 10, "_di": 37, "_ds": 2}, 1.0, "string"),
+    ("decimal-null-maxima", {"n_decimal": 10}, 1.0, "decimal(0,0)"),
+    ("double", {"n_double": 10, "n_date": 10}, 1.0, "double"),
+    ("date", {"n_date": 10, "n_timestamp": 10}, 1.0, "date"),
+    ("timestamp", {"n_timestamp": 10}, 1.0, "timestamp"),
+    ("date-us", {"_f0": 10, "_f1": 9}, 1.0, "date[MM/dd/yyyy]"),
+    ("date-eu", {"_f0": 9, "_f1": 10}, 1.0, "date[dd/MM/yyyy]"),
+    ("date-slash-tie", {"_f0": 10, "_f1": 10}, 1.0, "string"),
+    ("date-slash-tie-falls-to-dot", {"_f0": 10, "_f1": 10, "_f2": 10}, 1.0,
+     "date[dd.MM.yyyy]"),
+    ("date-slash-null-rival", {"_f0": 10, "_f1": None}, 1.0, "string"),
+    ("date-dot", {"_f2": 10, "_h0": 10}, 1.0, "date[dd.MM.yyyy]"),
+    ("timestamp-us", {"_h0": 10, "_h1": 2}, 1.0, "timestamp[MM/dd/yyyy HH:mm]"),
+    ("timestamp-eu", {"_h0": 2, "_h1": 10}, 1.0, "timestamp[dd/MM/yyyy HH:mm]"),
+    ("timestamp-slash-tie", {"_h0": 10, "_h1": 10}, 1.0, "string"),
+    ("timestamp-dot", {"_h2": 10, "_g0": 10}, 1.0, "timestamp[dd.MM.yyyy HH:mm]"),
+    ("bigint-grouped", {"_g0": 10, "_g1": 10}, 1.0, "bigint[grouped]"),
+    ("decimal-grouped", {"_g1": 10, "_gdi": 7, "_gds": 2}, 1.0,
+     "decimal(9,2)[grouped]"),
+    ("decimal-grouped-p38", {"_g1": 10, "_gdi": 36, "_gds": 2}, 1.0,
+     "decimal(38,2)[grouped]"),
+    ("decimal-grouped-p39", {"_g1": 10, "_gdi": 37, "_gds": 2}, 1.0,
+     "double[grouped]"),
+    ("decimal-grouped-null-maxima", {"_g1": 10}, 1.0, "decimal(0,0)[grouped]"),
+    ("string", {"n_boolean": 9, "n_bigint": 9, "_f0": 9}, 1.0, "string"),
+    ("no-values", {"n_values": 0}, 1.0, "string"),
+    ("no-values-relaxed", {"n_values": 0}, 0.5, "string"),
+    ("null-n-values", {"n_values": None, "n_bigint": 10}, 1.0, "string"),
+    ("null-count-skipped", {"n_boolean": None, "n_bigint": 10}, 1.0, "bigint"),
+    ("threshold-met", {"n_bigint": 8}, 0.75, "bigint"),
+    ("threshold-missed", {"n_bigint": 7}, 0.75, "string"),
+    ("relaxed-slash-out-parses", {"_f0": 8, "_f1": 7}, 0.75, "date[MM/dd/yyyy]"),
+]
+
+
+@pytest.mark.parametrize(
+    "counters, min_frac, expected",
+    [case[1:] for case in _BRANCHES],
+    ids=[case[0] for case in _BRANCHES],
+)
+def test_decide_profile_branch_table(counters, min_frac, expected):
+    """Every branch of the most-specific-first chain, the 38/39 digit
+    precision edge of both decimal forms, slash ties, NULL maxima and
+    NULL counts, decided from one hand-built counter row."""
+    import pyarrow as pa
+
+    schema = pa.schema(
+        [("column_name", pa.string())]
+        + [(c, pa.int64()) for c in typed_views._SUM_COUNTERS]
+        + [(c, pa.int32()) for c in typed_views._MAX_COUNTERS])
+    row = {c: 0 for c in typed_views._SUM_COUNTERS}
+    row.update(column_name="c", n_values=10)
+    row.update(counters)
+    table = pa.Table.from_pylist([row], schema)
+    decided = typed_views.decide_profile(table, min_frac=min_frac)
+    assert decided.column_names == [
+        "column_name", "n_values", "n_boolean", "n_bigint", "n_decimal",
+        "n_double", "n_date", "n_timestamp", "decided_type"]
+    assert decided["decided_type"].to_pylist() == [expected]
 
 def test_decimal_p_p_override_all_fraction(spark):
     """decimal(p,p) — zero integer digits — is valid Spark and must be
