@@ -26,12 +26,13 @@ Spark job: each accounting table's current snapshot is held on the
 driver as a ``pyarrow.Table`` (``StateTable.snapshot()``, cached per
 version, filled by the table's own commits) and answered with Arrow
 compute, and the typed view's decision merges and decides the stored
-counters there too. The accounting updates merge on the driver, so
-Spark runs only the commits (one write each), the target writes, the
-profile scan and the typed view. Every frame the engine hands Spark
-from driver data (a target table's rows, a commit) goes through
-``session.local_frame``: an Arrow table handed to the JVM, so none of
-the loop's jobs runs a Python worker to produce it.
+counters there too. The accounting updates merge on the driver, and
+their new versions are written there (``StateTable`` writes an Arrow
+commit's parquet file itself), so Spark runs only the data plane: the
+target writes, the profile scan and the typed view. Every frame the
+engine hands Spark from driver data (a target table's rows) goes
+through ``session.local_frame``: an Arrow table handed to the JVM, so
+none of the loop's jobs runs a Python worker to produce it.
 
 Atomicity ordering (U6, SURVEY.md §7.4): the reference wraps
 hash-check + accounting + delete + insert in one RDBMS transaction
@@ -428,9 +429,10 @@ class SheetsEtlEngine:
         surrogate keys preserved for existing rows, allocated past the
         current max for new ones in ``google_spreadsheet_id`` order —
         the page's existing ids and the max looked up in the driver's
-        snapshot, and ONE state commit (one Spark job) for the whole
-        discovery page (≤ discovery_cap rows) instead of two driver
-        actions + a snapshot write per file (the reference pays one
+        snapshot, and ONE state commit (a driver-written parquet
+        file, no Spark job) for the whole discovery page
+        (≤ discovery_cap rows) instead of two driver actions + a
+        snapshot write per file (the reference pays one
         cheap SQL statement per row; a Spark job per row is ~1 s of
         fixed overhead × 200). A file listed twice on one page keeps
         its newest ``google_modified``."""

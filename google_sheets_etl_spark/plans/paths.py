@@ -2,8 +2,9 @@
 
 A table path is a plain local path, a ``file:`` URI, or a URI of
 another scheme (``hdfs://``, ``s3a://``). Spark reads and writes all
-three; the engine's own small files (a state table's pointer and schema
-sidecars, the load pass's commit manifests) go through ``SmallFiles``,
+three; the engine's own small files (a state table's pointer, schema
+sidecars and driver-written versions, the load pass's commit
+manifests) go through ``SmallFiles``,
 which uses POSIX calls for local paths and the Hadoop FileSystem API
 for any other scheme. The POSIX calls need a filesystem path, not the
 URI string (``open("file:///t/_LATEST")`` would land in a relative
@@ -65,7 +66,9 @@ class SmallFiles:
             stream.close()
 
     def write_text(self, name: str, text: str) -> None:
-        """Write ``name`` through ``name + ".tmp"`` and a rename."""
+        """Write ``name`` through ``name + ".tmp"`` and a rename that
+        replaces an existing ``name`` in one step: a crash leaves
+        either the old file or the new one, never neither."""
         if self.local is not None:
             dst = os.path.join(self.local, name)
             with open(dst + ".tmp", "w") as f:
@@ -74,13 +77,42 @@ class SmallFiles:
             return
         tmp, fs = self._hadoop(name + ".tmp")
         dst, _ = self._hadoop(name)
-        out = fs.create(tmp, True)
+        self._create(fs, tmp, text.encode())
+        self._rename_over(tmp, dst)
+
+    def write_bytes(self, name: str, data: bytes) -> None:
+        """Write ``name`` in place, creating its parent directories.
+        Not atomic: for files that a later atomic write publishes (a
+        state table's data files, published by its pointer)."""
+        if self.local is not None:
+            dst = os.path.join(self.local, name)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            with open(dst, "wb") as f:
+                f.write(data)
+            return
+        p, fs = self._hadoop(name)
+        self._create(fs, p, data)
+
+    @staticmethod
+    def _create(fs, p, data: bytes) -> None:
+        """Hadoop ``fs.create`` (parents included) of ``p`` holding
+        ``data``, replacing any file there."""
+        out = fs.create(p, True)
         try:
-            out.write(bytearray(text.encode()))
+            out.write(bytearray(data))
         finally:
             out.close()
-        fs.delete(dst, False)  # rename-onto refuses an existing dst
-        fs.rename(tmp, dst)
+
+    def _rename_over(self, src, dst) -> None:
+        """Hadoop rename of ``src`` onto ``dst`` that replaces an
+        existing ``dst`` (``FileContext.rename`` with ``OVERWRITE``;
+        ``FileSystem.rename`` refuses an existing destination)."""
+        jvm = self.spark._jvm
+        hfs = jvm.org.apache.hadoop.fs
+        opts = self.spark.sparkContext._gateway.new_array(hfs.Options.Rename, 1)
+        opts[0] = hfs.Options.Rename.OVERWRITE
+        conf = self.spark._jsc.hadoopConfiguration()
+        hfs.FileContext.getFileContext(dst.toUri(), conf).rename(src, dst, opts)
 
     def listdir(self) -> list[str]:
         """Names directly under the root; empty when it does not exist."""

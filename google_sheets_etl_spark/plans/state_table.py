@@ -10,14 +10,22 @@ engine needs over plain parquet:
 - **Snapshot versioning**: every write lands in a fresh
   ``_v{n}/`` directory; readers resolve the current snapshot through a
   single pointer file (``_LATEST``) whose update is an atomic rename
-  (POSIX ``os.replace`` locally; Hadoop FileSystem rename on
+  that replaces the old pointer in one step (POSIX ``os.replace``
+  locally; Hadoop ``FileContext`` rename with ``OVERWRITE`` on
   hdfs:// — atomic there too; s3a rename is copy+delete, the same
   caveat Delta has without a LogStore; both through
   ``paths.SmallFiles``). Readers therefore always see a complete
   snapshot — never a partially-written one (U6 atomicity for a single
-  table).
+  table). Whatever a crashed commit left in the next version's
+  directory is deleted before that version is written.
+- **Driver-written versions**: a ``pyarrow.Table`` commit (create,
+  an Arrow upsert or overwrite) is serialized on the driver into one
+  parquet file and written through ``paths.SmallFiles``: no Spark job.
+  A DataFrame commit is a Spark write. Both kinds of version read
+  alike, so a table may mix them.
 - **Schema sidecar**: a snapshot is its parquet data plus
-  ``_v{n}/_schema.json``, the written frame's schema, put there after
+  ``_v{n}/_schema.json``, the written frame's schema (for an Arrow
+  commit, the schema ``createDataFrame`` would give it), put there after
   the data and before the pointer flip (Spark's reader skips
   ``_``-prefixed files). ``read()`` hands that schema to the parquet
   reader, so it infers nothing and starts no Spark job. A snapshot
@@ -38,9 +46,9 @@ engine needs over plain parquet:
   evolution for free, U7; the unioned columns are the committed
   frame's schema, so the sidecar carries them). A ``pyarrow.Table``
   of updates merges on the driver against ``snapshot()`` (an Arrow
-  left-anti join and a concat with column promotion) and costs one
-  Spark job, the write; a DataFrame merges in Spark, which the
-  data-scale ANN/HNSW index tables use.
+  left-anti join and a concat with column promotion) and is written
+  by the driver, so it starts no Spark job; a DataFrame merges and is
+  written in Spark, which the data-scale ANN/HNSW index tables use.
 - **Idempotent create** (U7): ``create_if_not_exists`` seeds version 0
   with an empty snapshot; calling twice never loses data
   (``DatabaseAgent.php:120-124``).
@@ -58,10 +66,12 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ..session import local_frame
@@ -118,8 +128,10 @@ class StateTable:
 
     def _commit(self, data: DataFrame | pa.Table) -> None:
         """Write the next snapshot and its schema sidecar, then
-        atomically flip the pointer. An Arrow ``data`` becomes the
-        cached snapshot of the new version.
+        atomically flip the pointer. An Arrow ``data`` is written on the
+        driver as one parquet file, with no Spark job, and becomes the
+        cached snapshot of the new version; a DataFrame is written by
+        Spark.
 
         ``data`` may read this table lazily (an upsert's current rows,
         an overwrite of a frame derived from ``read()``): the write goes
@@ -128,15 +140,23 @@ class StateTable:
         versions at or below ``latest - _KEEP_VERSIONS``. So a snapshot
         read before a commit can feed each of the next
         ``_KEEP_VERSIONS`` commits, and needs no materialization first."""
-        # one Arrow batch is one partition: a single chunk writes one file
-        arrow = data.combine_chunks() if isinstance(data, pa.Table) else None
-        df = local_frame(self.spark, arrow) if arrow is not None else data
         v = (self.current_version() or 0) + 1
-        df.write.mode("overwrite").parquet(self._version_dir(v))
-        schema = df.schema
+        snapshot = None
+        if isinstance(data, pa.Table):
+            arrow = data.combine_chunks()
+            schema = from_arrow_schema(arrow.schema)  # what createDataFrame(arrow) gives
+            buf = pa.BufferOutputStream()
+            pq.write_table(arrow, buf)
+            # a crashed commit's leftovers would become rows of this version
+            self._files.delete(f"_v{v}")
+            self._files.write_bytes(f"_v{v}/part-00000.parquet", buf.getvalue().to_pybytes())
+            snapshot = (v, arrow.cast(_snapshot_schema(schema)))
+        else:
+            data.write.mode("overwrite").parquet(self._version_dir(v))
+            schema = data.schema
         self._files.write_text(f"_v{v}/{_SCHEMA}", schema.json())
         self._files.write_text(_LATEST, str(v))
-        self._snapshot = None if arrow is None else (v, arrow.cast(_snapshot_schema(schema)))
+        self._snapshot = snapshot
         self._gc(v)
 
     def _gc(self, latest: int) -> None:
@@ -203,7 +223,12 @@ class StateTable:
         a DataFrame merges in Spark (the data-scale index tables)."""
         if isinstance(updates, pa.Table):
             current = self.snapshot()
-            kept = current.join(updates.select(keys), keys, join_type="left anti")
+            # the anti join runs on the keys and row numbers only: Arrow's
+            # hash join takes no list-typed non-key column
+            rows = current.select(keys).append_column(
+                "__row", pa.array(np.arange(current.num_rows)))
+            kept_rows = rows.join(updates.select(keys), keys, join_type="left anti")["__row"]
+            kept = current.take(kept_rows.sort())
             self._commit(pa.concat_tables([kept, updates], promote_options="permissive"))
             return
         current = self.read()

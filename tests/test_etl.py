@@ -910,10 +910,10 @@ def test_load_pass_error_not_masked_and_failures_reset(engine, jobs, monkeypatch
 
 
 def test_warm_cycles_start_only_their_commits_and_writes(engine, jobs, source, jobs_started):
-    """On a warmed engine the metadata questions start no Spark job: a
-    no-change cycle starts one job (discovery's commit), and a cycle
-    that reloads one sheet starts only its writes (discovery's commit,
-    the target write, the accounting commit)."""
+    """On a warmed engine the metadata plane starts no Spark job: the
+    metadata questions are answered and the accounting commits written
+    on the driver. A no-change cycle starts no job, and a cycle that
+    reloads one sheet starts one, the target write."""
     def cycle():
         engine.find_updated_spreadsheets(now=5)
         return engine.load_updated_spreadsheets(jobs)
@@ -921,13 +921,13 @@ def test_warm_cycles_start_only_their_commits_and_writes(engine, jobs, source, j
     engine.find_updated_spreadsheets(now=1)
     engine.load_updated_spreadsheets(jobs)
     cycle()
-    assert jobs_started("no-change-cycle", cycle) == 1
+    assert jobs_started("no-change-cycle", cycle) == 0
 
     changed = [row[:] for row in SHEET_A]
     changed[1][1] = "99"
     source.put_sheet(SpreadsheetMeta("SSA" + "a" * 41, "2026-01-09T00:00:00.000Z", "Sheet A"),
                      "Tab1", changed)
-    assert jobs_started("one-sheet-cycle", cycle) == 3
+    assert jobs_started("one-sheet-cycle", cycle) == 1
     assert engine.target("table_a").read().filter("name = 'alice'").first()["amount"] == "99"
     assert engine.filter_extractable(jobs) == []
 

@@ -1219,3 +1219,201 @@ def test_state_table_snapshot_sees_other_commits_and_hits_cache(spark, tmp_path,
 
     b.upsert(spark.createDataFrame([(1, "z")], "k long, v string"), ["k"])
     assert sorted(tuple(r.values()) for r in a.snapshot().to_pylist()) == [(1, "z"), (2, "b")]
+
+
+def test_state_table_arrow_commits_start_no_spark_job(spark, tmp_path, jobs_started):
+    """An Arrow create, upsert and overwrite are written by the driver:
+    each starts no Spark job, and the table reads back what they
+    wrote."""
+    from google_sheets_etl_spark.plans.state_table import StateTable
+    from google_sheets_etl_spark.session import arrow_rows
+
+    st = StateTable(spark, str(tmp_path / "st"), "k long, v string")
+    assert jobs_started("arrow-create", st.create_if_not_exists) == 0
+    updates = arrow_rows([(1, "a"), (2, "b")], st.schema)
+    assert jobs_started("arrow-upsert", lambda: st.upsert(updates, ["k"])) == 0
+    assert jobs_started("arrow-overwrite", lambda: st.overwrite(st.snapshot().slice(0, 1))) == 0
+    assert st.current_version() == 3
+    assert [tuple(r) for r in st.read().collect()] == [(1, "a")]
+
+
+def test_state_table_arrow_commit_drops_crash_leftovers(spark, tmp_path):
+    """A crashed commit can leave part files in the next version's
+    directory. An Arrow commit into that directory deletes them first,
+    so neither ``read()`` nor a fresh object's ``snapshot()`` sees
+    their rows; the driver-written version sits on top of a
+    Spark-written one."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from google_sheets_etl_spark.plans.state_table import StateTable
+    from google_sheets_etl_spark.session import arrow_rows
+
+    path = str(tmp_path / "st")
+    st = StateTable(spark, path, "k long, v string")
+    st.overwrite(spark.createDataFrame([(1, "a")], st.schema))  # a Spark-written version
+    nxt = st._version_dir(st.current_version() + 1)
+    os.makedirs(nxt)
+    pq.write_table(arrow_rows([(7, "foreign"), (8, "foreign")], st.schema),
+                   os.path.join(nxt, "part-00003-stray.snappy.parquet"))
+
+    st.upsert(arrow_rows([(2, "b")], st.schema), ["k"])
+    want = [(1, "a"), (2, "b")]
+    assert sorted(map(tuple, st.read().collect())) == want
+    fresh = StateTable(spark, path, "k long, v string").snapshot()
+    assert sorted(tuple(r.values()) for r in fresh.to_pylist()) == want
+
+
+def test_hadoop_pointer_rename_failure_keeps_old_version(spark, tmp_path):
+    """On the Hadoop FileSystem branch (the one ``hdfs://`` takes), the
+    pointer is replaced by one rename: when that rename fails, as a
+    crash there would leave it, ``_LATEST`` still names the old version
+    and the table reads the old rows. The next commit writes the same
+    version over the failed one's files."""
+    from google_sheets_etl_spark.plans import paths
+    from google_sheets_etl_spark.plans.state_table import StateTable
+    from google_sheets_etl_spark.session import arrow_rows
+
+    root = tmp_path / "t"
+    st = StateTable(spark, root.as_uri(), "k long, v string")
+    st._local = None
+    st.create_if_not_exists()
+    st.upsert(arrow_rows([(1, "a")], st.schema), ["k"])
+    assert st.current_version() == 2
+
+    real = paths.SmallFiles._rename_over
+
+    def fail_pointer(self, src, dst):
+        if dst.getName() == "_LATEST":
+            raise OSError("injected rename failure")
+        real(self, src, dst)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(paths.SmallFiles, "_rename_over", fail_pointer)
+        with pytest.raises(OSError, match="injected"):
+            st.upsert(arrow_rows([(2, "b")], st.schema), ["k"])
+    assert (root / "_LATEST").read_text() == "2"
+    assert st.current_version() == 2
+    assert [tuple(r) for r in st.read().collect()] == [(1, "a")]
+    assert [tuple(r.values()) for r in st.snapshot().to_pylist()] == [(1, "a")]
+
+    st.upsert(arrow_rows([(3, "c")], st.schema), ["k"])
+    assert (root / "_LATEST").read_text() == "3"
+    assert sorted(map(tuple, st.read().collect())) == [(1, "a"), (3, "c")]
+
+
+def test_file_uri_state_table_arrow_commits_through_hadoop_fs(spark, tmp_path, monkeypatch):
+    """Arrow upserts and an Arrow overwrite on the Hadoop FileSystem
+    branch write each version's parquet file with ``fs.create`` (the
+    local Hadoop FileSystem keeps a hidden ``.crc`` beside it) inside
+    the table, whatever the working directory; GC keeps the last
+    ``_KEEP_VERSIONS`` versions, and the POSIX branch reads the same
+    rows."""
+    import os
+
+    import pyarrow.compute as pc
+
+    from google_sheets_etl_spark.plans.state_table import _KEEP_VERSIONS, StateTable
+    from google_sheets_etl_spark.session import arrow_rows
+
+    root = tmp_path / "t"
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    st = StateTable(spark, root.as_uri(), "k long, v string")
+    st._local = None
+    st.create_if_not_exists()
+    for i in range(4):
+        st.upsert(arrow_rows([(i % 3, f"v{i}")], st.schema), ["k"])
+    st.overwrite(st.snapshot().filter(pc.field("k") < 2))
+    assert os.listdir(cwd) == []
+    assert (root / "_LATEST").read_text() == "6"
+    versions = sorted(n for n in os.listdir(root) if n.startswith("_v"))
+    assert versions == [f"_v{v}" for v in range(7 - _KEEP_VERSIONS, 7)]
+    assert sorted(os.listdir(root / "_v6")) == [
+        "._schema.json.crc", ".part-00000.parquet.crc", "_schema.json", "part-00000.parquet"]
+
+    want = [(0, "v3"), (1, "v1")]
+    assert sorted(map(tuple, st.read().collect())) == want
+    posix = StateTable(spark, str(root), "k long, v string")
+    assert sorted(map(tuple, posix.read().collect())) == want
+    assert sorted(tuple(r.values()) for r in posix.snapshot().to_pylist()) == want
+
+
+def _state_table_schemas():
+    """Every state-table schema in the package, by name."""
+    from pyspark.sql.types import LongType, StructField
+
+    from google_sheets_etl_spark.etl import ETL_JOBS_SCHEMA, SPREADSHEETS_SCHEMA, _profiles_schema
+    from google_sheets_etl_spark.operators import ann_index, hnsw_index
+
+    id_field = StructField("id", LongType())
+    return {
+        "spreadsheets": SPREADSHEETS_SCHEMA,
+        "etl_jobs": ETL_JOBS_SCHEMA,
+        "profiles": _profiles_schema(),
+        "ann_centroids": ann_index.CENTROIDS_SCHEMA,
+        "ann_codebooks": ann_index.CODEBOOKS_SCHEMA,
+        "ann_codes": ann_index._codes_schema(id_field),
+        "hnsw_cells": hnsw_index.CELLS_SCHEMA,
+        "hnsw_nodes": hnsw_index._nodes_schema(id_field),
+    }
+
+
+def _sample(t, i: int):
+    """A value of Spark type ``t`` for row ``i``; arrays of length
+    ``i % 3``, so empty ones too."""
+    from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StringType
+
+    if isinstance(t, ArrayType):
+        return [_sample(t.elementType, i + j) for j in range(i % 3)]
+    if isinstance(t, StringType):
+        return f"s{i}"
+    if isinstance(t, (LongType, IntegerType)):
+        return i
+    if isinstance(t, DoubleType):
+        return i / 4
+    raise TypeError(t)
+
+
+@pytest.mark.parametrize("name", list(_state_table_schemas()))
+def test_driver_written_version_schema_and_rows(spark, tmp_path, name):
+    """For every state-table schema in the package, nested arrays
+    included: after the create and one Arrow upsert, the sidecar is the
+    schema ``createDataFrame`` gives the version's rows and the schema
+    footer inference gives its file, and ``read()`` holds the rows of
+    ``snapshot()``, also of a fresh object's."""
+    import json
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from google_sheets_etl_spark.plans.state_table import _SCHEMA, StateTable
+    from google_sheets_etl_spark.session import arrow_rows, local_frame
+
+    schema = _state_table_schemas()[name]
+    path = str(tmp_path / name)
+    st = StateTable(spark, path, schema)
+    st.create_if_not_exists()
+    key, *rest = schema.fields
+    # row 3 is null past its key
+    rows = [(_sample(key.dataType, i),)
+            + tuple(None if i == 3 else _sample(f.dataType, i) for f in rest)
+            for i in range(4)]
+    st.upsert(arrow_rows(rows, schema), [key.name])
+
+    version = st._version_dir(st.current_version())
+    with open(os.path.join(version, _SCHEMA)) as f:
+        sidecar = StructType.fromJson(json.load(f))
+    assert sidecar == local_frame(spark, st.snapshot()).schema
+    assert sidecar == spark.read.parquet(version).schema == st.read().schema
+
+    def keyed(rows):
+        return sorted(map(repr, rows))
+
+    want = keyed(map(tuple, st.read().collect()))
+    assert len(want) == 4
+    assert keyed(tuple(r.values()) for r in st.snapshot().to_pylist()) == want
+    fresh = StateTable(spark, path, schema).snapshot()
+    assert keyed(tuple(r.values()) for r in fresh.to_pylist()) == want
