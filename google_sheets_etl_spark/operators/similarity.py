@@ -752,6 +752,37 @@ def _seeded_centroid_matrix(
     return cents
 
 
+def _shared_centroids(
+    centroids, n_cells: int, fn: str
+) -> "np.ndarray":
+    """Validate a caller-shared coarse quantizer (the ``centroids=``
+    option of the NSW family) before any cell is assigned: a 2-D
+    matrix with 1..``n_cells`` rows (more rows would each become a
+    cell), every nonzero row L2-normalized — what
+    ``_seeded_centroid_matrix`` returns."""
+    import numpy as np
+
+    cents = np.asarray(centroids, dtype=np.float64)
+    if cents.ndim != 2 or cents.shape[0] == 0:
+        raise ValueError(
+            f"{fn}: centroids must be a 2-D matrix with at least one "
+            f"row, got shape {cents.shape}"
+        )
+    if cents.shape[0] > n_cells:
+        raise ValueError(
+            f"{fn}: centroids has {cents.shape[0]} rows, more than "
+            f"n_cells={n_cells}"
+        )
+    norms = np.linalg.norm(cents, axis=1)
+    bad = np.flatnonzero((norms != 0) & (np.abs(norms - 1.0) > 1e-6))
+    if bad.size:
+        raise ValueError(
+            f"{fn}: centroids row {bad[0]} is not L2-normalized "
+            f"(norm {norms[bad[0]]:.6g})"
+        )
+    return cents
+
+
 def _probe_assign(
     df: DataFrame,
     cents: "np.ndarray",
@@ -931,8 +962,12 @@ def cosine_topk_nsw(
         DoubleType, LongType, StructField, StructType,
     )
 
-    cents = centroids if centroids is not None else _seeded_centroid_matrix(
-        candidates, n_cells, id_col, vec_col, seed
+    cents = (
+        _shared_centroids(centroids, n_cells, "cosine_topk_nsw")
+        if centroids is not None
+        else _seeded_centroid_matrix(
+            candidates, n_cells, id_col, vec_col, seed
+        )
     )
     c = _probe_assign(
         candidates, cents, "neighbor_id", "cv", 1, id_col, vec_col
@@ -1107,8 +1142,12 @@ def cosine_topk_nsw_beam(
 
     # ``centroids``: caller-shared coarse-quantizer sample (see
     # cosine_topk_nsw — the pq ``codebooks`` sharing pattern, r13)
-    cents = centroids if centroids is not None else _seeded_centroid_matrix(
-        candidates, n_cells, id_col, vec_col, seed
+    cents = (
+        _shared_centroids(centroids, n_cells, "cosine_topk_nsw_beam")
+        if centroids is not None
+        else _seeded_centroid_matrix(
+            candidates, n_cells, id_col, vec_col, seed
+        )
     )
     c = _probe_assign(
         candidates, cents, "neighbor_id", "cv", 1, id_col, vec_col
@@ -1390,8 +1429,12 @@ def cosine_topk_hnsw(
 
     # ``centroids``: caller-shared coarse-quantizer sample (see
     # cosine_topk_nsw — the pq ``codebooks`` sharing pattern, r13)
-    cents = centroids if centroids is not None else _seeded_centroid_matrix(
-        candidates, n_cells, id_col, vec_col, seed
+    cents = (
+        _shared_centroids(centroids, n_cells, "cosine_topk_hnsw")
+        if centroids is not None
+        else _seeded_centroid_matrix(
+            candidates, n_cells, id_col, vec_col, seed
+        )
     )
     c = _probe_assign(
         candidates, cents, "neighbor_id", "cv", 1, id_col, vec_col

@@ -10,29 +10,23 @@ of the training-data-pipeline extension set. ``cleaning.py:149``
 documents that ``span_dedup`` trades away "suffix-array cost" by
 fixing span boundaries; this module pays that cost, distributed.
 
-Algorithm — distributed prefix doubling with EXACT min-position
-labels (Manber-Myers doubling, the standard distributed
-suffix-structure construction, cf. Flick & Aluru SC'15 — re-expressed
-join/agg-style, and simplified by the observation that *duplicate
-detection needs equality classes, not lexicographic order*):
+Algorithm — Karp–Rabin window hashes, then an exact content verdict:
 
-- round 0: every corpus position labels itself with its next three
-  code points packed 21 bits apiece into one long (exact: a code
-  point is <= 0x10FFFF < 2^21) — two positions share a base label iff
-  their length-3 windows are equal; assembled with per-document
-  window leads, one shuffle, no joins;
-- round k→2k: a position's length-2k label is the EQUALITY CLASS of
-  the pair (label_k(pos), label_k(pos+k)), represented exactly by the
-  class's minimum ``(doc_id, pos)`` — deterministic, integer-exact,
-  partitioning-invariant, and collision-FREE (unlike any hash): by
-  induction two positions share a label iff their windows match
-  byte-for-byte;
-- a non-power-of-two target length L combines the two overlapping
-  2^a-windows that tile it (the suffix-array sparse-table trick):
-  label_L(pos) = class of (label_{2^a}(pos), label_{2^a}(pos+L-2^a));
-- positions whose length-L window class has >= min_count members are
-  duplicated; consecutive duplicated positions merge into maximal
-  spans per document (gaps-and-islands).
+- one Arrow kernel pass (``mapInArrow``) turns each document's symbol
+  sequence (the code points of a text, or a token-id array) into one
+  ``(doc, pos, h)`` row per window start, 24 B a position and O(n)
+  per document for ANY window length: with prefix sums
+  ``P[j] = Σ_{i<j} (s_i + 1)·B^i`` in wrapping ``uint64`` arithmetic,
+  the window at ``i`` hashes to ``(P[i+L] − P[i])·B^(−i)`` (``B`` is
+  odd, so its inverse mod 2^64 exists). Equal windows hash equal;
+- positions whose hash occurs >= ``min_count`` times corpus-wide
+  survive. Only survivors get their window content, taken in one pass
+  per document, and the content count decides: a hash admits a
+  window, its content decides (a collision — mod-2^64 polynomial
+  hashes have constructible ones, e.g. a Thue–Morse block and its
+  complement — only admits windows the content count then drops);
+- duplicated window starts merge into maximal spans per document
+  (gaps-and-islands).
 
 Why fixed-L window marking equals "duplicated substring of length
 >= L": any substring of length M >= L occurring twice covers all its
@@ -42,68 +36,129 @@ duplicated L-window. This is exactly the byte-range-removal semantics
 the Lee et al. pipeline applies (their suffix array also only feeds
 "which byte ranges are covered by a >=L duplicate").
 
-Scale shape (100 TB): the working set is ONE ROW PER CORPUS CHARACTER
-(~16-24 B packed columnar) and ceil(log_f(L/3)) rounds (f = tile
-fanout, default 4 — fanout 2 is classic doubling; see
-``_tile_schedule``), each round = f-1 co-partitioned self-joins on
-(doc_id, pos) (one sort each side, then the same-key join chain is
-exchange-free) + one partial-aggregated groupBy on the 2f-long label
-tuple + one join back (Catalyst reuses the groupBy exchange) — all
-uniform keys, no skew hot-spots (label classes shrink
-every round; the biggest base class is "most common 3-gram",
-which partial aggregation absorbs map-side). Positions advance to the
-next round only while their window still occurs >= min_count times,
-so the working set collapses to the near-duplicate regions within a
-few rounds. Lineage is CHECKPOINT-cut per round (see the function
-docstring for why persist alone exponentially explodes the plan), so
-the plan never deepens past one round. For token corpora run the same
-operator over per-TOKEN rows (ids from ``token_vocabulary``) — 5-10x
-fewer rows for the same dedup semantics (Lee et al. use 50 tokens);
-the operator is agnostic to what one "position" holds.
+Scale shape (100 TB): the hash stream is one narrow pass over the
+corpus, cut once; the hash and content counts partial-aggregate
+map-side (a hot window collapses to one partial row per task), and
+the planner and AQE choose each semi-join's physical form from real
+sizes, so a duplicated set as large as the corpus is a shuffle
+semi-join, not a broadcast. For token corpora run the same pass over
+per-TOKEN rows (ids from ``token_vocabulary``) — 5-10x fewer rows for
+the same dedup semantics (Lee et al. use 50 tokens).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-# Strategy dispatch (r12 optimization round): for windows this short,
-# grouping positions by the RAW window content beats prefix doubling
-# outright — round 1 of the doubling alone shuffles ~4 sorted
-# 24 B/position copies plus a ~64 B/position class-window pass
-# (~170 B/position before the later rounds and their checkpoint
-# barriers), while the direct pass partial-aggregates window counts
-# map-side (a hot class collapses to one partial row per task — the
-# r13 de-skew; the r12 count-window shape funneled every occurrence
-# of one duplicated window through ONE task) and broadcasts the
-# duplicated set back onto the (doc, pos, window) stream — the
-# corpus-position stream never shuffles and never sorts; NO
-# self-joins and NO doubling rounds (guide §2.3 "shuffle fewer
-# bytes" + §2.4 "remove shuffles outright" + §2.5 skew; the
-# two-phase hash-prefilter/content-verdict split is _direct_spans'
-# docstring). Equality of the marked set is by construction: two
-# positions share a width-L equality class iff their L-windows are
-# byte-equal — the full content decides the FINAL verdict (the
-# xxhash64 level only pre-filters, and can only admit, never drop).
-# Doubling stays the path for LARGE windows, where per-round label
-# state (~24 B) undercuts shipping window content and the working
-# set shrinks round over round.
-_DIRECT_MAX_LEN = 128
+# Karp–Rabin base: odd, so it is a unit mod 2^64 and B^(-i) exists
+_B = 0x9E3779B97F4A7C15
+_B_INV = pow(_B, -1, 1 << 64)
+# symbols hashed per numpy pass (a longer document is one pass alone):
+# bounds a worker's prefix-sum and power arrays
+_CHUNK = 1 << 20
 
 
-def _validate(min_len: int, min_count: int, fanout: int) -> None:
-    """Shared eager argument contract for every strategy (the direct
-    path must reject exactly what the doubling path rejects)."""
+def _validate(min_len: int, min_count: int) -> None:
     if min_len < 2:
         raise ValueError(f"duplicate_spans: min_len must be >= 2, got {min_len}")
     if min_count < 2:
         raise ValueError(
             f"duplicate_spans: min_count must be >= 2, got {min_count}"
         )
-    if fanout < 2:
-        raise ValueError(
-            f"duplicate_spans: fanout must be >= 2, got {fanout}"
-        )
+
+
+def _powers(base: int, n: int) -> np.ndarray:
+    """``base^0 .. base^(n-1)`` mod 2^64."""
+    out = np.ones(n, np.uint64)
+    if n > 1:
+        np.cumprod(np.full(n - 1, base, np.uint64), out=out[1:])
+    return out
+
+
+def _window_hashes(
+    syms: np.ndarray, min_len: int, starts: np.ndarray
+) -> np.ndarray:
+    """Karp–Rabin hashes (``uint64``) of the length-``min_len`` windows
+    of the flat ``uint64`` symbol array ``syms`` at index ``starts``:
+    ``(P[i+L] − P[i])·B^(−i)`` = ``Σ_{j<L} (s_{i+j} + 1)·B^j``, which
+    does not depend on ``i`` — so documents can be concatenated."""
+    n = len(syms)
+    p = np.zeros(n + 1, np.uint64)
+    np.cumsum((syms + 1) * _powers(_B, n), out=p[1:])
+    return (p[starts + min_len] - p[starts]) * _powers(_B_INV, n)[starts]
+
+
+def _symbols(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(flat ``uint64`` symbols, per-row offsets) of a string column
+    (code points — Python ``str`` indexing counts them as ``substr``
+    does; NULL is empty) or a list-of-ids column."""
+    if pa.types.is_string(col.type):
+        texts = [t or "" for t in col.to_pylist()]
+        lens = np.fromiter(map(len, texts), np.int64, len(texts))
+        syms = np.frombuffer(
+            "".join(texts).encode("utf-32-le"), "<u4"
+        ).astype(np.uint64)
+    else:
+        lens = pc.list_value_length(col).fill_null(0).to_numpy()
+        syms = pc.list_flatten(col).to_numpy().astype(np.uint64)
+    offs = np.zeros(len(lens) + 1, np.int64)
+    np.cumsum(lens, out=offs[1:])
+    return syms, offs
+
+
+def _hash_kernel(min_len: int):
+    """``mapInArrow`` kernel: ``(doc, base, s)`` rows -> one
+    ``(doc, pos, h)`` row per length-``min_len`` window, ``pos`` the
+    window's first symbol counted from ``base``."""
+
+    def kernel(batches):
+        for rb in batches:
+            syms, offs = _symbols(rb.column(2))
+            base = rb.column(1).to_numpy()
+            a = 0
+            while a < rb.num_rows:
+                b = max(a + 1, int(np.searchsorted(offs, offs[a] + _CHUNK, "right")) - 1)
+                o = offs[a:b + 1] - offs[a]
+                c = np.maximum(np.diff(o) - min_len + 1, 0)
+                row = np.repeat(np.arange(a, b), c)
+                # window starts, indexed into this chunk's symbols
+                g = np.arange(c.sum()) + np.repeat(o[:-1] - np.cumsum(c) + c, c)
+                h = _window_hashes(syms[offs[a]:offs[b]], min_len, g)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        rb.column(0).take(row),
+                        pa.array(g - (offs[row] - offs[a]) + base[row], pa.int64()),
+                        pa.array(h.view(np.int64)),
+                    ],
+                    names=["doc", "pos", "h"],
+                )
+                a = b
+
+    return kernel
+
+
+def _hash_stream(seqs: DataFrame, min_len: int) -> DataFrame:
+    doc = seqs.schema["doc"].dataType
+    return seqs.mapInArrow(
+        _hash_kernel(min_len),
+        StructType([
+            StructField("doc", doc), StructField("pos", LongType()),
+            StructField("h", LongType()),
+        ]),
+    )
+
+
+def _char_seqs(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    return docs.select(
+        F.col(id_col).alias("doc"),
+        F.lit(1).cast("long").alias("base"),
+        F.col(text_col).alias("s"),
+    )
 
 
 def duplicate_spans(
@@ -112,8 +167,6 @@ def duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_count: int = 2,
-    fanout: int = 4,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Maximal duplicated spans (window length ``min_len``, >=
     ``min_count`` occurrences corpus-wide) per document.
@@ -122,131 +175,15 @@ def duplicate_spans(
     INCLUSIVE character positions (``substr(text, span_start,
     span_len)`` is the span), MATERIALIZED via checkpoint (lineage
     truncated; span-table-sized, its blocks are reclaimed when the
-    DataFrame is garbage-collected) — every intermediate doubling
-    round's storage is released explicitly before return.
-
-    Checkpointing, not persist, is load-bearing here: each round
-    references its predecessor ``fanout`` times (t once per tile
-    self-join), so an uncut logical plan grows ~fanout^round — within
-    a few rounds, AQE's per-update ``explainString`` alone
-    OOMs a default driver. Rounds use the reliable ``checkpoint()``
-    when ``sparkContext.setCheckpointDir`` is configured (survives
-    executor loss — set it on a real cluster), else
-    ``localCheckpoint`` (executor-local blocks; an executor loss
-    fails the query and it must be rerun — the same trade GraphX
-    iterative jobs make).
-
-    ``strategy``: ``"auto"`` (default) picks the DIRECT single-pass
-    plan for ``min_len <= _DIRECT_MAX_LEN`` and prefix doubling
-    beyond it; ``"direct"`` / ``"doubling"`` force a path (the
-    equivalence test pins direct == doubling == brute force). Both
-    strategies compute the identical exact marked set — the choice
-    is purely a physical-plan trade (see ``_DIRECT_MAX_LEN``)."""
-    _validate(min_len, min_count, fanout)
-    if strategy not in ("auto", "direct", "doubling"):
-        raise ValueError(
-            f"duplicate_spans: unknown strategy {strategy!r}"
-        )
-    if strategy == "direct" or (
-        strategy == "auto" and min_len <= _DIRECT_MAX_LEN
-    ):
-        # DIRECT: one row per (position, raw window content), zero
-        # doubling rounds. Construction measured at sf0.1:
-        # per-position ``substr`` windows 3.4x faster than assembling
-        # each window from the split char array (slice+concat_ws pays
-        # an object array allocation per position). substr's
-        # start-offset is a code-point walk from the string head, so
-        # a single document costs O(n·L + n²/2) byte steps — fine
-        # through ~100 KB docs (the media-grain family's per-payload
-        # bound is the same class); corpora of mega-docs should run
-        # the token grain or force ``strategy="doubling"``, both
-        # linear.
-        #
-        # Occurrence counting de-skewed (r13, guide §2.5): see
-        # _direct_spans — the r12 count window over (xxhash64(w),
-        # w) funneled every occurrence of one duplicated window
-        # through ONE task with no partial reduction.
-        n = F.length(F.col(text_col))
-        last = (n - (min_len - 1)).cast("int")
-        idx = F.when(
-            last >= 1, F.sequence(F.lit(1), last)
-        ).otherwise(F.array().cast("array<int>"))
-        win = F.transform(
-            idx, lambda i: F.col(text_col).substr(i, F.lit(min_len))
-        )
-        rows = docs.select(
-            F.col(id_col).alias("doc"),
-            F.posexplode(win).alias("p0", "w"),
-        ).select(
-            "doc", (F.col("p0") + 1).cast("long").alias("pos"), "w"
-        )
-        return _direct_spans(rows, min_len, min_count, id_col)
-    # one row per corpus character: (doc, pos 1-based, la, lb) where
-    # (la, lb) is the equality-class label of the window starting at
-    # pos, tagged la=-1 at the base (labels and positions share a
-    # value space otherwise). Base width: THREE code points packed
-    # 21 bits each into one long — exact for ALL of Unicode (a code
-    # point is <= 0x10FFFF < 2^21; ``split(text, '')`` yields
-    # code-point-grained chars, surrogate pairs intact, and ``ascii``
-    # returns the full code point — a 16-bit/4-unit pack would alias
-    # astral-plane chars with their low 16 bits).
-    #
-    # r12: the pack is computed IN-ARRAY (transform + element_at over
-    # the split array — O(1) per lookup) and exploded directly, so the
-    # base assembly is ZERO-shuffle map-side work. It previously ran
-    # per-document window LEADS over the exploded char stream — a
-    # corpus-sized exchange + sort whose partitioning the round joins
-    # (keyed (doc, pos), not doc) could not even reuse; guide §2.4.
-    # The per-doc array grain bounds a task by the longest document —
-    # the span_dedup family's documented contract, unchanged.
-    # Positions without a full base window drop here (slice length
-    # n-2), which seeds the inner-join induction below.
-    if min_len > 3:
-        # the char array MUST be a named column of a prior projection:
-        # referencing the raw ``split`` expression from inside the
-        # lambda would re-evaluate the split per element_at call
-        # (Catalyst does not CSE across lambda scopes — measured 5x
-        # slower), while CollapseProject keeps a multiply-referenced
-        # non-cheap projection un-inlined
-        arr = F.col("_arr")
-        n = F.size(arr)
-        base = docs.select(
-            F.col(id_col).alias("doc"),
-            F.split(F.col(text_col), "").alias("_arr"),
-        ).select(
-            "doc",
-            F.posexplode(
-                F.transform(
-                    F.slice(arr, 1, F.greatest(n - 2, F.lit(0))),
-                    lambda ch, i: (
-                        F.shiftleft(F.ascii(ch).cast("long"), 42)
-                        + F.shiftleft(
-                            F.ascii(F.element_at(arr, i + 2)).cast("long"),
-                            21,
-                        )
-                        + F.ascii(F.element_at(arr, i + 3)).cast("long")
-                    ),
-                )
-            ).alias("p0", "lb"),
-        ).select(
-            "doc",
-            (F.col("p0") + 1).cast("long").alias("pos"),
-            F.lit(-1).cast("long").alias("la"),
-            "lb",
-        )
-        return _spans_from_symbols(
-            None, min_len, min_count, id_col, fanout, base=base,
-            base_width=3,
-        )
-    chars = docs.select(
-        F.col(id_col).alias("doc"),
-        F.posexplode(F.split(F.col(text_col), "")).alias("p0", "ch"),
-    ).select(
-        "doc",
-        (F.col("p0") + 1).cast("long").alias("pos"),
-        F.ascii("ch").cast("long").alias("u"),
+    DataFrame is garbage-collected) — the intermediate cuts are
+    released explicitly before return. Cuts use the reliable
+    ``checkpoint()`` when ``sparkContext.setCheckpointDir`` is
+    configured (survives executor loss — set it on a real cluster),
+    else ``localCheckpoint``."""
+    _validate(min_len, min_count)
+    return _window_spans(
+        _char_seqs(docs, text_col, id_col), min_len, min_count, id_col
     )
-    return _spans_from_symbols(chars, min_len, min_count, id_col, fanout)
 
 
 def duplicate_spans_tokens(
@@ -256,34 +193,18 @@ def duplicate_spans_tokens(
     pos_col: str = "pos",
     tok_col: str = "tok_id",
     min_count: int = 2,
-    fanout: int = 4,
-    strategy: str = "auto",
 ) -> DataFrame:
-    """:func:`duplicate_spans` over a TOKEN stream — the module
-    docstring's claim ("the operator is agnostic to what one position
-    holds") made a certified surface: one row per (doc, 1-based token
-    position, small integer token id), spans returned in TOKEN
-    coordinates. This is the grain Lee et al. actually run (their
+    """:func:`duplicate_spans` over a TOKEN stream: one row per (doc,
+    1-based token position, small integer token id), spans returned in
+    TOKEN coordinates. This is the grain Lee et al. actually run (their
     50-token threshold): 5-10x fewer positions than the char pass for
-    the same dedup semantics, so at 100 TB the per-round state drops
-    by the same factor.
+    the same dedup semantics.
 
-    Token ids must fit the 21-bit symbol pack that makes the 3-symbol
-    base label exact (true for any real vocabulary — 2M entries;
-    enforced per row with a raise, not silent aliasing — the range
-    contract holds on EVERY strategy, direct included).
-
-    ``strategy`` as in :func:`duplicate_spans`: short windows
-    (``min_len <= _DIRECT_MAX_LEN // 8`` id-longs, i.e. the same
-    ~128 B content-key budget) group positions by the raw id
-    sequence in one exchange instead of running doubling rounds;
-    positions are the dense 1-based token grid (the module
-    contract both strategies rely on for window adjacency)."""
-    _validate(min_len, min_count, fanout)
-    if strategy not in ("auto", "direct", "doubling"):
-        raise ValueError(
-            f"duplicate_spans_tokens: unknown strategy {strategy!r}"
-        )
+    Each document's id array is assembled once (one exchange, keyed
+    doc); positions are the dense token grid from the document's first
+    position. Token ids must lie in ``[0, 2^21)`` (true for any real
+    vocabulary — 2M entries), enforced per row with a raise."""
+    _validate(min_len, min_count)
     lim = (1 << 21) - 1
     syms = tokens.select(
         F.col(id_col).alias("doc"),
@@ -299,274 +220,78 @@ def duplicate_spans_tokens(
         )
         .alias("u"),
     )
-    if strategy == "direct" or (
-        strategy == "auto" and min_len * 8 <= _DIRECT_MAX_LEN
-    ):
-        # DIRECT at token grain: assemble each document's id array
-        # once (one exchange, keyed doc), then mark positions by the
-        # raw length-``min_len`` id slice — content-exact, no
-        # doubling rounds (see _DIRECT_MAX_LEN; an id slice is 8 B
-        # per token, hence the /8 budget above).
-        #
-        # Occurrence counting de-skewed exactly like the char grain
-        # (r13, guide §2.5): see _direct_spans — the r12
-        # ``count() OVER (PARTITION BY w)`` put every occurrence of
-        # one hot window into ONE task with no map-side reduction.
-        us = F.col("_us")
-        last = F.size(us) - (min_len - 1)
-        rows = (
-            syms.groupBy("doc")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "u"))),
-                    lambda s: s["u"],
-                ).alias("_us"),
-                F.min("pos").alias("_p1"),
-            )
-            .select(
-                "doc", "_p1",
-                F.posexplode(
-                    F.transform(
-                        F.slice(us, 1, F.greatest(last, F.lit(0))),
-                        lambda _u, i: F.slice(us, i + 1, min_len),
-                    )
-                ).alias("p0", "w"),
-            )
-            .select(
-                "doc",
-                (F.col("p0") + F.col("_p1")).cast("long").alias("pos"),
-                "w",
-            )
-        )
-        return _direct_spans(rows, min_len, min_count, id_col)
-    return _spans_from_symbols(syms, min_len, min_count, id_col, fanout)
+    seqs = syms.groupBy("doc").agg(
+        F.min("pos").alias("base"),
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "u"))),
+            lambda s: s["u"],
+        ).alias("s"),
+    )
+    return _window_spans(seqs, min_len, min_count, id_col)
 
 
-def _direct_spans(
-    rows: DataFrame, min_len: int, min_count: int, id_col: str
+def _window_spans(
+    seqs: DataFrame, min_len: int, min_count: int, id_col: str
 ) -> DataFrame:
-    """The direct strategy's de-skewed tail (r13, guide §2.5):
-    ``rows`` is one ``(doc, pos, w)`` row per corpus position (``w``
-    = the raw window content, string or id-array); marks every
-    position whose window occurs >= ``min_count`` times corpus-wide
-    — EXACTLY (the full content decides the final verdict; hashes
-    only pre-filter) — and returns the merged spans.
+    """The one body behind both grains: ``seqs`` is ``(doc, base, s)``,
+    ``s`` a document's text or id array and ``base`` its first
+    position. Marks every window start whose content occurs >=
+    ``min_count`` times corpus-wide, EXACTLY, and returns the merged
+    spans.
 
-    The r12 shape — ``count(1) OVER (PARTITION BY xxhash64(w), w)``
-    — put every occurrence of one duplicated window into ONE task
-    with no partial reduction: a boilerplate 40-char window occurring
-    10^9 times at web scale is a §2.5 straggler (AQE cannot split a
-    window partition). This shape has no content window, no
-    corpus-position exchange and no corpus-position sort:
+    - ``hs``: the hash stream, computed once and cut (the hash count
+      and the survivor probe both read it);
+    - ``dup_h``: hashes with >= min_count occurrences — an 8-byte-key
+      count whose partial aggregation absorbs hot keys task-locally.
+      A collision only ADMITS a window (a truly duplicated window's
+      hash class counts at least its own occurrences);
+    - ``cont``: the survivors' window content, sliced per document
+      from ``seqs`` joined with its survivor positions, and cut (the
+      content count and the final mark both read it);
+    - ``dup_w``: the EXACT verdict, the content count over survivors —
+      partial aggregation again absorbs hot keys; collisions admitted
+      by ``dup_h`` die here.
 
-    - ``dup_h``: candidate window HASHES with >= min_count total
-      occurrences — an 8-byte-key count whose partial aggregation
-      absorbs hot keys task-locally (the exchange carries one
-      partial per distinct hash per task, never occurrences). A hash
-      collision only ADMITS a window into the survivor set, never
-      drops one (a truly duplicated window's hash class counts at
-      least its own occurrences) — a pure pre-filter;
-    - ``surv``: the position stream probe-filtered by broadcast
-      ``dup_h`` and checkpoint-cut — the duplicated positions plus
-      collision noise, a small fraction of the corpus in realistic
-      dedup workloads (and the cut is what keeps the window
-      derivation to two passes total: the survivor set feeds both
-      the exact verdict and the final mark);
-    - ``dup_w``: the EXACT verdict, counted on the full (hash,
-      content) key over survivors only — partial aggregation again
-      absorbs hot keys; collisions admitted by dup_h die here (their
-      true content count is < min_count);
-    - the final broadcast semi-join keeps survivors whose content
-      verdict held.
+    No join side is hinted: the planner and AQE pick broadcast or
+    shuffle from real sizes."""
+    _cut, _free = _cut_tools(seqs)
+    hs, hs_ids = _cut(_hash_stream(seqs, min_len))
+    dup_h = hs.groupBy("h").count().filter(F.col("count") >= min_count)
+    surv = (
+        hs.join(dup_h, "h", "left_semi")
+        .groupBy("doc")
+        .agg(F.collect_list("pos").alias("ps"))
+    )
+    # the document's symbols as an array, projected once per document
+    # (a string splits into code points) so that each survivor's
+    # window is an O(L) slice of it
+    chars = isinstance(seqs.schema["s"].dataType, StringType)
+    sym = F.split("s", "") if chars else F.col("s")
 
-    Broadcast/checkpoint bounds (documented contract): ``dup_h`` is
-    8 B per distinct duplicated window, ``dup_w`` its content, and
-    the survivor cut is duplicated-positions-sized — corpora whose
-    DUPLICATED footprint itself is corpus-scale should run
-    ``strategy="doubling"``, whose per-round partial aggregation
-    and label state handle unbounded duplicate sets natively."""
-    rows = rows.withColumn("_hw", F.xxhash64("w"))
-    dup_h = (
-        rows.groupBy("_hw")
-        .agg(F.count(F.lit(1)).alias("_nh"))
-        .filter(F.col("_nh") >= min_count)
-        .select("_hw")
+    def window(p):
+        w = F.slice("_a", (p - F.col("base") + 1).cast("int"), min_len)
+        return F.struct(
+            p.alias("pos"), (F.array_join(w, "") if chars else w).alias("w")
+        )
+
+    cont, cont_ids = _cut(
+        seqs.join(surv, "doc")
+        .select("doc", "base", "ps", sym.alias("_a"))
+        .select("doc", F.inline(F.transform("ps", window)))
     )
-    _cut, _free = _cut_tools(rows)
-    surv, surv_ids = _cut(
-        rows.join(F.broadcast(dup_h), "_hw", "left_semi")
-    )
-    dup_w = (
-        surv.groupBy("_hw", "w")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= min_count)
-        .select("_hw", "w")
-    )
-    marked = surv.join(
-        F.broadcast(dup_w), ["_hw", "w"], "left_semi"
-    ).select("doc", "pos")
+    _free(hs_ids)
+    dup_w = cont.groupBy("w").count().filter(F.col("count") >= min_count)
+    marked = cont.join(dup_w, "w", "left_semi")
     out = _spans_from_marked(marked, min_len, id_col)
-    _free(surv_ids)
-    return out
-
-
-def _tile_schedule(base: int, target: int, fanout: int) -> list[list[int]]:
-    """Per-round tile offsets for the widening loop: each round
-    combines the current-width window at offset 0 with the windows at
-    the returned offsets (all the same width), producing a window of
-    width ``offsets[-1] + width``. Offsets are spaced <= width apart
-    (gap-free tiling), full tiles first, one overlapping tail tile
-    when the round target is not a multiple (the suffix-array
-    sparse-table trick, generalized from 2 tiles to ``fanout``).
-
-    ``fanout=2`` reproduces classic prefix doubling exactly;
-    ``fanout=4`` (the default) reaches the same width in HALF the
-    rounds — round count is ceil(log_f(target/base)) — trading a
-    wider per-round class key (2·f longs) for half the shuffles,
-    checkpoint barriers and driver round-trips (guide §2.4: remove
-    shuffles outright; the r12 optimization round's measurement)."""
-    rounds: list[list[int]] = []
-    w = base
-    while w < target:
-        reach = min(fanout * w, target)
-        offs = list(range(w, reach - w + 1, w))
-        if not offs or offs[-1] + w < reach:
-            offs.append(reach - w)  # overlap tail (never a gap: the
-            # previous tile ends at offs[-2]+w-1 >= reach-w-1 >= the
-            # tail's start - 1, because consecutive offsets differ
-            # by <= w)
-        rounds.append(offs)
-        w = reach
-    return rounds
-
-
-def _spans_from_symbols(
-    symbols: DataFrame | None, min_len: int, min_count: int, id_col: str,
-    fanout: int = 4, base: DataFrame | None = None, base_width: int = 0,
-) -> DataFrame:
-    """The shared prefix-doubling body behind the char and token
-    entry points: ``symbols`` is (doc, pos 1-based, u < 2^21). One
-    definition so the two grains cannot drift.
-
-    A caller that can assemble the packed base label WITHOUT the
-    window-lead shuffle (the char path: in-array ``transform`` +
-    ``element_at`` — r12) passes ``base`` (doc, pos, la=-1, lb) and
-    its ``base_width`` directly; ``symbols`` may then be None."""
-    _validate(min_len, min_count, fanout)
-    if base is None:
-        chars = symbols
-        # strictly greater: at min_len == 3 the packed base would BE
-        # the final width with zero class rounds, skipping the
-        # min_count filter entirely
-        base_width = 3 if min_len > 3 else 1
-        if base_width == 3:
-            wdoc = Window.partitionBy("doc").orderBy("pos")
-            base = (
-                chars.select(
-                    "doc", "pos", "u",
-                    F.lead("u", 1).over(wdoc).alias("_u1"),
-                    F.lead("u", 2).over(wdoc).alias("_u2"),
-                )
-                .filter(F.col("_u2").isNotNull())
-                .select(
-                    "doc", "pos",
-                    F.lit(-1).cast("long").alias("la"),
-                    (
-                        F.shiftleft(F.col("u"), 42)
-                        + F.shiftleft(F.col("_u1"), 21)
-                        + F.col("_u2")
-                    ).alias("lb"),
-                )
-            )
-        else:
-            base = chars.select(
-                "doc", "pos",
-                F.lit(-1).cast("long").alias("la"),
-                F.col("u").alias("lb"),
-            )
-
-    _cut, _free = _cut_tools(base)
-    t, t_ids = _cut(base)
-    # widening rounds: each round combines ``fanout`` current-width
-    # tiles (full tiles spaced exactly width apart, plus one
-    # overlapping tail tile when the round target is not a multiple —
-    # the sparse-table trick generalized). fanout=2 IS classic prefix
-    # doubling; the default 4 reaches min_len in half the rounds —
-    # half the checkpoint barriers, class shuffles and driver
-    # round-trips — at the cost of a 2·fanout-long class key
-    # (r12 measurement: the round barrier, not the shuffled bytes,
-    # dominates; and at 100 TB fewer full-corpus passes wins again).
-    for offs in _tile_schedule(base_width, min_len, fanout):
-        # INNER self-joins: by induction t holds exactly the positions
-        # whose current-width window (a) lies fully inside its
-        # document and (b) still occurs >= min_count times corpus-wide
-        # — so a position advances iff ALL its tile sub-windows do.
-        # (a) is sound because every tile a surviving final window
-        # composes from lies inside it; (b) because an occurrence of
-        # wider content is an occurrence of each tile's content, so a
-        # tile class under min_count bounds every composed class
-        # under min_count. The working set therefore SHRINKS
-        # monotonically — after a round or two only the
-        # near-duplicate regions of the corpus are still in flight,
-        # which is what makes log-round widening affordable at 100 TB.
-        #
-        # merge hint on EVERY round join: the static planner otherwise
-        # BROADCASTS the corpus-sized shifted sides — one pinned
-        # corpus-sized HashedRelation per round OOMs even a small
-        # driver, and is plan suicide at 100 TB. With the hint,
-        # rounds are co-partitioned shuffle joins on uniform keys
-        # (one sort per side, then every same-key join chains
-        # exchange-free); AQE still converts a genuinely small side
-        # to broadcast at runtime (its conversion sees REAL sizes).
-        pairs = t
-        keys = ["la", "lb"]
-        for i, off in enumerate(offs):
-            shifted = t.select(
-                "doc",
-                (F.col("pos") - off).alias("pos"),
-                F.col("la").alias(f"ra{i}"),
-                F.col("lb").alias(f"rb{i}"),
-            )
-            pairs = pairs.join(shifted.hint("merge"), ["doc", "pos"], "inner")
-            keys += [f"ra{i}", f"rb{i}"]
-        # class labels + min_count filter in ONE window pass over the
-        # tile-label tuple (r12; guide §2.4: the window needs the same
-        # partitioning the old groupBy established, so the separate
-        # aggregate + merge-join-back — which re-shuffled the whole
-        # pairs stream a second time and needed a persist to avoid
-        # recomputing it — collapses into a single exchange; measured
-        # ~2x on round wall-clock at sf0.1 with identical row counts).
-        # Skew note: a hot window-content class lands on one partition
-        # either way (the old join-back keyed on the same tuple);
-        # WindowExec's per-group buffer spills via
-        # UnsafeExternalSorter, same as the join's sort did.
-        wcls = Window.partitionBy(*keys)
-        nxt, nxt_ids = _cut(
-            pairs
-            .withColumn("_n", F.count(F.lit(1)).over(wcls))
-            .withColumn("m", F.min(F.struct("doc", "pos")).over(wcls))
-            .filter(F.col("_n") >= min_count)
-            .select(
-                "doc", "pos",
-                F.col("m.doc").alias("la"),
-                F.col("m.pos").alias("lb"),
-            )
-        )
-        _free(t_ids)
-        t, t_ids = nxt, nxt_ids
-
-    # t now holds exactly the duplicated full-window start positions
-    # at width min_len — no length re-check, no recount needed
-    out = _spans_from_marked(t.select("doc", "pos"), min_len, id_col)
-    _free(t_ids)    # out is checkpoint-materialized: rounds can go
+    _free(cont_ids)
     return out
 
 
 def _cut_tools(df: DataFrame):
-    """The checkpoint-cut machinery both strategies share: returns
-    ``(_cut, _free)`` where ``_cut`` materializes a DataFrame with
-    TRUNCATED lineage and returns (df, the block ids it pinned) so a
-    superseded round can be freed deterministically (unpersist() is a
+    """The checkpoint-cut machinery: returns ``(_cut, _free)`` where
+    ``_cut`` materializes a DataFrame with TRUNCATED lineage and
+    returns (df, the block ids it pinned) so a superseded cut can be
+    freed deterministically (unpersist() is a
     no-op on checkpoint blocks — they belong to the RDD, not the
     cache manager), and ``_free`` releases those blocks."""
     sc = df.sparkSession.sparkContext
@@ -598,7 +323,7 @@ def _spans_from_marked(
     marked: DataFrame, min_len: int, id_col: str
 ) -> DataFrame:
     """Duplicated-window start positions -> maximal disjoint spans,
-    checkpoint-materialized — the shared tail of every strategy.
+    checkpoint-materialized.
 
     Gaps-and-islands per document on COVERAGE: two duplicated window
     starts whose covered char ranges overlap or touch (start delta
@@ -643,8 +368,8 @@ def incremental_duplicate_spans(
     (the batch-vs-corpus sibling of :func:`duplicate_spans`, matching
     ``incremental_exact_dedup`` / ``incremental_near_dup_admission``'s
     contract): find every duplicated span IN THE BATCH documents,
-    counting occurrences against batch ∪ corpus — without running the
-    doubling rounds over the whole corpus.
+    counting occurrences against batch ∪ corpus — without running
+    :func:`duplicate_spans` over the whole corpus.
 
     EXACTNESS argument: a batch window of length ``min_len`` is
     duplicated iff it occurs >= ``min_count`` times in batch ∪ corpus.
@@ -654,48 +379,35 @@ def incremental_duplicate_spans(
     over batch ∪ touched-corpus and keeping batch rows is EQUAL to
     the from-scratch union run's batch rows (certified by the driver
     row's full-union oracle). The touched set here is the corpus
-    documents sharing an ``xxhash64``-ed ``min_len``-window with the
+    documents sharing a Karp–Rabin ``min_len``-window hash with the
     batch: equal windows always hash equal (no false negative — the
     superset property holds unconditionally), a hash collision only
-    admits a harmless extra document into the doubling rounds.
+    admits a harmless extra document into the exact pass.
     Corpus-only duplicates are out of contract — the corpus is
     already deduplicated by the batch pipeline's own prior passes.
 
-    Scale shape: ONE narrow corpus pass (per-position window hash,
-    pipelined explode — the transient 8-byte probe rows never
-    materialize) filtered against a BROADCAST batch window-hash set:
-    no corpus shuffle, no wide rows; only matching positions' doc
-    ids shuffle for the distinct. The doubling rounds then run over
-    |batch| + |touched| documents only — and touched is exactly the
-    documents with REAL shared windows (modulo hash collisions), so
-    the expensive rounds track the near-duplicate footprint, not the
-    corpus. A standing window-hash→doc inverted index (the postings
-    pattern) would remove even that one scan; this operator states
-    the stateless contract. Pass ``touched`` (a list) to receive
-    ``[n_corpus_docs_touched]`` evidence."""
+    Scale shape: ONE narrow corpus pass (the same window-hash kernel
+    as :func:`duplicate_spans`) semi-joined with the batch's distinct
+    window hashes — the planner and AQE broadcast that set when it is
+    small; only matching positions' doc ids shuffle for the distinct.
+    :func:`duplicate_spans` then runs over |batch| + |touched|
+    documents only — touched is exactly the documents with REAL shared
+    windows (modulo hash collisions), so the exact pass tracks the
+    near-duplicate footprint, not the corpus. A standing
+    window-hash→doc inverted index (the postings pattern) would remove
+    even that one scan; this operator states the stateless contract.
+    Pass ``touched`` (a list) to receive ``[n_corpus_docs_touched]``
+    evidence."""
+    _validate(min_len, min_count)
 
-    def window_hashes(df: DataFrame):
-        last = F.length(text_col) - (min_len - 1)
-        idx = F.when(
-            last >= 1, F.sequence(F.lit(1), last)
-        ).otherwise(F.array().cast("array<int>"))
-        return df.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    idx,
-                    lambda i: F.xxhash64(
-                        F.col(text_col).substr(i, F.lit(min_len))
-                    ),
-                )
-            ).alias("_h"),
-        )
+    def window_hashes(df: DataFrame) -> DataFrame:
+        return _hash_stream(_char_seqs(df, text_col, id_col), min_len)
 
-    seeds = window_hashes(batch).select("_h").distinct()
+    seeds = window_hashes(batch).select("h").distinct()
     affected = (
         window_hashes(corpus)
-        .join(F.broadcast(seeds), "_h", "left_semi")
-        .select(id_col)
+        .join(seeds, "h", "left_semi")
+        .select(F.col("doc").alias(id_col))
         .distinct()
     )
     touched_corpus = corpus.join(affected, id_col, "left_semi")

@@ -65,6 +65,23 @@ class SmallFiles:
         finally:
             stream.close()
 
+    def read_bytes(self, name: str) -> bytes | None:
+        """The file's bytes, or None when it does not exist."""
+        if self.local is not None:
+            try:
+                with open(os.path.join(self.local, name), "rb") as f:
+                    return f.read()
+            except FileNotFoundError:
+                return None
+        p, fs = self._hadoop(name)
+        if not fs.exists(p):
+            return None
+        stream = fs.open(p)
+        try:
+            return bytes(self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        finally:
+            stream.close()
+
     def write_text(self, name: str, text: str) -> None:
         """Write ``name`` through ``name + ".tmp"`` and a rename that
         replaces an existing ``name`` in one step: a crash leaves

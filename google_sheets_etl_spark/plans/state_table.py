@@ -36,7 +36,8 @@ engine needs over plain parquet:
   per version. The pointer is read on every call, so another object's
   or process's commit is seen; the table's own Arrow commits fill the
   cache with the table they wrote, and any other version is loaded
-  once (one Spark job). The sync loop's metadata questions are
+  once, by ``pyarrow.parquet`` when it has a sidecar (no Spark job)
+  and by Spark otherwise. The sync loop's metadata questions are
   answered from these snapshots with Arrow compute and start no Spark
   job; the driver holds one Arrow copy of each accounting table.
 - **MERGE upsert**: ``upsert(updates, keys)`` = matched rows take the
@@ -203,14 +204,32 @@ class StateTable:
         read on every call, so another object's or process's commit is
         seen; the rows are cached per version. The table's own Arrow
         commits fill the cache with what they wrote; any other version
-        costs one Spark job, once."""
+        with a sidecar is read by the driver, with no Spark job."""
         v = self.current_version()
         if v is None:
             return _snapshot_schema(self.schema).empty_table()
         if self._snapshot is None or self._snapshot[0] != v:
-            df = self._read_version(v)
-            self._snapshot = (v, df.toArrow().cast(_snapshot_schema(df.schema)))
+            self._snapshot = (v, self._load_version(v))
         return self._snapshot[1]
+
+    def _load_version(self, v: int) -> pa.Table:
+        """Version ``v``'s rows on the driver. A version with a sidecar
+        is read by ``pyarrow.parquet``: its data files are the names
+        Spark's reader sees (not ``_``- or ``.``-prefixed), read in
+        place locally and through ``SmallFiles.read_bytes`` off-box. A
+        version without one is read by Spark."""
+        sidecar = self._files.read_text(f"_v{v}/{_SCHEMA}")
+        if sidecar is None:
+            df = self._read_version(v)
+            return df.toArrow().cast(_snapshot_schema(df.schema))
+        schema = _snapshot_schema(StructType.fromJson(json.loads(sidecar)))
+        files = SmallFiles(self.spark, self._version_dir(v), None if self._local is None
+                           else os.path.join(self._local, f"_v{v}"))
+        parts = [
+            pq.read_table(pa.BufferReader(files.read_bytes(name))).select(schema.names)
+            for name in sorted(files.listdir()) if not name.startswith(("_", "."))
+        ]
+        return pa.concat_tables([p.cast(schema) for p in parts]) if parts else schema.empty_table()
 
     def upsert(self, updates: DataFrame | pa.Table, keys: list[str]) -> None:
         """MERGE: update matched, keep unmatched, insert new (U1/U2).

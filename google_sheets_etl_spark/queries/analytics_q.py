@@ -1294,15 +1294,14 @@ def suffix_dedup_spans(spark: SparkSession, sf: str) -> DataFrame:
     documents trading away "suffix-array cost"; this row pays it):
     every maximal char range covered by a length-40 window that
     occurs >= 2 times ANYWHERE in the corpus, at ANY alignment,
-    within or across documents. Spark side: distributed prefix
-    doubling — ceil(log2 40)+1 = 6 rounds of (self-join on position,
-    partial-agg groupBy on the label pair, join back), labels being
-    the EXACT min-(doc,pos) of each equality class (collision-free,
-    integer-exact, partitioning-invariant; no hash, no global sort) —
-    then coverage-union gaps-and-islands per doc. The oracle
-    materializes the 40-grams directly (O(N*L) bytes — fine for
-    DuckDB at sf, the exact blowup the doubling path avoids at
-    100 TB, where per-round state stays 2 longs per corpus char)."""
+    within or across documents. Spark side: one Arrow kernel pass
+    gives every position its Karp–Rabin window hash (O(n) per
+    document for any window length); positions whose hash occurs >= 2
+    times get their window content, and the content count decides
+    (exact: a hash collision only admits a window) — then
+    coverage-union gaps-and-islands per doc. The oracle materializes
+    the 40-grams directly (O(N*L) bytes — fine for DuckDB at sf, the
+    blowup the hash stream avoids)."""
     from ..operators.suffix import duplicate_spans
 
     return duplicate_spans(t(spark, sf, "documents"), min_len=40)
@@ -1347,15 +1346,14 @@ def suffix_dedup_tokens(spark: SparkSession, sf: str) -> DataFrame:
     this row certifies it): tokenize, assign dense vocabulary ids
     (text.token_vocabulary — deterministic token-ASC numbering,
     broadcast-joined onto the position stream), and run the SAME
-    prefix-doubling operator over per-TOKEN symbol rows
+    window-hash operator over per-TOKEN symbols
     (suffix.duplicate_spans_tokens, min_len=8 tokens ~ the char row's
     40 chars). Spans come back in TOKEN coordinates. The oracle
     materializes token 8-grams as joined strings — an injective image
     of the id-tuple grams, so the duplicate relation is identical.
-    At 100 TB the token grain is the one to run: 5-10x fewer position
-    rows per round for the same dedup semantics (Lee et al. run 50
-    tokens); per-round state here is 2 longs per TOKEN, not per
-    char. SCALE.md carries the measured positions/doc comparison."""
+    At 100 TB the token grain is the one to run: 5-10x fewer
+    positions for the same dedup semantics (Lee et al. run 50
+    tokens). SCALE.md carries the measured positions/doc comparison."""
     from ..operators.suffix import duplicate_spans_tokens
     from ..operators.text import doc_token_positions, token_vocabulary
 

@@ -11,25 +11,10 @@ def _variant_pool_size(n_variants: int, spark: SparkSession) -> int:
     (guide §2.6: "2-3 jobs in flight is plenty: enough to fill the
     tail, not so many that they fight for executors").
 
-    r12 evidence for the backoff: the recall-harness overlap measured
-    well in quiet windows and in the driver's loaded 32-core window,
-    but the 8-core scaling window stretched nsw_beam_recall_at_k to
-    17.5 s — concurrent corpus scans on a small session fight for
-    cores instead of back-filling the tail. So: full-but-capped
-    overlap on a big session, 2 jobs on a small one, sequential when
-    the HOST is already saturated (other tenants' load is exactly
-    what the in-flight jobs would compete with)."""
-    import os as _os
-
+    The width depends on the session's cores only, never on the host's
+    load average, so the same session runs the same plan (and bench
+    timings do not follow other tenants' load)."""
     cores = spark.sparkContext.defaultParallelism
-    # getloadavg is absent on some platforms (Windows) and raises
-    # OSError where the load average is unobtainable: no backoff then
-    loadavg = getattr(_os, "getloadavg", None)
-    try:
-        if loadavg is not None and loadavg()[0] >= 0.75 * (_os.cpu_count() or cores):
-            return 1
-    except OSError:
-        pass
     return min(n_variants, 3 if cores >= 16 else 2)
 
 _PQ_COMMON = """

@@ -1454,11 +1454,11 @@ def incremental_suffix_admission(spark: SparkSession, sf: str) -> DataFrame:
     admission, round-10 directive #4): a new batch (id%10 ∈ {8,9})
     is scanned for every maximal span whose 40-char windows occur
     >= 2 times against batch ∪ corpus (id%10 < 8) — WITHOUT running
-    the doubling rounds over the corpus. One narrow corpus pass
-    probes seed 8-grams against the BROADCAST batch-seed set (no
-    corpus shuffle); the prefix-doubling machinery then runs over
-    batch ∪ touched-corpus only (~a third of the corpus at gate
-    scale — SCALE.md has the touched-set evidence). The oracle is
+    the exact pass over the corpus. One narrow corpus pass hashes
+    every 40-char window and semi-joins the batch's window hashes (no
+    corpus shuffle while that set is small); the exact span pass then
+    runs over batch ∪ touched-corpus only (~a third of the corpus at
+    gate scale — SCALE.md has the touched-set evidence). The oracle is
     the FROM-SCRATCH union derivation (the 40-gram materialization
     of suffix_dedup_spans) filtered to batch documents, so the value
     hash certifies the seed-restriction exactness argument, not just

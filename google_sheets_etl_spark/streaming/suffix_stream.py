@@ -11,11 +11,12 @@ The deployed shape for "find duplicated spans in the firehose
 against everything ever admitted": each micro-batch of documents is
 scanned for maximal spans whose ``min_len``-char windows occur >= 2
 times against batch ∪ admitted-corpus (ONE narrow corpus probe pass
-against a broadcast batch window-hash set — no corpus shuffle, the
-incremental operator's contract); span verdicts append to a spans
+semi-joined with the batch's window hashes — no corpus shuffle while
+that set is small, the incremental operator's contract); span
+verdicts append to a spans
 table, the batch's documents append to the corpus table, which the
 NEXT batch then sees. Work per trigger is batch-proportional plus
-the touched-set doubling rounds, never corpus².
+the exact span pass over batch ∪ touched corpus, never corpus².
 
 At-least-once contract, made harmless the admission_stream way:
 - a REDELIVERED batch (file replayed after its corpus append landed)

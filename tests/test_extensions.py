@@ -2680,14 +2680,15 @@ def _brute_duplicate_spans(rows, L, min_count=2):
 
 
 def test_suffix_duplicate_spans_matches_brute_force(spark):
-    """Distributed prefix doubling == per-position L-gram brute force,
-    across window lengths spanning the packed base (L<=3), the
-    base-only+overlap path, power-of-two targets, and the overlap
-    combine; includes within-doc self-repeats, cross-doc duplicates,
-    empty docs, and ASTRAL-PLANE code points (the 21-bit pack must
-    not alias U+1D11E with its low 16 bits)."""
+    """Karp–Rabin window hashes plus the content verdict == per-position
+    L-gram brute force, across short and long windows (L >= 256 spans
+    whole documents) and min_count 2 and 3; includes within-doc
+    self-repeats, cross-doc duplicates, empty and NULL docs, and
+    ASTRAL-PLANE code points (positions count code points, as
+    ``substr`` does)."""
     from google_sheets_etl_spark.operators.suffix import duplicate_spans
 
+    long_a = "".join(chr(97 + (i * 7 + i // 26) % 26) for i in range(300))
     rows = [
         (1, "abcdefghijXYhello world this is a duplicated phrase!ZZtail"),
         (2, "prefix--hello world this is a duplicated phrase!--suffix"),
@@ -2698,42 +2699,79 @@ def test_suffix_duplicate_spans_matches_brute_force(spark):
         (7, "zzzzefghijklmnqq"),
         (8, "astral \U0001D11E\U0001D11F music \U0001D11E\U0001D11E clef!"),
         (9, "more astral \U0001D11E\U0001D11F music \U0001D11E\U0001D11E x"),
+        (10, "head " + long_a + " tail"),
+        (11, long_a[3:] + "\U0001D11E"),
+        (12, "x" + long_a),
+        (13, None),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    # BOTH physical strategies (r12: "direct" single-pass content
-    # grouping vs prefix "doubling") must return the brute-force set —
-    # auto routes every small window to direct, so doubling needs the
-    # explicit pin or it loses all equivalence coverage
-    for strategy in ("direct", "doubling"):
-        for L in (2, 3, 4, 5, 10, 16):
-            got = sorted(
-                tuple(r) for r in duplicate_spans(
-                    docs, min_len=L, strategy=strategy
-                ).collect()
-            )
-            assert got == _brute_duplicate_spans(rows, L), \
-                f"L={L} strategy={strategy}"
-        # min_count=3: the phrase shared by only two docs drops out
-        got3 = sorted(
+    ref = [(d, t or "") for d, t in rows]
+    for L, min_count in [
+        (2, 2), (3, 2), (4, 2), (5, 2), (10, 2), (16, 2), (10, 3),
+        (4, 3), (256, 2), (297, 2), (256, 3), (300, 2),
+    ]:
+        got = sorted(
             tuple(r) for r in duplicate_spans(
-                docs, min_len=10, min_count=3, strategy=strategy
+                docs, min_len=L, min_count=min_count
             ).collect()
         )
-        assert got3 == _brute_duplicate_spans(rows, 10, min_count=3)
+        assert got == _brute_duplicate_spans(ref, L, min_count), \
+            f"L={L} min_count={min_count}"
+
+
+def test_suffix_hash_collision_decided_by_content(spark):
+    """A Thue–Morse block of 2048 symbols and its complement have
+    EQUAL mod-2^64 polynomial hashes for every odd base, so the hash
+    stage admits both; the content count must still drop the block
+    that occurs once. Checked at the char grain (two documents hold
+    the block, one its complement) and at the token grain."""
+    import numpy as np
+
+    from google_sheets_etl_spark.operators.suffix import (
+        _window_hashes, duplicate_spans, duplicate_spans_tokens,
+    )
+
+    n = 2048
+    tm = [bin(i).count("1") % 2 for i in range(n)]
+    block = "".join("ab"[t] for t in tm)
+    comp = "".join("ba"[t] for t in tm)
+    h = [
+        _window_hashes(np.array([ord(c) for c in x], np.uint64), n,
+                       np.array([0]))[0]
+        for x in (block, comp)
+    ]
+    assert block != comp and h[0] == h[1], "the input must collide"
+
+    rows = [(1, "x" + block), (2, comp + "y"), (3, block)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(tuple(r) for r in duplicate_spans(docs, min_len=n).collect())
+    assert got == _brute_duplicate_spans(rows, n) == [
+        (1, 2, n + 1, n), (3, 1, n, n),
+    ]
+
+    toks = spark.createDataFrame(
+        [(d, i + 1, ord(c)) for d, t in rows for i, c in enumerate(t)],
+        "doc_id long, pos long, tok_id long",
+    )
+    got_t = sorted(
+        tuple(r) for r in duplicate_spans_tokens(toks, min_len=n).collect()
+    )
+    assert got_t == got
 
 
 def test_suffix_direct_hot_window_skew(spark):
-    """r13 de-skew of the direct strategy (guide §2.5): occurrence
-    counting must be a partial-aggregable groupBy(w) + semi-join, not
-    a count window over the raw content — a boilerplate window
-    occurring ~10^5 times corpus-wide must collapse map-side instead
-    of funneling every occurrence through ONE task. Pins (a) the
-    marked-stream PLAN: a partial_count aggregate on the window
-    content and a LeftSemi join, with no count-over-content Window
-    operator; (b) correctness on the hot-key fixture: 100 identical
-    docs of 1000 overlapping hot windows (~8x10^5 occurrences of each
-    rotation) — every position cross-doc duplicated, so exactly one
-    whole-doc span per doc."""
+    """Occurrence counting must be a partial-aggregable groupBy +
+    semi-join, not a count window over the content — a boilerplate
+    window occurring ~10^5 times corpus-wide must collapse map-side
+    instead of funneling every occurrence through ONE task. Pins (a)
+    the plan's structural invariants: no Window operator partitioned
+    on the content column (the only Windows are the per-doc span
+    merge) and no CartesianProduct; (b) correctness on the hot-key
+    fixture: 100 identical docs of 1000 overlapping hot windows
+    (~8x10^5 occurrences of each rotation) — every position cross-doc
+    duplicated, so exactly one whole-doc span per doc."""
+    import re
+
     from google_sheets_etl_spark.operators import suffix
 
     body = "HOT8WIN!" * 1000 + "tl"
@@ -2742,9 +2780,7 @@ def test_suffix_direct_hot_window_skew(spark):
     )
     got = sorted(
         tuple(r)
-        for r in suffix.duplicate_spans(
-            docs, min_len=8, strategy="direct"
-        ).collect()
+        for r in suffix.duplicate_spans(docs, min_len=8).collect()
     )
     n = len(body)
     assert got == [(i, 1, n, n) for i in range(100)]
@@ -2758,74 +2794,17 @@ def test_suffix_direct_hot_window_skew(spark):
             lambda df: (lambda d: (d, set()), lambda ids: None)
         )
         plan = (
-            suffix.duplicate_spans(docs, min_len=8, strategy="direct")
-            ._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode
-                .fromString("formatted")
-            )
+            suffix.duplicate_spans(docs, min_len=8)
+            ._jdf.queryExecution().executedPlan().toString()
         )
     finally:
         suffix._cut_tools = orig
-    assert "partial_count" in plan, "window counts must partial-aggregate"
-    assert "LeftSemi" in plan, "duplicated set must semi-join back"
-    # the only Window operators left are the per-doc span merge (lag /
-    # running sum partitioned by doc) — the r12 shape's
-    # count-over-content window must be gone
-    assert "count(1) windowspecdefinition" not in plan
-
-
-def test_suffix_tile_fanout_equivalence(spark):
-    """The r12 fan-out widening (default fanout=4 — half the rounds
-    of classic doubling) returns EXACTLY the spans of fanout=2
-    (classic prefix doubling) and of the brute force, across window
-    lengths that exercise every schedule shape: single-round overlap
-    tails (L=8), multi-round full tiles (L=12, 48), and the mixed
-    full+tail round (L=40 — the registered queries' window)."""
-    from google_sheets_etl_spark.operators.suffix import (
-        _tile_schedule, duplicate_spans,
-    )
-
-    # schedule invariants: gap-free tiling, reaches the target, and
-    # fanout=2 reproduces the classic doubling round count
-    for base, target, fanout in [
-        (3, 40, 4), (3, 40, 2), (3, 8, 4), (1, 3, 4), (3, 48, 4),
-        (3, 1000, 4), (1, 2, 2),
-    ]:
-        w = base
-        for offs in _tile_schedule(base, target, fanout):
-            assert offs == sorted(offs) and offs[0] >= 1
-            prev = 0
-            for o in offs:
-                assert o - prev <= w, (base, target, fanout, offs)
-                prev = o
-            w = offs[-1] + w
-        assert w == target
-    assert len(_tile_schedule(3, 40, 2)) == 4  # classic doubling
-    assert len(_tile_schedule(3, 40, 4)) == 2  # the r12 halving
-
-    rows = [
-        (1, "abcdefghijXYhello world this is a duplicated phrase!ZZtail"),
-        (2, "prefix--hello world this is a duplicated phrase!--suffix"),
-        (3, "completely unique content with no repeats at all here 12345"),
-        (4, "abcdefghijabcdefghij"),
-        (5, ""),
-        (6, "abcdefghij....efghijklmnXX"),
-        (7, "zzzzefghijklmnqq"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for L in (8, 12, 40, 48):
-        brute = _brute_duplicate_spans(rows, L)
-        # strategy="doubling" pins the path under test: auto would
-        # route these windows (all <= _DIRECT_MAX_LEN) to the r12
-        # direct plan, where fanout never applies
-        f4 = sorted(tuple(r) for r in
-                    duplicate_spans(docs, min_len=L, fanout=4,
-                                    strategy="doubling").collect())
-        f2 = sorted(tuple(r) for r in
-                    duplicate_spans(docs, min_len=L, fanout=2,
-                                    strategy="doubling").collect())
-        assert f4 == brute, f"L={L} fanout=4"
-        assert f2 == brute, f"L={L} fanout=2"
+    assert "CartesianProduct" not in plan
+    windows = re.findall(r"Window \[.*?\], \[([^\]]*)\]", plan)
+    assert windows, plan
+    for keys in windows:
+        # partitioned by the document only — never by the content
+        assert re.fullmatch(r"doc#\d+L?", keys.strip()), keys
 
 
 def test_suffix_apply_span_removal(spark):
@@ -2863,7 +2842,7 @@ def test_suffix_apply_span_removal(spark):
 
 
 def test_suffix_duplicate_spans_contracts(spark):
-    """Lifecycle + validation: every doubling round's checkpoint
+    """Lifecycle + validation: every intermediate cut's checkpoint
     blocks are freed (only the returned spans table remains pinned);
     a no-duplicate corpus yields zero rows; bad args raise."""
     import pytest
@@ -2896,14 +2875,6 @@ def test_suffix_duplicate_spans_contracts(spark):
         duplicate_spans(docs, min_len=1)
     with pytest.raises(ValueError, match="min_count"):
         duplicate_spans(docs, min_len=8, min_count=1)
-    # r12 strategy dispatch: the arg contract holds on EVERY path
-    # (the direct branch must reject exactly what doubling rejects)
-    with pytest.raises(ValueError, match="strategy"):
-        duplicate_spans(docs, min_len=8, strategy="nope")
-    with pytest.raises(ValueError, match="min_len"):
-        duplicate_spans(docs, min_len=1, strategy="direct")
-    with pytest.raises(ValueError, match="min_count"):
-        duplicate_spans(docs, min_len=8, min_count=0, strategy="direct")
 
 
 def test_priority_weighted_sample_properties(spark, sf_dir):
@@ -3600,6 +3571,37 @@ def test_incremental_suffix_admission_equals_from_scratch(spark, sf_dir):
     assert sorted(map(key, inc)) == sorted(map(key, full))
     n_corpus = corpus.count()
     assert touched and touched[0] < n_corpus, (touched, n_corpus)
+
+
+def test_nsw_family_rejects_unusable_centroids(spark):
+    """``centroids=`` on the NSW/beam/HNSW graphs is refused unless it
+    is a 2-D matrix of 1..n_cells rows whose nonzero rows are
+    L2-normalized; a zero row and a float32-rounded unit row pass."""
+    import numpy as np
+    import pytest
+
+    from google_sheets_etl_spark.operators.similarity import (
+        cosine_topk_hnsw, cosine_topk_nsw, cosine_topk_nsw_beam,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, 0.5]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    unit = np.eye(3)[:2]
+    bad = [
+        (np.array([1.0, 0.0, 0.0]), "2-D"),
+        (np.zeros((0, 3)), "at least one row"),
+        (np.eye(3), "more than n_cells=2"),
+        (np.array([[1.0, 0.0, 0.0], [0.0, 2.0, 0.0]]), "row 1 is not L2"),
+    ]
+    for fn in (cosine_topk_nsw, cosine_topk_nsw_beam, cosine_topk_hnsw):
+        for cents, msg in bad:
+            with pytest.raises(ValueError, match=msg):
+                fn(vecs, vecs, k=2, n_cells=2, n_probe=1, centroids=cents)
+        ok = np.vstack([unit[:1], np.zeros((1, 3))]).astype(np.float32)
+        fn(vecs, vecs, k=2, n_cells=2, n_probe=1, centroids=ok)
+        fn(vecs, vecs, k=2, n_cells=2, n_probe=1, centroids=unit)
 
 
 def test_graph_build_cell_size_guard(spark):
@@ -4650,9 +4652,9 @@ def test_ann_index_persisted_lifecycle(spark):
 
 def test_duplicate_spans_tokens_grain(spark):
     """Token-grain suffix dedup: a 4-token phrase planted in two docs
-    is found at its TOKEN coordinates in both; a token id >= 2^21
-    raises the pinned guard instead of silently aliasing in the
-    21-bit symbol pack."""
+    is found at its TOKEN coordinates in both; spans equal the brute
+    force over id sequences for long windows and min_count 3; a token
+    id >= 2^21 raises the pinned guard."""
     import pytest
 
     from google_sheets_etl_spark.operators.suffix import (
@@ -4679,16 +4681,38 @@ def test_duplicate_spans_tokens_grain(spark):
     }
     # "cc dd ee ff" sits at token positions 3-6 in both docs
     assert got == {(1, 3, 6, 4), (2, 3, 6, 4)}
-    # both physical strategies agree (auto picked direct above; the
-    # doubling path must return the identical span set)
-    for strategy in ("direct", "doubling"):
-        alt = {
-            (r.doc_id, r.span_start, r.span_end, r.span_len)
-            for r in duplicate_spans_tokens(
-                toks, min_len=4, strategy=strategy
+
+    # brute force over id sequences: long windows (L >= 256) and
+    # min_count 3; doc 5's token grid starts at position 7
+    import random
+
+    rnd = random.Random(5)
+    shared = [rnd.randrange(1 << 21) for _ in range(300)]
+    seqs = {
+        1: shared + [rnd.randrange(50) for _ in range(40)],
+        2: [rnd.randrange(50) for _ in range(20)] + shared,
+        3: shared[10:290],
+        4: [rnd.randrange(4) for _ in range(400)],
+        5: [rnd.randrange(4) for _ in range(30)] + shared[:260],
+    }
+    toks2 = spark.createDataFrame(
+        [(d, i + (7 if d == 5 else 1), t)
+         for d, sq in seqs.items() for i, t in enumerate(sq)],
+        "doc_id long, pos long, tok_id long",
+    )
+    for L, min_count in [(4, 2), (4, 3), (8, 3), (256, 2), (256, 3),
+                         (280, 2), (300, 2)]:
+        want = [
+            (d, s0 + (6 if d == 5 else 0), e + (6 if d == 5 else 0), n)
+            for d, s0, e, n in _brute_duplicate_spans(
+                list(seqs.items()), L, min_count)
+        ]
+        got2 = sorted(
+            tuple(r) for r in duplicate_spans_tokens(
+                toks2, min_len=L, min_count=min_count
             ).collect()
-        }
-        assert alt == got, strategy
+        )
+        assert got2 == sorted(want), (L, min_count)
 
     bad = spark.createDataFrame(
         [(1, 1, 1 << 21), (1, 2, 3), (1, 3, 4), (1, 4, 5)],

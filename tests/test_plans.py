@@ -1199,9 +1199,9 @@ def test_state_table_snapshot_equals_read(spark, tmp_path):
 
 def test_state_table_snapshot_sees_other_commits_and_hits_cache(spark, tmp_path, jobs_started):
     """A commit through a second object on the same path is seen by the
-    first object's next ``snapshot()``, which loads it with one Spark
-    job; a cache hit, including the version an Arrow commit wrote,
-    starts none."""
+    first object's next ``snapshot()``, which reads it on the driver
+    with no Spark job; a cache hit, including the version an Arrow
+    commit wrote, starts none."""
     from google_sheets_etl_spark.plans.state_table import StateTable
     from google_sheets_etl_spark.session import arrow_rows
 
@@ -1213,12 +1213,47 @@ def test_state_table_snapshot_sees_other_commits_and_hits_cache(spark, tmp_path,
 
     b = StateTable(spark, path, "k long, v string")
     b.upsert(arrow_rows([(2, "b")], b.schema), ["k"])
-    assert jobs_started("snapshot-other-commit", a.snapshot) == 1
+    assert jobs_started("snapshot-other-commit", a.snapshot) == 0
     assert sorted(tuple(r.values()) for r in a.snapshot().to_pylist()) == [(1, "a"), (2, "b")]
     assert jobs_started("snapshot-hit", a.snapshot) == 0
 
     b.upsert(spark.createDataFrame([(1, "z")], "k long, v string"), ["k"])
     assert sorted(tuple(r.values()) for r in a.snapshot().to_pylist()) == [(1, "z"), (2, "b")]
+
+
+def test_state_table_snapshot_of_spark_written_version(spark, tmp_path, jobs_started):
+    """A version Spark wrote in several part files (a DataFrame upsert)
+    is read by another object's ``snapshot()`` on the driver, locally
+    and through the Hadoop FileSystem branch (``_local = None``, where
+    ``.crc`` files sit beside the parts): no Spark job, and the rows
+    and types ``read().toArrow()`` gives."""
+    import os
+
+    from google_sheets_etl_spark.plans.state_table import StateTable
+    from google_sheets_etl_spark.session import arrow_rows
+
+    schema = "k long, v string, ts timestamp, xs array<double>"
+    root = tmp_path / "st"
+    w = StateTable(spark, str(root), schema)
+    w.create_if_not_exists()
+    w.upsert(arrow_rows([(0, "keep", None, [0.5])], w.schema), ["k"])
+    rows = [(i, f"v{i}", None, [float(i), None]) for i in range(1, 40)]
+    w.upsert(spark.createDataFrame(rows, schema).repartition(4), ["k"])
+    v = w.current_version()
+    parts = [n for n in os.listdir(root / f"_v{v}") if n.startswith("part-")]
+    assert len(parts) > 1, parts
+
+    want = w.read().toArrow()
+    for st in (StateTable(spark, str(root), schema), StateTable(spark, root.as_uri(), schema)):
+        if "://" in st.path:
+            st._local = None
+        got = jobs_started("snapshot-spark-version", st.snapshot)
+        assert got == 0
+        snap = st.snapshot()
+        assert snap.schema == want.schema
+        assert sorted(snap.to_pylist(), key=lambda r: r["k"]) == sorted(
+            want.to_pylist(), key=lambda r: r["k"])
+        assert snap.num_rows == 40
 
 
 def test_state_table_arrow_commits_start_no_spark_job(spark, tmp_path, jobs_started):

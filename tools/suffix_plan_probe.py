@@ -1,12 +1,13 @@
 #!/usr/bin/env python
-"""Capture the INTERNAL suffix-dedup pipeline plans per strategy.
+"""Capture the INTERNAL suffix-dedup pipeline plans, one per grain.
 
 The declared ``suffix_dedup_*`` plans are checkpoint scans (the
 operator materializes its result), so ``tools/explain_query.py``
-cannot show what the r12 strategy dispatch changed. This probe
-disables the checkpoint cut (plan capture only — nothing executes)
-and dumps the full formatted plan of each strategy's pipeline to
-``plans/r12/suffix_<grain>_<strategy>_probe.txt``.
+cannot show the pipeline behind them. This probe disables the
+checkpoint cut (plan capture only — nothing executes) and dumps the
+full formatted plan of the char and the token pipeline to
+``plans/<round>/suffix_<grain>_probe.txt`` (``SPARK_GRAFT_PLAN_ROUND``,
+default r14).
 
 Usage: python tools/suffix_plan_probe.py
 """
@@ -25,7 +26,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r13"),
+        "plans", os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r14"),
     )
     # identity cut: keep the whole pipeline as one unexecuted plan
     suffix._cut_tools = lambda df: (lambda d: (d, set()), lambda ids: None)
@@ -44,12 +45,8 @@ def main() -> None:
         (F.abs(F.hash("tok")) % (1 << 20)).alias("tok_id"),
     )
     cases = {
-        "suffix_char_direct": lambda: suffix.duplicate_spans(
-            docs, min_len=40, strategy="direct"),
-        "suffix_char_doubling": lambda: suffix.duplicate_spans(
-            docs, min_len=40, strategy="doubling"),
-        "suffix_tokens_direct": lambda: suffix.duplicate_spans_tokens(
-            toks, min_len=8, strategy="direct"),
+        "suffix_char": lambda: suffix.duplicate_spans(docs, min_len=40),
+        "suffix_tokens": lambda: suffix.duplicate_spans_tokens(toks, min_len=8),
     }
     for name, build in cases.items():
         df = build()
@@ -58,6 +55,7 @@ def main() -> None:
                 "formatted"
             )
         )
+        os.makedirs(out_dir, exist_ok=True)
         path = os.path.join(out_dir, f"{name}_probe.txt")
         with open(path, "w") as fh:
             fh.write(plan)
