@@ -198,8 +198,10 @@ def main() -> None:
     env: dict = {"iterations_per_query": "2-4 adaptive (stop when min "
                                           "stops improving >12%)",
                  "spark": spark.version}
+    getloadavg = getattr(os, "getloadavg", None)  # absent on Windows
     try:
-        env["loadavg_1m_5m_15m"] = [round(x, 2) for x in os.getloadavg()]
+        if getloadavg is not None:
+            env["loadavg_1m_5m_15m"] = [round(x, 2) for x in getloadavg()]
     except OSError:
         pass
     try:

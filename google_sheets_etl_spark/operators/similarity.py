@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, dot
+from ..session import overlap
 from .ckpt import make_ckpt, scoped_checkpoint_dir
 
 
@@ -1711,7 +1712,6 @@ def estimate_row_count(
         files = vectors.inputFiles()
         if not files:
             return None
-        from concurrent.futures import ThreadPoolExecutor
         from urllib.parse import urlparse
 
         import pyarrow.parquet as pq
@@ -1725,8 +1725,9 @@ def estimate_row_count(
             return pq.ParquetFile(path).metadata.num_rows
 
         if len(files) > 8:
-            with ThreadPoolExecutor(max_workers=32) as pool:
-                return sum(pool.map(footer_rows, files))
+            with overlap(vectors.sparkSession, 32) as submit:
+                futures = [submit(footer_rows, f) for f in files]
+                return sum(fut.result() for fut in futures)
         return sum(footer_rows(f) for f in files)
     except Exception:  # non-local fs, non-parquet, plan API drift → no stats
         return None

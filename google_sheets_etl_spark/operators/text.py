@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textfns import words_of
+from ..session import overlap
 from .ckpt import make_ckpt, scoped_checkpoint_dir
 
 # A tiny embedded stopword list — deterministic, engine-neutral, and
@@ -888,11 +889,9 @@ def bpe_learn_merges(
             # jobs (guide §2.6: actions are sequential only because
             # the driver calls them sequentially; r12, ~25% off the
             # per-round barrier cost at k=20)
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_pc = pool.submit(ckpt, new_pc)
-                f_seg = pool.submit(ckpt, new_seg)
+            with overlap(spark, 2) as submit:
+                f_pc = submit(ckpt, new_pc)
+                f_seg = submit(ckpt, new_seg)
                 pc, seg = f_pc.result(), f_seg.result()
     return spark.createDataFrame(
         merges,
@@ -1207,10 +1206,8 @@ def kn_bigram_lm_bits(
     bigram evidence and are excluded (the bigram_lm_bits contract)."""
     # same dependency-DAG overlap as the trigram fit (guide §2.6):
     # v needs only train; c1/right/n_types need only c2
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_v = pool.submit(
+    with overlap(train.sparkSession, 3) as submit:
+        f_v = submit(
             lambda: train.select(
                 F.explode(F.split(F.col(text_col), " ")).alias("w")
             )
@@ -1223,13 +1220,13 @@ def kn_bigram_lm_bits(
             .agg(F.count(F.lit(1)).alias("_c2"))
             .localCheckpoint(eager=True)
         )
-        f_c1 = pool.submit(
+        f_c1 = submit(
             lambda: c2.groupBy("w1").agg(
                 F.sum("_c2").alias("_c1"),
                 F.count(F.lit(1)).alias("_nf"),   # N1+(w1, ·): follow types
             ).localCheckpoint(eager=True)
         )
-        f_right = pool.submit(
+        f_right = submit(
             lambda: c2.groupBy("w2").agg(
                 F.count(F.lit(1)).alias("_np"),   # N1+(·, w2): precede types
             ).localCheckpoint(eager=True)
@@ -1306,13 +1303,11 @@ def kn_trigram_lm_bits(
     # v needs only train; ctx12/cc need only c3; ccctx/np3/n_types
     # need only cc. Overlap each independent level on driver threads
     # (guide §2.6) instead of paying 7 sequential job barriers.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _ckpt(df):
         return df.localCheckpoint(eager=True)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_v = pool.submit(
+    with overlap(train.sparkSession, 3) as submit:
+        f_v = submit(
             lambda: train.select(
                 F.explode(F.split(F.col(text_col), " ")).alias("w")
             )
@@ -1324,7 +1319,7 @@ def kn_trigram_lm_bits(
             .groupBy("w1", "w2", "w3")
             .agg(F.count(F.lit(1)).alias("_c3"))
         )
-        f_ctx12 = pool.submit(
+        f_ctx12 = submit(
             _ckpt,
             c3.groupBy("w1", "w2").agg(
                 F.sum("_c3").alias("_c12"),
@@ -1336,14 +1331,14 @@ def kn_trigram_lm_bits(
                 F.count(F.lit(1)).alias("_cc"),    # N1+(· w2 w3)
             )
         )
-        f_ccctx = pool.submit(
+        f_ccctx = submit(
             _ckpt,
             cc.groupBy("w2").agg(
                 F.sum("_cc").alias("_ccs"),        # N1+(· w2 ·)
                 F.count(F.lit(1)).alias("_nf2"),   # continuation follow types
             ),
         )
-        f_np3 = pool.submit(
+        f_np3 = submit(
             _ckpt,
             cc.groupBy("w3").agg(
                 F.count(F.lit(1)).alias("_np"),    # N1+(· · w3)
@@ -1449,7 +1444,6 @@ def bigram_lm_fit(
     instead of re-counting the train split per consumer."""
     if k_smooth <= 0:
         raise ValueError("k_smooth must be > 0")
-    from concurrent.futures import ThreadPoolExecutor
 
     def _counts():
         c2 = (
@@ -1478,8 +1472,8 @@ def bigram_lm_fit(
     # the count chain and the vocab count are independent actions over
     # the same train split — overlap them on driver threads (guide
     # §2.6) instead of paying three sequential job barriers
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_counts, f_v = pool.submit(_counts), pool.submit(_vocab)
+    with overlap(train.sparkSession, 2) as submit:
+        f_counts, f_v = submit(_counts), submit(_vocab)
         (c2, c1), v = f_counts.result(), f_v.result()
     return c2, c1, v, float(k_smooth)
 
@@ -1552,13 +1546,11 @@ def moore_lewis_bits(
     # the target and raw fits are fully independent jobs — overlap
     # them on driver threads (guide §2.6; each fit internally overlaps
     # its own counts/vocab actions too)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _ft = _pool.submit(bigram_lm_fit, target, k_smooth, text_col)
-        _fr = _pool.submit(bigram_lm_fit, raw, k_smooth, text_col)
-        tc2, tc1, tv, kd = _ft.result()
-        rc2, rc1, rv, _ = _fr.result()
+    with overlap(docs.sparkSession, 2) as submit:
+        f_t = submit(bigram_lm_fit, target, k_smooth, text_col)
+        f_r = submit(bigram_lm_fit, raw, k_smooth, text_col)
+        tc2, tc1, tv, kd = f_t.result()
+        rc2, rc1, rv, _ = f_r.result()
     tc2 = tc2.withColumnRenamed("_c2", "_tc2")
     tc1 = tc1.withColumnRenamed("_c1", "_tc1")
     rc2 = rc2.withColumnRenamed("_c2", "_rc2")

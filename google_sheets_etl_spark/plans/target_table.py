@@ -165,11 +165,10 @@ class TargetTable:
         incoming-rows precondition — neither does this. Hadoop
         FileSystem recursive delete: scheme-agnostic (file/hdfs/s3a),
         same semantics everywhere."""
-        jvm = self.spark._jvm
-        pdir = jvm.org.apache.hadoop.fs.Path(
-            self.path + f"/{PARTITION_COL}={job_id}"
+        hpath, fs = self._hadoop_fs()
+        pdir = self.spark._jvm.org.apache.hadoop.fs.Path(
+            hpath, f"{PARTITION_COL}={job_id}"
         )
-        fs = pdir.getFileSystem(self.spark._jsc.hadoopConfiguration())
         if fs.exists(pdir):
             fs.delete(pdir, True)
 

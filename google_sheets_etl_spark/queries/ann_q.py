@@ -3,19 +3,88 @@ queries.py; see queries/__init__.py for the package map
 and _core for shared helpers)."""
 
 from ._core import *  # noqa: F401,F403 — shared registry/helpers
+from ..session import local_frame, overlap
 from .reference_ops import _events_stream_adaptive  # noqa: E501
 
 
-def _variant_pool_size(n_variants: int, spark: SparkSession) -> int:
-    """Driver-thread overlap width for independent variant jobs
-    (guide §2.6: "2-3 jobs in flight is plenty: enough to fill the
-    tail, not so many that they fight for executors").
+# -- the recall harness: one ground truth, many variants (the
+# session-reuse idea of "Incremental ... Top-K Similarity Search in
+# Interactive Data Analysis Sessions", EDBT 2020) -------------------
 
-    The width depends on the session's cores only, never on the host's
-    load average, so the same session runs the same plan (and bench
-    timings do not follow other tenants' load)."""
+def _recall_overlap(spark: SparkSession, n: int):
+    """The recall rows' driver overlap for ``n`` independent pieces of
+    work: 2 in flight, 3 on sessions of 16+ cores — enough to fill the
+    tail, not so many that the jobs fight for executors."""
     cores = spark.sparkContext.defaultParallelism
-    return min(n_variants, 3 if cores >= 16 else 2)
+    return overlap(spark, min(n, 3 if cores >= 16 else 2))
+
+
+def _exact_top5(q_: DataFrame, c: DataFrame) -> tuple[DataFrame, int]:
+    """The recall rows' ground truth: the brute-force cosine top-5
+    ``(query_id, neighbor_id)`` pairs (50 rows at every scale),
+    collected in one job and handed back as a driver frame with its
+    row count, so no variant re-runs the brute force and ``n_exact``
+    costs no second job."""
+    pairs = (
+        similarity.cosine_topk_bruteforce(q_, c, k=5)
+        .select("query_id", "neighbor_id")
+        .toArrow()
+    )
+    return local_frame(q_.sparkSession, pairs), pairs.num_rows
+
+
+def _recall_rows(
+    spark: SparkSession,
+    exact: tuple[DataFrame, int],
+    variants: list,
+    visited: bool = False,
+) -> DataFrame:
+    """One ``(variant, k, recall)`` row per ``(name, make)`` variant,
+    in the variants' order: ``make()`` builds the variant's top-5
+    frame, and recall = hits / n_exact against ``exact`` (the pair
+    :func:`_exact_top5` returns). Variants overlap on driver threads.
+
+    Hits are a ``left_semi`` count of the exact pairs the variant
+    returns. With ``visited``, each variant frame also carries the
+    per-query ``n_visited``/``cell_n`` stats, and the row gains
+    ``visited_frac``: hits and visited fraction then fall out of ONE
+    grouped pass (two actions would cost two driver round trips).
+    The left join keeps every stats row (``n_visited``/
+    ``cell_n`` are constant per query, and stats pairs are unique —
+    each neighbor lives in one cell), so per query ``sum(_hit)``
+    counts its exact-pair matches and the ``first()`` ratio is its
+    visited fraction; the outer aggregate sums and averages."""
+    truth, n_exact = exact
+    keys = ["query_id", "neighbor_id"]
+
+    def row(variant: str, make) -> tuple:
+        approx = make()
+        if not visited:
+            hits = truth.join(approx.select(*keys), keys, "left_semi").count()
+            extra = ()
+        else:
+            r = (
+                approx.select(*keys, "n_visited", "cell_n")
+                .join(truth.withColumn("_hit", F.lit(1)), keys, "left")
+                .groupBy("query_id")
+                .agg(
+                    F.sum("_hit").alias("_h"),
+                    (F.first("n_visited") / F.first("cell_n")).alias("_vf"),
+                )
+                .agg(F.sum("_h").alias("_hits"), F.avg("_vf").alias("_avg"))
+                .collect()[0]
+            )
+            hits, extra = int(r["_hits"] or 0), (round(r["_avg"], 4),)
+        return (variant, 5, (hits / n_exact) if n_exact else None, *extra)
+
+    with _recall_overlap(spark, len(variants)) as submit:
+        futures = [submit(row, name, make) for name, make in variants]
+        rows = [f.result() for f in futures]
+    schema = "variant string, k int, recall double"
+    if visited:
+        schema += ", visited_frac double"
+    return local_frame(spark, rows, schema)
+
 
 _PQ_COMMON = """
 WITH ed AS (
@@ -880,51 +949,20 @@ def pq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c = emb.filter(F.col("vec_id") >= 10)
-    exact = (
-        similarity.cosine_topk_bruteforce(q_, c, k=5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # 50 rows; three consumers
-    )
-
-    def row(variant: str, approx: DataFrame) -> DataFrame:
-        joined = exact.join(
-            approx.select(
-                "query_id", "neighbor_id", F.lit(1).alias("_hit")
-            ),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        return joined.agg(
-            F.lit(variant).alias("variant"),
-            F.lit(5).cast("int").alias("k"),
-            (
-                F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-                / F.count(F.lit(1))
-            ).alias("recall"),
-        )
-
     # train ONCE and share: adc_trained and rerank_trained refine the
     # same codebooks from the same corpus with the same seed/iters —
     # identical arrays by construction, so computing them twice was
     # pure waste (r12; 3 driver-round-trip k-means actions saved)
     cb_trained = similarity.pq_train_codebooks(c, n_iter=2)
-    return (
-        row("adc_seeded", similarity.pq_topk_adc(q_, c, k=5))
-        .unionByName(
-            row(
-                "adc_trained",
-                similarity.pq_topk_adc(q_, c, k=5, codebooks=cb_trained),
-            )
-        )
-        .unionByName(
-            row(
-                "rerank_trained",
-                similarity.pq_topk_rerank(
-                    q_, c, k=5, shortlist=100, codebooks=cb_trained
-                ),
-            )
-        )
-    )
+    return _recall_rows(spark, _exact_top5(q_, c), [
+        ("adc_seeded", lambda: similarity.pq_topk_adc(q_, c, k=5)),
+        ("adc_trained",
+         lambda: similarity.pq_topk_adc(q_, c, k=5, codebooks=cb_trained)),
+        ("rerank_trained",
+         lambda: similarity.pq_topk_rerank(
+             q_, c, k=5, shortlist=100, codebooks=cb_trained
+         )),
+    ])
 
 
 @q(
@@ -959,7 +997,7 @@ def opq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     # 18.5 s against a 4.8 s builder window; the gap is SEQUENTIAL
     # DRIVER JOBS, each paying the loaded host's scheduling latency):
     # the three declaration-time chains are independent —
-    #   A: exact ground truth (brute force, 50 rows, checkpoint)
+    #   A: exact ground truth (_exact_top5)
     #   B: gram -> rotation -> rotated-corpus checkpoint -> rotated
     #      codebook seed (each step needs the last)
     #   C: unrotated codebook seed (the sample pq_topk_adc would have
@@ -969,17 +1007,7 @@ def opq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     # dimensionality probe inside opq_rotation_components is gone
     # (derived from the gram rows — one fewer job on chain B's
     # critical path).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _mk_exact():
-        e = (
-            similarity.cosine_topk_bruteforce(q_, c, k=5)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint(eager=True)
-        )
-        return e, e.count()
-
-    def _mk_rot():
+    def _rotated():
         # cut the rotated corpus ONCE (r12): the rotation is an Arrow
         # projection consumed by the codebook seeding, the ADC branch
         # and the rerank branch — un-cut it re-ran per consumer. The
@@ -995,36 +1023,17 @@ def opq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
                                       8, 128, "vec_id", "embedding", 42)
         return r, cb
 
-    def _mk_seed():
-        return similarity._pq_codebooks(
-            c, 8, 128, "vec_id", "embedding", 42
-        )
-
-    with ThreadPoolExecutor(
-        max_workers=_variant_pool_size(3, spark)
-    ) as pool:
-        f_exact = pool.submit(_mk_exact)
-        f_rot = pool.submit(_mk_rot)
-        f_seed = pool.submit(_mk_seed)
-        exact, n_exact = f_exact.result()
+    with _recall_overlap(spark, 3) as submit:
+        f_exact = submit(_exact_top5, q_, c)
+        f_rot = submit(_rotated)
+        f_seed = submit(similarity._pq_codebooks,
+                        c, 8, 128, "vec_id", "embedding", 42)
+        exact = f_exact.result()
         rot, cb_rot = f_rot.result()
         cb_seed = f_seed.result()
     qr = rot.filter(F.col("vec_id") < 10)
     cr = rot.filter(F.col("vec_id") >= 10)
-
-    # per-variant recall rows on overlapped driver threads (the sq8 /
-    # nsw_recall shape): recall = hits/n_exact is exactly the old
-    # left-join sum/count aggregate — approx pairs are unique, so the
-    # join preserved the n_exact row count and summed the same hits.
-    def row(variant: str, approx: DataFrame) -> tuple:
-        hits = exact.join(
-            approx.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_semi",
-        ).count()
-        return (variant, 5, (hits / n_exact) if n_exact else None)
-
-    variants = [
+    return _recall_rows(spark, exact, [
         ("adc_seeded",
          lambda: similarity.pq_topk_adc(q_, c, k=5, codebooks=cb_seed)),
         ("adc_rotated",
@@ -1033,14 +1042,7 @@ def opq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
          lambda: similarity.pq_topk_rerank(
              qr, cr, k=5, shortlist=100, codebooks=cb_rot
          )),
-    ]
-    with ThreadPoolExecutor(
-        max_workers=_variant_pool_size(len(variants), spark)
-    ) as pool:
-        rows = list(pool.map(lambda nv: row(nv[0], nv[1]()), variants))
-    return spark.createDataFrame(
-        rows, "variant string, k int, recall double",
-    )
+    ])
 
 
 @q(
@@ -1067,21 +1069,7 @@ def sq8_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c = emb.filter(F.col("vec_id") >= 10)
-    exact = (
-        similarity.cosine_topk_bruteforce(q_, c, k=5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    n_exact = exact.count()
-
-    def row(variant: str, approx: DataFrame) -> tuple:
-        hits = exact.join(
-            approx.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-        ).count()
-        return (variant, 5, hits / n_exact)
-
-    variants = [
+    return _recall_rows(spark, _exact_top5(q_, c), [
         ("sq8_adc",
          lambda: similarity.sq8_topk_adc(q_, c, k=5, dim=64)),
         ("ivf_sq8_probe4",
@@ -1092,21 +1080,7 @@ def sq8_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
          lambda: similarity.ivf_sq8_topk(
              q_, c, k=5, n_cells=16, n_probe=16, shortlist=100, dim=64,
          )),
-    ]
-    # independent variant pipelines: overlap their construction-time
-    # actions and counts (guide §2.6); rows assembled in fixed order.
-    # Width is load-aware (r13, _variant_pool_size).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(
-        max_workers=_variant_pool_size(len(variants), spark)
-    ) as pool:
-        rows = list(pool.map(
-            lambda nv: row(nv[0], nv[1]()), variants
-        ))
-    return spark.createDataFrame(
-        rows, "variant string, k int, recall double",
-    )
+    ])
 
 
 _COSINE_ORACLE = """
@@ -1501,38 +1475,13 @@ def nsw_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c_ = emb.filter(F.col("vec_id") >= 10)
-    # r13 (the r12 sibling restructure this row never got — it was
-    # the worst robust regression of that round): ONE ground-truth
-    # computation shared by every variant (50 rows, localCheckpoint;
-    # un-cut, the brute-force subtree was referenced 3x in the final
-    # union and re-ran per branch), ONE md5-seeded centroid sample
-    # shared by all three cell configs (the sample order is
-    # n-prefix-stable, so cents4[:1] IS the n_cells=1 sample — two
-    # corpus sort+collect jobs saved), and per-variant recall counts
-    # on overlapped driver threads (guide §2.6, width via
-    # _variant_pool_size). recall = hits/n_exact is EXACTLY the old
-    # left-join sum/count aggregate: approx pairs are unique, so the
-    # left join preserved the n_exact row count and summed the same
-    # hit set; same IEEE division of the same ints.
-    exact = (
-        similarity.cosine_topk_bruteforce(q_, c_, k=5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    n_exact = exact.count()
+    # ONE md5-seeded centroid sample shared by all three cell configs
+    # (the sample order is n-prefix-stable, so cents4[:1] IS the
+    # n_cells=1 sample — two corpus sort+collect jobs saved)
     cents4 = similarity._seeded_centroid_matrix(
         c_, 4, "vec_id", "embedding", 42
     )
-
-    def row(variant: str, approx: DataFrame) -> tuple:
-        hits = exact.join(
-            approx.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_semi",
-        ).count()
-        return (variant, 5, (hits / n_exact) if n_exact else None)
-
-    variants = [
+    return _recall_rows(spark, _exact_top5(q_, c_), [
         ("graph_probe_all",
          lambda: similarity.cosine_topk_nsw(
              q_, c_, k=5, n_cells=1, n_probe=1,
@@ -1548,16 +1497,7 @@ def nsw_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
              q_, c_, k=5, n_cells=4, n_probe=2,
              m_neighbors=6, n_entries=2, centroids=cents4,
          )),
-    ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(
-        max_workers=_variant_pool_size(len(variants), spark)
-    ) as pool:
-        rows = list(pool.map(lambda nv: row(nv[0], nv[1]()), variants))
-    return spark.createDataFrame(
-        rows, "variant string, k int, recall double",
-    )
+    ])
 
 
 @q(
@@ -1587,15 +1527,6 @@ def nsw_beam_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c_ = emb.filter(F.col("vec_id") >= 10)
-    # ONE ground-truth computation shared by every variant (r12: the
-    # pq_recall_at_k discipline — 50 rows, four consumers; without
-    # the cut each variant's hits join re-ran brute force)
-    exact = (
-        similarity.cosine_topk_bruteforce(q_, c_, k=5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    n_q = 10  # fixed query set (vec_id < 10)
     # ONE md5-seeded centroid sample shared by every variant (r13 —
     # each cosine_topk_nsw_beam call otherwise re-ran the corpus
     # sort+collect at declaration; all four variants are n_cells=1,
@@ -1603,44 +1534,9 @@ def nsw_beam_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     cents1 = similarity._seeded_centroid_matrix(
         c_, 1, "vec_id", "embedding", 42
     )
-
-    def row(variant: str, stats: DataFrame) -> tuple:
-        # hits AND visited-fraction in ONE aggregation job (r13): the
-        # r12 shape persisted stats and ran two actions (semi-join
-        # count + grouped collect) — each action is a driver round
-        # trip, and under the driver's loaded windows the fixed
-        # per-job overhead dominated this row. The left join keeps
-        # every stats row (n_visited/cell_n constant per query), so
-        # both numbers fall out of one grouped pass: per query,
-        # sum(_hit) counts its exact-pair matches (stats pairs are
-        # unique — each neighbor lives in exactly one cell) and the
-        # first() ratio is its visited fraction; the outer aggregate
-        # sums/averages. Identical values, half the jobs, no persist.
-        r = (
-            stats.select("query_id", "neighbor_id",
-                         "n_visited", "cell_n")
-            .join(
-                exact.withColumn("_hit", F.lit(1)),
-                ["query_id", "neighbor_id"],
-                "left",
-            )
-            .groupBy("query_id")
-            .agg(
-                F.sum("_hit").alias("_h"),
-                (F.first("n_visited") / F.first("cell_n")).alias("_vf"),
-            )
-            .agg(
-                F.sum("_h").alias("_hits"),
-                F.avg("_vf").alias("_avg"),
-            )
-            .collect()[0]
-        )
-        hits = int(r["_hits"] or 0)
-        return (variant, 5, hits / (5 * n_q), round(r["_avg"], 4))
-
     common = dict(k=5, n_cells=1, n_probe=1, m_neighbors=6,
                   n_entries=2, include_stats=True, centroids=cents1)
-    variants = [
+    return _recall_rows(spark, _exact_top5(q_, c_), [
         ("beam_ef16",
          lambda: similarity.cosine_topk_nsw_beam(q_, c_, ef=16, **common)),
         ("beam_ef32",
@@ -1652,26 +1548,7 @@ def nsw_beam_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
              q_, c_, k=5, n_cells=1, n_probe=1, m_neighbors=6,
              n_entries=2, include_stats=True, centroids=cents1,
          )),
-    ]
-    # independent single-cell walks: overlap them (guide §2.6 —
-    # actions are only sequential because the driver calls them
-    # sequentially; each variant is one long single-task kernel at
-    # n_cells=1, so concurrency is pure wall-clock back-fill).
-    # Width is load-aware (r13, _variant_pool_size — the r12 full
-    # fan-out stretched the tail on small/loaded sessions).
-    # Deterministic: rows assembled in the fixed variants order.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(
-        max_workers=_variant_pool_size(len(variants), spark)
-    ) as pool:
-        rows = list(pool.map(
-            lambda nv: row(nv[0], nv[1]()), variants
-        ))
-    return spark.createDataFrame(
-        rows,
-        "variant string, k int, recall double, visited_frac double",
-    )
+    ], visited=True)
 
 
 @q(
@@ -1707,49 +1584,13 @@ def hnsw_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c_ = emb.filter(F.col("vec_id") >= 10)
-    # shared ground truth, cut once; per-variant stats persisted over
-    # their two actions; variants overlapped — same r12 restructure
-    # as nsw_beam_recall_at_k (see its comments)
-    exact = (
-        similarity.cosine_topk_bruteforce(q_, c_, k=5)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    n_q = 10
-    # shared centroid sample + fused hits/visited aggregation + load-
-    # aware overlap width — the r13 restructure; see
-    # nsw_beam_recall_at_k's row() comments for the equivalence
-    # argument (one grouped pass computes both numbers)
+    # shared centroid sample (the nsw_beam_recall_at_k setup)
     cents1 = similarity._seeded_centroid_matrix(
         c_, 1, "vec_id", "embedding", 42
     )
-
-    def row(variant: str, stats: DataFrame) -> tuple:
-        r = (
-            stats.select("query_id", "neighbor_id",
-                         "n_visited", "cell_n")
-            .join(
-                exact.withColumn("_hit", F.lit(1)),
-                ["query_id", "neighbor_id"],
-                "left",
-            )
-            .groupBy("query_id")
-            .agg(
-                F.sum("_hit").alias("_h"),
-                (F.first("n_visited") / F.first("cell_n")).alias("_vf"),
-            )
-            .agg(
-                F.sum("_h").alias("_hits"),
-                F.avg("_vf").alias("_avg"),
-            )
-            .collect()[0]
-        )
-        hits = int(r["_hits"] or 0)
-        return (variant, 5, hits / (5 * n_q), round(r["_avg"], 4))
-
     common = dict(k=5, n_cells=1, n_probe=1, m_neighbors=6,
                   include_stats=True, centroids=cents1)
-    variants = [
+    return _recall_rows(spark, _exact_top5(q_, c_), [
         ("hnsw_ef16",
          lambda: similarity.cosine_topk_hnsw(q_, c_, ef=16, **common)),
         ("hnsw_ef32",
@@ -1761,19 +1602,7 @@ def hnsw_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
              q_, c_, k=5, n_cells=1, n_probe=1, m_neighbors=6,
              n_entries=2, ef=32, include_stats=True, centroids=cents1,
          )),
-    ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(
-        max_workers=_variant_pool_size(len(variants), spark)
-    ) as pool:
-        rows = list(pool.map(
-            lambda nv: row(nv[0], nv[1]()), variants
-        ))
-    return spark.createDataFrame(
-        rows,
-        "variant string, k int, recall double, visited_frac double",
-    )
+    ], visited=True)
 
 
 _HYBRID_TERMS = ["spark", "window", "merge"]

@@ -16,11 +16,16 @@ chosen so the same code is correct on a multi-executor cluster:
 or an Arrow table such as a state table's snapshot) into a DataFrame:
 an Arrow table handed to the JVM, so evaluating the frame runs no
 Python worker.
+
+``overlap`` is the one way the engine runs driver-side work on helper
+threads: every job such a thread starts carries the caller's job
+group, description and local properties.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType, StructType, _make_type_verifier
@@ -138,3 +143,34 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str | None = Non
     if not isinstance(rows, pa.Table):
         rows = arrow_rows(rows, schema)
     return spark.createDataFrame(rows, schema)
+
+
+@contextmanager
+def overlap(spark: SparkSession, width: int):
+    """Overlap independent driver-side work on ``width`` helper threads
+    (Spark actions are sequential only because the driver calls them
+    sequentially). Yields ``submit(fn, *args) -> Future``;
+    leaving the block waits for every submitted call.
+
+    ``submit`` wraps ``fn`` with ``inheritable_thread_target(spark)``
+    on the submitting thread, so a job ``fn`` starts carries the
+    submitter's job group, description and local properties as they
+    are at submission (a plain pool thread starts with none of them).
+    Nested use inherits the same way: a submitted call may open its
+    own ``overlap``."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=width) as pool:
+
+        def submit(fn, *args):
+            inherit = inheritable_thread_target(spark)
+            # without pinned threads (PYSPARK_PIN_THREAD=false) the
+            # wrapper is the session itself: local properties are not
+            # per-thread there, so there is nothing to carry
+            if inherit is not spark:
+                fn = inherit(fn)
+            return pool.submit(fn, *args)
+
+        yield submit

@@ -5606,19 +5606,46 @@ def test_webp_strict_rejects_and_dispatch():
         parse_webp(bytes(bad))
 
 
-def test_variant_pool_size_without_getloadavg(spark, monkeypatch):
-    """Hosts without ``os.getloadavg`` (Windows) or where it raises
-    OSError get the plain width, not an AttributeError."""
-    import os
+def test_overlap_keeps_caller_job_group(spark):
+    """Every job started through ``session.overlap`` — from a nested
+    ``overlap`` too — is in the caller's job group (a plain
+    ``ThreadPoolExecutor`` thread starts with none); results come back
+    in submission order, and an exception raised by one submitted call
+    reaches the caller."""
+    from google_sheets_etl_spark.session import overlap
 
-    from google_sheets_etl_spark.queries.ann_q import _variant_pool_size
+    sc = spark.sparkContext
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+    group = "test-overlap-attribution"
 
-    width = min(5, 3 if spark.sparkContext.defaultParallelism >= 16 else 2)
-    monkeypatch.delattr(os, "getloadavg", raising=False)
-    assert _variant_pool_size(5, spark) == width
+    def count(n):
+        return spark.range(n, numPartitions=2).count()
 
-    def unobtainable():
-        raise OSError("load average unobtainable")
+    def nested(n):
+        with overlap(spark, 2) as submit:
+            futures = [submit(count, n), submit(count, n + 1)]
+            return [f.result() for f in futures]
 
-    monkeypatch.setattr(os, "getloadavg", unobtainable, raising=False)
-    assert _variant_pool_size(5, spark) == width
+    bus.waitUntilEmpty()  # job events reach the tracker asynchronously
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "overlap attribution")
+    try:
+        with overlap(spark, 2) as submit:
+            futures = [submit(count, 3), submit(nested, 5), submit(count, 7)]
+            results = [f.result() for f in futures]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert results == [3, [5, 6], 7]
+    bus.waitUntilEmpty()
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    assert len(tracker.getJobIdsForGroup(group)) >= 4  # >= 1 per count
+
+    def boom():
+        raise ValueError("boom")
+
+    with pytest.raises(ValueError, match="boom"):
+        with overlap(spark, 2) as submit:
+            ok = submit(count, 1)
+            submit(boom).result()
+    assert ok.result() == 1

@@ -147,7 +147,8 @@ def main() -> None:
     spark.range(1000, numPartitions=32).mapInPandas(
         lambda it: it, "id long").selectExpr("count(*)").collect()
 
-    load_before = os.getloadavg()
+    getloadavg = getattr(os, "getloadavg", lambda: None)  # absent on Windows
+    load_before = getloadavg()
     out = {}
     for name in targets:
         fn = QUERIES[name]
@@ -165,7 +166,7 @@ def main() -> None:
         print(f"  {name}: {times}  (prior={base_lo.get(name)}"
               f" drifted={base_hi.get(name)})",
               file=sys.stderr)
-    load_after = os.getloadavg()
+    load_after = getloadavg()
     payload = {"round": rnd, "sf_dir": sf_dir, "iters": iters,
                "loadavg_before": load_before,
                "loadavg_after": load_after,
