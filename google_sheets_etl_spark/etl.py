@@ -296,8 +296,10 @@ class SheetsEtlEngine:
         (valid) or don't (re-profiled here). Replacement is per
         (table, job) — a reload that DROPS a column, or reloads to
         zero rows, sheds the old column's counters instead of leaking
-        them into the merge; an empty load records a sentinel row
-        (NULL column_name) so it is not re-scanned forever. Profile
+        them into the merge; only columns with a value are stored,
+        and a load with none (zero rows, or only blank cells) records
+        a sentinel row (NULL column_name) so it is not re-scanned
+        forever. Profile
         rows whose job id has DISAPPEARED from ``etl_jobs`` (a
         deregistered load) are shed on the same rewrite — orphaned
         counters must not keep voting in typing decisions."""
@@ -339,8 +341,13 @@ class SheetsEtlEngine:
             slice_df, data_cols, group_cols=[PARTITION_COL]
         )
         # (stale jobs × columns) rows — metadata-scale; collected so
-        # zero-row loads can be sentinel-marked exactly
-        crows = counters.collect()
+        # zero-row loads can be sentinel-marked exactly. A row with no
+        # value (a column the load left all-blank, or one the table's
+        # schema keeps after the load dropped it) is not stored: it
+        # adds 0 to every sum and NULL to every maximum, so it changes
+        # no decision, and the job is marked like an empty load when
+        # no other row of it is left.
+        crows = [r for r in counters.collect() if r["n_values"]]
         profiled = {int(r[PARTITION_COL]) for r in crows}
         fields = [f.name for f in _profiles_schema().fields]
         nc = len(_SUM_COUNTERS) + len(_MAX_COUNTERS)
@@ -404,9 +411,9 @@ class SheetsEtlEngine:
             typed_views.merge_profiles(stored), min_frac=min_frac)
         types = dict(zip(decided["column_name"].to_pylist(),
                          decided["decided_type"].to_pylist()))
-        # a data column with no stored counters (every load predates
-        # it — can't happen via refresh, but belt and braces) passes
-        # through as stored
+        # a data column with no stored counters (no load has a
+        # non-blank value in it: refresh stores no all-blank column's
+        # row) passes through as stored
         types = {c: types.get(c, "string") for c in df.columns if not c.startswith("_")}
         types.update(overrides or {})
         return typed_views.typed_view(df, types)

@@ -12,10 +12,24 @@ job's refresh is therefore O(that sheet), not O(table), at any scale,
 and the partition column gives partition pruning to every downstream
 query that filters by job.
 
-Schema evolution (U7): parquet allows per-file schemas; reads use
-``mergeSchema=true`` so a job that gained columns widens the logical
-table, old rows null-padded — the analogue of additive ``ADD COLUMN``
-with "already exists" swallowed (``DatabaseAgentMysql.php:158-178``).
+Schema evolution (U7): parquet allows per-file schemas, so the table's
+logical schema is kept beside its data, as Delta Lake keeps it in its
+log and ``StateTable`` in ``_schema.json``: ``<table>/_schema.json``
+holds the UNION of every column any write has brought, in first-seen
+order, minus the partition column. Each write records the union of the
+old sidecar and its own columns *before* its data lands, and
+``read()`` hands it to the parquet reader, so a read infers nothing
+from file footers and starts no Spark job (the partition column is
+still inferred from the paths, as ``int``). A job that gained columns
+widens the table, old rows null-padded; a column no job writes any
+more stays in it, all-NULL — the analogue of additive ``ADD COLUMN``
+with "already exists" swallowed, which never drops a column
+(``DatabaseAgentMysql.php:158-178``). A crash between the sidecar and
+the data leaves at worst an all-NULL column, never a column the read
+cannot see. A table with data but no sidecar (written before sidecars
+existed) is read with ``mergeSchema=true``, and its next write seeds
+the sidecar from that read. The sidecar goes through
+``paths.SmallFiles``, so it lives wherever the table does.
 
 Atomicity note (U6, SURVEY.md §7.4): a parquet dynamic overwrite is not
 a single atomic commit like Delta's. The engine compensates at the
@@ -27,21 +41,36 @@ corrupting state.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .paths import local_path
+from .paths import SmallFiles, local_path
 
 PARTITION_COL = "_origin_etl_job_id"
 ROWID_COL = "_rowid"
+_SCHEMA = "_schema.json"
 
 
 class TargetTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._local = local_path(path)  # None off-box
+
+    @property
+    def _files(self) -> SmallFiles:
+        """The schema sidecar: POSIX calls locally, the Hadoop
+        FileSystem API off-box (``paths.SmallFiles``)."""
+        return SmallFiles(self.spark, self.path, self._local)
+
+    def _schema(self) -> StructType | None:
+        """The sidecar's schema; None when the table has none."""
+        text = self._files.read_text(_SCHEMA)
+        return None if text is None else StructType.fromJson(json.loads(text))
 
     def _hadoop_fs(self):
         """(Path, FileSystem) for this table — the Hadoop API resolves
@@ -84,12 +113,30 @@ class TargetTable:
         engine numbers ``_rowid`` (when on) past :meth:`max_rowid`."""
         if PARTITION_COL not in data.columns:
             raise ValueError(f"data must carry {PARTITION_COL}")
+        self._widen(data.schema)
         (
             data.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(PARTITION_COL)
             .parquet(self.path)
         )
+
+    def _widen(self, schema: StructType) -> None:
+        """Record the union of the sidecar and ``schema``'s columns
+        (old columns first, the partition column left out) before a
+        write lands. A table with data but no sidecar takes its old
+        columns from a ``mergeSchema`` read, once."""
+        old = self._schema()
+        if old is None and self.exists():
+            old = self.read().schema
+        fields = {f.name: f for f in (old.fields if old is not None else [])}
+        for f in schema.fields:
+            fields.setdefault(f.name, f)
+        fields.pop(PARTITION_COL, None)
+        union = StructType(list(fields.values()))
+        if union != old:
+            self._files.mkdirs()
+            self._files.write_text(_SCHEMA, union.json())
 
     def max_rowid(self) -> int:
         """The table's largest ``_rowid``, 0 when it has no data or no
@@ -173,4 +220,9 @@ class TargetTable:
             fs.delete(pdir, True)
 
     def read(self) -> DataFrame:
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        """Every job's rows under the sidecar schema, with no Spark job;
+        a table without a sidecar is read by merging its file footers."""
+        schema = self._schema()
+        if schema is None:
+            return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        return self.spark.read.schema(schema).parquet(self.path)

@@ -27,7 +27,9 @@ def sf_dir() -> str:
 @pytest.fixture()
 def jobs_started(spark):
     """``jobs_started(group, fn)``: run ``fn()`` under the Spark job
-    group ``group`` and return how many jobs it started."""
+    group ``group`` and return how many jobs it started. Job events
+    reach the status tracker asynchronously, so the listener bus is
+    drained before counting."""
     def count(group: str, fn) -> int:
         sc = spark.sparkContext
         sc.setJobGroup(group, group)
@@ -37,6 +39,7 @@ def jobs_started(spark):
             for key in ("spark.jobGroup.id", "spark.job.description",
                         "spark.job.interruptOnCancel"):
                 sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count

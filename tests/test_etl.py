@@ -933,15 +933,52 @@ def test_warm_cycles_start_only_their_commits_and_writes(engine, jobs, source, j
 
 
 def test_warm_typed_target_starts_only_the_reads_jobs(engine, jobs, jobs_started):
-    """With no stale profile, the typed view's decision is driver work:
-    ``typed_target`` starts as many Spark jobs as reading the table."""
+    """With no stale profile, the typed view's decision is driver work,
+    and the target's read takes its schema from the table's sidecar:
+    reading the table and building ``typed_target`` start no Spark
+    job."""
     engine.find_updated_spreadsheets(now=1)
     engine.load_updated_spreadsheets(jobs)
     engine.typed_target("table_a")
     read = jobs_started("table-read", lambda: engine.target("table_a").read())
     typed = jobs_started("typed-target", lambda: engine.typed_target("table_a"))
     assert engine.last_profiled_job_ids == []
-    assert typed == read
+    assert read == 0
+    assert typed == 0
+
+
+def test_typed_target_with_a_stale_load_starts_only_the_counters_jobs(
+        engine, jobs, source, spark, jobs_started):
+    """A typed view after one sheet's reload profiles that load: its
+    only Spark jobs are the counters' collect, none a footer merge of
+    the target."""
+    from google_sheets_etl_spark.operators import typed_views
+
+    engine.find_updated_spreadsheets(now=1)
+    engine.load_updated_spreadsheets(jobs)
+    engine.typed_target("table_a")
+    changed = [row[:] for row in SHEET_A]
+    changed[1][1] = "99"
+    source.put_sheet(SpreadsheetMeta("SSA" + "a" * 41, "2026-01-09T00:00:00.000Z", "Sheet A"),
+                     "Tab1", changed)
+    engine.find_updated_spreadsheets(now=5)
+    engine.load_updated_spreadsheets(jobs)
+
+    n = jobs_started("typed-target-stale", lambda: engine.typed_target("table_a"))
+    assert len(engine.last_profiled_job_ids) == 1
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(s).name
+              for j in tracker.getJobIdsForGroup("typed-target-stale")
+              for s in tracker.getJobInfo(j).stageIds]
+    # the counters are collected in etl.py; a footer merge is a
+    # "parquet at ..." job
+    assert stages and all(s.startswith("collect at") and "etl.py" in s
+                          for s in stages), stages
+    slice_df = engine.last_profile_slice_df
+    alone = jobs_started("counters-alone", lambda: typed_views.profile_counters(
+        slice_df, [c for c in slice_df.columns if not c.startswith("_")],
+        group_cols=["_origin_etl_job_id"]).collect())
+    assert n == alone
 
 
 def test_typed_target_without_profile_store(spark, tmp_path, source, jobs):

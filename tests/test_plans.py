@@ -1452,3 +1452,112 @@ def test_driver_written_version_schema_and_rows(spark, tmp_path, name):
     assert keyed(tuple(r.values()) for r in st.snapshot().to_pylist()) == want
     fresh = StateTable(spark, path, schema).snapshot()
     assert keyed(tuple(r.values()) for r in fresh.to_pylist()) == want
+
+
+# -- target tables: the schema sidecar ------------------------------------------
+
+def _job_frame(spark, job_id: int, columns: list[str], rows: int = 2):
+    """A target-table frame for one job, as the load pass builds it:
+    ``_origin_row``, the string columns, the partition column."""
+    from google_sheets_etl_spark.plans.target_table import PARTITION_COL
+    from google_sheets_etl_spark.session import local_frame
+
+    schema = ", ".join(["_origin_row long"] + [f"{c} string" for c in columns]
+                       + [f"{PARTITION_COL} long"])
+    data = [(r, *(f"{c}{job_id}.{r}" for c in columns), job_id) for r in range(rows)]
+    return local_frame(spark, data, schema)
+
+
+def test_target_table_crash_between_sidecar_and_data(spark, tmp_path, monkeypatch,
+                                                     jobs_started):
+    """A write records its columns in the sidecar before its data
+    lands. When the data write fails after that, the next read starts
+    no Spark job, sees every row that did land, and reads the
+    would-be column as NULL; the retry lands the job's rows."""
+    from google_sheets_etl_spark.plans.target_table import TargetTable
+
+    tt = TargetTable(spark, str(tmp_path / "t"))
+    tt.overwrite_job_partition(_job_frame(spark, 1, ["a"]))
+    grown = _job_frame(spark, 2, ["a", "b"])
+
+    def crash(self, *a, **kw):
+        raise OSError("injected crash before the data write")
+
+    with monkeypatch.context() as m:
+        m.setattr(type(grown.write), "parquet", crash)
+        with pytest.raises(OSError, match="injected"):
+            tt.overwrite_job_partition(grown)
+    assert (tmp_path / "t" / "_schema.json").exists()
+    assert jobs_started("read-after-crash", tt.read) == 0
+    got = tt.read()
+    assert got.columns == ["_origin_row", "a", "b", "_origin_etl_job_id"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (0, "a1.0", None, 1), (1, "a1.1", None, 1)]
+
+    tt.overwrite_job_partition(grown)
+    assert sorted(tuple(r) for r in tt.read().collect()) == [
+        (0, "a1.0", None, 1), (0, "a2.0", "b2.0", 2),
+        (1, "a1.1", None, 1), (1, "a2.1", "b2.1", 2)]
+
+
+def test_target_table_without_sidecar_is_merged_then_seeded(spark, tmp_path, jobs_started):
+    """A table written before sidecars existed is read by merging its
+    footers; its next write seeds the sidecar from that read, after
+    which the read starts no job and gives the same types, the
+    partition column still ``int``."""
+    from google_sheets_etl_spark.plans.target_table import PARTITION_COL, TargetTable
+
+    path = str(tmp_path / "old")
+    for job_id, cols in ((1, ["a"]), (2, ["a", "b"])):
+        (_job_frame(spark, job_id, cols).write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(PARTITION_COL).parquet(path))
+    merged = spark.read.option("mergeSchema", "true").parquet(path).dtypes
+    tt = TargetTable(spark, path)
+    assert tt._schema() is None
+    assert tt.read().dtypes == merged
+    assert jobs_started("merge-read", tt.read) >= 1
+
+    tt.overwrite_job_partition(_job_frame(spark, 3, ["a"]))
+    assert tt._schema() is not None
+    assert jobs_started("sidecar-read", tt.read) == 0
+    assert tt.read().dtypes == merged
+    assert dict(merged)[PARTITION_COL] == "int"
+    assert tt.read().count() == 6
+
+
+def test_target_table_sidecar_through_hadoop_fs(spark, tmp_path, jobs_started):
+    """On the Hadoop FileSystem branch (``_local = None``) the sidecar
+    is written and read through the FileSystem API, inside the table;
+    the read starts no job and gives the types a footer merge gives,
+    and the POSIX branch reads the same sidecar."""
+    from google_sheets_etl_spark.plans.target_table import TargetTable
+
+    root = tmp_path / "t"
+    tt = TargetTable(spark, root.as_uri())
+    tt._local = None
+    tt.overwrite_job_partition(_job_frame(spark, 1, ["a"]))
+    tt.overwrite_job_partition(_job_frame(spark, 2, ["a", "b"]))
+    assert (root / "_schema.json").exists()
+    merged = spark.read.option("mergeSchema", "true").parquet(str(root)).dtypes
+    assert jobs_started("hadoop-sidecar-read", tt.read) == 0
+    assert tt.read().dtypes == merged
+    posix = TargetTable(spark, str(root))
+    assert posix._schema() == tt._schema()
+    assert sorted(map(tuple, posix.read().collect())) == sorted(map(tuple, tt.read().collect()))
+
+
+def test_target_table_keeps_a_column_its_last_job_dropped(spark, tmp_path):
+    """A column no job writes any more stays in the table's schema,
+    all-NULL, as the reference's additive ``ADD COLUMN`` never drops
+    one; a footer merge would have dropped it."""
+    from google_sheets_etl_spark.plans.target_table import TargetTable
+
+    path = str(tmp_path / "t")
+    tt = TargetTable(spark, path)
+    tt.overwrite_job_partition(_job_frame(spark, 1, ["a", "b"]))
+    tt.overwrite_job_partition(_job_frame(spark, 1, ["a"], rows=1))
+    assert "b" not in spark.read.option("mergeSchema", "true").parquet(path).columns
+    got = tt.read()
+    assert got.columns == ["_origin_row", "a", "b", "_origin_etl_job_id"]
+    assert [tuple(r) for r in got.collect()] == [(0, "a1.0", None, 1)]

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry_mod
+from google_sheets_etl_spark.queries import ORACLE_SCALE, oracle_sf_dir
 from tools.driver_mimic import canon, connect_views
 
 
@@ -21,95 +22,6 @@ def duck(sf_dir):
 
 ORACLED = sorted(entry_mod.oracle_sql().keys())
 ROWS_ONLY = sorted(set(entry_mod.queries()) - set(ORACLED))
-
-# Queries whose oracle contract is scale-dependent: ann_lsh_topk's
-# oracle is the EXACT top-k SQL, legitimate because LSH recall@5 is
-# 1.0 at the driver's gate scale (sf0.01) — at sf0.001 the corpus is
-# 10x smaller per bucket and a true neighbor can legitimately miss.
-# Check those at the scale the contract names.
-SF_OVERRIDE = {
-    "ann_lsh_topk": "/root/testdata/sf0.01",
-    # literal-1.0 recall contract holds at the driver's gate scale
-    "ann_recall_at_k": "/root/testdata/sf0.01",
-    # literal recall contract (seeded/trained/rerank) pinned at the
-    # driver's gate scale — recall is a property of the corpus
-    "pq_recall_at_k": "/root/testdata/sf0.01",
-    # literal-expected merge table regenerated from the sf0.01 corpus
-    # by tools/gen_bpe_fixture.py (fixture-freshness test below)
-    "bpe_learn_merges_k200": "/root/testdata/sf0.01",
-    # k=1000 sibling over the words-plus-bigrams vocabulary
-    "bpe_learn_merges_k1000": "/root/testdata/sf0.01",
-    # k=10000 sibling over the words∪bigrams∪trigrams vocabulary
-    "bpe_learn_merges_k10000": "/root/testdata/sf0.01",
-    # byte-level (GPT-2) literal fixtures regenerated from the sf0.01
-    # corpus by tools/gen_bytelevel_bpe_fixture.py (freshness below)
-    "bpe_bytelevel_learn_merges": "/root/testdata/sf0.01",
-    "bpe_bytelevel_token_count": "/root/testdata/sf0.01",
-    # MJPEG-AVI literal fixture regenerated from the sf0.01 corpus
-    # by tools/gen_avi_fixture.py (freshness test below)
-    "avi_mjpeg_frame_stats": "/root/testdata/sf0.01",
-    "avi_mjpeg_scene_cuts": "/root/testdata/sf0.01",
-    # the MP4 row reuses the AVI fixture (samples byte-identical
-    # across containers), so it pins to the same corpus scale
-    "mp4_mjpeg_frame_stats": "/root/testdata/sf0.01",
-    # IMA-ADPCM literal fixture regenerated from the sf0.01 corpus
-    # by tools/gen_adpcm_fixture.py (freshness test below)
-    "wav_adpcm_energy": "/root/testdata/sf0.01",
-    # literal beam-vs-reachability cost curve pinned at gate scale
-    "nsw_beam_recall_at_k": "/root/testdata/sf0.01",
-    # literal hierarchy-vs-flat-beam contract pinned at gate scale
-    "hnsw_recall_at_k": "/root/testdata/sf0.01",
-    # literal eigenvalues regenerated by tools/gen_pca_fixture.py
-    "pca_explained_variance": "/root/testdata/sf0.01",
-    # literal predictions regenerated by tools/gen_probe_fixture.py
-    "linear_probe_predictions": "/root/testdata/sf0.01",
-    # literal OPQ recall contract pinned at the driver's gate scale
-    "opq_recall_at_k": "/root/testdata/sf0.01",
-    # literal NSW recall curve pinned at the driver's gate scale
-    "nsw_recall_at_k": "/root/testdata/sf0.01",
-    # literal SQ8/IVF-SQ8 recall contract pinned at the gate scale
-    "sq8_recall_at_k": "/root/testdata/sf0.01",
-    # literal page texts regenerated by the independent extractor in
-    # tools/gen_pdf_fixture.py (freshness test below)
-    "pdf_text_extract": "/root/testdata/sf0.01",
-    # literal luminance sums regenerated by the independent JPEG
-    # decoder in tools/gen_jpeg_fixture.py (freshness test below)
-    "jpeg_decode_features": "/root/testdata/sf0.01",
-    # literal-expected trained piece table regenerated from the
-    # sf0.01 corpus by tools/gen_unigram_fixture.py
-    "unigram_train_hard_em": "/root/testdata/sf0.01",
-    # literal bottom-k margin selection regenerated by
-    # tools/gen_al_fixture.py from the sf0.01 corpus
-    "active_learning_selection": "/root/testdata/sf0.01",
-    # 4:2:0 literal luminance fixture (tools/gen_jpeg_fixture.py)
-    "jpeg420_decode_features": "/root/testdata/sf0.01",
-    # restart-interval literal luminance fixture (same tool)
-    "jpeg_dri_decode_features": "/root/testdata/sf0.01",
-    # progressive row reuses the 4:2:0 fixture (same coefficients)
-    "jpeg_progressive_decode_features": "/root/testdata/sf0.01",
-    # PDF 1.5 literal page texts (tools/gen_pdf_fixture.py)
-    "pdf15_text_extract": "/root/testdata/sf0.01",
-    # trained-NB weight fixture regenerated from the sf0.01 corpus by
-    # tools/gen_langid_fixture.py (freshness test below) — the oracle
-    # weights are sf0.01-trained, so both rows pin to that corpus
-    "langid_trained_predictions": "/root/testdata/sf0.01",
-    "langid_trained_confusion": "/root/testdata/sf0.01",
-    # trained-quality-NB weight fixture regenerated from the sf0.01
-    # corpus by tools/gen_quality_nb_fixture.py (freshness test below)
-    "quality_classifier_trained": "/root/testdata/sf0.01",
-    # literal frame stats regenerated by the independent MPEG header
-    # walker in tools/gen_mp3_fixture.py (freshness test below)
-    "mp3_frame_stats": "/root/testdata/sf0.01",
-    # literal stored-graph search contract pinned at the gate scale
-    # (the walk is not SQL-expressible; the graph structure it reads
-    # is SQL-certified by hnsw_index_build_lifecycle, and the row
-    # asserts in-plan equality with the in-query cosine_topk_hnsw)
-    "hnsw_index_search_stored": "/root/testdata/sf0.01",
-    # the id-prefix build/admit split (380/440) is sized for the
-    # sf0.01 corpus; at sf0.001 the batch would be empty
-    "hnsw_index_build_lifecycle": "/root/testdata/sf0.01",
-}
-
 
 def assert_scalar_schema(df, name):
     """The driver sorts output columns through pandas, which cannot
@@ -127,8 +39,8 @@ def assert_scalar_schema(df, name):
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, sf_dir, duck, name):
-    if name in SF_OVERRIDE:
-        sf_dir = SF_OVERRIDE[name]
+    if name in ORACLE_SCALE:
+        sf_dir = oracle_sf_dir(name, sf_dir)
         duck = connect_views(sf_dir)
     qdf = entry_mod.queries()[name](spark, sf_dir)
     assert_scalar_schema(qdf, name)

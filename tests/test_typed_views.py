@@ -877,6 +877,70 @@ def test_decide_profile_branch_table(counters, min_frac, expected):
         "n_double", "n_date", "n_timestamp", "decided_type"]
     assert decided["decided_type"].to_pylist() == [expected]
 
+# Values that reach a branch of the decision chain from data, by the
+# branch's id in _BRANCHES (the min_frac=1.0 branches data can reach).
+_BRANCH_VALUES = {
+    "boolean": ["true", "no", "Y"],
+    "bigint": ["1", "-20", " 300 "],
+    "decimal": ["12.50", "1234.5"],
+    "decimal-p38": ["1" * 36 + ".25"],
+    "decimal-p39-to-double": ["1" * 37 + ".25"],
+    "double": ["1e3", "2.5e-1"],
+    "date": ["2026-01-02", "2026-03-04"],
+    "timestamp": ["2026-01-02 10:30:00", "2026-01-03 00:00:01"],
+    "date-us": ["01/13/2020", "12/01/2020"],
+    "date-eu": ["13/01/2020", "01/12/2020"],
+    "date-slash-tie": ["01/02/2020", "03/04/2020"],
+    "date-dot": ["13.01.2020", "01.02.2021"],
+    "timestamp-us": ["01/13/2020 10:30", "12/01/2020 23:59"],
+    "timestamp-eu": ["13/01/2020 10:30", "01/12/2020 23:59"],
+    "timestamp-slash-tie": ["01/02/2020 10:30", "03/04/2020 11:00"],
+    "timestamp-dot": ["13.01.2020 10:30"],
+    "bigint-grouped": ["1,234", "12,345,678"],
+    "decimal-grouped": ["1,234,567.25", "12.5"],
+    "decimal-grouped-p38": ["100" + ",000" * 11 + ".25"],
+    "decimal-grouped-p39": ["1" + ",000" * 12 + ".25"],
+    "string": ["abc", "1"],
+    "no-values": ["", "  ", None],
+}
+
+
+def test_profile_counters_bind_hostile_names(spark):
+    """The counter statement takes column names that break naive SQL
+    text (a quote, a backtick, formatter braces, a parameter marker,
+    non-ASCII, a space), grouped and ungrouped. Each column holds the
+    values of one branch of the decision chain, and the decisions over
+    its counters are the branch table's. Zero-row ungrouped input still
+    yields one all-zero row per column."""
+    hostile = ["a'b", "x`y", "{df}", ":c0", "é", "a space"]
+    branches = list(_BRANCH_VALUES)
+    names = hostile + [f"{b} {hostile[i % len(hostile)]}"
+                       for i, b in enumerate(branches[len(hostile):])]
+    want = {n: next(e for i, _c, _m, e in _BRANCHES if i == b)
+            for n, b in zip(names, branches)}
+    depth = max(len(v) for v in _BRANCH_VALUES.values())
+    rows = [tuple(vals[r] if r < len(vals) else None for vals in _BRANCH_VALUES.values())
+            + (r % 2,) for r in range(depth)]
+    df = spark.createDataFrame(rows, [*names, "g"]).repartition(3)
+
+    def decided(counters):
+        d = typed_views.decide_profile(counters)
+        return dict(zip(d["column_name"].to_pylist(), d["decided_type"].to_pylist()))
+
+    flat = typed_views.profile_counters(df, names).toArrow()
+    assert sorted(flat["column_name"].to_pylist()) == sorted(names)
+    assert decided(flat) == want
+    grouped = typed_views.profile_counters(df, group_cols=["g"]).toArrow()
+    assert grouped.column_names[:2] == ["g", "column_name"]
+    assert decided(typed_views.merge_profiles(grouped)) == want
+
+    empty = typed_views.profile_counters(df.limit(0), names).toArrow()
+    assert sorted(empty["column_name"].to_pylist()) == sorted(names)
+    assert set(empty["n_values"].to_pylist()) == {0}
+    assert typed_views.profile_counters(
+        df.limit(0), group_cols=["g"]).toArrow().num_rows == 0
+
+
 def test_decimal_p_p_override_all_fraction(spark):
     """decimal(p,p) — zero integer digits — is valid Spark and must be
     accepted as an OVERRIDE (round-7 verdict directive #7; a profile

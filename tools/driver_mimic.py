@@ -7,6 +7,10 @@ row count, sorted column names, and a TYPE-SENSITIVE order-insensitive
 value multiset (so DuckDB HUGEINT→float vs Spark long mismatches are
 caught locally, unlike a numeric-equality compare).
 
+A row whose oracle contract names a scale (``ORACLE_SCALE`` in the
+query registry) is checked on that scale's corpus, the sibling of
+``sf_dir``, as ``tests/test_queries_oracle.py`` checks it.
+
 Usage:  python tools/driver_mimic.py [sf_dir] [query ...]
 """
 
@@ -111,6 +115,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
+    from google_sheets_etl_spark.queries import oracle_sf_dir
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -123,7 +128,7 @@ def main() -> int:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .getOrCreate()
     )
-    con = connect_views(sf_dir)
+    cons = {}  # one DuckDB connection per corpus directory
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -138,8 +143,15 @@ def main() -> int:
             continue
         row: dict = {}
         t0 = time.time()
+        row_dir = oracle_sf_dir(name, sf_dir)
+        if row_dir != sf_dir:
+            row["sf_dir"] = row_dir
+            print(f"     {name}: checked at {os.path.basename(row_dir)}, the scale its oracle names")
+        if row_dir not in cons:
+            cons[row_dir] = connect_views(row_dir)
+        con = cons[row_dir]
         try:
-            qdf = fn(spark, sf_dir)
+            qdf = fn(spark, row_dir)
             # fail non-scalar outputs HERE so local green predicts
             # driver green (this mimic used to stringify lists and
             # green-lit a shape the driver rejects)
