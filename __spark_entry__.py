@@ -2,7 +2,8 @@
 
 ``entry(spark)`` runs the flagship query on sf0.001; ``queries()`` /
 ``oracle_sql()`` expose the operator inventory from SURVEY.md §2 plus
-the north-star extensions, each cross-checked against DuckDB at sf0.01.
+the north-star extensions, each cross-checked against DuckDB at the
+scale its ``@q`` site declares, otherwise at the scale it is given.
 Implementation lives in the ``google_sheets_etl_spark/queries`` package.
 """
 

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; print ONE JSON line.
+"""Benchmark: run the query registry's benched set (``benched()``) at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS]; print ONE JSON line.
 
 Each query executes to completion via the noop sink (full computation,
 no driver-side result materialization skewing the numbers).
@@ -16,69 +17,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from google_sheets_etl_spark.queries import QUERIES  # noqa: E402
+from google_sheets_etl_spark.queries import QUERIES, benched  # noqa: E402
 from google_sheets_etl_spark.session import get_spark  # noqa: E402
-
-# correctness-only exact twins that are quadratic by construction —
-# their scale paths (near_dup_lsh / cosine_topk) ARE benchmarked.
-# streaming_hourly_counts is a correctness surface for the streaming
-# engine (state store + watermark + availableNow); its wall-clock is
-# micro-batch machinery, not data-plane throughput — its batch twin
-# events_hourly IS benchmarked.
-# etl_lifecycle_target is the 3-pass engine-orchestration check on a
-# 2-row fixture — correctness surface, not throughput.
-# compaction_lifecycle / streaming_upsert_latest_wins are multi-pass
-# table-REWRITE lifecycle checks (fragment→compact, upsert→redeliver→
-# upsert) — maintenance/sink machinery; their data-plane reads are
-# covered by the benchmarked documents queries.
-EXCLUDE = {"near_dup_jaccard_exact", "dedup_clusters_exact",
-           "streaming_hourly_counts", "etl_lifecycle_target",
-           "compaction_lifecycle", "streaming_upsert_latest_wins",
-           "streaming_sessionize_stateful", "streaming_dedup_watermark",
-           "streaming_interval_join", "streaming_static_enrich",
-           "streaming_discovery_cursor", "streaming_quality_admission",
-           "streaming_sketch_maintenance", "streaming_matview_maintenance",
-           "streaming_interval_join_left", "streaming_media_admission",
-           "streaming_web_admission", "streaming_suffix_admission",
-           # rewrites two bucketed tables per call (pay-shuffle-once
-           # WRITE path); the exchange-free join property is plan-
-           # asserted in-function and in tests
-           "bucketed_join_revenue",
-           # writes a 16-tile table per call (maintenance WRITE
-           # lifecycle, compaction_lifecycle's sibling); the key
-           # computation it shares with zorder_layout_stats IS
-           # benchmarked
-           "zorder_write_lifecycle",
-           # trains to pair EXHAUSTION (~90 sequential greedy rounds
-           # — inherently iterative, ~45 s of per-round fixed
-           # overhead, not data-plane throughput); the SAME trainer
-           # at k=20 (bpe_learn_merges) IS benchmarked
-           "bpe_learn_merges_k200",
-           # 10 000 sequential greedy rounds on the driver (~13 s,
-           # >95% the one-time vocab collect + early wide rounds —
-           # SCALE.md has the per-round evidence); same trainer
-           # benchmarked at k=20, and the distributed corpus pass it
-           # shares is benchmarked via wordpiece_vocab_k4000
-           "bpe_learn_merges_k10000",
-           # ~26 s each at sf0.1, >90% spent ASSEMBLING 5000 in-plan
-           # WAV payloads from the fixture formula (17+ windows × 256
-           # samples × hex-string concat per doc) — fixture
-           # construction, not data-plane throughput; the PCM decode
-           # path they exercise IS benchmarked (multimodal_wav_energy)
-           "audio_dhash_fingerprints", "audio_dhash_near_dup",
-           # multi-pass persisted-index LIFECYCLE checks (build ->
-           # staleness -> admit -> staleness -> read / search), each
-           # call writing three StateTables to a temp dir — the
-           # compaction_lifecycle / zorder_write_lifecycle class of
-           # maintenance machinery; the IVF-PQ data-plane kernels
-           # they share (cell assign, PQ encode, ADC shortlist,
-           # re-rank) ARE benchmarked via ivf_pq_search
-           "ann_index_build_lifecycle", "ann_index_search_stored",
-           # same class for the persisted GRAPH index (r12): the
-           # graph data-plane kernels they share (cell assign, graph
-           # build, descent+beam walk) ARE benchmarked via
-           # hnsw_recall_at_k / nsw_beam_recall_at_k
-           "hnsw_index_build_lifecycle", "hnsw_index_search_stored"}
 
 
 def _calibration_probes() -> dict:
@@ -148,9 +88,8 @@ def main() -> None:
     # run keeps going with a valid JSON line either way
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name, fn in QUERIES.items():
-        if name in EXCLUDE:
-            continue
+    for name in benched():
+        fn = QUERIES[name]
         best = float("inf")
         try:
             # adaptive iteration count (round-9 drift root cause): some

@@ -303,6 +303,11 @@ class SheetsEtlEngine:
         rows whose job id has DISAPPEARED from ``etl_jobs`` (a
         deregistered load) are shed on the same rewrite — orphaned
         counters must not keep voting in typing decisions."""
+        return self._refresh_load_profiles(table, self.target(table).read())
+
+    def _refresh_load_profiles(self, table: str, target: DataFrame) -> list[int]:
+        """``refresh_load_profiles`` with the stale slice cut from
+        ``target``, a read of the table the caller already holds."""
         from .operators import typed_views
         from .operators.typed_views import _MAX_COUNTERS, _SUM_COUNTERS
 
@@ -330,11 +335,8 @@ class SheetsEtlEngine:
         if not stale:
             self.profiles.overwrite(kept)
             return []
-        slice_df = (
-            self.target(table)
-            .read()
-            .filter(F.col(PARTITION_COL).isin(stale))
-        )  # partition-pruned: only the stale loads' files are touched
+        # partition-pruned: only the stale loads' files are touched
+        slice_df = target.filter(F.col(PARTITION_COL).isin(stale))
         self.last_profile_slice_df = slice_df
         data_cols = [c for c in slice_df.columns if not c.startswith("_")]
         counters = typed_views.profile_counters(
@@ -401,7 +403,7 @@ class SheetsEtlEngine:
         from .operators import typed_views
 
         df = self.target(table).read()
-        self.refresh_load_profiles(table)
+        self._refresh_load_profiles(table, df)
         stored = self.profiles.snapshot()
         stored = stored.filter(pc.and_(
             pc.equal(stored["target_table"], table),

@@ -36,22 +36,8 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.textfns import word_shingles, words_of
 from .ckpt import make_ckpt, scoped_checkpoint_dir
+from .typed_views import ensure_parallelism
 
-
-def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Repartition narrow-heavy inputs that arrive under-split.
-
-    Local mitigation: a single small parquet file scans as ONE partition,
-    serializing per-row compute on one core. On a real cluster a 100 TB
-    table scans as many file splits and this is a no-op (the observed
-    partition count exceeds the floor). The round-robin repartition here
-    only triggers for pathologically under-split inputs.
-    """
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        return df.repartition(target)
-    return df
 
 # ---------------------------------------------------------------- exact
 

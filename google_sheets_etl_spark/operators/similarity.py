@@ -1603,7 +1603,7 @@ def embedding_near_dup_pairs(
                 "cosine_r4": cos[bi, gj][keep],
             })
 
-    from .dedup import ensure_parallelism
+    from .typed_views import ensure_parallelism
 
     return ensure_parallelism(vectors.select(id_col, vec_col)).mapInPandas(
         kernel, schema

@@ -502,7 +502,7 @@ def winnowing_fingerprints(
                 out.append(np.unique(mins).tolist())  # sorted distinct
             yield pd.DataFrame({id_col: pdf[id_col], "fingerprints": out})
 
-    from .dedup import ensure_parallelism
+    from .typed_views import ensure_parallelism
 
     return ensure_parallelism(docs.select(id_col, text_col)).mapInPandas(kernel, schema)
 
@@ -561,7 +561,7 @@ def heavy_hitter_tokens(docs: DataFrame, k: int = 50, text_col: str = "text") ->
 
     import pandas as pd
 
-    from .dedup import ensure_parallelism
+    from .typed_views import ensure_parallelism
 
     def mg_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters = misra_gries_summary(

@@ -176,12 +176,14 @@ _MAX_COUNTERS = ("_di", "_ds", "_gdi", "_gds")
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition a df that arrives with FEWER partitions
-    than the cluster has cores — the single-small-parquet-file case,
-    where one task would otherwise run every probe over every cell
-    (measured 5.4 s -> 1.9 s on the sf0.1 profile). Deliberately
-    conditional: at 100 TB the scan arrives pre-split by
+    than the cluster has cores: the single-small-parquet-file case,
+    where one task would otherwise run a whole per-row kernel (the
+    typed profile's probes, a dedup or text ``mapInPandas`` pass) over
+    every row (measured 5.4 s -> 1.9 s on the sf0.1 profile). The one
+    such helper the operators share. Deliberately conditional: at
+    100 TB the scan arrives pre-split by
     ``spark.sql.files.maxPartitionBytes`` into thousands of
-    partitions and this is a no-op — an unconditional repartition
+    partitions and this is a no-op; an unconditional repartition
     would shuffle the whole table. Under-parallel inputs are by
     construction small (< cores x maxPartitionBytes), so the
     round-robin exchange is bounded."""

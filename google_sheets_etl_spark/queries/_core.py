@@ -37,113 +37,52 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 
-# Queries whose oracle contract is scale-dependent: ann_lsh_topk's
-# oracle is the EXACT top-k SQL, legitimate because LSH recall@5 is
-# 1.0 at the driver's gate scale (sf0.01) — at sf0.001 the corpus is
-# 10x smaller per bucket and a true neighbor can legitimately miss.
-# Check those at the scale the contract names: a row listed here is
-# checked on the corpus of that scale, the sibling directory of the one
-# a run is given (``oracle_sf_dir``), by ``tests/test_queries_oracle.py``
-# and ``tools/driver_mimic.py`` alike.
-ORACLE_SCALE: dict[str, str] = {
-    "ann_lsh_topk": "sf0.01",
-    # literal-1.0 recall contract holds at the driver's gate scale
-    "ann_recall_at_k": "sf0.01",
-    # literal recall contract (seeded/trained/rerank) pinned at the
-    # driver's gate scale — recall is a property of the corpus
-    "pq_recall_at_k": "sf0.01",
-    # literal-expected merge table regenerated from the sf0.01 corpus
-    # by tools/gen_bpe_fixture.py (freshness test in tests/test_queries_oracle.py)
-    "bpe_learn_merges_k200": "sf0.01",
-    # k=1000 sibling over the words-plus-bigrams vocabulary
-    "bpe_learn_merges_k1000": "sf0.01",
-    # k=10000 sibling over the words∪bigrams∪trigrams vocabulary
-    "bpe_learn_merges_k10000": "sf0.01",
-    # byte-level (GPT-2) literal fixtures regenerated from the sf0.01
-    # corpus by tools/gen_bytelevel_bpe_fixture.py (freshness test in tests/test_queries_oracle.py)
-    "bpe_bytelevel_learn_merges": "sf0.01",
-    "bpe_bytelevel_token_count": "sf0.01",
-    # MJPEG-AVI literal fixture regenerated from the sf0.01 corpus
-    # by tools/gen_avi_fixture.py (freshness test in tests/test_queries_oracle.py)
-    "avi_mjpeg_frame_stats": "sf0.01",
-    "avi_mjpeg_scene_cuts": "sf0.01",
-    # the MP4 row reuses the AVI fixture (samples byte-identical
-    # across containers), so it pins to the same corpus scale
-    "mp4_mjpeg_frame_stats": "sf0.01",
-    # IMA-ADPCM literal fixture regenerated from the sf0.01 corpus
-    # by tools/gen_adpcm_fixture.py (freshness test in tests/test_queries_oracle.py)
-    "wav_adpcm_energy": "sf0.01",
-    # literal beam-vs-reachability cost curve pinned at gate scale
-    "nsw_beam_recall_at_k": "sf0.01",
-    # literal hierarchy-vs-flat-beam contract pinned at gate scale
-    "hnsw_recall_at_k": "sf0.01",
-    # literal eigenvalues regenerated by tools/gen_pca_fixture.py
-    "pca_explained_variance": "sf0.01",
-    # literal predictions regenerated by tools/gen_probe_fixture.py
-    "linear_probe_predictions": "sf0.01",
-    # literal OPQ recall contract pinned at the driver's gate scale
-    "opq_recall_at_k": "sf0.01",
-    # literal NSW recall curve pinned at the driver's gate scale
-    "nsw_recall_at_k": "sf0.01",
-    # literal SQ8/IVF-SQ8 recall contract pinned at the gate scale
-    "sq8_recall_at_k": "sf0.01",
-    # literal page texts regenerated by the independent extractor in
-    # tools/gen_pdf_fixture.py (freshness test in tests/test_queries_oracle.py)
-    "pdf_text_extract": "sf0.01",
-    # literal luminance sums regenerated by the independent JPEG
-    # decoder in tools/gen_jpeg_fixture.py (freshness test in tests/test_queries_oracle.py)
-    "jpeg_decode_features": "sf0.01",
-    # literal-expected trained piece table regenerated from the
-    # sf0.01 corpus by tools/gen_unigram_fixture.py
-    "unigram_train_hard_em": "sf0.01",
-    # literal bottom-k margin selection regenerated by
-    # tools/gen_al_fixture.py from the sf0.01 corpus
-    "active_learning_selection": "sf0.01",
-    # 4:2:0 literal luminance fixture (tools/gen_jpeg_fixture.py)
-    "jpeg420_decode_features": "sf0.01",
-    # restart-interval literal luminance fixture (same tool)
-    "jpeg_dri_decode_features": "sf0.01",
-    # progressive row reuses the 4:2:0 fixture (same coefficients)
-    "jpeg_progressive_decode_features": "sf0.01",
-    # PDF 1.5 literal page texts (tools/gen_pdf_fixture.py)
-    "pdf15_text_extract": "sf0.01",
-    # trained-NB weight fixture regenerated from the sf0.01 corpus by
-    # tools/gen_langid_fixture.py (freshness test in tests/test_queries_oracle.py) — the oracle
-    # weights are sf0.01-trained, so both rows pin to that corpus
-    "langid_trained_predictions": "sf0.01",
-    "langid_trained_confusion": "sf0.01",
-    # trained-quality-NB weight fixture regenerated from the sf0.01
-    # corpus by tools/gen_quality_nb_fixture.py (freshness test in tests/test_queries_oracle.py)
-    "quality_classifier_trained": "sf0.01",
-    # literal frame stats regenerated by the independent MPEG header
-    # walker in tools/gen_mp3_fixture.py (freshness test in tests/test_queries_oracle.py)
-    "mp3_frame_stats": "sf0.01",
-    # literal stored-graph search contract pinned at the gate scale
-    # (the walk is not SQL-expressible; the graph structure it reads
-    # is SQL-certified by hnsw_index_build_lifecycle, and the row
-    # asserts in-plan equality with the in-query cosine_topk_hnsw)
-    "hnsw_index_search_stored": "sf0.01",
-    # the id-prefix build/admit split (380/440) is sized for the
-    # sf0.01 corpus; at sf0.001 the batch would be empty
-    "hnsw_index_build_lifecycle": "sf0.01",
-}
+# Each query's policy is declared at its ``@q`` site, beside its oracle:
+#
+# - ``scale`` names the corpus its oracle contract is pinned to. A
+#   declared row is checked on that corpus, the sibling directory of the
+#   one a run is given (``oracle_sf_dir``), by
+#   ``tests/test_queries_oracle.py`` and ``tools/driver_mimic.py`` alike;
+#   an undeclared row is checked at the scale it is given.
+# - ``unbenched`` is the reason the query is left out of ``bench.py``'s
+#   headline set (``benched()``); ``None`` means it is benched.
+_SCALE: dict[str, str] = {}
+_UNBENCHED: dict[str, str] = {}
+
+
+def benched() -> list[str]:
+    """The names ``bench.py`` times, in the registry's order."""
+    return [name for name in QUERIES if name not in _UNBENCHED]
 
 
 def oracle_sf_dir(name: str, sf_dir: str) -> str:
     """The corpus directory query ``name`` is oracle-checked on in a run
-    given ``sf_dir``: the ``ORACLE_SCALE`` sibling for a listed row,
-    ``sf_dir`` itself otherwise."""
-    scale = ORACLE_SCALE.get(name)
+    given ``sf_dir``: the sibling of its declared ``scale``, ``sf_dir``
+    itself for an undeclared row."""
+    scale = _SCALE.get(name)
     if scale is None:
         return sf_dir
     return os.path.join(os.path.dirname(os.path.normpath(sf_dir)), scale)
 
 
-def q(name: str, oracle: str | None = None):
+def q(
+    name: str,
+    oracle: str | None = None,
+    *,
+    scale: str | None = None,
+    unbenched: str | None = None,
+):
+    if unbenched is not None and not unbenched.strip():
+        raise ValueError(f"{name}: unbenched needs a reason")
+
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle
+        if scale is not None:
+            _SCALE[name] = scale
+        if unbenched is not None:
+            _UNBENCHED[name] = unbenched
         return fn
     return deco
 

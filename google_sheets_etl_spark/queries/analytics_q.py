@@ -977,6 +977,7 @@ def curation_pipeline_e2e(spark: SparkSession, sf: str) -> DataFrame:
               CAST(SUM(l_quantity) AS BIGINT) AS sum_qty
        FROM orders JOIN lineitem ON o_orderkey = l_orderkey
        GROUP BY o_orderpriority""",
+    unbenched="rewrites two bucketed tables per call (a write path)",
 )
 def bucketed_join_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """The pay-the-shuffle-once strategy, driver-certified: both fact

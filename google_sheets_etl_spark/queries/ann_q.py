@@ -379,7 +379,12 @@ def _pca_fixture_oracle() -> str:
         return f.read()
 
 
-@q("pca_explained_variance", _pca_fixture_oracle())
+@q(
+    "pca_explained_variance",
+    _pca_fixture_oracle(),
+    # literal eigenvalues regenerated by tools/gen_pca_fixture.py
+    scale="sf0.01",
+)
 def pca_explained_variance(spark: SparkSession, sf: str) -> DataFrame:
     """PCA of the embedding corpus (operators/similarity.py
     pca_components): the d×d gram matrix aggregates distributedly in
@@ -406,6 +411,7 @@ def pca_explained_variance(spark: SparkSession, sf: str) -> DataFrame:
                 COUNT(*)::BIGINT AS cnt
          FROM events, range(0, 4) t(r) GROUP BY 1, 2)
        SELECT r, b, cnt FROM cells""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_sketch_maintenance(spark: SparkSession, sf: str) -> DataFrame:
     """Standing frequency sketch under at-least-once delivery,
@@ -456,6 +462,7 @@ def streaming_sketch_maintenance(spark: SparkSession, sf: str) -> DataFrame:
               ROUND(SUM(value), 4) AS sum_value,
               MIN(value) AS min_value, MAX(value) AS max_value
        FROM events GROUP BY 1""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_matview_maintenance(spark: SparkSession, sf: str) -> DataFrame:
     """Standing materialized aggregate under at-least-once delivery,
@@ -659,7 +666,12 @@ def _probe_fixture_oracle() -> str:
         return f.read()
 
 
-@q("linear_probe_predictions", _probe_fixture_oracle())
+@q(
+    "linear_probe_predictions",
+    _probe_fixture_oracle(),
+    # literal predictions regenerated by tools/gen_probe_fixture.py
+    scale="sf0.01",
+)
 def linear_probe_predictions(spark: SparkSession, sf: str) -> DataFrame:
     """Closed-form LINEAR PROBE (operators/similarity.py
     linear_probe_fit/predict — the FineWeb-Edu-style
@@ -693,7 +705,13 @@ def _al_fixture_oracle() -> str:
         return f.read()
 
 
-@q("active_learning_selection", _al_fixture_oracle())
+@q(
+    "active_learning_selection",
+    _al_fixture_oracle(),
+    # literal bottom-k margin selection regenerated from the sf0.01 corpus
+    # by tools/gen_al_fixture.py
+    scale="sf0.01",
+)
 def active_learning_selection(spark: SparkSession, sf: str) -> DataFrame:
     """ACTIVE-LEARNING selection (operators/similarity.py
     linear_probe_margins — uncertainty sampling, Lewis & Gale 1994):
@@ -931,6 +949,9 @@ def ivf_sq8_search(spark: SparkSession, sf: str) -> DataFrame:
          ('adc_trained',    5, CAST(0.38 AS DOUBLE)),
          ('rerank_trained', 5, CAST(0.98 AS DOUBLE)))
        AS t(variant, k, recall)""",
+    # literal recall contract (seeded/trained/rerank) pinned at the gate
+    # scale: recall is a property of the corpus
+    scale="sf0.01",
 )
 def pq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     """PQ quantizer-quality certification (round-6 verdict directive
@@ -972,6 +993,8 @@ def pq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
          ('adc_rotated',    5, CAST(0.32 AS DOUBLE)),
          ('rerank_rotated', 5, CAST(0.94 AS DOUBLE)))
        AS t(variant, k, recall)""",
+    # literal OPQ recall contract pinned at the gate scale
+    scale="sf0.01",
 )
 def opq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     """OPQ-lite rotation certification (operators/similarity.py
@@ -1052,6 +1075,8 @@ def opq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
          ('ivf_sq8_probe4',     5, CAST(0.38 AS DOUBLE)),
          ('ivf_sq8_probe_all',  5, CAST(1.0  AS DOUBLE)))
        AS t(variant, k, recall)""",
+    # literal SQ8/IVF-SQ8 recall contract pinned at the gate scale
+    scale="sf0.01",
 )
 def sq8_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     """SQ8 quantizer-quality certification (the pq_recall_at_k
@@ -1171,7 +1196,14 @@ def cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@q("ann_lsh_topk", _COSINE_ORACLE)
+@q(
+    "ann_lsh_topk",
+    _COSINE_ORACLE,
+    # the exact top-k oracle holds because LSH recall@5 is 1.0 at sf0.01; at
+    # sf0.001 a bucket is 10x smaller and a true neighbour can legitimately
+    # miss
+    scale="sf0.01",
+)
 def ann_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Random-hyperplane LSH ANN, verified for EQUALITY with the exact
     top-k oracle: the final ranking is an exact cosine re-rank of the
@@ -1461,6 +1493,8 @@ def nsw_topk(spark: SparkSession, sf: str) -> DataFrame:
          ('graph_sparse',     5, CAST(0.84 AS DOUBLE)),
          ('cells_probe_2of4', 5, CAST(0.56 AS DOUBLE)))
        AS t(variant, k, recall)""",
+    # literal NSW recall curve pinned at the gate scale
+    scale="sf0.01",
 )
 def nsw_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     """NSW quality certification (the pq_recall_at_k pattern — the
@@ -1508,6 +1542,8 @@ def nsw_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
          ('beam_ef64',    5, CAST(0.96 AS DOUBLE), CAST(0.7239 AS DOUBLE)),
          ('reach_scored', 5, CAST(1.0  AS DOUBLE), CAST(0.9378 AS DOUBLE)))
        AS t(variant, k, recall, visited_frac)""",
+    # literal beam-vs-reachability cost curve pinned at the gate scale
+    scale="sf0.01",
 )
 def nsw_beam_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     """TRUE best-first beam search over the NSW graph
@@ -1559,6 +1595,8 @@ def nsw_beam_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
          ('hnsw_ef64', 5, CAST(0.96 AS DOUBLE), CAST(0.7324 AS DOUBLE)),
          ('beam_ef32', 5, CAST(0.88 AS DOUBLE), CAST(0.5214 AS DOUBLE)))
        AS t(variant, k, recall, visited_frac)""",
+    # literal hierarchy-vs-flat-beam contract pinned at the gate scale
+    scale="sf0.01",
 )
 def hnsw_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     """HIERARCHICAL NSW (similarity.cosine_topk_hnsw — Malkov &
@@ -1819,6 +1857,7 @@ cassign AS (
 SELECT p.vec_id, a.cell, CAST(p.m AS INTEGER) AS m,
        CAST(p.j AS INTEGER) AS code
 FROM pcodes p JOIN cassign a USING (vec_id)""",
+    unbenched="persisted-index lifecycle; ivf_pq_search benches its kernels",
 )
 def ann_index_build_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     """PERSISTED ANN index lifecycle (operators/ann_index.py — r10
@@ -1920,6 +1959,7 @@ SELECT query_id, neighbor_id,
        ROUND(cos, 4) AS cosine_r4
 FROM rr
 QUALIFY rank <= 5""",
+    unbenched="persisted-index lifecycle; ivf_pq_search benches its kernels",
 )
 def ann_index_search_stored(spark: SparkSession, sf: str) -> DataFrame:
     """Search FROM THE STORED index (the serving half of the
@@ -2020,7 +2060,14 @@ FROM layers l LEFT JOIN edges e
   ON e.vec_id = l.vec_id AND e.lvl = l.lvl"""
 
 
-@q("hnsw_index_build_lifecycle", _HNSW_STORE_ORACLE)
+@q(
+    "hnsw_index_build_lifecycle",
+    _HNSW_STORE_ORACLE,
+    # the id-prefix build/admit split (380/440) is sized for the sf0.01
+    # corpus; at sf0.001 the batch would be empty
+    scale="sf0.01",
+    unbenched="persisted graph-index lifecycle; hnsw_recall_at_k is benched",
+)
 def hnsw_index_build_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     """PERSISTED GRAPH-ANN index lifecycle (operators/hnsw_index.py —
     r11 verdict missing #4, the ann_index.py template applied to the
@@ -2140,6 +2187,12 @@ def hnsw_index_build_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
          (9, 198, CAST(4 AS BIGINT), CAST(0.2587 AS DOUBLE)),
          (9, 438, CAST(5 AS BIGINT), CAST(0.2224 AS DOUBLE)))
        AS t(query_id, neighbor_id, rank, cosine_r4)""",
+    # literal stored-graph search contract pinned at the gate scale (the
+    # walk is not SQL-expressible; the graph it reads is SQL-certified by
+    # hnsw_index_build_lifecycle, and the row asserts in-plan equality with
+    # cosine_topk_hnsw)
+    scale="sf0.01",
+    unbenched="persisted graph-index lifecycle; hnsw_recall_at_k is benched",
 )
 def hnsw_index_search_stored(spark: SparkSession, sf: str) -> DataFrame:
     """Search FROM THE STORED graph (the serving half): build over

@@ -75,7 +75,11 @@ WITH sh AS (
 SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.5"""
 
 
-@q("near_dup_jaccard_exact", _JACCARD_ORACLE)
+@q(
+    "near_dup_jaccard_exact",
+    _JACCARD_ORACLE,
+    unbenched="quadratic exact twin of the benched near_dup_lsh",
+)
 def near_dup_jaccard_exact(spark: SparkSession, sf: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs (the verify kernel of the
     LSH path, run exhaustively — correctness-scale only)."""
@@ -168,7 +172,11 @@ WITH RECURSIVE sh AS (
 SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY node"""
 
 
-@q("dedup_clusters_exact", _CLUSTERS_ORACLE)
+@q(
+    "dedup_clusters_exact",
+    _CLUSTERS_ORACLE,
+    unbenched="quadratic exact twin of the benched near_dup_clusters_lsh",
+)
 def dedup_clusters_exact(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup cluster assignment over the exact Jaccard pair list:
     connected components, cluster_id = min doc_id in the component

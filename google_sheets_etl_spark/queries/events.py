@@ -143,6 +143,7 @@ def events_json_extract(spark: SparkSession, sf: str) -> DataFrame:
          ('ss-beta',  '2024-03-01T12:00:00Z'),
          ('ss-gamma', '2024-03-02T08:30:00Z')
        ) AS t(google_spreadsheet_id, google_modified)""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_discovery_cursor(spark: SparkSession, sf: str) -> DataFrame:
     """The reference's cron-driven delta-discovery loop (O1/O6) as a

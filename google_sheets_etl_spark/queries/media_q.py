@@ -1089,7 +1089,14 @@ def _jpeg_oracle() -> str:
         return f.read()
 
 
-@q("jpeg_decode_features", _jpeg_oracle())
+@q(
+    "jpeg_decode_features",
+    _jpeg_oracle(),
+    # literal luminance sums regenerated by the independent JPEG decoder in
+    # tools/gen_jpeg_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
+)
 def jpeg_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     """REAL baseline-JPEG decode end-to-end (operators/jpeg.py —
     round-7 verdict "missing #2" names JPEG as a real pipeline's
@@ -1202,7 +1209,12 @@ def _jpeg420_oracle() -> str:
         return f.read()
 
 
-@q("jpeg420_decode_features", _jpeg420_oracle())
+@q(
+    "jpeg420_decode_features",
+    _jpeg420_oracle(),
+    # 4:2:0 literal luminance fixture (tools/gen_jpeg_fixture.py)
+    scale="sf0.01",
+)
 def jpeg420_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     """4:2:0 chroma-subsampled JPEG decode end-to-end — the r10
     verdict's "missing #1": ~90% of real web-crawl JPEGs are 4:2:0
@@ -1314,7 +1326,12 @@ def _jpegdri_oracle() -> str:
         return f.read()
 
 
-@q("jpeg_dri_decode_features", _jpegdri_oracle())
+@q(
+    "jpeg_dri_decode_features",
+    _jpegdri_oracle(),
+    # restart-interval literal luminance fixture (tools/gen_jpeg_fixture.py)
+    scale="sf0.01",
+)
 def jpeg_dri_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     """RESTART-INTERVAL JPEG decode (round 11): DRI + byte-aligned
     RSTn markers with modulo-8 cycle check, per-interval DC-predictor
@@ -1418,7 +1435,12 @@ def jpeg_dri_decode_audit(spark: SparkSession, sf: str) -> DataFrame:
     return multimodal.payload_decode_audit(media)
 
 
-@q("jpeg_progressive_decode_features", _jpeg420_oracle())
+@q(
+    "jpeg_progressive_decode_features",
+    _jpeg420_oracle(),
+    # reuses the 4:2:0 fixture (same coefficients)
+    scale="sf0.01",
+)
 def jpeg_progressive_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     """PROGRESSIVE JPEG decode (SOF2 — with 4:2:0 the other dominant
     real-web shape; large web images are routinely saved progressive):
@@ -1934,6 +1956,7 @@ _AUDIO_DHASH_SQL = """WITH
     "audio_dhash_fingerprints",
     _AUDIO_DHASH_SQL + """
        SELECT doc_id AS media_id, adhash FROM adh""",
+    unbenched="~26 s at sf0.1, >90% of it building WAV fixtures in-plan",
 )
 def audio_dhash_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
     """Audio ENVELOPE hash over real decoded PCM
@@ -1955,6 +1978,7 @@ def audio_dhash_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
        SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.adhash
        FROM adh a JOIN adh b
          ON a.adhash = b.adhash AND a.doc_id < b.doc_id""",
+    unbenched="~26 s at sf0.1, >90% of it building WAV fixtures in-plan",
 )
 def audio_dhash_near_dup(spark: SparkSession, sf: str) -> DataFrame:
     """Audio near-dup pairs by envelope-hash EQUALITY (at 16 bits the
@@ -2084,6 +2108,10 @@ def _adpcm_media(spark: SparkSession, sf: str) -> DataFrame:
     "wav_adpcm_energy",
     f"""WITH base AS ({_ADPCM_ORACLE})
        SELECT media_id, win_idx, rms, sample_rate FROM base""",
+    # IMA-ADPCM literal fixture regenerated from the sf0.01 corpus by
+    # tools/gen_adpcm_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
 )
 def wav_adpcm_energy(spark: SparkSession, sf: str) -> DataFrame:
     """COMPRESSED-audio decode end-to-end through the SHARED energy
@@ -2638,6 +2666,10 @@ def _avi_media(spark: SparkSession, sf: str) -> DataFrame:
     f"""WITH base AS ({_AVI_ORACLE})
        SELECT media_id, frame_idx, width, height, lum_sum
        FROM base""",
+    # MJPEG-AVI literal fixture regenerated from the sf0.01 corpus by
+    # tools/gen_avi_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
 )
 def avi_mjpeg_frame_stats(spark: SparkSession, sf: str) -> DataFrame:
     """MJPEG-in-AVI frame extraction end-to-end: the strict RIFF movi
@@ -2662,6 +2694,10 @@ def avi_mjpeg_frame_stats(spark: SparkSession, sf: str) -> DataFrame:
               delta_next AS delta_sum,
               delta_next > 53 * n_px AS is_cut
        FROM base WHERE delta_next IS NOT NULL""",
+    # MJPEG-AVI literal fixture regenerated from the sf0.01 corpus by
+    # tools/gen_avi_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
 )
 def avi_mjpeg_scene_cuts(spark: SparkSession, sf: str) -> DataFrame:
     """Scene-cut detection over REAL video containers: consecutive
@@ -3011,6 +3047,9 @@ def _mp4_media(spark: SparkSession, sf: str) -> DataFrame:
     f"""WITH base AS ({_AVI_ORACLE})
        SELECT media_id, frame_idx, width, height, lum_sum
        FROM base""",
+    # reuses the AVI fixture (samples byte-identical across containers), so
+    # it pins to the same corpus scale
+    scale="sf0.01",
 )
 def mp4_mjpeg_frame_stats(spark: SparkSession, sf: str) -> DataFrame:
     """MJPEG-in-MP4 frame extraction end-to-end: the strict ISO-BMFF
@@ -3273,7 +3312,14 @@ def _pdf_payloads(d: DataFrame):
     )
 
 
-@q("pdf_text_extract", _pdf_text_oracle())
+@q(
+    "pdf_text_extract",
+    _pdf_text_oracle(),
+    # literal page texts regenerated by the independent extractor in
+    # tools/gen_pdf_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
+)
 def pdf_text_extract(spark: SparkSession, sf: str) -> DataFrame:
     """PDF TEXT EXTRACTION end-to-end (operators/pdf.py — round-10
     directive #6: Common Crawl-adjacent corpora carry PDF, and the
@@ -3385,7 +3431,12 @@ def _pdf15_text_oracle() -> str:
         return f.read()
 
 
-@q("pdf15_text_extract", _pdf15_text_oracle())
+@q(
+    "pdf15_text_extract",
+    _pdf15_text_oracle(),
+    # PDF 1.5 literal page texts (tools/gen_pdf_fixture.py)
+    scale="sf0.01",
+)
 def pdf15_text_extract(spark: SparkSession, sf: str) -> DataFrame:
     """PDF 1.5 TEXT EXTRACTION (r10 verdict missing #5: most
     post-2005 PDFs carry cross-reference STREAMS, so real corpora
@@ -3903,6 +3954,10 @@ def _mp3_media(spark: SparkSession, sf: str) -> DataFrame:
               CAST(duration_us AS BIGINT) AS duration_us,
               is_vbr, has_xing
        FROM mp3s""",
+    # literal frame stats regenerated by the independent MPEG header walker
+    # in tools/gen_mp3_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
 )
 def mp3_frame_stats(spark: SparkSession, sf: str) -> DataFrame:
     """MPEG-audio frame-header walk (r11 verdict missing #5): per

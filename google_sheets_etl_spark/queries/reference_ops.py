@@ -228,6 +228,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf: str) -> DataFrame:
          (CAST(0 AS BIGINT), 'alice', '31', CAST(1 AS BIGINT)),
          (CAST(1 AS BIGINT), 'bob',  NULL, CAST(1 AS BIGINT))
        ) AS t(_origin_row, person, age, _origin_etl_job_id)""",
+    unbenched="3-pass engine-orchestration check on a 2-row fixture",
 )
 def etl_lifecycle_target(spark: SparkSession, sf: str) -> DataFrame:
     """The FULL incremental-ETL lifecycle (U1-U8, O1-O3), driver-
@@ -280,6 +281,7 @@ def etl_lifecycle_target(spark: SparkSession, sf: str) -> DataFrame:
     """SELECT lang, COUNT(*) AS n_rows,
               CAST(SUM(n_chars) AS BIGINT) AS sum_chars
        FROM documents GROUP BY lang""",
+    unbenched="multi-pass table-rewrite lifecycle check",
 )
 def compaction_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     """Small-file compaction maintenance pass (plans/compaction.py),
@@ -357,6 +359,7 @@ def compaction_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
               n_chars + CASE WHEN doc_id % 3 = 0 THEN 1000 ELSE 0 END
                 AS payload
        FROM documents""",
+    unbenched="multi-pass table-rewrite lifecycle check",
 )
 def streaming_upsert_latest_wins(spark: SparkSession, sf: str) -> DataFrame:
     """The foreachBatch MERGE sink (streaming/upsert_sink.py),
@@ -504,6 +507,7 @@ def _drain_to_memory(df: DataFrame, prefix: str, mode: str) -> DataFrame:
     """SELECT date_trunc('hour', ts) AS window_start, event_type,
               COUNT(*) AS n
        FROM events GROUP BY 1, 2""",
+    unbenched="streaming check; its batch twin events_hourly is benched",
 )
 def streaming_hourly_counts(spark: SparkSession, sf: str) -> DataFrame:
     """The REAL Structured Streaming path, oracle-checked: file-source
@@ -528,6 +532,7 @@ def streaming_hourly_counts(spark: SparkSession, sf: str) -> DataFrame:
          FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
        SELECT user_id, CAST(SUM(new_s) AS BIGINT) AS n_sessions
        FROM marked GROUP BY user_id""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_sessionize_stateful(spark: SparkSession, sf: str) -> DataFrame:
     """CUSTOM STATEFUL streaming operator, driver-certified:
@@ -553,6 +558,7 @@ def streaming_sessionize_stateful(spark: SparkSession, sf: str) -> DataFrame:
 @q(
     "streaming_dedup_watermark",
     """SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_dedup_watermark(spark: SparkSession, sf: str) -> DataFrame:
     """``dropDuplicatesWithinWatermark`` end-to-end, driver-certified:
@@ -599,6 +605,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf: str) -> DataFrame:
         AND l.event_type = 'click' AND r.event_type = 'error'
         AND l.ts >= r.ts AND l.ts <= r.ts + INTERVAL 1 HOUR
        GROUP BY r.event_id""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     """STREAM-STREAM interval join, driver-certified: clicks and
@@ -652,6 +659,7 @@ def streaming_interval_join(spark: SparkSession, sf: str) -> DataFrame:
          ON e.user_id = c.user_id
         AND c.ts >= e.ts AND c.ts <= e.ts + INTERVAL 1 HOUR
        GROUP BY 1""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_interval_join_left(spark: SparkSession, sf: str) -> DataFrame:
     """LEFT-OUTER stream-stream interval join — the semantics the

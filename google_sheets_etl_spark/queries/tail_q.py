@@ -278,6 +278,7 @@ def incremental_embedding_admission(spark: SparkSession, sf: str) -> DataFrame:
     """SELECT c.c_mktsegment AS segment, e.event_type, COUNT(*) AS n
        FROM events e JOIN customer c ON e.user_id = c.c_custkey
        GROUP BY 1, 2""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_static_enrich(spark: SparkSession, sf: str) -> DataFrame:
     """STREAM-STATIC broadcast enrichment, driver-certified: the event

@@ -163,6 +163,10 @@ nbpred AS (
 @q(
     "langid_trained_predictions",
     f"WITH {_LANGID_NB_PRED_CTES}\nSELECT * FROM nbpred",
+    # the oracle's NB weights are trained on the sf0.01 corpus by
+    # tools/gen_langid_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
 )
 def langid_trained_predictions(spark: SparkSession, sf: str) -> DataFrame:
     """TRAINED language identification (r10 verdict missing #2 — the
@@ -204,6 +208,10 @@ def langid_trained_predictions(spark: SparkSession, sf: str) -> DataFrame:
                             THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
        FROM nbpred p JOIN heldout h USING (doc_id)
        GROUP BY 1, 2""",
+    # the oracle's NB weights are trained on the sf0.01 corpus by
+    # tools/gen_langid_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
 )
 def langid_trained_confusion(spark: SparkSession, sf: str) -> DataFrame:
     """The confusion matrix for the TRAINED language-ID model,

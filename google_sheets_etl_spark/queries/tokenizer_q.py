@@ -409,7 +409,13 @@ def _unigram_em_oracle() -> str:
         return f.read()
 
 
-@q("unigram_train_hard_em", _unigram_em_oracle())
+@q(
+    "unigram_train_hard_em",
+    _unigram_em_oracle(),
+    # literal trained piece table regenerated from the sf0.01 corpus by
+    # tools/gen_unigram_fixture.py
+    scale="sf0.01",
+)
 def unigram_train_hard_em(spark: SparkSession, sf: str) -> DataFrame:
     """Unigram-LM TRAINING (operators/text.py unigram_train_hard_em):
     hard-EM (Viterbi-EM) refinement of the seeded piece model — per
@@ -428,7 +434,15 @@ def unigram_train_hard_em(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@q("bpe_learn_merges_k200", _bpe_k200_oracle())
+@q(
+    "bpe_learn_merges_k200",
+    _bpe_k200_oracle(),
+    # literal merge table regenerated from the sf0.01 corpus by
+    # tools/gen_bpe_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
+    unbenched="~90 sequential rounds to pair exhaustion; k=20 is benched",
+)
 def bpe_learn_merges_k200(spark: SparkSession, sf: str) -> DataFrame:
     """Realistic-k BPE training (round-6 verdict directive #7): the
     SAME incremental trainer as ``bpe_learn_merges`` asked for 200
@@ -470,7 +484,13 @@ def _bpe_k1000_oracle() -> str:
         return f.read()
 
 
-@q("bpe_learn_merges_k1000", _bpe_k1000_oracle())
+@q(
+    "bpe_learn_merges_k1000",
+    _bpe_k1000_oracle(),
+    # k=1000 sibling of bpe_learn_merges_k200 over the words-plus-bigrams
+    # vocabulary
+    scale="sf0.01",
+)
 def bpe_learn_merges_k1000(spark: SparkSession, sf: str) -> DataFrame:
     """Realistic-DEPTH BPE training, 10× the k200 row (round-7
     verdict directive #5), in the production architecture: the corpus
@@ -590,7 +610,14 @@ def _bpe_k10000_oracle() -> str:
         return f.read()
 
 
-@q("bpe_learn_merges_k10000", _bpe_k10000_oracle())
+@q(
+    "bpe_learn_merges_k10000",
+    _bpe_k10000_oracle(),
+    # k=10000 sibling of bpe_learn_merges_k200 over the words, bigrams and
+    # trigrams vocabulary
+    scale="sf0.01",
+    unbenched="10 000 sequential driver rounds (SCALE.md); k=20 is benched",
+)
 def bpe_learn_merges_k10000(spark: SparkSession, sf: str) -> DataFrame:
     """PRODUCTION-scale BPE training — 10× the k=1000 row, within
     reach of real tokenizer vocabularies (GPT-2: 50k merges; BERT
@@ -974,6 +1001,10 @@ def _bytelevel_plant(spark: SparkSession, sf: str) -> DataFrame:
 @q(
     "bpe_bytelevel_learn_merges",
     _bytelevel_fixture("bpe_bytelevel_merges_sf001.sql"),
+    # byte-level (GPT-2) literal fixture regenerated from the sf0.01 corpus
+    # by tools/gen_bytelevel_bpe_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
 )
 def bpe_bytelevel_learn_merges(spark: SparkSession, sf: str) -> DataFrame:
     """BYTE-LEVEL BPE training — the GPT-2/GPT-3/RoBERTa tokenizer
@@ -999,6 +1030,10 @@ def bpe_bytelevel_learn_merges(spark: SparkSession, sf: str) -> DataFrame:
 @q(
     "bpe_bytelevel_token_count",
     _bytelevel_fixture("bpe_bytelevel_tokens_sf001.sql"),
+    # byte-level (GPT-2) literal fixture regenerated from the sf0.01 corpus
+    # by tools/gen_bytelevel_bpe_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
 )
 def bpe_bytelevel_token_count(spark: SparkSession, sf: str) -> DataFrame:
     """The INFERENCE half of the byte-level tokenizer, per document:

@@ -461,7 +461,12 @@ def incremental_near_dup_admission(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@q("ann_recall_at_k", "SELECT 5 AS k, 1.0 AS recall")
+@q(
+    "ann_recall_at_k",
+    "SELECT 5 AS k, 1.0 AS recall",
+    # the literal-1.0 recall contract holds at the driver's gate scale
+    scale="sf0.01",
+)
 def ann_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     """The approximation contract behind ``ann_lsh_topk``'s exact-SQL
     oracle, registered as its own driver row (round-3 verdict directive
@@ -604,6 +609,10 @@ pred AS (
 SELECT doc_id, pred_label, q_nb_score,
        pred_label = 'keep' AS keep_pred
 FROM pred""",
+    # trained-quality-NB weight fixture regenerated from the sf0.01 corpus
+    # by tools/gen_quality_nb_fixture.py (freshness test in
+    # tests/test_queries_oracle.py)
+    scale="sf0.01",
 )
 def quality_classifier_trained(spark: SparkSession, sf: str) -> DataFrame:
     """TRAINED quality classifier (r11 verdict missing #3): the
@@ -1057,6 +1066,7 @@ def modern_aggregates(spark: SparkSession, sf: str) -> DataFrame:
               MIN(l_partkey) AS min_pk, MAX(l_partkey) AS max_pk,
               TRUE AS both_dims_bounded
        FROM lineitem""",
+    unbenched="writes 16 tiles per call; zorder_layout_stats is benched",
 )
 def zorder_write_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     """The REAL z-order write path (operators/layout.py

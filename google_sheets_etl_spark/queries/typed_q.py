@@ -615,6 +615,7 @@ SELECT doc_id, n_bigrams, bits_per_bigram FROM bits"""
        SELECT f.doc_id, f.content_hash, b.n_bigrams, b.bits_per_bigram
        FROM firsts f JOIN bits b USING (doc_id)
        WHERE b.bits_per_bigram <= 4.9""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_quality_admission(spark: SparkSession, sf: str) -> DataFrame:
     """The composed streaming INGEST GATE, driver-certified
@@ -688,6 +689,7 @@ def streaming_quality_admission(spark: SparkSession, sf: str) -> DataFrame:
                 WHEN 4 THEN 'unsupported payload format'
                 ELSE '' END AS err
        FROM documents""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_media_admission(spark: SparkSession, sf: str) -> DataFrame:
     """The streaming MULTIMODAL front door, driver-certified
@@ -801,6 +803,7 @@ def streaming_media_admission(spark: SparkSession, sf: str) -> DataFrame:
                 WHEN 4 THEN 'not a gzip payload'
                 ELSE '' END AS err
        FROM documents""",
+    unbenched="streaming check: micro-batch machinery, not throughput",
 )
 def streaming_web_admission(spark: SparkSession, sf: str) -> DataFrame:
     """The streaming WEB front door, driver-certified — the media
@@ -905,7 +908,11 @@ def _stream_suffix_oracle() -> str:
          FROM spans WHERE doc_id % 10 >= 5)"""
 
 
-@q("streaming_suffix_admission", _stream_suffix_oracle())
+@q(
+    "streaming_suffix_admission",
+    _stream_suffix_oracle(),
+    unbenched="streaming check: micro-batch machinery, not throughput",
+)
 def streaming_suffix_admission(spark: SparkSession, sf: str) -> DataFrame:
     """The streaming SUFFIX front door, driver-certified
     (streaming/suffix_stream.py — incremental_duplicate_spans driven

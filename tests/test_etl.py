@@ -981,6 +981,30 @@ def test_typed_target_with_a_stale_load_starts_only_the_counters_jobs(
     assert n == alone
 
 
+def test_typed_target_reads_the_target_once(engine, jobs, monkeypatch):
+    """``typed_target`` reads the target table once per call, whether
+    it profiles a stale load (the stale slice is cut from that read)
+    or not."""
+    from google_sheets_etl_spark.plans.target_table import TargetTable
+
+    engine.find_updated_spreadsheets(now=1)
+    engine.load_updated_spreadsheets(jobs)
+    reads = []
+    real = TargetTable.read
+
+    def read(self):
+        reads.append(self.path)
+        return real(self)
+
+    monkeypatch.setattr(TargetTable, "read", read)
+    engine.typed_target("table_a")
+    assert len(engine.last_profiled_job_ids) == 1
+    assert len(reads) == 1
+    engine.typed_target("table_a")
+    assert engine.last_profiled_job_ids == []
+    assert len(reads) == 2
+
+
 def test_typed_target_without_profile_store(spark, tmp_path, source, jobs):
     """A warehouse whose ``__meta_profiles`` was never created gets
     every load profiled by the first typed view: the full-table

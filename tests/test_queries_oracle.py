@@ -1,5 +1,6 @@
 """Local replica of the driver's correctness gate: run every
-``queries()`` entry and its ``oracle_sql()`` twin at sf0.001, compare
+``queries()`` entry and its ``oracle_sql()`` twin at sf0.001 (a row
+whose ``@q`` site declares a ``scale``, on that corpus), compare
 row count + column names + an order-insensitive TYPE-SENSITIVE value
 multiset (shared with tools/driver_mimic.py) — Spark long vs DuckDB
 HUGEINT-as-float mismatches fail here, as they do in the real gate."""
@@ -9,15 +10,24 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry_mod
-from google_sheets_etl_spark.queries import ORACLE_SCALE, oracle_sf_dir
+from google_sheets_etl_spark.queries import benched, oracle_sf_dir
 from tools.driver_mimic import canon, connect_views
 
 
 @pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = connect_views(sf_dir)
-    yield con
-    con.close()
+def duck():
+    """``duck(corpus_dir)``: one DuckDB connection per corpus directory
+    for the whole module, all closed at its end."""
+    cons = {}
+
+    def connect(corpus_dir):
+        if corpus_dir not in cons:
+            cons[corpus_dir] = connect_views(corpus_dir)
+        return cons[corpus_dir]
+
+    yield connect
+    for con in cons.values():
+        con.close()
 
 
 ORACLED = sorted(entry_mod.oracle_sql().keys())
@@ -39,16 +49,14 @@ def assert_scalar_schema(df, name):
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, sf_dir, duck, name):
-    if name in ORACLE_SCALE:
-        sf_dir = oracle_sf_dir(name, sf_dir)
-        duck = connect_views(sf_dir)
+    sf_dir = oracle_sf_dir(name, sf_dir)
     qdf = entry_mod.queries()[name](spark, sf_dir)
     assert_scalar_schema(qdf, name)
     spark_cols = qdf.columns
     spark_rows = [tuple(r) for r in qdf.collect()]
 
     # pandas fetch path (the driver's): DuckDB HUGEINT → float64
-    pdf = duck.execute(entry_mod.oracle_sql()[name]).df()
+    pdf = duck(sf_dir).execute(entry_mod.oracle_sql()[name]).df()
     duck_cols = list(pdf.columns)
     duck_rows = list(pdf.itertuples(index=False, name=None))
 
@@ -71,6 +79,62 @@ def test_rows_only_queries_run(spark, sf_dir, name):
     # floor is successful execution with named output columns
     assert isinstance(df.count(), int)
     assert len(df.columns) > 0
+
+
+def test_benched_set_is_declared_at_the_query_sites():
+    """``benched()`` is the registry's order minus the queries whose
+    ``@q`` site gives a reason to leave them out of the bench."""
+    from google_sheets_etl_spark.queries import QUERIES, _core
+
+    names = benched()
+    assert len(names) == 291
+    assert names == [n for n in QUERIES if n in names]
+    for name in set(QUERIES) - set(names):
+        assert _core._UNBENCHED.get(name, "").strip(), f"{name}: no reason"
+    with pytest.raises(ValueError, match="reason"):
+        _core.q("__no_reason__", unbenched=" ")
+    assert "__no_reason__" not in QUERIES
+
+
+def test_bench_loops_over_the_registry_benched_set():
+    """bench.py keeps no query list of its own: it times ``benched()``
+    and names no registered query."""
+    import ast
+    import os
+
+    from google_sheets_etl_spark.queries import QUERIES
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "bench.py")) as fh:
+        tree = ast.parse(fh.read())
+    assert any(
+        isinstance(node, ast.For) and ast.unparse(node.iter) == "benched()"
+        for node in ast.walk(tree)
+    )
+    named = {
+        node.value
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+    }
+    assert not named & set(QUERIES)
+
+
+def test_declared_oracle_scales(sf_dir):
+    """Every declared scale names an sf corpus directory beside the one
+    a run is given; an undeclared row is checked at ``sf_dir`` itself."""
+    import os
+    import re
+
+    from google_sheets_etl_spark.queries import ORACLE, QUERIES, _core
+
+    assert _core._SCALE and set(_core._SCALE) <= set(ORACLE)
+    for name, scale in _core._SCALE.items():
+        assert re.fullmatch(r"sf[0-9]+(\.[0-9]+)?", scale), (name, scale)
+        row_dir = oracle_sf_dir(name, sf_dir)
+        assert os.path.basename(row_dir) == scale
+        assert os.path.isdir(row_dir), row_dir
+    for name in set(QUERIES) - set(_core._SCALE):
+        assert oracle_sf_dir(name, sf_dir) == sf_dir
 
 
 def test_mimic_rejects_nonscalar_output(spark):

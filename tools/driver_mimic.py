@@ -7,9 +7,10 @@ row count, sorted column names, and a TYPE-SENSITIVE order-insensitive
 value multiset (so DuckDB HUGEINT→float vs Spark long mismatches are
 caught locally, unlike a numeric-equality compare).
 
-A row whose oracle contract names a scale (``ORACLE_SCALE`` in the
-query registry) is checked on that scale's corpus, the sibling of
-``sf_dir``, as ``tests/test_queries_oracle.py`` checks it.
+A row whose ``@q`` site declares a ``scale`` (the corpus its oracle
+contract is pinned to) is checked on that scale's corpus, the sibling
+of ``sf_dir`` (``oracle_sf_dir``), as ``tests/test_queries_oracle.py``
+checks it.
 
 Usage:  python tools/driver_mimic.py [sf_dir] [query ...]
 """
@@ -146,7 +147,7 @@ def main() -> int:
         row_dir = oracle_sf_dir(name, sf_dir)
         if row_dir != sf_dir:
             row["sf_dir"] = row_dir
-            print(f"     {name}: checked at {os.path.basename(row_dir)}, the scale its oracle names")
+            print(f"     {name}: checked at {os.path.basename(row_dir)}, its declared scale")
         if row_dir not in cons:
             cons[row_dir] = connect_views(row_dir)
         con = cons[row_dir]
@@ -228,6 +229,8 @@ def main() -> int:
           f"{sum(1 for r in results.values() if r.get('err') == 'no_oracle')} rows-only")
     with open("/tmp/driver_mimic.json", "w") as f:
         json.dump(results, f, indent=1, default=str)
+    for con in cons.values():
+        con.close()
     spark.stop()
     return 1 if n_red else 0
 
