@@ -49,8 +49,8 @@ Scale shape: per-payload work inside Arrow batches (the multimodal
 kernel contract) — embarrassingly parallel across input splits, no
 shuffle. Huffman entropy decode is inherently sequential PER PAYLOAD
 (a bitstream), which is the correct grain: one pathological mega-image
-bounds one task, never a stage. Clusters with Pillow installed take
-the PilCodec path; this is the zero-dependency floor.
+bounds one task, never a stage. No image library is needed on any
+host: every JPEG payload decodes (and every resize re-encodes) here.
 """
 
 from __future__ import annotations

@@ -9,12 +9,13 @@ many small-ish files (row-group ≈ a few hundred MB) so scans split well;
 the kernels here are narrow — they scale with input splits and never
 shuffle.
 
-Codec reality in this environment: the image/audio libraries are not
-installed, so the *decode step only* is pluggable —
-:func:`default_codec` is a deterministic stand-in (byte-histogram
-features, metadata-derived frame offsets) and a real codec (PIL/ffmpeg)
-drops in behind the same interface. Schemas, batch shapes, and the
-Spark plumbing are real and tested either way.
+Decoding is pure Python with no media library: one magic-byte sniff
+(:func:`sniff_format`) picks a strict parser from ``_IMAGE_PARSERS``
+(ppm, png, jpeg, gif, bmp, tiff, webp) and, for resizing, an encoder
+from ``_IMAGE_ENCODERS``, so every image operator gets the same
+formats and the same pixels on every host. A payload no parser
+accepts falls back to deterministic byte arithmetic (a byte
+histogram for features, a sha-prefix marker for resize).
 
 MEDIA_SCHEMA mirrors the "typed metadata next to opaque payload" shape:
 
@@ -28,7 +29,6 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
-from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -54,87 +54,12 @@ MEDIA_SCHEMA = StructType([
 ])
 
 
-@dataclass
-class MediaCodec:
-    """The pluggable decode boundary. Implementations must be
-    deterministic per payload for retry-idempotence."""
-
-    name: str
-
-    def image_features(self, payload: bytes, n_bins: int) -> list[float]:
-        raise NotImplementedError
-
-    def resize(self, payload: bytes, width: int, height: int) -> bytes:
-        raise NotImplementedError
-
-
-class StubCodec(MediaCodec):
-    """Deterministic stand-in codec (no media libs in this container).
-
-    - ``image_features``: normalized byte-value histogram — a real
-      (if crude) content feature that is stable across partitionings.
-    - ``resize``: payload passthrough + metadata rewrite, marked by a
-      deterministic 8-char ASCII header (the sha256 hex prefix of the
-      input — ASCII so the marked payload stays SQL-expressible for
-      the oracle twin) — REAL resizing requires PIL; the Spark
-      plumbing (batch shape, schema evolution) is identical.
-    """
-
-    def __init__(self) -> None:
-        super().__init__(name="stub")
-
-    def image_features(self, payload: bytes, n_bins: int) -> list[float]:
-        counts = [0] * n_bins
-        for b in payload:
-            counts[b % n_bins] += 1
-        total = len(payload) or 1
-        return [c / total for c in counts]
-
-    def resize(self, payload: bytes, width: int, height: int) -> bytes:
-        return hashlib.sha256(payload).hexdigest()[:8].encode("ascii") + payload
-
-
-class PilCodec(MediaCodec):  # pragma: no cover - PIL absent in this container
-    """Real image codec over Pillow — registered by :func:`default_codec`
-    whenever ``PIL`` imports; the Spark-side plumbing (schemas, Arrow
-    batch shapes, partitioning) is byte-identical to the stub path, so
-    deploying onto a cluster with Pillow installed changes ONLY the
-    decode arithmetic. Deterministic per payload (pure decode + exact
-    integer histogram fold / fixed-filter resize) — retry-idempotent."""
-
-    def __init__(self) -> None:
-        super().__init__(name="pil")
-
-    def image_features(self, payload: bytes, n_bins: int) -> list[float]:
-        import io as _io
-
-        from PIL import Image
-
-        hist = Image.open(_io.BytesIO(payload)).convert("L").histogram()
-        counts = [0] * n_bins
-        for lum, c in enumerate(hist):  # fold 256 luminance bins → n_bins
-            counts[lum * n_bins // 256] += c
-        total = sum(hist) or 1
-        return [c / total for c in counts]
-
-    def resize(self, payload: bytes, width: int, height: int) -> bytes:
-        import io as _io
-
-        from PIL import Image
-
-        img = Image.open(_io.BytesIO(payload))
-        fmt = img.format or "PNG"
-        out = _io.BytesIO()
-        img.resize((width, height), resample=Image.BILINEAR).save(out, format=fmt)
-        return out.getvalue()
-
-
 def _p6_header(payload: bytes, pos: int) -> tuple[int, int, int]:
     """Tokenize one P6 header starting at byte ``pos`` →
     (width, height, raster_start). Skips whitespace runs and
     ``#``-to-newline comments per the spec; exactly one whitespace
     byte after maxval. The ONE header definition shared by the
-    single-image codec (:meth:`PpmCodec.parse`) and the video
+    single-image parser (:func:`parse_ppm`) and the video
     container walk (:func:`parse_ppm_frames`) — two tokenizers would
     drift."""
     if payload[pos : pos + 2] != b"P6":
@@ -258,7 +183,7 @@ def _lzw_decode(data: bytes, min_code_size: int, expected: int) -> bytes:
 
 def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
     """Real greedy-longest-match GIF LZW encoder (fixture assembly +
-    :meth:`GifCodec.resize` re-encode): dictionary hits emit multi-
+    :func:`_resize_gif` re-encode): dictionary hits emit multi-
     pixel codes, so decode exercises the table-extension and KwKwK
     paths — not the degenerate all-literals 'uncompressed GIF'
     stream. Emits CLEAR up front and whenever the table fills (4096),
@@ -441,7 +366,7 @@ def encode_gif(
 ) -> bytes:
     """GIF89a encoder — :func:`parse_gif_indexed`'s inverse, used by
     fixture assembly (oracles certify the DECODER against formula-
-    regenerated pixels) and :meth:`GifCodec.resize`. ``frames`` are
+    regenerated pixels) and :func:`_resize_gif`. ``frames`` are
     palette-index rasters; >1 frame emits an animated GIF with a real
     graphic-control extension per frame (+ NETSCAPE2.0 loop block),
     exercising the extension-skip walk on every animated fixture."""
@@ -479,12 +404,11 @@ def encode_gif(
 def _raster_luminance_features(
     w: int, h: int, px, n_bins: int
 ) -> list[float]:
-    """THE certified luminance-histogram contract, shared by every
-    raster codec (review finding: four verbatim copies): per pixel
-    ``lum = (r+g+b)//3``, bin ``lum·n_bins//256``, counts normalized
-    by pixel count. Numpy-vectorized; all-integer arithmetic, so it
-    is bit-identical to the scalar twin PpmCodec keeps as its
-    equivalence oracle."""
+    """THE certified luminance-histogram contract for every decoded
+    raster: per pixel ``lum = (r+g+b)//3``, bin ``lum·n_bins//256``,
+    counts normalized by pixel count. Numpy-vectorized; all-integer
+    arithmetic, so it is bit-identical to the scalar twin
+    :func:`_image_features_scalar`, its equivalence oracle."""
     import numpy as np
 
     arr = np.frombuffer(px, dtype=np.uint8).reshape(-1, 3)
@@ -497,86 +421,62 @@ def _raster_luminance_features(
 def _resample_raster(
     w: int, h: int, px, width: int, height: int
 ) -> bytes:
-    """THE nearest-neighbor resample rule shared by every raster
-    codec's resize: output pixel (x, y) reads source pixel
-    ``(x·w//width, y·h//height)`` — index-grid fancy-indexing,
-    bit-identical to the scalar rule. Returns raw RGB bytes; each
-    codec re-encodes in its own container."""
+    """THE nearest-neighbor resample rule of :func:`resize_payload`:
+    output pixel (x, y) reads source pixel ``(x·w//width, y·h//height)``
+    — index-grid fancy-indexing, bit-identical to the scalar rule
+    (:func:`_resize_scalar`). ``px`` holds ``w·h`` pixels of any fixed
+    byte width (RGB triples, or GIF palette indices); the result has
+    the same layout, and the caller re-encodes it in the payload's
+    own container. An empty raster has no pixel to sample."""
     import numpy as np
 
-    arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, 3)
+    if not w * h:
+        raise ValueError("cannot resample an empty raster")
+    arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w, -1)
     sy = (np.arange(height, dtype=np.int64) * h) // height
     sx = (np.arange(width, dtype=np.int64) * w) // width
     return arr[sy[:, None], sx[None, :]].tobytes()
 
 
-class PpmCodec(MediaCodec):
-    """REAL image codec for binary PPM (P6) — pure Python, zero
-    libraries, so real pixel arithmetic runs and is oracle-able in
-    THIS container (round-4 verdict directive #3; the PIL path stays
-    import-gated for clusters).
+def parse_ppm(payload: bytes) -> tuple[int, int, memoryview]:
+    """Binary PPM (P6) → (width, height, raw RGB bytes) — pure Python,
+    zero libraries. P6 is the uncompressed RGB interchange format:
+    ASCII header ``P6 <width> <height> <maxval>`` (whitespace-separated,
+    ``#`` comments allowed) followed by ``width*height*3`` raw RGB
+    bytes. Only maxval 255 (1 byte/channel) is supported — the fixture
+    and oracle contract; other maxvals raise. Bytes past the first
+    raster are ignored (a concatenated-P6 video reads as its first
+    frame)."""
+    w, h, start = _p6_header(payload, 0)
+    raster = memoryview(payload)[start : start + w * h * 3]
+    if len(raster) != w * h * 3:
+        raise ValueError("truncated ppm raster")
+    return w, h, raster
 
-    P6 is the uncompressed RGB interchange format: ASCII header
-    ``P6 <width> <height> <maxval>`` (whitespace-separated, ``#``
-    comments allowed) followed by ``width*height*3`` raw RGB bytes.
-    Both operations are exact integer arithmetic, deterministic per
-    payload:
 
-    - ``image_features``: luminance histogram — per pixel
-      ``lum = (r + g + b) // 3``, bin = ``lum * n_bins // 256``,
-      counts normalized by pixel count.
-    - ``resize``: nearest-neighbor resampling — output pixel (x, y)
-      reads source pixel ``(x * w // out_w, y * h // out_h)``; emits
-      a fresh P6 payload with a canonical single-space header.
+# scalar formulations over P6 payloads, kept as the equivalence oracle
+# for the vectorized _raster_luminance_features / _resample_raster
+# (tests assert bit-identity on random images); not used on any hot path
+def _image_features_scalar(payload: bytes, n_bins: int) -> list[float]:
+    w, h, px = parse_ppm(payload)
+    counts = [0] * n_bins
+    for p in range(w * h):
+        lum = (px[3 * p] + px[3 * p + 1] + px[3 * p + 2]) // 3
+        counts[lum * n_bins // 256] += 1
+    total = w * h or 1
+    return [c / total for c in counts]
 
-    Only maxval 255 (1 byte/channel) is supported — the fixture and
-    oracle contract; other maxvals raise.
-    """
 
-    def __init__(self) -> None:
-        super().__init__(name="ppm")
-
-    @staticmethod
-    def parse(payload: bytes) -> tuple[int, int, memoryview]:
-        """Header → (width, height, raw RGB bytes). Tokenizer skips
-        whitespace runs and ``#``-to-newline comments per the spec."""
-        w, h, start = _p6_header(payload, 0)
-        raster = memoryview(payload)[start : start + w * h * 3]
-        if len(raster) != w * h * 3:
-            raise ValueError("truncated ppm raster")
-        return w, h, raster
-
-    def image_features(self, payload: bytes, n_bins: int) -> list[float]:
-        return _raster_luminance_features(*self.parse(payload), n_bins)
-
-    def resize(self, payload: bytes, width: int, height: int) -> bytes:
-        w, h, px = self.parse(payload)
-        return b"P6\n%d %d\n255\n" % (width, height) + _resample_raster(
-            w, h, px, width, height
-        )
-
-    # scalar formulations kept as the equivalence oracle for the
-    # vectorized kernels above (tests assert bit-identity on random
-    # images); not used on any hot path
-    def _image_features_scalar(self, payload: bytes, n_bins: int) -> list[float]:
-        w, h, px = self.parse(payload)
-        counts = [0] * n_bins
-        for p in range(w * h):
-            lum = (px[3 * p] + px[3 * p + 1] + px[3 * p + 2]) // 3
-            counts[lum * n_bins // 256] += 1
-        total = w * h or 1
-        return [c / total for c in counts]
-
-    def _resize_scalar(self, payload: bytes, width: int, height: int) -> bytes:
-        w, h, px = self.parse(payload)
-        out = bytearray(b"P6\n%d %d\n255\n" % (width, height))
-        for y in range(height):
-            sy = y * h // height
-            for x in range(width):
-                sx = x * w // width
-                p = 3 * (sy * w + sx)
-                out += px[p : p + 3]
-        return bytes(out)
+def _resize_scalar(payload: bytes, width: int, height: int) -> bytes:
+    w, h, px = parse_ppm(payload)
+    out = bytearray(b"P6\n%d %d\n255\n" % (width, height))
+    for y in range(height):
+        sy = y * h // height
+        for x in range(width):
+            sx = x * w // width
+            p = 3 * (sy * w + sx)
+            out += px[p : p + 3]
+    return bytes(out)
 
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -586,7 +486,7 @@ def parse_png(payload: bytes) -> tuple[int, int, bytes]:
     """Strict pure-Python decoder for TRUECOLOR 8-bit PNG (color type
     2, sequential OR Adam7-interlaced) → (width, height, raw RGB
     bytes) — the same
-    raster shape :meth:`PpmCodec.parse` returns, so every image
+    raster shape :func:`parse_ppm` returns, so every image
     operator composes over PNG unchanged (round-7 verdict directive
     #4: a real pipeline's first byte is PNG/JPEG, not P6). zlib is
     stdlib, so the whole container — chunk walk, CRC32 verification,
@@ -602,10 +502,8 @@ def parse_png(payload: bytes) -> tuple[int, int, bytes]:
 
     Scale note: Sub/Average/Paeth reconstruction carries a per-pixel
     prefix dependency, so those rows decode in a Python loop (None/Up
-    vectorize); production clusters with Pillow installed take the
-    PilCodec path and this decoder is the zero-dependency floor —
-    the per-payload cost is what matters, and payloads decode
-    embarrassingly parallel inside Arrow batches either way."""
+    vectorize); the per-payload cost is what matters, and payloads
+    decode embarrassingly parallel inside Arrow batches."""
     import struct
     import zlib
 
@@ -746,8 +644,8 @@ def encode_png(
     """Truecolor-PNG encoder — :func:`parse_png`'s inverse, used by
     fixture assembly (so oracles certify the DECODER against
     formula-regenerated pixels, with the encoder exercising every
-    filter type via ``filters``) and by :meth:`PngCodec.resize` (to
-    emit PNG payloads like PpmCodec emits P6). ``filters`` gives the
+    filter type via ``filters``) and by :func:`resize_payload` (to
+    emit PNG payloads from PNG input). ``filters`` gives the
     per-scanline filter type (default all 0); the filtered bytes are
     the exact RFC 2083 inverses of the reconstruction above."""
     import struct
@@ -873,84 +771,13 @@ def encode_png_adam7(w: int, h: int, raster: bytes) -> bytes:
     )
 
 
-class PngCodec(MediaCodec):
-    """Real PNG image codec (pure Python + stdlib zlib): same feature
-    and resize arithmetic as :class:`PpmCodec` — exact integer
-    luminance ``(r+g+b)//3``, ``lum·n_bins//256`` binning,
-    ``x·w//out`` nearest-neighbor sampling — over :func:`parse_png`
-    rasters; ``resize`` re-encodes as PNG (filter 0)."""
-
-    def __init__(self) -> None:
-        super().__init__(name="png")
-
-    @staticmethod
-    def parse(payload: bytes) -> tuple[int, int, bytes]:
-        return parse_png(payload)
-
-    def image_features(self, payload: bytes, n_bins: int) -> list[float]:
-        return _raster_luminance_features(*parse_png(payload), n_bins)
-
-    def resize(self, payload: bytes, width: int, height: int) -> bytes:
-        w, h, px = parse_png(payload)
-        return encode_png(
-            width, height, _resample_raster(w, h, px, width, height)
-        )
-
-
-class JpegCodec(MediaCodec):
-    """Real baseline-JPEG codec (see :mod:`.jpeg`): same feature and
-    resize arithmetic as Ppm/PngCodec over :func:`jpeg.parse_jpeg`
-    rasters; ``resize`` re-encodes as baseline JPEG (lossy — the
-    format's contract, exactly like every production thumbnailer)."""
-
-    def __init__(self) -> None:
-        super().__init__(name="jpeg")
-
-    @staticmethod
-    def parse(payload: bytes) -> tuple[int, int, bytes]:
-        from . import jpeg as _jpeg
-
-        return _jpeg.parse_jpeg(payload)
-
-    def image_features(self, payload: bytes, n_bins: int) -> list[float]:
-        return _raster_luminance_features(*self.parse(payload), n_bins)
-
-    def resize(self, payload: bytes, width: int, height: int) -> bytes:
-        from . import jpeg as _jpeg
-
-        w, h, px = self.parse(payload)
-        return _jpeg.encode_jpeg(
-            width, height, _resample_raster(w, h, px, width, height)
-        )
-
-
-class GifCodec(MediaCodec):
-    """Real GIF codec (pure Python LZW): same feature and resize
-    arithmetic as Ppm/Png/JpegCodec over :func:`parse_gif` rasters.
-    ``resize`` resamples the palette INDEX raster and re-encodes with
-    the same palette — exact (GIF is lossless), no re-quantization."""
-
-    def __init__(self) -> None:
-        super().__init__(name="gif")
-
-    @staticmethod
-    def parse(payload: bytes) -> tuple[int, int, bytes]:
-        return parse_gif(payload)
-
-    def image_features(self, payload: bytes, n_bins: int) -> list[float]:
-        return _raster_luminance_features(*parse_gif(payload), n_bins)
-
-    def resize(self, payload: bytes, width: int, height: int) -> bytes:
-        import numpy as np
-
-        w, h, frames, palette = parse_gif_indexed(payload)
-        sy = (np.arange(height, dtype=np.int64) * h) // height
-        sx = (np.arange(width, dtype=np.int64) * w) // width
-        out = []
-        for idx in frames:
-            arr = np.frombuffer(idx, dtype=np.uint8).reshape(h, w)
-            out.append(arr[sy[:, None], sx[None, :]].tobytes())
-        return encode_gif(width, height, out, palette)
+def _resize_gif(payload: bytes, width: int, height: int) -> bytes:
+    """GIF resize: resample every frame's palette INDEX raster with
+    :func:`_resample_raster` and re-encode with the same palette —
+    exact (GIF is lossless), no re-quantization, animation kept."""
+    w, h, frames, palette = parse_gif_indexed(payload)
+    out = [_resample_raster(w, h, idx, width, height) for idx in frames]
+    return encode_gif(width, height, out, palette)
 
 
 def encode_tar(members: list[tuple[str, bytes]]) -> bytes:
@@ -2093,7 +1920,7 @@ def parse_mp4_mjpeg(payload: bytes) -> list[tuple[int, int, bytes]]:
 def sniff_format(payload: bytes) -> str | None:
     """THE magic-byte classifier — the single definition every
     dispatch surface consults (:func:`decode_image`,
-    :class:`SniffCodec`, :func:`payload_decode_audit`,
+    :func:`resize_payload`, :func:`payload_decode_audit`,
     :func:`parse_video_frames`). The review-caught hazard this
     removes: the sniff used to be written out four times, so a new
     format (or a prefix tweak) wired into the decode path but missed
@@ -2139,15 +1966,42 @@ def _parse_webp(payload: bytes) -> tuple[int, int, bytes]:
     return _webp.parse_webp(payload)
 
 
-#: strict image parsers by sniffed format — decode_image's table.
+def _encode_jpeg(w: int, h: int, raster: bytes) -> bytes:
+    from . import jpeg as _jpeg
+
+    return _jpeg.encode_jpeg(w, h, raster)
+
+
+def _encode_webp(w: int, h: int, raster: bytes) -> bytes:
+    from . import webp as _webp
+
+    return _webp.encode_webp_vp8l(w, h, raster)
+
+
+#: strict image parsers by sniffed format — decode_image's table, and
+#: the image half of payload_decode_audit's.
 _IMAGE_PARSERS = {
-    "ppm": lambda b: PpmCodec.parse(b),
+    "ppm": parse_ppm,
     "png": parse_png,
     "jpeg": _parse_jpeg,
     "gif": parse_gif,
     "bmp": parse_bmp,
     "tiff": lambda b: parse_tiff(b),
     "webp": lambda b: _parse_webp(b),
+}
+
+#: re-encoders by sniffed format — resize_payload's table: each writes
+#: a resampled (w, h, raw RGB) raster back in the payload's own
+#: container. GIF is the one image format without an entry: it
+#: resamples its palette-index frames instead (:func:`_resize_gif`),
+#: so it stays lossless and keeps its palette.
+_IMAGE_ENCODERS = {
+    "ppm": lambda w, h, px: b"P6\n%d %d\n255\n" % (w, h) + px,
+    "png": encode_png,
+    "jpeg": _encode_jpeg,
+    "bmp": encode_bmp,
+    "tiff": lambda w, h, px: encode_tiff(w, h, px),
+    "webp": _encode_webp,
 }
 
 
@@ -2188,75 +2042,46 @@ def parse_video_frames(payload: bytes) -> list[tuple[int, int, bytes]]:
     raise ValueError("unsupported payload format")
 
 
-class SniffCodec(MediaCodec):
-    """Per-payload magic-byte dispatch: P6 payloads decode through
-    the real :class:`PpmCodec`, PNG through :class:`PngCodec`, JPEG
-    through :class:`JpegCodec`, GIF through :class:`GifCodec`;
-    everything else falls back (PIL when installed, stub otherwise).
-    This is what :func:`default_codec` returns, so the stub is now
-    strictly a FALLBACK.
-
-    A payload that LOOKS like P6 but is malformed (truncated raster,
-    unsupported maxval, text that happens to start with 'P6') also
-    falls back rather than raising: one bad byte stream must not fail
-    the whole mapInPandas task — the previous default codec never
-    raised on arbitrary bytes, and that robustness is part of the
-    default contract. Use :class:`PpmCodec` directly to get strict
-    errors on malformed PPM."""
-
-    def __init__(self, fallback: MediaCodec) -> None:
-        super().__init__(name=f"sniff({fallback.name})")
-        self._ppm = PpmCodec()
-        self._png = PngCodec()
-        self._jpeg = JpegCodec()
-        self._gif = GifCodec()
-        self._fallback = fallback
-
-    def _pick(self, payload: bytes) -> MediaCodec | None:
-        return {
-            "ppm": self._ppm,
-            "png": self._png,
-            "jpeg": self._jpeg,
-            "gif": self._gif,
-        }.get(sniff_format(payload))
-
-    def image_features(self, payload: bytes, n_bins: int) -> list[float]:
-        real = self._pick(payload)
-        if real is not None:
-            try:
-                return real.image_features(payload, n_bins)
-            except ValueError:
-                pass  # magic-matching but undecodable → fallback
-        return self._fallback.image_features(payload, n_bins)
-
-    def resize(self, payload: bytes, width: int, height: int) -> bytes:
-        real = self._pick(payload)
-        if real is not None:
-            try:
-                return real.resize(payload, width, height)
-            except ValueError:
-                pass  # magic-matching but undecodable → fallback
-        return self._fallback.resize(payload, width, height)
-
-
-def default_codec() -> MediaCodec:
-    """P6, PNG, JPEG, and GIF decode for real everywhere (pure
-    Python); other formats use PIL when available, the stub
-    otherwise (import-gated)."""
+def payload_features(payload: bytes, n_bins: int) -> list[float]:
+    """One payload's ``n_bins``-bin luminance histogram
+    (:func:`_raster_luminance_features` of :func:`decode_image`). A
+    payload that does not decode — an unknown format, or one that
+    matches a magic but is malformed — gets its byte histogram instead
+    (byte ``b`` counts in bin ``b % n_bins``, normalized by the byte
+    count), so one bad byte stream never fails the whole task."""
     try:
-        from PIL import Image  # noqa: F401
+        return _raster_luminance_features(*decode_image(payload), n_bins)
+    except ValueError:
+        counts = [0] * n_bins
+        for b in payload:
+            counts[b % n_bins] += 1
+        total = len(payload) or 1
+        return [c / total for c in counts]
 
-        return SniffCodec(PilCodec())  # pragma: no cover - PIL absent here
-    except ImportError:
-        return SniffCodec(StubCodec())
+
+def resize_payload(payload: bytes, width: int, height: int) -> bytes:
+    """One payload resized to ``width``×``height`` by the
+    :func:`_resample_raster` rule and re-encoded in its own container
+    (``_IMAGE_ENCODERS``; GIF via :func:`_resize_gif`). A payload that
+    does not decode comes back as the 8-char sha256 hex prefix of its
+    bytes followed by the bytes unchanged — ASCII, so the marked
+    payload stays SQL-expressible for the oracle twin."""
+    fmt = sniff_format(payload)
+    try:
+        if fmt == "gif":
+            return _resize_gif(payload, width, height)
+        if fmt in _IMAGE_ENCODERS:
+            raster = _resample_raster(*decode_image(payload), width, height)
+            return _IMAGE_ENCODERS[fmt](width, height, raster)
+    except ValueError:
+        pass  # magic-matching but undecodable → the marked passthrough
+    return hashlib.sha256(payload).hexdigest()[:8].encode("ascii") + payload
 
 
-def image_features(
-    media: DataFrame, n_bins: int = 16, codec: MediaCodec | None = None
-) -> DataFrame:
-    """(media_id, feature: array<double>) for image rows — one Arrow
-    batch per task, bytes never round-trip per row."""
-    codec = codec or default_codec()
+def image_features(media: DataFrame, n_bins: int = 16) -> DataFrame:
+    """(media_id, feature: array<double>) for image rows, each
+    :func:`payload_features` — one Arrow batch per task, bytes never
+    round-trip per row."""
     schema = StructType([
         StructField("media_id", LongType()),
         StructField("feature", ArrayType(DoubleType())),
@@ -2269,7 +2094,7 @@ def image_features(
                 # NULL payload → NULL feature, never bytes(None)
                 # (the audio kernel's same guard, kept row-aligned)
                 "feature": [
-                    None if p is None else codec.image_features(bytes(p), n_bins)
+                    None if p is None else payload_features(bytes(p), n_bins)
                     for p in pdf["payload"]
                 ],
             })
@@ -2278,18 +2103,16 @@ def image_features(
     return imgs.mapInPandas(kernel, schema)
 
 
-def resize_images(
-    media: DataFrame, width: int, height: int, codec: MediaCodec | None = None
-) -> DataFrame:
-    """Rewrite image payloads + metadata to the target size; non-image
-    rows pass through untouched (union-by-name preserves the schema)."""
-    codec = codec or default_codec()
+def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
+    """Rewrite image payloads (:func:`resize_payload`) + metadata to
+    the target size; non-image rows pass through untouched
+    (union-by-name preserves the schema)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
             pdf["payload"] = [
-                None if p is None else codec.resize(bytes(p), width, height)
+                None if p is None else resize_payload(bytes(p), width, height)
                 for p in pdf["payload"]
             ]
             pdf["meta"] = [
@@ -2394,7 +2217,7 @@ def parse_wav_pcm16(payload: bytes) -> tuple[int, "object"]:
     so fmt-extension and LIST-bearing files parse too. Only
     format 1 (PCM) mono 16-bit is supported — strict ValueError
     otherwise (callers wanting lenience wrap it, same contract as
-    :class:`PpmCodec`)."""
+    :func:`parse_ppm`)."""
     import struct
 
     import numpy as np
@@ -3386,7 +3209,7 @@ def video_frame_deltas(
     ])
 
     def lum_of(frame_bytes: bytes):
-        _, _, raster = PpmCodec.parse(frame_bytes)
+        _, _, raster = parse_ppm(frame_bytes)
         arr = np.frombuffer(raster, dtype=np.uint8).reshape(-1, 3)
         return arr.astype(np.int64).sum(axis=1) // 3
 
@@ -3454,7 +3277,7 @@ def payload_decode_audit(
     ])
 
     def _audit_ppm(b: bytes) -> None:
-        w, h, _ = PpmCodec.parse(b)
+        w, h, _ = parse_ppm(b)
         _, _, start = _p6_header(b, 0)
         # payload extends past the first frame → it is a
         # concatenated-P6 VIDEO container: walk ALL frames
@@ -3469,20 +3292,18 @@ def payload_decode_audit(
             if any(f[:2] != frames[0][:2] for f in frames[1:]):
                 raise ValueError("frame dimensions changed mid-video")
 
-    # strict parse-only entry per sniffable format: the audit walks
-    # the SAME recognizer (sniff_format) as the decode dispatch, so a
-    # format added there without an audit entry fails loudly at the
-    # KeyError below instead of silently reporting 'unsupported'
-    # while the kernels decode it. GIF audits via the indexed parse
-    # (all frames, full strict walk).
+    # strict parse-only entry per sniffable format: the decode
+    # dispatch's own parsers, overlaid with the stricter walks of the
+    # two image formats that double as video containers (every P6
+    # frame, every GIF frame), plus the audio/video containers. The
+    # audit walks the SAME recognizer (sniff_format) as the decode
+    # dispatch, so a format added there without an entry here fails
+    # loudly at the KeyError below instead of silently reporting
+    # 'unsupported' while the kernels decode it.
     strict = {
+        **_IMAGE_PARSERS,
         "ppm": _audit_ppm,
-        "png": parse_png,
-        "jpeg": _parse_jpeg,
         "gif": parse_gif_indexed,
-        "bmp": parse_bmp,
-        "tiff": parse_tiff,
-        "webp": _parse_webp,
         "wav": parse_wav_samples,
         "avi": parse_avi_frames,
         "mp4": parse_mp4_mjpeg,

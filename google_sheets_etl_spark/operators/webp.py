@@ -451,7 +451,7 @@ def _apply_inverse_subtract_green(pix: list[int]) -> None:
 
 def parse_webp(payload: bytes) -> tuple[int, int, bytes]:
     """Strict decode -> (width, height, raw RGB bytes) — the shared
-    raster contract of parse_png / PpmCodec, so every image operator
+    raster contract of parse_png / parse_ppm, so every image operator
     composes over WebP unchanged. Alpha is decoded then dropped."""
     if len(payload) < 12 or payload[:4] != b"RIFF":
         raise ValueError("not a webp payload")

@@ -65,20 +65,16 @@ def _docs_as_media(d: DataFrame, kind: str) -> DataFrame:
          ON bins.media_id = cnt.media_id AND bins.bin = cnt.bin""",
 )
 def multimodal_image_features(spark: SparkSession, sf: str) -> DataFrame:
-    """The DECODE step driven end-to-end through the pluggable codec
-    (operators/multimodal.py): per-image byte-histogram features from
-    the Arrow ``mapInPandas`` kernel, exploded to (media_id, bin,
+    """The DECODE step's fallback driven end-to-end
+    (operators/multimodal.py image_features): document text is no
+    image format, so every payload takes the byte-histogram fallback
+    in the Arrow ``mapInPandas`` kernel, exploded to (media_id, bin,
     freq) rows. The oracle recomputes the histogram character-wise
     (ASCII payload ⇒ byte == codepoint) — certifying the batch shape,
-    the codec boundary, and the exact normalization arithmetic.
+    the fallback, and the exact normalization arithmetic.
     Narrow: bytes cross to Python once per Arrow batch, no shuffle."""
     media = _docs_as_media(t(spark, sf, "documents"), "image")
-    # codec pinned to the stub: the oracle is stub arithmetic in SQL,
-    # and the synthetic payloads aren't decodable images — default_codec
-    # would pick the REAL PIL codec wherever Pillow is installed
-    feats = multimodal.image_features(
-        media, n_bins=16, codec=multimodal.StubCodec()
-    )
+    feats = multimodal.image_features(media, n_bins=16)
     return feats.select(
         "media_id",
         F.posexplode("feature").alias("bin", "freq"),
@@ -116,18 +112,16 @@ def multimodal_frame_sample(spark: SparkSession, sf: str) -> DataFrame:
        FROM documents""",
 )
 def multimodal_resize_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """The TRANSFORM step (resize) driven end-to-end: payloads pass
-    the stub codec's deterministic resize (ASCII sha-prefix marker +
-    passthrough), then the typed-metadata pass hashes the REWRITTEN
+    """The TRANSFORM step (resize) driven end-to-end: document text
+    decodes as no image, so every payload takes resize's
+    deterministic fallback (ASCII sha-prefix marker + passthrough),
+    then the typed-metadata pass hashes the REWRITTEN
     payloads. The oracle rebuilds the marked payload in SQL and
     re-hashes it — certifying that the kernel rewrote every byte
     stream exactly as specified, batch-shape intact. Narrow end to
     end; meta rewrite checked via the unchanged 'raw' format."""
     media = _docs_as_media(t(spark, sf, "documents"), "image")
-    # stub codec pinned — same reason as multimodal_image_features
-    resized = multimodal.resize_images(
-        media, width=64, height=64, codec=multimodal.StubCodec()
-    )
+    resized = multimodal.resize_images(media, width=64, height=64)
     return multimodal.payload_stats(resized)
 
 
@@ -350,18 +344,16 @@ def image_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
 )
 def multimodal_ppm_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     """REAL pixel decode end-to-end (operators/multimodal.py
-    PpmCodec, round-4 verdict directive #3): binary P6 payloads are
+    parse_ppm, round-4 verdict directive #3): binary P6 payloads are
     parsed (header tokenizer + raster) and reduced to a 16-bin
     LUMINANCE histogram — (r+g+b)//3 integer arithmetic on actual
-    decoded channel bytes, not a byte-histogram stand-in. The codec
-    arrives via default_codec()'s magic-byte sniff (P6 → PpmCodec),
-    certifying the dispatch too. The oracle regenerates every pixel
+    decoded channel bytes, not a byte-histogram stand-in. The parser
+    is reached through decode_image's magic-byte sniff (P6 →
+    parse_ppm), certifying the dispatch too. The oracle regenerates every pixel
     from the fixture formula and recomputes the histogram — decode
     certified against ground truth. Narrow Arrow kernel; no
     shuffle beyond the posexplode projection."""
-    feats = multimodal.image_features(
-        _ppm_media(spark, sf), n_bins=16, codec=multimodal.default_codec()
-    )
+    feats = multimodal.image_features(_ppm_media(spark, sf), n_bins=16)
     return feats.select(
         "media_id", F.posexplode("feature").alias("bin", "freq")
     )
@@ -402,10 +394,7 @@ def multimodal_ppm_resize_stats(spark: SparkSession, sf: str) -> DataFrame:
     the P6 blob in SQL, and compares the FULL payload hex —
     pixel-exact transform certification. Meta rewrite visible as the unchanged 'ppm'
     format + constant 71-byte payloads."""
-    resized = multimodal.resize_images(
-        _ppm_media(spark, sf), width=5, height=4,
-        codec=multimodal.default_codec(),
-    )
+    resized = multimodal.resize_images(_ppm_media(spark, sf), width=5, height=4)
     return resized.select(
         "media_id",
         "kind",
@@ -564,7 +553,8 @@ def png_dhash_fingerprints(spark: SparkSession, sf: str) -> DataFrame:
 def png_resize_luminance(spark: SparkSession, sf: str) -> DataFrame:
     """PNG resize ROUND-TRIP certification: decode (inflate + filter
     reconstruction) → nearest-neighbor resample to 5×4 → RE-ENCODE as
-    PNG (PngCodec.resize) → decode again → exact luminance mass. The
+    PNG (resize_payload's png encoder) → decode again → exact
+    luminance mass. The
     oracle computes the sampled source pixels straight from the
     fixture formula (the multimodal_ppm_resize_stats sampling rule),
     so a single byte off anywhere in decode→resample→encode→decode
@@ -576,9 +566,7 @@ def png_resize_luminance(spark: SparkSession, sf: str) -> DataFrame:
         "payload",
         F.lit(None).cast(multimodal.META_STRUCT).alias("meta"),
     )
-    resized = multimodal.resize_images(
-        media, width=5, height=4, codec=multimodal.default_codec()
-    )
+    resized = multimodal.resize_images(media, width=5, height=4)
     return multimodal.image_luminance_sum(resized, ["media_id"])
 
 
@@ -1630,8 +1618,8 @@ def gif_decode_features(spark: SparkSession, sf: str) -> DataFrame:
     exact-integer luminance mass per image. The oracle regenerates
     every pixel from the palette/index formulas, so one wrong bit
     anywhere in the code stream walk shifts the sum. The GIF magic in
-    decode_image gives dHash/near-dup/clusters/resize the format for
-    free (SniffCodec routes it the same way)."""
+    decode_image gives dHash/near-dup/clusters/features the format
+    for free, and resize_images resamples its palette indices."""
     return multimodal.image_luminance_sum(
         _gif_media(spark, sf), ["media_id"]
     )

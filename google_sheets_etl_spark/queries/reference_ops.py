@@ -805,19 +805,18 @@ def sheet_ingest_kernel(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import normalize as norm_ops
     from ..operators import rows as K
     from ..sources import SheetsDataSource
-    from ..sources.spark_datasource import enable_filter_pushdown
 
     try:
         spark.dataSource.register(SheetsDataSource)
     except Exception:
         pass  # already registered in this session
-    # self-enable pushdown at runtime (harness sessions don't set it);
-    # fall back to the unpruned reader + Spark-side filter if disabled
-    pushdown = enable_filter_pushdown(spark)
+    # the gsheets reader prunes partitions through pushFilters, which
+    # Spark accepts only with this runtime conf on; a session not built
+    # by get_spark leaves it at its default (off)
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     sheet = (
         spark.read.format("gsheets")
         .option("path", os.path.join(_FIXTURES_DIR, "sheets.json"))
-        .option("pushdown", "true" if pushdown else "false")
         .load()
         .filter(
             (F.col("spreadsheet_id") == "fixture-spreadsheet-1")

@@ -72,16 +72,14 @@ class SheetPartition(InputPartition):
         self.sheet_name = sheet_name
 
 
-class SheetsReaderNoPushdown(DataSourceReader):
-    """Fallback reader: identical scan, no ``pushFilters`` override.
-
-    Spark 4.1 rejects any reader that *defines* ``pushFilters`` when
-    ``spark.sql.python.filterPushdown.enabled`` is false — so in a
-    session where that conf can't be enabled, this variant reads every
-    (spreadsheet, sheet) partition and lets Spark apply the filters as
-    ordinary post-scan predicates.  Correctness is unchanged; only
-    partition pruning is lost.
-    """
+class SheetsReader(DataSourceReader):
+    """One partition per (spreadsheet, sheet), pruned by the equality
+    and IN predicates on ``spreadsheet_id`` / ``sheet_name`` that
+    :meth:`pushFilters` accepts. Spark 4.1 rejects a reader that
+    defines ``pushFilters`` unless the session sets
+    ``spark.sql.python.filterPushdown.enabled`` (a runtime conf):
+    :func:`session.get_spark` sets it, and code that reads from a
+    session it did not build sets it first."""
 
     def __init__(self, options: dict[str, str]):
         self.path = options.get("path")
@@ -89,6 +87,19 @@ class SheetsReaderNoPushdown(DataSourceReader):
             raise ValueError("gsheets source requires .option('path', fixture.json)")
         # (column, allowed-values) conjuncts accepted by pushFilters
         self.pruned: list[tuple[str, set[str]]] = []
+
+    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
+        for f in filters:
+            col = f.attribute[0] if isinstance(f, (EqualTo, In)) else None
+            if col in ("spreadsheet_id", "sheet_name"):
+                if isinstance(f, EqualTo):
+                    self.pruned.append((col, {f.value}))
+                else:
+                    self.pruned.append((col, set(f.values)))
+                # fully handled: equality on a partition column prunes
+                # exactly; nothing left for Spark to re-check
+            else:
+                yield f
 
     def _keep(self, spreadsheet_id: str, sheet_name: str) -> bool:
         row = {"spreadsheet_id": spreadsheet_id, "sheet_name": sheet_name}
@@ -119,21 +130,6 @@ class SheetsReaderNoPushdown(DataSourceReader):
             )
 
 
-class SheetsReader(SheetsReaderNoPushdown):
-    def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
-        for f in filters:
-            col = f.attribute[0] if isinstance(f, (EqualTo, In)) else None
-            if col in ("spreadsheet_id", "sheet_name"):
-                if isinstance(f, EqualTo):
-                    self.pruned.append((col, {f.value}))
-                else:
-                    self.pruned.append((col, set(f.values)))
-                # fully handled: equality on a partition column prunes
-                # exactly; nothing left for Spark to re-check
-            else:
-                yield f
-
-
 class SheetsDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -142,26 +138,8 @@ class SheetsDataSource(DataSource):
     def schema(self) -> str:
         return SHEETS_SCHEMA
 
-    def reader(self, schema) -> SheetsReaderNoPushdown:
-        if self.options.get("pushdown", "true").lower() == "false":
-            return SheetsReaderNoPushdown(dict(self.options))
+    def reader(self, schema) -> SheetsReader:
         return SheetsReader(dict(self.options))
-
-
-def enable_filter_pushdown(spark) -> bool:
-    """Best-effort runtime enable of Python-datasource filter pushdown.
-
-    ``spark.sql.python.filterPushdown.enabled`` is a runtime conf in
-    Spark 4.1 (the DATA_SOURCE_PUSHDOWN_DISABLED error says to set it),
-    so this works in sessions we didn't build.  Returns True when the
-    conf is on; callers should pass ``.option("pushdown", "false")``
-    when it returns False.
-    """
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-        return spark.conf.get("spark.sql.python.filterPushdown.enabled") == "true"
-    except Exception:
-        return False
 
 
 # ---------------------------------------------------------------------

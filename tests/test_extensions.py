@@ -284,78 +284,31 @@ def test_embedding_near_dup_auto_dispatches_on_footer_stats(spark, sf_dir, monke
     assert df.columns == ["id_a", "id_b", "cosine_r4"]
 
 
-def _codecs_under_test():
+def test_codec_contract_features_and_resize(spark):
+    """The image operators' contract through the REAL Spark plumbing,
+    on a payload no parser decodes: normalized features of the right
+    arity equal to the per-payload function (deterministic), and a
+    resize that rewrites the payload + metadata."""
     from google_sheets_etl_spark.operators import multimodal as mm
 
-    codecs = [mm.StubCodec()]
-    try:
-        from PIL import Image  # noqa: F401
-
-        codecs.append(mm.PilCodec())
-    except ImportError:
-        pass
-    return codecs
-
-
-@pytest.mark.parametrize(
-    "codec", _codecs_under_test(), ids=lambda c: c.name
-)
-def test_codec_contract_features_and_resize(spark, codec):
-    """Both codec implementations must satisfy the MediaCodec contract
-    through the REAL Spark plumbing: normalized features of the right
-    arity, deterministic across calls, and a resize that rewrites the
-    payload + metadata. Runs the PIL branch wherever Pillow exists
-    (stub-only in this container)."""
-    from google_sheets_etl_spark.operators import multimodal as mm
-
-    if codec.name == "pil":
-        import io as _io
-
-        from PIL import Image
-
-        buf = _io.BytesIO()
-        Image.new("RGB", (8, 6), (200, 10, 10)).save(buf, format="PNG")
-        payload = buf.getvalue()
-    else:
-        payload = b"deterministic fake image bytes"
-
+    payload = b"deterministic fake image bytes"
     rows = [(1, "image", bytearray(payload),
              {"width": 8, "height": 6, "duration_ms": 0,
               "sample_rate": 0, "format": "png"})]
     media = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
 
-    feats = mm.image_features(media, n_bins=16, codec=codec).collect()
+    feats = mm.image_features(media, n_bins=16).collect()
     assert len(feats) == 1
     f = feats[0]["feature"]
     assert len(f) == 16
     assert abs(sum(f) - 1.0) < 1e-9
-    assert f == codec.image_features(payload, 16)  # deterministic
+    assert f == mm.payload_features(payload, 16)  # deterministic
 
-    resized = mm.resize_images(media, 4, 3, codec=codec).collect()
+    resized = mm.resize_images(media, 4, 3).collect()
     assert len(resized) == 1
     assert resized[0]["meta"]["width"] == 4 and resized[0]["meta"]["height"] == 3
     assert bytes(resized[0]["payload"]) != payload
-    if codec.name == "pil":
-        import io as _io
-
-        from PIL import Image
-
-        out = Image.open(_io.BytesIO(bytes(resized[0]["payload"])))
-        assert out.size == (4, 3)
-
-
-def test_default_codec_selection_matches_environment():
-    """default_codec is the P6-sniffing dispatcher (r5); its FALLBACK
-    tracks the environment: PIL when importable, stub otherwise."""
-    from google_sheets_etl_spark.operators import multimodal as mm
-
-    try:
-        from PIL import Image  # noqa: F401
-
-        expected = "sniff(pil)"
-    except ImportError:
-        expected = "sniff(stub)"
-    assert mm.default_codec().name == expected
+    assert bytes(resized[0]["payload"]) == mm.resize_payload(payload, 4, 3)
 
 
 def test_incremental_embedding_admission_planted(spark):
@@ -439,16 +392,17 @@ def test_ppm_codec_parses_decodes_and_resizes_pixel_exact():
     libraries. Hand-built 2x2 P6 (with a header comment) must decode
     to the exact luminance histogram and nearest-neighbor-resize to
     exact bytes."""
-    from google_sheets_etl_spark.operators.multimodal import PpmCodec
+    from google_sheets_etl_spark.operators.multimodal import (
+        parse_ppm, payload_features, resize_payload,
+    )
 
     # pixels: (0,0,0) (255,255,255) / (30,60,90) (200,100,0)
     raster = bytes([0, 0, 0, 255, 255, 255, 30, 60, 90, 200, 100, 0])
     payload = b"P6\n# a comment\n2 2\n255\n" + raster
-    codec = PpmCodec()
-    w, h, px = codec.parse(payload)
+    w, h, px = parse_ppm(payload)
     assert (w, h, bytes(px)) == (2, 2, raster)
 
-    feats = codec.image_features(payload, 16)
+    feats = payload_features(payload, 16)
     # lums: 0, 255, 60, 100 -> bins 0, 15, 3, 6; each 1/4
     expected = [0.0] * 16
     for b in (0, 15, 3, 6):
@@ -456,45 +410,60 @@ def test_ppm_codec_parses_decodes_and_resizes_pixel_exact():
     assert feats == expected
 
     # upscale 2x2 -> 4x2: src_x = x*2//4 = [0,0,1,1] per row
-    up = codec.resize(payload, 4, 2)
+    up = resize_payload(payload, 4, 2)
     assert up.startswith(b"P6\n4 2\n255\n")
     body = up[len(b"P6\n4 2\n255\n"):]
     r = raster
     assert body == (r[0:3] + r[0:3] + r[3:6] + r[3:6]
                     + r[6:9] + r[6:9] + r[9:12] + r[9:12])
     # downscale to 1x1 keeps the top-left pixel
-    assert codec.resize(payload, 1, 1) == b"P6\n1 1\n255\n" + r[0:3]
+    assert resize_payload(payload, 1, 1) == b"P6\n1 1\n255\n" + r[0:3]
 
 
 def test_ppm_codec_rejects_bad_payloads():
     import pytest
 
-    from google_sheets_etl_spark.operators.multimodal import PpmCodec
+    from google_sheets_etl_spark.operators.multimodal import parse_ppm
 
-    codec = PpmCodec()
     with pytest.raises(ValueError, match="not a P6"):
-        codec.parse(b"P5\n1 1\n255\n\x00")
+        parse_ppm(b"P5\n1 1\n255\n\x00")
     with pytest.raises(ValueError, match="maxval"):
-        codec.parse(b"P6\n1 1\n65535\n\x00\x00\x00\x00\x00\x00")
+        parse_ppm(b"P6\n1 1\n65535\n\x00\x00\x00\x00\x00\x00")
     with pytest.raises(ValueError, match="truncated"):
-        codec.parse(b"P6\n2 2\n255\n\x00\x00\x00")
+        parse_ppm(b"P6\n2 2\n255\n\x00\x00\x00")
+
+
+def _byte_histogram(payload: bytes, n_bins: int) -> list[float]:
+    """The undecodable-payload feature contract, written out: byte
+    ``b`` counts in bin ``b % n_bins``, normalized by the byte count."""
+    counts = [0] * n_bins
+    for b in payload:
+        counts[b % n_bins] += 1
+    return [c / (len(payload) or 1) for c in counts]
+
+
+def _marked_passthrough(payload: bytes) -> bytes:
+    """The undecodable-payload resize contract: the 8-char sha256 hex
+    prefix, then the payload unchanged."""
+    import hashlib
+
+    return hashlib.sha256(payload).hexdigest()[:8].encode() + payload
 
 
 def test_default_codec_sniffs_ppm_and_falls_back():
-    """default_codec must decode P6 for real and stub everything
-    else (this container has no PIL)."""
+    """The per-payload functions decode P6 for real and give every
+    payload no parser accepts the byte fallback."""
     from google_sheets_etl_spark.operators.multimodal import (
-        StubCodec, default_codec,
+        payload_features, resize_payload,
     )
 
-    codec = default_codec()
     ppm = b"P6\n1 1\n255\n\x00\x00\x00"  # one black pixel
-    feats = codec.image_features(ppm, 4)
+    feats = payload_features(ppm, 4)
     assert feats == [1.0, 0.0, 0.0, 0.0]  # real decode: lum 0 -> bin 0
-    # non-P6 payload routes to the stub (deterministic byte histogram)
+    # non-image payload takes the fallback (deterministic byte histogram)
     blob = b"hello"
-    assert codec.image_features(blob, 4) == StubCodec().image_features(blob, 4)
-    assert codec.resize(blob, 2, 2) == StubCodec().resize(blob, 2, 2)
+    assert payload_features(blob, 4) == _byte_histogram(blob, 4)
+    assert resize_payload(blob, 2, 2) == _marked_passthrough(blob)
 
 
 def test_semantic_dedup_upper_triangular_rule(spark):
@@ -568,17 +537,102 @@ def test_kmeans_lloyd_recovers_planted_clusters(spark):
 def test_sniff_codec_falls_back_on_malformed_p6():
     """Review fix: a payload that LOOKS like P6 but is undecodable
     must fall back, not raise — one bad byte stream must not kill a
-    whole mapInPandas task under default_codec."""
+    whole mapInPandas task."""
     from google_sheets_etl_spark.operators.multimodal import (
-        StubCodec, default_codec,
+        payload_features, resize_payload,
     )
 
-    codec = default_codec()
     for bad in (b"P6 is my favorite chip",
                 b"P6\n2 2\n255\n\x00\x00\x00",        # truncated raster
                 b"P6\n1 1\n65535\n\x00\x00\x00\x00\x00\x00"):  # maxval
-        assert codec.image_features(bad, 4) == StubCodec().image_features(bad, 4)
-        assert codec.resize(bad, 2, 2) == StubCodec().resize(bad, 2, 2)
+        assert payload_features(bad, 4) == _byte_histogram(bad, 4)
+        assert resize_payload(bad, 2, 2) == _marked_passthrough(bad)
+    # a 0x0 raster decodes (to an empty histogram) but has no pixel to
+    # resample: resize falls back instead of raising
+    empty = b"P6\n0 0\n255\n"
+    assert payload_features(empty, 4) == [0.0] * 4
+    assert resize_payload(empty, 2, 2) == _marked_passthrough(empty)
+
+
+def _one_image(fmt: str) -> bytes:
+    """A 9x7 image in ``fmt``, built with the package's own encoder
+    (odd sizes: BMP row padding, partial JPEG MCUs, TIFF strips)."""
+    from google_sheets_etl_spark.operators import multimodal as mm
+    from google_sheets_etl_spark.operators.jpeg import encode_jpeg
+    from google_sheets_etl_spark.operators.webp import encode_webp_vp8l
+
+    w, h = 9, 7
+    raster = bytes((k * 37 + 11) % 256 for k in range(w * h * 3))
+    if fmt == "gif":
+        pal = bytes(
+            (i * 7 + 3 * c) % 256 for i in range(256) for c in range(3)
+        )
+        idx = bytes((k * 29 + 5) % 256 for k in range(w * h))
+        return mm.encode_gif(w, h, [idx], pal)
+    return {
+        "ppm": lambda: b"P6\n%d %d\n255\n" % (w, h) + raster,
+        "png": lambda: mm.encode_png(w, h, raster),
+        "jpeg": lambda: encode_jpeg(w, h, raster),
+        "bmp": lambda: mm.encode_bmp(w, h, raster),
+        "tiff": lambda: mm.encode_tiff(w, h, raster),
+        "webp": lambda: encode_webp_vp8l(w, h, raster),
+    }[fmt]()
+
+
+@pytest.mark.parametrize(
+    "fmt", ["ppm", "png", "jpeg", "gif", "bmp", "tiff", "webp"]
+)
+def test_image_features_and_resize_decode_every_format(spark, fmt):
+    """image_features and resize_images decode every format that
+    decode_image decodes: features are the decoded raster's luminance
+    histogram, and the resized payload is the same container at the
+    target size — for the lossless formats exactly the
+    nearest-neighbor resample of the decoded raster."""
+    from google_sheets_etl_spark.operators import multimodal as mm
+
+    payload = _one_image(fmt)
+    assert mm.sniff_format(payload) == fmt
+    media = spark.createDataFrame(
+        [(1, "image", payload, None)], mm.MEDIA_SCHEMA
+    )
+    (feat,) = mm.image_features(media, n_bins=16).collect()
+    assert feat["feature"] == mm._raster_luminance_features(
+        *mm.decode_image(payload), 16
+    )
+
+    (row,) = mm.resize_images(media, 5, 4).collect()
+    out = bytes(row["payload"])
+    assert mm.sniff_format(out) == fmt
+    w2, h2, px2 = mm.decode_image(out)
+    assert (w2, h2) == (5, 4)
+    if fmt != "jpeg":  # lossy: dimensions only
+        assert bytes(px2) == mm._resample_raster(
+            *mm.decode_image(payload), 5, 4
+        )
+
+
+def test_image_operators_ignore_an_installed_pillow(spark, monkeypatch):
+    """Results do not change with the host: with a stand-in ``PIL``
+    importable, an undecodable payload still gets the byte histogram
+    and the marked passthrough."""
+    import sys
+    import types
+
+    from google_sheets_etl_spark.operators import multimodal as mm
+
+    pil = types.ModuleType("PIL")
+    pil.Image = types.ModuleType("PIL.Image")
+    monkeypatch.setitem(sys.modules, "PIL", pil)
+    monkeypatch.setitem(sys.modules, "PIL.Image", pil.Image)
+
+    payload = b"not an image at all"
+    media = spark.createDataFrame(
+        [(1, "image", payload, None)], mm.MEDIA_SCHEMA
+    )
+    (feat,) = mm.image_features(media, n_bins=4).collect()
+    assert feat["feature"] == _byte_histogram(payload, 4)
+    (row,) = mm.resize_images(media, 2, 2).collect()
+    assert bytes(row["payload"]) == _marked_passthrough(payload)
 
 
 def test_kmeans_lloyd_rejects_zero_iterations(spark):
@@ -934,19 +988,21 @@ def test_ppm_vectorized_matches_scalar_on_random_images():
     histogram floats exact, resized payload byte-for-byte."""
     import random
 
-    from google_sheets_etl_spark.operators.multimodal import PpmCodec
+    from google_sheets_etl_spark.operators.multimodal import (
+        _image_features_scalar, _resize_scalar, payload_features,
+        resize_payload,
+    )
 
     rng = random.Random(42)
-    codec = PpmCodec()
     for w, h in [(1, 1), (3, 7), (16, 16), (31, 2), (40, 25)]:
         raster = bytes(rng.randrange(256) for _ in range(w * h * 3))
         payload = b"P6\n# random fixture\n%d %d\n255\n" % (w, h) + raster
         for n_bins in (4, 16, 7):
-            assert codec.image_features(payload, n_bins) == \
-                codec._image_features_scalar(payload, n_bins)
+            assert payload_features(payload, n_bins) == \
+                _image_features_scalar(payload, n_bins)
         for ow, oh in [(1, 1), (w, h), (2 * w, h // 2 + 1), (5, 9)]:
-            assert codec.resize(payload, ow, oh) == \
-                codec._resize_scalar(payload, ow, oh)
+            assert resize_payload(payload, ow, oh) == \
+                _resize_scalar(payload, ow, oh)
 
 
 def test_pq_rerank_recall_and_code_shape(spark, sf_dir):
@@ -1476,7 +1532,7 @@ def test_parse_ppm_frames_walk_and_rejects():
     import pytest as _pt
 
     from google_sheets_etl_spark.operators.multimodal import (
-        PpmCodec, parse_ppm_frames,
+        parse_ppm, parse_ppm_frames,
     )
 
     def frame(w, h, fill):
@@ -1489,7 +1545,7 @@ def test_parse_ppm_frames_walk_and_rejects():
     assert [(w, h) for w, h, _ in frames] == [(2, 2), (2, 2), (3, 1)]
     # each emitted frame is a complete standalone P6 image
     for (w, h, fb), fill in zip(frames, (10, 20, 30)):
-        pw, ph, raster = PpmCodec.parse(fb)
+        pw, ph, raster = parse_ppm(fb)
         assert (pw, ph) == (w, h)
         assert bytes(raster) == bytes([fill] * (w * h * 3))
 
@@ -2159,7 +2215,7 @@ def test_png_image_operators_match_ppm(spark):
     """Format invariance: the SAME pixels as P6 and as PNG produce
     identical dHash fingerprints and luminance sums through the
     shared decode_image dispatch — the cross-format dedup contract —
-    and SniffCodec routes PNG features to the real decoder."""
+    and image features and resize decode PNG for real."""
     from google_sheets_etl_spark.operators import multimodal as mm
 
     w, h = 9, 8
@@ -2181,13 +2237,12 @@ def test_png_image_operators_match_ppm(spark):
     }
     assert sums[1] == sums[2]
 
-    sniff = mm.default_codec()
-    assert sniff.image_features(png, 16) == sniff.image_features(ppm, 16)
+    assert mm.payload_features(png, 16) == mm.payload_features(ppm, 16)
     # resize through the PNG path re-encodes as PNG with the exact
     # nearest-neighbor raster the PPM path produces
-    rp = mm.PngCodec().resize(png, 4, 4)
+    rp = mm.resize_payload(png, 4, 4)
     w2, h2, r2 = mm.parse_png(rp)
-    ref = mm.PpmCodec().resize(ppm, 4, 4)
+    ref = mm.resize_payload(ppm, 4, 4)
     assert (w2, h2) == (4, 4)
     assert ref.endswith(r2)  # same raster behind the P6 header
 
@@ -2249,7 +2304,7 @@ def test_jpeg_codec_contracts(spark):
     exactly, including non-multiple-of-8 (MCU padding + crop); (3)
     strict pinned rejects; (4) a malformed JPEG in a batch is a
     per-row reject through the image kernels and surfaces in the
-    audit; (5) JpegCodec.resize re-encodes at the target dims."""
+    audit; (5) resize re-encodes JPEG as JPEG at the target dims."""
     import numpy as np
     import pytest as _pt
 
@@ -2282,7 +2337,7 @@ def test_jpeg_codec_contracts(spark):
     with _pt.raises(ValueError, match="jpeg missing eoi"):
         parse_jpeg(good[:-2])
 
-    resized = mm.JpegCodec().resize(good, 4, 4)
+    resized = mm.resize_payload(good, 4, 4)
     assert parse_jpeg(resized)[:2] == (4, 4)
 
     media = spark.createDataFrame(
@@ -2378,7 +2433,7 @@ def test_gif_image_and_video_composition(spark):
     decode_image (cross-format dedup); (2) an animated GIF through
     video_frame_extract yields per-frame standalone P6 payloads whose
     rasters equal the palette expansion, and frame deltas flow
-    through video_frame_deltas unchanged; (3) GifCodec.resize
+    through video_frame_deltas unchanged; (3) GIF resize
     resamples indices losslessly; (4) a malformed GIF in a batch is a
     per-row reject that surfaces in the audit."""
     from google_sheets_etl_spark.operators import multimodal as mm
@@ -2406,8 +2461,7 @@ def test_gif_image_and_video_composition(spark):
         for r in mm.image_luminance_sum(media).collect()
     }
     assert sums[1] == sums[2]
-    sniff = mm.default_codec()
-    assert sniff.image_features(gif, 16) == sniff.image_features(ppm, 16)
+    assert mm.payload_features(gif, 16) == mm.payload_features(ppm, 16)
 
     # animated: frames through the video surface
     f2 = bytes((i + 40) % 256 for i in idx)
@@ -2424,7 +2478,7 @@ def test_gif_image_and_video_composition(spark):
     deltas = mm.video_frame_deltas(vm).collect()
     assert len(deltas) == 1 and deltas[0]["n_px"] == w * h
 
-    small = mm.GifCodec().resize(gif, 3, 2)
+    small = mm.resize_payload(gif, 3, 2)
     w2, h2, fr2, pal2 = mm.parse_gif_indexed(small)
     assert (w2, h2, pal2) == (3, 2, pal)
     assert len(fr2) == 1 and all(b in idx for b in fr2[0])
