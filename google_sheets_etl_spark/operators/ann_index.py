@@ -61,6 +61,7 @@ from .similarity import (
     _ranked_topk,
     _seeded_centroid_matrix,
     _sub_d2,
+    _unit_rows,
     cosine_similarity,
 )
 
@@ -108,10 +109,9 @@ def _encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            mat = mat / norms
+            mat = _unit_rows(
+                np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            )
             sims = mat @ cents.T
             cell = np.argsort(-sims, axis=1, kind="stable")[:, 0]
             codes = np.stack(

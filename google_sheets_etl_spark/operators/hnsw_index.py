@@ -68,12 +68,17 @@ from pyspark.sql.types import (
 
 from ..plans.state_table import StateTable
 from .similarity import (
+    _at_least_one,
     _hnsw_build_adj,
     _hnsw_node_level,
     _hnsw_walk,
+    _norms,
     _probe_assign,
+    _query_scores,
     _ranked_topk,
     _seeded_centroid_matrix,
+    _u6,
+    _unit_rows,
 )
 
 CELLS_SCHEMA = StructType([
@@ -101,20 +106,6 @@ def _tables(spark: SparkSession, path: str, id_field):
     )
 
 
-def _u6(x):
-    import numpy as np
-
-    return np.floor(x * 1e6 + 0.5).astype(np.int64)
-
-
-def _norm_rows(mat):
-    import numpy as np
-
-    norms = np.sqrt((mat * mat).sum(axis=1, keepdims=True))
-    norms[norms == 0] = 1.0
-    return mat / norms
-
-
 def hnsw_index_build(
     spark: SparkSession,
     corpus: DataFrame,
@@ -132,6 +123,9 @@ def hnsw_index_build(
     import numpy as np
     import pandas as pd
 
+    _at_least_one(
+        "hnsw_index_build", n_cells=n_cells, m_neighbors=m_neighbors
+    )
     cents = _seeded_centroid_matrix(corpus, n_cells, id_col, vec_col, seed)
     assigned = _probe_assign(corpus, cents, id_col, "nv", 1, id_col, vec_col)
     id_field = corpus.schema[id_col]
@@ -146,7 +140,7 @@ def hnsw_index_build(
                 f"hnsw_index_build: cell has {nc} nodes > "
                 f"max_cell_nodes={max_cell_nodes}; raise n_cells"
             )
-        mat = _norm_rows(
+        mat = _unit_rows(
             np.vstack(pdf["nv"].to_numpy()).astype(np.float64)
         )
         gsim = _u6(mat @ mat.T)
@@ -159,8 +153,8 @@ def hnsw_index_build(
         top = int(levels.max())
         layer_adj = {
             lvl: _hnsw_build_adj(
-                gsim, np.flatnonzero(levels >= lvl), m_neighbors
-            )
+                gsim, np.flatnonzero(levels >= lvl), [m_neighbors]
+            )[m_neighbors]
             for lvl in range(0, top + 1)
         }
         rows = []
@@ -235,6 +229,7 @@ def hnsw_index_admit(
     import numpy as np
     import pandas as pd
 
+    _at_least_one("hnsw_index_admit", m_neighbors=m_neighbors)
     id_field = batch.schema[id_col]
     cents, caps = _load_cells(spark, path, id_field)
     _, nt = _tables(spark, path, id_field)
@@ -266,13 +261,13 @@ def hnsw_index_admit(
                 "(see operators/hnsw_index.py docstring)"
             )
         old_mat = (
-            _norm_rows(
+            _unit_rows(
                 np.vstack(old_pdf["nv"].to_numpy()).astype(np.float64)
             )
             if n_old
             else np.zeros((0, len(new_pdf["nv"].iloc[0])))
         )
-        new_mat = _norm_rows(
+        new_mat = _unit_rows(
             np.vstack(new_pdf["nv"].to_numpy()).astype(np.float64)
         )
         all_mat = np.vstack([old_mat, new_mat])
@@ -374,6 +369,7 @@ def hnsw_index_search(
     import pandas as pd
     from pyspark.sql.types import DoubleType
 
+    _at_least_one("hnsw_index_search", k=k, n_probe=n_probe)
     if ef < k:
         raise ValueError(f"hnsw_index_search: ef ({ef}) must be >= k ({k})")
     id_field = queries.schema[id_col]
@@ -409,29 +405,16 @@ def hnsw_index_search(
                 else:
                     layer_adj[lvl][i] = locs
         cmat = np.vstack(npdf["nv"].to_numpy()).astype(np.float64)
-        cn = np.sqrt((cmat * cmat).sum(axis=1))
-        c_zero = cn == 0
-        cn[c_zero] = 1.0
-        qmat = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-        qn = np.sqrt((qmat * qmat).sum(axis=1))
-        q_zero = qn == 0
-        qn[q_zero] = 1.0
-        qcos = (qmat @ cmat.T) / (qn[:, None] * cn[None, :])
-        qcos_emit = qcos.copy()
-        qcos_emit[:, c_zero] = np.nan
-        qcos_emit[q_zero, :] = np.nan
-        qcu6 = _u6(qcos)
+        emit, qcu6 = _query_scores(qpdf["qv"], cmat, *_norms(cmat))
         out = {name: [] for name in cols}
         for qi in range(len(qpdf)):
-            cu = qcu6[qi]
             found, _ = _hnsw_walk(
-                cu, nc, entry0, top, layer_adj, base_neigh, ef
+                qcu6[qi], nc, [entry0], top, layer_adj, base_neigh, ef
             )
-            cos = qcos_emit[qi, found]
-            keep = found[np.argsort(-cos, kind="stable")[:k]]
+            keep = found[np.argsort(-emit[qi, found], kind="stable")[:k]]
             out["query_id"].extend([qpdf["query_id"].iloc[qi]] * len(keep))
             out["neighbor_id"].extend(nid[keep])
-            out["cos"].extend(qcos_emit[qi, keep])
+            out["cos"].extend(emit[qi, keep])
         return pd.DataFrame(out)
 
     scored = (

@@ -73,7 +73,9 @@ def _local_topk(
     return scored.mapInPandas(kernel, scored.schema)
 
 
-def _ranked_topk(scored: DataFrame, k: int, bound: bool = True) -> DataFrame:
+def _ranked_topk(
+    scored: DataFrame, k: int, bound: bool = True, by: list[str] = ()
+) -> DataFrame:
     """Global per-query top-k ranking, preceded (by default) by the
     batch-local trim. NaN scores are normalized to NULL first — both
     a semantic choice and a mechanical necessity: semantically a NaN
@@ -81,7 +83,9 @@ def _ranked_topk(scored: DataFrame, k: int, bound: bool = True) -> DataFrame:
     zero-norm NULLs (Spark's NaN-is-greatest window ordering would
     crown a corrupt vector the best neighbor of EVERY query), and
     mechanically pandas/Arrow cannot carry a NaN-vs-NULL distinction
-    through the local-trim kernel anyway."""
+    through the local-trim kernel anyway. ``by`` names extra leading
+    partition columns (the ranking is per ``(*by, query_id)``), which
+    the output carries."""
     if scored.schema["cos"].dataType.typeName() in ("double", "float"):
         scored = scored.withColumn(
             "cos",
@@ -89,13 +93,14 @@ def _ranked_topk(scored: DataFrame, k: int, bound: bool = True) -> DataFrame:
         )
     if bound:
         scored = _local_topk(scored, k, ["cos", "neighbor_id"], [False, True])
-    w = Window.partitionBy("query_id").orderBy(
+    w = Window.partitionBy(*by, "query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
+            *by,
             "query_id",
             "neighbor_id",
             F.col("rank").cast("long").alias("rank"),  # duckdb row_number is BIGINT
@@ -720,6 +725,23 @@ def cosine_topk_lsh(
     return _ranked_topk(scored, k)
 
 
+def _norms(mat: "np.ndarray"):
+    """Row L2 norms with zero norms replaced by 1.0, and the zero
+    mask — the division-safe half of every cell kernel's cosine."""
+    import numpy as np
+
+    n = np.sqrt((mat * mat).sum(axis=1))
+    zero = n == 0
+    n[zero] = 1.0
+    return n, zero
+
+
+def _unit_rows(mat: "np.ndarray") -> "np.ndarray":
+    """Rows L2-normalized, a zero row left zero: a zero vector must not
+    NaN-poison the scores computed from it."""
+    return mat / _norms(mat)[0][:, None]
+
+
 def _seeded_centroid_matrix(
     candidates: DataFrame,
     n: int,
@@ -746,11 +768,7 @@ def _seeded_centroid_matrix(
         .collect()
     )
     cents = np.array([r[1] for r in rows], dtype=np.float64)
-    if cents.size:
-        norms = np.linalg.norm(cents, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        cents = cents / norms
-    return cents
+    return _unit_rows(cents) if cents.size else cents
 
 
 def _shared_centroids(
@@ -819,9 +837,7 @@ def _probe_assign(
             if len(pdf) == 0 or eff == 0:
                 continue
             mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms) @ cents.T
+            sims = _unit_rows(mat) @ cents.T
             top = np.argsort(-sims, axis=1, kind="stable")[:, :eff]
             n = len(pdf)
             idx = np.repeat(np.arange(n), eff)
@@ -885,389 +901,30 @@ def cosine_topk_ivf(
     return _ranked_topk(scored, k)
 
 
-def cosine_topk_nsw(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    m_neighbors: int = 6,
-    n_entries: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    include_stats: bool = False,
-    max_cell_nodes: int = 16384,
-    centroids=None,
-) -> DataFrame:
-    """GRAPH-family ANN (round-7 verdict "missing #3"): partitioned
-    navigable-small-world search — IVF coarse cells bound the working
-    set (the 100 TB story: each cell's graph fits one task and is
-    built once), and within each probed cell a small-world graph is
-    walked instead of scanned.
-
-    Both halves are DELIBERATELY declarative so the whole index has
-    an exact SQL twin (the IVF-oracle discipline), which rules out
-    the usual HNSW non-determinism (random level draws, insertion
-    races):
-
-    - BUILD (Malkov et al. 2014's insertion rule, made order-
-      deterministic): nodes enter in id order; each connects to its
-      ``m_neighbors`` nearest PREDECESSORS by integer micro-unit
-      cosine (ties id asc); edges are symmetrized. Selecting from
-      predecessors-only is exactly NSW insertion — early nodes
-      become long-range hubs, later nodes add short-range links —
-      and it is a per-cell window over candidate pairs, not a
-      sequential build.
-    - SEARCH (set-parallel greedy routing): from ``n_entries``
-      deterministic entry points (smallest ids — the oldest, best-
-      connected hubs), expand to any neighbor STRICTLY closer to the
-      query (micro-unit comparison), to a fixpoint. This reachable
-      set is a superset of every greedy best-first walk from those
-      entries (any walk only ever takes improving edges), so recall
-      dominates classic multi-restart greedy routing while staying
-      expressible as a recursive CTE / frontier iteration — the
-      Spark-first reformulation of an inherently sequential beam
-      search. Candidates then re-rank exactly.
-
-    Scale shape: one broadcast-join probe (corpus never shuffles,
-    the IVF contract), per-cell Arrow kernels whose memory is
-    bounded by cell size (the semantic-dedup task contract), boolean-
-    matrix frontier steps inside. n_probe == n_cells with
-    m_neighbors >= cell size degenerates to exact brute force over
-    probed cells. Zero-norm fine print: emitted cosines mirror the
-    brute-force/oracle contract (undefined angle -> NULL, ranked
-    last); ROUTING treats a zero-norm vector as cosine 0.0 to keep
-    the graph walk finite, so such a degenerate vector is still
-    reachable-and-emitted exactly when a 0.0-scoring one would be. At 100 TB the per-cell edge lists would persist as
-    a table and amortize across query batches; graph build here is
-    in-plan so the operator stays a pure function of its inputs.
-
-    ``include_stats=True`` switches to the diagnostic surface the
-    beam variant defines (:func:`cosine_topk_nsw_beam`): each locally
-    kept row carries ``n_visited`` — here the SCORED set, reached
-    nodes plus every neighbor whose cosine the improving test had to
-    consult (the honest distance-computation count; the reached set
-    alone understates cost by ~m×) — and ``cell_n``, with no global
-    top-k trim applied.
-
-    ``centroids`` lets a caller running several NSW-family pipelines
-    over the SAME corpus sample the coarse quantizer once and share
-    (the pq ``codebooks`` pattern, r13): pass exactly what
-    ``_seeded_centroid_matrix(candidates, n_cells, ...)`` returns —
-    the md5-seeded order is n-prefix-stable, so ``cents[:1]`` of an
-    n=4 sample IS the n=1 sample."""
+def _u6(x: "np.ndarray") -> "np.ndarray":
+    """Half-up integer micro-units — the grain every graph build and
+    walk compares scores at (and the SQL twins round to)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
 
-    cents = (
-        _shared_centroids(centroids, n_cells, "cosine_topk_nsw")
-        if centroids is not None
-        else _seeded_centroid_matrix(
-            candidates, n_cells, id_col, vec_col, seed
-        )
-    )
-    c = _probe_assign(
-        candidates, cents, "neighbor_id", "cv", 1, id_col, vec_col
-    )
-    q = _probe_assign(
-        queries, cents, "query_id", "qv", n_probe, id_col, vec_col
-    )
-
-    fields = [
-        StructField(
-            "query_id", queries.schema[id_col].dataType
-        ),
-        StructField(
-            "neighbor_id", candidates.schema[id_col].dataType
-        ),
-        StructField("cos", DoubleType()),
-    ]
-    if include_stats:
-        fields += [
-            StructField("n_visited", LongType()),
-            StructField("cell_n", LongType()),
-        ]
-    out_schema = StructType(fields)
-
-    def u6(x: "np.ndarray") -> "np.ndarray":
-        return np.floor(x * 1e6 + 0.5).astype(np.int64)
-
-    def cell_kernel(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in fields]
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame({name: [] for name in cols})
-        cpdf = cpdf.sort_values("neighbor_id").reset_index(drop=True)
-        nc = len(cpdf)
-        if nc > max_cell_nodes:
-            # cell-size guard (round-10 directive #7): the graph
-            # build is a cell×cell cosine matrix — past this bound a
-            # mis-set n_cells would allocate O(cell²) in one task.
-            # Same stance as semantic_dedup's skew guard: fail with
-            # the fix named instead of OOMing an executor.
-            raise ValueError(
-                f"graph build: cell has {nc} nodes > max_cell_nodes="
-                f"{max_cell_nodes}; raise n_cells (size cells "
-                "~sqrt(corpus)) or pre-band oversized cells (the "
-                "semantic_dedup_banded pattern)"
-            )
-        cmat = np.vstack(cpdf["cv"].to_numpy()).astype(np.float64)
-        cn = np.sqrt((cmat * cmat).sum(axis=1))
-        c_zero = cn == 0
-        cn[c_zero] = 1.0
-        # cosine as dot / (|a|·|b|) — the SAME operation order as the
-        # SQL twin's list_dot_product / (sqrt·sqrt), so both engines
-        # carry identical FP noise into the micro-unit rounding (the
-        # _sub_d2 discipline; normalize-first would round different
-        # ulps at the 1e-6 boundary)
-        # graph: node i -> its m nearest predecessors (ids ascend
-        # with index, so stable argsort on -u6 ties id-asc)
-        gsim = u6((cmat @ cmat.T) / (cn[:, None] * cn[None, :]))
-        adj = np.zeros((nc, nc), dtype=bool)
-        for i in range(1, nc):
-            order = np.argsort(-gsim[i, :i], kind="stable")
-            for j in order[:m_neighbors]:
-                adj[i, j] = adj[j, i] = True
-        ne = min(n_entries, nc)
-        qmat = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-        qn = np.sqrt((qmat * qmat).sum(axis=1))
-        q_zero = qn == 0
-        qn[q_zero] = 1.0
-        qcos = (qmat @ cmat.T) / (qn[:, None] * cn[None, :])
-        # ROUTING uses the finite 0.0-convention scores; EMISSION
-        # mirrors the brute-force/oracle contract — a zero-norm side
-        # has an undefined angle, so its cosine surfaces as NULL
-        # (NaN here; _ranked_topk normalizes NaN -> NULL and ranks it
-        # last, exactly where the window puts the brute-force NULLs)
-        qcos_emit = qcos.copy()
-        qcos_emit[:, c_zero] = np.nan
-        qcos_emit[q_zero, :] = np.nan
-        qcu6 = u6(qcos)
-        out = {name: [] for name in cols}
-        nid = cpdf["neighbor_id"].to_numpy()
-        for qi in range(len(qpdf)):
-            cu = qcu6[qi]
-            # improving edges: r -> n allowed iff strictly closer
-            imp = adj & (cu[None, :] > cu[:, None])
-            reached = np.zeros(nc, dtype=bool)
-            reached[:ne] = True
-            frontier = reached.copy()
-            while frontier.any():
-                nxt = imp[frontier].any(axis=0) & ~reached
-                if not nxt.any():
-                    break
-                reached |= nxt
-                frontier = nxt
-            idx = np.flatnonzero(reached)
-            cos = qcos_emit[qi, idx]
-            # local top-k trim (cos desc, id asc) — ids ascend with
-            # idx, so stable argsort keeps the tie-break; NaN (the
-            # NULL-to-be) sorts last under argsort, matching the
-            # global window's NULLs-last
-            keep = idx[np.argsort(-cos, kind="stable")[:k]]
-            out["query_id"].extend([qpdf["query_id"].iloc[qi]] * len(keep))
-            out["neighbor_id"].extend(nid[keep])
-            out["cos"].extend(qcos_emit[qi, keep])
-            if include_stats:
-                scored_set = reached | adj[reached].any(axis=0)
-                out["n_visited"].extend([int(scored_set.sum())] * len(keep))
-                out["cell_n"].extend([nc] * len(keep))
-        return pd.DataFrame(out)
-
-    scored = (
-        q.groupBy("cell")
-        .cogroup(c.groupBy("cell"))
-        .applyInPandas(
-            lambda left, right: cell_kernel(left, right), out_schema
-        )
-    )
-    if include_stats:
-        return scored
-    return _ranked_topk(scored, k, bound=False)
+    return np.floor(x * 1e6 + 0.5).astype(np.int64)
 
 
-def cosine_topk_nsw_beam(
-    queries: DataFrame,
-    candidates: DataFrame,
-    k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    m_neighbors: int = 6,
-    n_entries: int = 2,
-    ef: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    include_stats: bool = False,
-    max_cell_nodes: int = 16384,
-    centroids=None,
-) -> DataFrame:
-    """TRUE best-first beam search over the SAME deterministic NSW
-    graph :func:`cosine_topk_nsw` builds (round-8 verdict missing #4)
-    — the visited-fraction an HNSW user actually pays, where the
-    reachability formulation is the oracle-friendly recall UPPER
-    BOUND (it expands EVERY improving edge; the beam expands only
-    while a candidate can still improve the ef-bounded result set).
-
-    SEARCH (Malkov's SEARCH-LAYER, made fully deterministic): from
-    the ``n_entries`` oldest nodes, repeatedly expand the best
-    unexpanded candidate (micro-unit cosine desc, id asc) and stop
-    when it cannot beat the worst of the ``ef`` best found; visiting
-    = scoring a node, exactly the distance-computation count a real
-    deployment meters. Sequential per query BY NATURE (each expansion
-    depends on the scores the last one revealed — this is the
-    documented reason the reachability variant exists as the SQL
-    twin); vectorized across queries and cells exactly like the
-    reachability kernel: per-cell Arrow tasks, corpus never shuffles.
-
-    ``include_stats=True`` returns the per-(query, cell) diagnostic
-    surface instead of the final ranking: every locally-kept row
-    carries ``n_visited`` (nodes scored in that cell) and ``cell_n``
-    (cell size), and NO global top-k trim is applied — callers
-    aggregate visited fractions and rank as they see fit (the
-    nsw_beam_recall_at_k pattern). With ``include_stats=False`` the
-    output contract is exactly :func:`cosine_topk_nsw`'s."""
-    import heapq
-
+def _query_scores(qv, cmat, cn, c_zero):
+    """Query -> node cosines of one cell: ``(emit, routing)``. Cosine
+    is dot / (|a|·|b|), the SQL twin's operation order, so both
+    engines round the same ulps to micro-units (normalize-first would
+    not). ROUTING: the finite 0.0-convention micro-units. EMISSION:
+    a zero-norm side has an undefined angle, so its cosine is NaN,
+    which _ranked_topk turns into a NULL ranked last."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
 
-    if ef < k:
-        raise ValueError(f"cosine_topk_nsw_beam: ef ({ef}) must be >= k ({k})")
-
-    # ``centroids``: caller-shared coarse-quantizer sample (see
-    # cosine_topk_nsw — the pq ``codebooks`` sharing pattern, r13)
-    cents = (
-        _shared_centroids(centroids, n_cells, "cosine_topk_nsw_beam")
-        if centroids is not None
-        else _seeded_centroid_matrix(
-            candidates, n_cells, id_col, vec_col, seed
-        )
-    )
-    c = _probe_assign(
-        candidates, cents, "neighbor_id", "cv", 1, id_col, vec_col
-    )
-    q = _probe_assign(
-        queries, cents, "query_id", "qv", n_probe, id_col, vec_col
-    )
-
-    fields = [
-        StructField("query_id", queries.schema[id_col].dataType),
-        StructField("neighbor_id", candidates.schema[id_col].dataType),
-        StructField("cos", DoubleType()),
-    ]
-    if include_stats:
-        fields += [
-            StructField("n_visited", LongType()),
-            StructField("cell_n", LongType()),
-        ]
-    out_schema = StructType(fields)
-
-    def u6(x: "np.ndarray") -> "np.ndarray":
-        return np.floor(x * 1e6 + 0.5).astype(np.int64)
-
-    def cell_kernel(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in fields]
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame({name: [] for name in cols})
-        cpdf = cpdf.sort_values("neighbor_id").reset_index(drop=True)
-        nc = len(cpdf)
-        if nc > max_cell_nodes:
-            # cell-size guard (round-10 directive #7): the graph
-            # build is a cell×cell cosine matrix — past this bound a
-            # mis-set n_cells would allocate O(cell²) in one task.
-            # Same stance as semantic_dedup's skew guard: fail with
-            # the fix named instead of OOMing an executor.
-            raise ValueError(
-                f"graph build: cell has {nc} nodes > max_cell_nodes="
-                f"{max_cell_nodes}; raise n_cells (size cells "
-                "~sqrt(corpus)) or pre-band oversized cells (the "
-                "semantic_dedup_banded pattern)"
-            )
-        cmat = np.vstack(cpdf["cv"].to_numpy()).astype(np.float64)
-        cn = np.sqrt((cmat * cmat).sum(axis=1))
-        c_zero = cn == 0
-        cn[c_zero] = 1.0
-        # IDENTICAL graph build to cosine_topk_nsw — the beam is a
-        # different WALK over the same certified structure
-        gsim = u6((cmat @ cmat.T) / (cn[:, None] * cn[None, :]))
-        neigh: list[list[int]] = [[] for _ in range(nc)]
-        for i in range(1, nc):
-            order = np.argsort(-gsim[i, :i], kind="stable")
-            for j in order[:m_neighbors]:
-                j = int(j)
-                neigh[i].append(j)
-                neigh[j].append(i)
-        ne = min(n_entries, nc)
-        qmat = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-        qn = np.sqrt((qmat * qmat).sum(axis=1))
-        q_zero = qn == 0
-        qn[q_zero] = 1.0
-        qcos = (qmat @ cmat.T) / (qn[:, None] * cn[None, :])
-        qcos_emit = qcos.copy()
-        qcos_emit[:, c_zero] = np.nan
-        qcos_emit[q_zero, :] = np.nan
-        qcu6 = u6(qcos)
-        nid = cpdf["neighbor_id"].to_numpy()
-        out = {name: [] for name in cols}
-        for qi in range(len(qpdf)):
-            cu = qcu6[qi]
-            # best-first beam: heap of unexpanded candidates ordered
-            # (sim desc, id asc); W = the ef best scored so far as a
-            # min-heap on (sim asc, id desc) so W[0] is the WORST
-            visited = list(range(ne))
-            seen = np.zeros(nc, dtype=bool)
-            seen[:ne] = True
-            cand = [(-int(cu[i]), i) for i in range(ne)]
-            heapq.heapify(cand)
-            W = [(int(cu[i]), -i) for i in range(ne)]
-            heapq.heapify(W)
-            while len(W) > ef:
-                heapq.heappop(W)
-            while cand:
-                negs, i = heapq.heappop(cand)
-                if len(W) == ef and -negs < W[0][0]:
-                    break  # best remaining cannot improve the beam
-                for n in neigh[i]:
-                    if seen[n]:
-                        continue
-                    seen[n] = True
-                    visited.append(n)
-                    s = int(cu[n])
-                    if len(W) < ef or s > W[0][0] or (
-                        s == W[0][0] and -n > W[0][1]
-                    ):
-                        heapq.heappush(W, (s, -n))
-                        if len(W) > ef:
-                            heapq.heappop(W)
-                        heapq.heappush(cand, (-s, n))
-            found = np.array(sorted(-negi for _, negi in W), dtype=int)
-            cos = qcos_emit[qi, found]
-            keep = found[np.argsort(-cos, kind="stable")[:k]]
-            out["query_id"].extend([qpdf["query_id"].iloc[qi]] * len(keep))
-            out["neighbor_id"].extend(nid[keep])
-            out["cos"].extend(qcos_emit[qi, keep])
-            if include_stats:
-                out["n_visited"].extend([len(visited)] * len(keep))
-                out["cell_n"].extend([nc] * len(keep))
-        return pd.DataFrame(out)
-
-    scored = (
-        q.groupBy("cell")
-        .cogroup(c.groupBy("cell"))
-        .applyInPandas(
-            lambda left, right: cell_kernel(left, right), out_schema
-        )
-    )
-    if include_stats:
-        return scored
-    return _ranked_topk(scored, k, bound=False)
+    qmat = np.vstack(qv.to_numpy()).astype(np.float64)
+    qn, q_zero = _norms(qmat)
+    qcos = (qmat @ cmat.T) / (qn[:, None] * cn[None, :])
+    emit = qcos.copy()
+    emit[:, c_zero] = np.nan
+    emit[q_zero, :] = np.nan
+    return emit, _u6(qcos)
 
 
 def _hnsw_node_level(node_id: int, cap: int, seed: int) -> int:
@@ -1288,49 +945,74 @@ def _hnsw_node_level(node_id: int, cap: int, seed: int) -> int:
     return lvl
 
 
-def _hnsw_build_adj(gsim, members, m_neighbors: int) -> dict:
+def _hnsw_build_adj(gsim, members, ms) -> dict:
     """NSW insertion rule restricted to ``members`` (ascending node
     index = ascending id): each member links to its m nearest
-    PREDECESSOR members by micro-unit cosine (stable ties: lower
-    id), symmetrized. The rule is a pure function of the member
-    VECTORS and id order — which is what makes append-only admission
-    into a stored graph equal the from-scratch build."""
+    PREDECESSOR members by micro-unit cosine (stable ties: lower id),
+    symmetrized — a pure function of the member vectors and id order,
+    which is what makes append-only admission equal a rebuild.
+    Returns ``{m: {node: [nbrs]}}`` for each m in ``ms``: one stable
+    argsort serves every m, and each m's lists get the append order a
+    build for that m alone would (list order steers the beam's heap)."""
     import numpy as np
 
-    neigh: dict[int, list[int]] = {int(i): [] for i in members}
+    neigh = {m: {int(i): [] for i in members} for m in ms}
+    widest = max(ms)
     for pos in range(1, len(members)):
         i = int(members[pos])
         preds = members[:pos]
-        order = np.argsort(-gsim[i, preds], kind="stable")
-        for oj in order[:m_neighbors]:
-            j = int(preds[oj])
-            neigh[i].append(j)
-            neigh[j].append(i)
+        order = np.argsort(-gsim[i, preds], kind="stable")[:widest]
+        for m, lists in neigh.items():
+            for oj in order[:m]:
+                j = int(preds[oj])
+                lists[i].append(j)
+                lists[j].append(i)
     return neigh
 
 
-def _hnsw_walk(cu, nc, entry0, top, layer_adj, base_neigh, ef):
-    """ONE query's HNSW traversal over a prepared per-cell graph —
-    the greedy ef=1 descent through the upper layers followed by the
-    ef-bounded base-layer beam (cosine_topk_nsw_beam's loop), seeded
-    with EVERY node the descent scored (their distance computations
-    are already paid, and omitting them would silently drop a
-    descent-scored true neighbor). Factored out of
-    :func:`cosine_topk_hnsw` so the PERSISTED-index search
-    (``operators/hnsw_index.py``) runs the IDENTICAL walk over the
-    stored adjacency — the two serve paths cannot drift.
+def _reach_walk(adj, cu, n_entries: int):
+    """Strict-improvement REACHABILITY from the ``n_entries`` oldest
+    nodes over the boolean adjacency ``adj``: expand to any neighbor
+    STRICTLY closer to the query (micro-unit ``cu``), to a fixpoint.
+    Returns (reached node indices ascending, n_scored) — n_scored is
+    the reached set plus every neighbor the improving test had to
+    consult."""
+    import numpy as np
+
+    imp = adj & (cu[None, :] > cu[:, None])
+    reached = np.zeros(len(cu), dtype=bool)
+    reached[:n_entries] = True
+    frontier = reached.copy()
+    while frontier.any():
+        nxt = imp[frontier].any(axis=0) & ~reached
+        if not nxt.any():
+            break
+        reached |= nxt
+        frontier = nxt
+    scored = reached | adj[reached].any(axis=0)
+    return np.flatnonzero(reached), int(scored.sum())
+
+
+def _hnsw_walk(cu, nc, seeds, top, layer_adj, base_neigh, ef):
+    """ONE query's best-first walk over a prepared per-cell graph:
+    with ``top`` > 0, HNSW's greedy ef=1 descent from ``seeds[0]``
+    through layers ``top`` .. 1; then the ef-bounded base-layer beam
+    (Malkov's SEARCH-LAYER, made deterministic) seeded with EVERY node
+    scored so far (the descent's are paid for; dropping them would
+    lose a descent-scored true neighbor). The in-query walks and the
+    persisted-index search (``hnsw_index.py``) share it.
 
     ``cu``: int64 micro-unit query->node scores; ``layer_adj``:
-    {lvl >= 1: {node: [nbrs]}}; ``base_neigh``: list of lists.
+    {lvl >= 1: {node: [nbrs]}}; ``base_neigh``: node -> [nbrs].
     Returns (found node indices ascending, n_scored)."""
     import heapq
 
     import numpy as np
 
     seen = np.zeros(nc, dtype=bool)
-    cur = entry0
-    seen[cur] = True
-    n_scored = 1
+    seen[np.asarray(seeds)] = True
+    n_scored = int(seen.sum())
+    cur = int(seeds[0])
     for lvl in range(top, 0, -1):
         adj = layer_adj[lvl]
         improved = True
@@ -1348,6 +1030,8 @@ def _hnsw_walk(cu, nc, entry0, top, layer_adj, base_neigh, ef):
                 cur = best
                 improved = True
     scored0 = np.flatnonzero(seen)
+    # cand: unexpanded candidates (sim desc, id asc); W: the ef best
+    # scored so far as a min-heap on (sim asc, id desc), W[0] the worst
     cand = [(-int(cu[i]), int(i)) for i in scored0]
     heapq.heapify(cand)
     W = [(int(cu[i]), -int(i)) for i in scored0]
@@ -1357,7 +1041,7 @@ def _hnsw_walk(cu, nc, entry0, top, layer_adj, base_neigh, ef):
     while cand:
         negs, i = heapq.heappop(cand)
         if len(W) == ef and -negs < W[0][0]:
-            break
+            break  # best remaining cannot improve the beam
         for n in base_neigh[i]:
             if seen[n]:
                 continue
@@ -1375,6 +1059,264 @@ def _hnsw_walk(cu, nc, entry0, top, layer_adj, base_neigh, ef):
     return found, n_scored
 
 
+def _at_least_one(fn: str, **params) -> None:
+    """Refuse a count knob below 1 instead of clamping it silently: a
+    zero probe/entry count returns nothing, and a negative neighbor
+    count slices predecessors from the wrong end."""
+    for name, value in params.items():
+        if value < 1:
+            raise ValueError(f"{fn}: {name} must be >= 1, got {value}")
+
+
+# a walk spec is (kind, *knobs) with these knobs, in this order
+_WALK_KNOBS = {
+    "reach": ("m_neighbors", "n_entries"),
+    "beam": ("m_neighbors", "n_entries", "ef"),
+    "hnsw": ("m_neighbors", "ef"),
+}
+
+
+def _graph_walks(
+    queries: DataFrame,
+    candidates: DataFrame,
+    walks: dict,
+    k: int = 10,
+    n_cells: int = 8,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+    include_stats: bool = False,
+    max_cell_nodes: int = 16384,
+    centroids=None,
+    fn: str = "_graph_walks",
+) -> DataFrame:
+    """The one graph-ANN kernel behind the NSW family: assign cells
+    once, build each probed cell's graph once, and run every walk in
+    ``walks`` (name -> ``(kind, *knobs)``, :data:`_WALK_KNOBS`) over
+    it — ``reach`` (:func:`cosine_topk_nsw`), ``beam``
+    (:func:`cosine_topk_nsw_beam`) or ``hnsw``
+    (:func:`cosine_topk_hnsw`, whose level stack is built only when
+    requested).
+
+    BUILD (Malkov et al. 2014's insertion rule, made order-
+    deterministic so the index has an exact SQL twin): nodes enter in
+    id order; each links to its m nearest PREDECESSORS by micro-unit
+    cosine (ties id asc), symmetrized — early nodes become long-range
+    hubs, later nodes add short-range links (:func:`_hnsw_build_adj`,
+    one predecessor ordering for every m). Memory is bounded by cell
+    size, and a cell above ``max_cell_nodes`` fails with the fix
+    named. Emitted cosines follow the brute-force contract (zero-norm
+    side -> NULL, ranked last); ROUTING scores it 0.0
+    (:func:`_query_scores`).
+
+    Rows carry ``walk``; the top-k is ranked per (walk, query).
+    ``include_stats=True`` instead returns the per-(walk, query, cell)
+    locally trimmed rows with ``n_visited`` (nodes SCORED — the
+    distance computations a deployment meters) and ``cell_n``.
+    ``centroids`` shares one coarse-quantizer sample across calls
+    over the SAME corpus (the pq ``codebooks`` pattern, r13): pass
+    what ``_seeded_centroid_matrix(candidates, n_cells, ...)``
+    returns; its md5 order is n-prefix-stable, so ``cents[:1]`` of an
+    n=4 sample IS the n=1 sample. ``fn`` names the public caller in
+    validation errors."""
+    from functools import partial
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import (
+        DoubleType, LongType, StringType, StructField, StructType,
+    )
+
+    _at_least_one(fn, k=k, n_cells=n_cells, n_probe=n_probe)
+    specs, ms = {}, {kind: set() for kind in _WALK_KNOBS}
+    for name, (kind, *knobs) in walks.items():
+        spec = dict(zip(_WALK_KNOBS[kind], knobs))
+        ef = spec.pop("ef", k)
+        _at_least_one(fn, **spec)
+        if ef < k:
+            raise ValueError(f"{fn}: ef ({ef}) must be >= k ({k})")
+        specs[name] = (kind, spec["m_neighbors"], spec.get("n_entries"), ef)
+        ms[kind].add(spec["m_neighbors"])
+
+    cents = (
+        _seeded_centroid_matrix(candidates, n_cells, id_col, vec_col, seed)
+        if centroids is None else _shared_centroids(centroids, n_cells, fn)
+    )
+    c = _probe_assign(
+        candidates, cents, "neighbor_id", "cv", 1, id_col, vec_col
+    )
+    q = _probe_assign(
+        queries, cents, "query_id", "qv", n_probe, id_col, vec_col
+    )
+
+    fields = [
+        StructField("walk", StringType()),
+        StructField("query_id", queries.schema[id_col].dataType),
+        StructField("neighbor_id", candidates.schema[id_col].dataType),
+        StructField("cos", DoubleType()),
+    ]
+    if include_stats:
+        fields += [StructField(n, LongType()) for n in ("n_visited", "cell_n")]
+    out_schema = StructType(fields)
+
+    def cell_kernel(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
+        cols = [f.name for f in fields]
+        if len(qpdf) == 0 or len(cpdf) == 0:
+            return pd.DataFrame({name: [] for name in cols})
+        cpdf = cpdf.sort_values("neighbor_id").reset_index(drop=True)
+        nc = len(cpdf)
+        if nc > max_cell_nodes:
+            # cell-size guard (round-10 directive #7): the build is a
+            # cell×cell matrix — fail with the fix named instead of
+            # OOMing an executor (semantic_dedup's skew-guard stance)
+            raise ValueError(
+                f"graph build: cell has {nc} nodes > max_cell_nodes="
+                f"{max_cell_nodes}; raise n_cells (size cells "
+                "~sqrt(corpus)) or pre-band oversized cells (the "
+                "semantic_dedup_banded pattern)"
+            )
+        cmat = np.vstack(cpdf["cv"].to_numpy()).astype(np.float64)
+        cn, c_zero = _norms(cmat)
+        # gsim: the _query_scores operation order (the SQL twin's)
+        gsim = _u6((cmat @ cmat.T) / (cn[:, None] * cn[None, :]))
+        neigh = _hnsw_build_adj(gsim, np.arange(nc), set().union(*ms.values()))
+        adj = {m: np.zeros((nc, nc), dtype=bool) for m in ms["reach"]}
+        for m, a in adj.items():
+            for i, nbrs in neigh[m].items():
+                a[i, nbrs] = True
+        nid = cpdf["neighbor_id"].to_numpy()
+        if ms["hnsw"]:
+            cap = max(0, int(np.log2(nc))) if nc > 1 else 0
+            levels = np.array(
+                [_hnsw_node_level(int(x), cap, seed) for x in nid],
+                dtype=np.int64,
+            )
+            top = int(levels.max())
+            entry0 = int(np.flatnonzero(levels == top)[0])
+            upper = {
+                lvl: _hnsw_build_adj(
+                    gsim, np.flatnonzero(levels >= lvl), ms["hnsw"]
+                )
+                for lvl in range(1, top + 1)
+            }
+        emit, qcu6 = _query_scores(qpdf["qv"], cmat, cn, c_zero)
+        out = {name: [] for name in cols}
+        for name, (kind, m, n_entries, ef) in specs.items():
+            if kind == "reach":
+                walk = partial(
+                    _reach_walk, adj[m], n_entries=min(n_entries, nc)
+                )
+            elif kind == "beam":
+                walk = partial(
+                    _hnsw_walk, nc=nc, seeds=range(min(n_entries, nc)),
+                    top=0, layer_adj={}, base_neigh=neigh[m], ef=ef,
+                )
+            else:
+                walk = partial(
+                    _hnsw_walk, nc=nc, seeds=[entry0], top=top,
+                    layer_adj={lvl: upper[lvl][m] for lvl in upper},
+                    base_neigh=neigh[m], ef=ef,
+                )
+            for qi in range(len(qpdf)):
+                idx, n_vis = walk(qcu6[qi])
+                # local top-k trim (cos desc, id asc: ids ascend with
+                # idx); NaN, the NULL-to-be, sorts last like NULLs
+                keep = idx[np.argsort(-emit[qi, idx], kind="stable")[:k]]
+                out["walk"].extend([name] * len(keep))
+                out["query_id"].extend(
+                    [qpdf["query_id"].iloc[qi]] * len(keep)
+                )
+                out["neighbor_id"].extend(nid[keep])
+                out["cos"].extend(emit[qi, keep])
+                if include_stats:
+                    out["n_visited"].extend([n_vis] * len(keep))
+                    out["cell_n"].extend([nc] * len(keep))
+        return pd.DataFrame(out)
+
+    scored = (
+        q.groupBy("cell")
+        .cogroup(c.groupBy("cell"))
+        .applyInPandas(
+            lambda left, right: cell_kernel(left, right), out_schema
+        )
+    )
+    if include_stats:
+        return scored
+    return _ranked_topk(scored, k, bound=False, by=["walk"])
+
+
+def cosine_topk_nsw(
+    queries: DataFrame,
+    candidates: DataFrame,
+    k: int = 10,
+    n_cells: int = 8,
+    n_probe: int = 2,
+    m_neighbors: int = 6,
+    n_entries: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+    include_stats: bool = False,
+    max_cell_nodes: int = 16384,
+    centroids=None,
+) -> DataFrame:
+    """GRAPH-family ANN (round-7 verdict "missing #3"): IVF coarse
+    cells bound the working set, and within each probed cell a
+    navigable-small-world graph is walked instead of scanned — the
+    ``reach`` walk of :func:`_graph_walks` (build, zero-norm contract,
+    ``include_stats``, ``centroids``).
+
+    SEARCH (set-parallel greedy routing): from the ``n_entries``
+    oldest nodes, expand to any neighbor STRICTLY closer to the query
+    (micro-unit comparison), to a fixpoint. The reached set contains
+    every greedy walk from those entries, so recall dominates
+    multi-restart greedy routing while staying a recursive CTE — the
+    SQL-twinned recall upper bound of the family. n_probe == n_cells
+    with m_neighbors >= cell size is brute force over the probed
+    cells. ``n_visited`` counts reached nodes plus every neighbor the
+    improving test consulted (reached alone understates cost ~m×)."""
+    return _graph_walks(
+        queries, candidates, {"reach": ("reach", m_neighbors, n_entries)},
+        k=k, n_cells=n_cells, n_probe=n_probe, id_col=id_col,
+        vec_col=vec_col, seed=seed, include_stats=include_stats,
+        max_cell_nodes=max_cell_nodes, centroids=centroids,
+        fn="cosine_topk_nsw",
+    ).drop("walk")
+
+
+def cosine_topk_nsw_beam(
+    queries: DataFrame,
+    candidates: DataFrame,
+    k: int = 10,
+    n_cells: int = 8,
+    n_probe: int = 2,
+    m_neighbors: int = 6,
+    n_entries: int = 2,
+    ef: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+    include_stats: bool = False,
+    max_cell_nodes: int = 16384,
+    centroids=None,
+) -> DataFrame:
+    """TRUE best-first beam search over the NSW graph (round-8 verdict
+    missing #4) — the ``beam`` walk of :func:`_graph_walks`: the
+    visited fraction an HNSW user pays, where :func:`cosine_topk_nsw`
+    is the recall upper bound. From the ``n_entries`` oldest nodes,
+    expand the best unexpanded candidate (micro-unit cosine desc, id
+    asc) until it cannot beat the worst of the ``ef`` best found.
+    Sequential per query by nature, hence no SQL twin."""
+    return _graph_walks(
+        queries, candidates, {"beam": ("beam", m_neighbors, n_entries, ef)},
+        k=k, n_cells=n_cells, n_probe=n_probe, id_col=id_col,
+        vec_col=vec_col, seed=seed, include_stats=include_stats,
+        max_cell_nodes=max_cell_nodes, centroids=centroids,
+        fn="cosine_topk_nsw_beam",
+    ).drop("walk")
+
+
 def cosine_topk_hnsw(
     queries: DataFrame,
     candidates: DataFrame,
@@ -1390,160 +1332,23 @@ def cosine_topk_hnsw(
     max_cell_nodes: int = 16384,
     centroids=None,
 ) -> DataFrame:
-    """HIERARCHICAL NSW (Malkov & Yashunin 2018) — the multi-layer
-    upgrade of :func:`cosine_topk_nsw_beam`: instead of entering the
-    base graph at the n_entries oldest hubs, a logarithmic stack of
-    sparser layers routes each query DOWN to a near-optimal entry,
-    and only the base layer runs the ef-bounded beam. What the
-    hierarchy buys is entry quality: the beam starts next to the
-    answer, so it converges scoring fewer nodes at equal recall —
-    the property the recall row certifies against the flat beam.
-
-    Everything that made the flat graph certifiable is preserved:
-
-    - LEVELS are deterministic, not random: node level = trailing
-      zero bits of md5(id:seed:lvl) (a geometric(1/2) draw any engine
-      reproduces — HNSW's mL = 1/ln 2 choice), capped at
-      floor(log2(cell size)).
-    - Each layer's graph is the SAME order-deterministic NSW
-      insertion rule (m nearest predecessors by micro-unit cosine,
-      symmetrized) restricted to nodes of that level or higher.
-    - DESCENT is HNSW's ef=1 greedy: at each upper layer, move to
-      the strictly-best-scoring neighbor until a local optimum, then
-      drop a layer. Entry = the max-level node (tie: min id).
-    - The BASE layer runs the exact beam of
-      :func:`cosine_topk_nsw_beam`, seeded with the descent's exit.
-
-    ``n_visited`` counts every DISTINCT node scored anywhere in the
-    stack (upper-layer probes included — the honest total a real
-    deployment meters; a node re-seen on a lower layer is cached,
-    not re-scored). Per-cell Arrow tasks, corpus never shuffles —
-    the working-set contract of the whole NSW family."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
-
-    if ef < k:
-        raise ValueError(f"cosine_topk_hnsw: ef ({ef}) must be >= k ({k})")
-
-    # ``centroids``: caller-shared coarse-quantizer sample (see
-    # cosine_topk_nsw — the pq ``codebooks`` sharing pattern, r13)
-    cents = (
-        _shared_centroids(centroids, n_cells, "cosine_topk_hnsw")
-        if centroids is not None
-        else _seeded_centroid_matrix(
-            candidates, n_cells, id_col, vec_col, seed
-        )
-    )
-    c = _probe_assign(
-        candidates, cents, "neighbor_id", "cv", 1, id_col, vec_col
-    )
-    q = _probe_assign(
-        queries, cents, "query_id", "qv", n_probe, id_col, vec_col
-    )
-
-    fields = [
-        StructField("query_id", queries.schema[id_col].dataType),
-        StructField("neighbor_id", candidates.schema[id_col].dataType),
-        StructField("cos", DoubleType()),
-    ]
-    if include_stats:
-        fields += [
-            StructField("n_visited", LongType()),
-            StructField("cell_n", LongType()),
-        ]
-    out_schema = StructType(fields)
-
-    def u6(x: "np.ndarray") -> "np.ndarray":
-        return np.floor(x * 1e6 + 0.5).astype(np.int64)
-
-    def node_level(node_id: int, cap: int) -> int:
-        return _hnsw_node_level(node_id, cap, seed)
-
-    def build_adj(gsim: "np.ndarray", members: "np.ndarray") -> dict:
-        return _hnsw_build_adj(gsim, members, m_neighbors)
-
-    def cell_kernel(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [f.name for f in fields]
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame({name: [] for name in cols})
-        cpdf = cpdf.sort_values("neighbor_id").reset_index(drop=True)
-        nc = len(cpdf)
-        if nc > max_cell_nodes:
-            # cell-size guard (round-10 directive #7): the graph
-            # build is a cell×cell cosine matrix — past this bound a
-            # mis-set n_cells would allocate O(cell²) in one task.
-            # Same stance as semantic_dedup's skew guard: fail with
-            # the fix named instead of OOMing an executor.
-            raise ValueError(
-                f"graph build: cell has {nc} nodes > max_cell_nodes="
-                f"{max_cell_nodes}; raise n_cells (size cells "
-                "~sqrt(corpus)) or pre-band oversized cells (the "
-                "semantic_dedup_banded pattern)"
-            )
-        cmat = np.vstack(cpdf["cv"].to_numpy()).astype(np.float64)
-        cn = np.sqrt((cmat * cmat).sum(axis=1))
-        c_zero = cn == 0
-        cn[c_zero] = 1.0
-        gsim = u6((cmat @ cmat.T) / (cn[:, None] * cn[None, :]))
-        nid = cpdf["neighbor_id"].to_numpy()
-        cap = max(0, int(np.log2(nc))) if nc > 1 else 0
-        levels = np.array(
-            [node_level(int(x), cap) for x in nid], dtype=np.int64
-        )
-        top = int(levels.max())
-        # entry: the max-level node, tie min id (ids ascend w/ index)
-        entry0 = int(np.flatnonzero(levels == top)[0])
-        layer_adj = {
-            lvl: build_adj(gsim, np.flatnonzero(levels >= lvl))
-            for lvl in range(1, top + 1)
-        }
-        # base layer: dense adjacency over all nodes (the flat graph)
-        base_neigh: list[list[int]] = [[] for _ in range(nc)]
-        for i in range(1, nc):
-            order = np.argsort(-gsim[i, :i], kind="stable")
-            for j in order[:m_neighbors]:
-                j = int(j)
-                base_neigh[i].append(j)
-                base_neigh[j].append(i)
-
-        qmat = np.vstack(qpdf["qv"].to_numpy()).astype(np.float64)
-        qn = np.sqrt((qmat * qmat).sum(axis=1))
-        q_zero = qn == 0
-        qn[q_zero] = 1.0
-        qcos = (qmat @ cmat.T) / (qn[:, None] * cn[None, :])
-        qcos_emit = qcos.copy()
-        qcos_emit[:, c_zero] = np.nan
-        qcos_emit[q_zero, :] = np.nan
-        qcu6 = u6(qcos)
-        out = {name: [] for name in cols}
-        for qi in range(len(qpdf)):
-            cu = qcu6[qi]
-            found, n_scored = _hnsw_walk(
-                cu, nc, entry0, top, layer_adj, base_neigh, ef
-            )
-            cos = qcos_emit[qi, found]
-            keep = found[np.argsort(-cos, kind="stable")[:k]]
-            out["query_id"].extend([qpdf["query_id"].iloc[qi]] * len(keep))
-            out["neighbor_id"].extend(nid[keep])
-            out["cos"].extend(qcos_emit[qi, keep])
-            if include_stats:
-                out["n_visited"].extend([n_scored] * len(keep))
-                out["cell_n"].extend([nc] * len(keep))
-        return pd.DataFrame(out)
-
-    scored = (
-        q.groupBy("cell")
-        .cogroup(c.groupBy("cell"))
-        .applyInPandas(
-            lambda left, right: cell_kernel(left, right), out_schema
-        )
-    )
-    if include_stats:
-        return scored
-    return _ranked_topk(scored, k, bound=False)
+    """HIERARCHICAL NSW (Malkov & Yashunin 2018) — the ``hnsw`` walk
+    of :func:`_graph_walks`: instead of the oldest hubs
+    (:func:`cosine_topk_nsw_beam`), a logarithmic stack of sparser
+    layers routes each query DOWN to its base-layer entry. Levels are
+    deterministic md5 draws (:func:`_hnsw_node_level`) capped at
+    floor(log2(cell size)); each layer is the insertion rule over
+    nodes of that level or higher; the descent moves to the strictly
+    best neighbor until a local optimum, from the max-level node (tie
+    min id), then the beam runs seeded with every node it scored.
+    ``n_visited`` counts each DISTINCT node scored in the stack."""
+    return _graph_walks(
+        queries, candidates, {"hnsw": ("hnsw", m_neighbors, ef)},
+        k=k, n_cells=n_cells, n_probe=n_probe, id_col=id_col,
+        vec_col=vec_col, seed=seed, include_stats=include_stats,
+        max_cell_nodes=max_cell_nodes, centroids=centroids,
+        fn="cosine_topk_hnsw",
+    ).drop("walk")
 
 
 def embedding_near_dup_pairs(
@@ -2404,13 +2209,9 @@ def _pq_codebooks(
         .limit(n_codes)
         .collect()
     )
-    full = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(full, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0  # a zero vector in the sample must not
-    # become a NaN codebook row (NaN distances would silently yield
-    # garbage codes for EVERY encoded vector) — same guard pq_encode
-    # applies to the vectors it normalizes
-    full /= norms
+    # a zero sample vector must not become a NaN codebook row (NaN
+    # distances would yield garbage codes for EVERY encoded vector)
+    full = _unit_rows(np.array([r[1] for r in rows], dtype=np.float64))
     dim = full.shape[1]
     if dim % n_subspaces:
         raise ValueError(
@@ -2474,9 +2275,7 @@ def pq_train_codebooks(
                 if len(pdf) == 0:
                     continue
                 mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                norms = np.linalg.norm(mat, axis=1, keepdims=True)
-                norms[norms == 0] = 1.0
-                mat = mat / norms
+                mat = _unit_rows(mat)
                 frames = []
                 for m in range(n_sub):
                     sub = mat[:, m * dsub:(m + 1) * dsub]
@@ -2558,10 +2357,9 @@ def pq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            mat = mat / norms
+            mat = _unit_rows(
+                np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            )
             codes = np.stack(
                 [
                     np.argmin(
@@ -3020,10 +2818,9 @@ def _ivf_adc_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            mat = mat / norms
+            mat = _unit_rows(
+                np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            )
             sims = mat @ cents.T
             cell = np.argsort(-sims, axis=1, kind="stable")[:, 0]
             codes = np.stack(

@@ -39,51 +39,66 @@ def _recall_rows(
     variants: list,
     visited: bool = False,
 ) -> DataFrame:
-    """One ``(variant, k, recall)`` row per ``(name, make)`` variant,
-    in the variants' order: ``make()`` builds the variant's top-5
-    frame, and recall = hits / n_exact against ``exact`` (the pair
-    :func:`_exact_top5` returns). Variants overlap on driver threads.
+    """One ``(variant, k, recall)`` row per variant name, in the
+    variants' order; recall = hits / n_exact against ``exact`` (the
+    pair :func:`_exact_top5` returns). Each ``(name, make)`` item's
+    ``make()`` builds the top-5 frame; a tuple of names marks a
+    MULTI-WALK frame (``similarity._graph_walks``) whose ``walk``
+    column names each row's variant, so its graph is built once and
+    its hits are grouped by walk. Items overlap on driver threads.
 
-    Hits are a ``left_semi`` count of the exact pairs the variant
-    returns. With ``visited``, each variant frame also carries the
-    per-query ``n_visited``/``cell_n`` stats, and the row gains
-    ``visited_frac``: hits and visited fraction then fall out of ONE
-    grouped pass (two actions would cost two driver round trips).
-    The left join keeps every stats row (``n_visited``/
-    ``cell_n`` are constant per query, and stats pairs are unique —
-    each neighbor lives in one cell), so per query ``sum(_hit)``
-    counts its exact-pair matches and the ``first()`` ratio is its
-    visited fraction; the outer aggregate sums and averages."""
+    A single frame's hits are a ``left_semi`` count of the exact
+    pairs it returns. A multi-walk frame's hits are its rows that hit
+    an exact pair, per walk (a walk's pairs are unique: each neighbor
+    lives in one cell). With ``visited`` (multi-walk frames only),
+    each frame also carries the per-query ``n_visited``/``cell_n``
+    stats, and the row gains ``visited_frac``: hits and visited
+    fraction then fall out of ONE grouped pass (two actions would
+    cost two driver round trips). The left join keeps every stats
+    row (``n_visited``/``cell_n`` are constant per query), so per
+    (walk, query) ``sum(_hit)`` counts its exact-pair matches and the
+    ``first()`` ratio is its visited fraction; the outer aggregate
+    sums and averages per walk."""
     truth, n_exact = exact
     keys = ["query_id", "neighbor_id"]
 
-    def row(variant: str, make) -> tuple:
+    def recall(hits) -> float | None:
+        return (hits / n_exact) if n_exact else None
+
+    def rows(names, make) -> list[tuple]:
         approx = make()
-        if not visited:
+        if isinstance(names, str):
             hits = truth.join(approx.select(*keys), keys, "left_semi").count()
-            extra = ()
-        else:
-            r = (
-                approx.select(*keys, "n_visited", "cell_n")
-                .join(truth.withColumn("_hit", F.lit(1)), keys, "left")
-                .groupBy("query_id")
-                .agg(
-                    F.sum("_hit").alias("_h"),
-                    (F.first("n_visited") / F.first("cell_n")).alias("_vf"),
-                )
-                .agg(F.sum("_h").alias("_hits"), F.avg("_vf").alias("_avg"))
-                .collect()[0]
+            return [(names, 5, recall(hits))]
+        stats = ["n_visited", "cell_n"] if visited else []
+        hit = approx.select("walk", *keys, *stats).join(
+            truth.withColumn("_hit", F.lit(1)), keys, "left"
+        )
+        aggs = [F.sum("_hit").alias("_hits")]
+        if visited:
+            hit = hit.groupBy("walk", "query_id").agg(
+                F.sum("_hit").alias("_hit"),
+                (F.first("n_visited") / F.first("cell_n")).alias("_vf"),
             )
-            hits, extra = int(r["_hits"] or 0), (round(r["_avg"], 4),)
-        return (variant, 5, (hits / n_exact) if n_exact else None, *extra)
+            aggs.append(F.avg("_vf").alias("_avg"))
+        got = {
+            r["walk"]: r for r in hit.groupBy("walk").agg(*aggs).collect()
+        }
+        out = []
+        for name in names:
+            r = got.get(name)  # None: the walk returned no rows
+            out.append((name, 5, recall(int(r["_hits"] or 0) if r else 0)))
+            if visited:
+                out[-1] += (round(r["_avg"], 4) if r else None,)
+        return out
 
     with _recall_overlap(spark, len(variants)) as submit:
-        futures = [submit(row, name, make) for name, make in variants]
-        rows = [f.result() for f in futures]
+        futures = [submit(rows, names, make) for names, make in variants]
+        out = [r for f in futures for r in f.result()]
     schema = "variant string, k int, recall double"
     if visited:
         schema += ", visited_frac double"
-    return local_frame(spark, rows, schema)
+    return local_frame(spark, out, schema)
 
 
 _PQ_COMMON = """
@@ -1516,16 +1531,12 @@ def nsw_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
         c_, 4, "vec_id", "embedding", 42
     )
     return _recall_rows(spark, _exact_top5(q_, c_), [
-        ("graph_probe_all",
-         lambda: similarity.cosine_topk_nsw(
-             q_, c_, k=5, n_cells=1, n_probe=1,
-             m_neighbors=6, n_entries=2, centroids=cents4[:1],
-         )),
-        ("graph_sparse",
-         lambda: similarity.cosine_topk_nsw(
-             q_, c_, k=5, n_cells=1, n_probe=1,
-             m_neighbors=4, n_entries=1, centroids=cents4[:1],
-         )),
+        # one graph build serves both single-cell walks
+        (("graph_probe_all", "graph_sparse"),
+         lambda: similarity._graph_walks(q_, c_, {
+             "graph_probe_all": ("reach", 6, 2),
+             "graph_sparse": ("reach", 4, 1),
+         }, k=5, n_cells=1, n_probe=1, centroids=cents4[:1])),
         ("cells_probe_2of4",
          lambda: similarity.cosine_topk_nsw(
              q_, c_, k=5, n_cells=4, n_probe=2,
@@ -1563,27 +1574,17 @@ def nsw_beam_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c_ = emb.filter(F.col("vec_id") >= 10)
-    # ONE md5-seeded centroid sample shared by every variant (r13 —
-    # each cosine_topk_nsw_beam call otherwise re-ran the corpus
-    # sort+collect at declaration; all four variants are n_cells=1,
-    # seed 42, so the samples were identical by construction)
-    cents1 = similarity._seeded_centroid_matrix(
-        c_, 1, "vec_id", "embedding", 42
-    )
-    common = dict(k=5, n_cells=1, n_probe=1, m_neighbors=6,
-                  n_entries=2, include_stats=True, centroids=cents1)
+    # every walk runs over ONE graph build (similarity._graph_walks)
+    walks = {
+        "beam_ef16": ("beam", 6, 2, 16),
+        "beam_ef32": ("beam", 6, 2, 32),
+        "beam_ef64": ("beam", 6, 2, 64),
+        "reach_scored": ("reach", 6, 2),
+    }
     return _recall_rows(spark, _exact_top5(q_, c_), [
-        ("beam_ef16",
-         lambda: similarity.cosine_topk_nsw_beam(q_, c_, ef=16, **common)),
-        ("beam_ef32",
-         lambda: similarity.cosine_topk_nsw_beam(q_, c_, ef=32, **common)),
-        ("beam_ef64",
-         lambda: similarity.cosine_topk_nsw_beam(q_, c_, ef=64, **common)),
-        ("reach_scored",
-         lambda: similarity.cosine_topk_nsw(
-             q_, c_, k=5, n_cells=1, n_probe=1, m_neighbors=6,
-             n_entries=2, include_stats=True, centroids=cents1,
-         )),
+        (tuple(walks), lambda: similarity._graph_walks(
+            q_, c_, walks, k=5, n_cells=1, n_probe=1, include_stats=True,
+        )),
     ], visited=True)
 
 
@@ -1622,24 +1623,17 @@ def hnsw_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c_ = emb.filter(F.col("vec_id") >= 10)
-    # shared centroid sample (the nsw_beam_recall_at_k setup)
-    cents1 = similarity._seeded_centroid_matrix(
-        c_, 1, "vec_id", "embedding", 42
-    )
-    common = dict(k=5, n_cells=1, n_probe=1, m_neighbors=6,
-                  include_stats=True, centroids=cents1)
+    # every walk runs over ONE graph build (similarity._graph_walks)
+    walks = {
+        "hnsw_ef16": ("hnsw", 6, 16),
+        "hnsw_ef32": ("hnsw", 6, 32),
+        "hnsw_ef64": ("hnsw", 6, 64),
+        "beam_ef32": ("beam", 6, 2, 32),
+    }
     return _recall_rows(spark, _exact_top5(q_, c_), [
-        ("hnsw_ef16",
-         lambda: similarity.cosine_topk_hnsw(q_, c_, ef=16, **common)),
-        ("hnsw_ef32",
-         lambda: similarity.cosine_topk_hnsw(q_, c_, ef=32, **common)),
-        ("hnsw_ef64",
-         lambda: similarity.cosine_topk_hnsw(q_, c_, ef=64, **common)),
-        ("beam_ef32",
-         lambda: similarity.cosine_topk_nsw_beam(
-             q_, c_, k=5, n_cells=1, n_probe=1, m_neighbors=6,
-             n_entries=2, ef=32, include_stats=True, centroids=cents1,
-         )),
+        (tuple(walks), lambda: similarity._graph_walks(
+            q_, c_, walks, k=5, n_cells=1, n_probe=1, include_stats=True,
+        )),
     ], visited=True)
 
 

@@ -3658,6 +3658,113 @@ def test_nsw_family_rejects_unusable_centroids(spark):
         fn(vecs, vecs, k=2, n_cells=2, n_probe=1, centroids=unit)
 
 
+def test_graph_ann_rejects_counts_below_one(spark):
+    """Every count knob of the graph-ANN family is refused below 1,
+    with the public function and the parameter named: a zero probe
+    or entry count used to return no rows, and a negative
+    m_neighbors sliced predecessors from the wrong end."""
+    import pytest
+
+    from google_sheets_etl_spark.operators import hnsw_index as hi
+    from google_sheets_etl_spark.operators.similarity import (
+        cosine_topk_hnsw, cosine_topk_nsw, cosine_topk_nsw_beam,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, 0.5]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    knobs = ["k", "n_cells", "n_probe", "m_neighbors"]
+    for fn in (cosine_topk_nsw, cosine_topk_nsw_beam, cosine_topk_hnsw):
+        names = knobs + (["n_entries"] if fn is not cosine_topk_hnsw else [])
+        for name in names:
+            for value in (0, -1):
+                with pytest.raises(
+                    ValueError,
+                    match=f"{fn.__name__}: {name} must be >= 1, got {value}",
+                ):
+                    fn(vecs, vecs, **{"k": 2, "n_cells": 2, name: value})
+    path = "/nonexistent/hnsw_index"
+    for fn, call, names in (
+        (hi.hnsw_index_build,
+         lambda **kw: hi.hnsw_index_build(spark, vecs, path, **kw),
+         ["n_cells", "m_neighbors"]),
+        (hi.hnsw_index_admit,
+         lambda **kw: hi.hnsw_index_admit(spark, path, vecs, **kw),
+         ["m_neighbors"]),
+        (hi.hnsw_index_search,
+         lambda **kw: hi.hnsw_index_search(spark, path, vecs, **kw),
+         ["k", "n_probe"]),
+    ):
+        for name in names:
+            with pytest.raises(
+                ValueError, match=f"{fn.__name__}: {name} must be >= 1"
+            ):
+                call(**{name: 0})
+
+
+def test_graph_walks_equal_single_walk_calls(spark):
+    """One multi-walk call (``similarity._graph_walks``) returns, per
+    walk, exactly what the single-walk public function returns — ids,
+    bit-equal cosines, ``n_visited`` and ``cell_n`` — so no state
+    leaks between walks sharing a graph; and the whole frame runs ONE
+    graph-kernel cogroup. The corpus carries a zero-norm vector and
+    duplicate vectors (cosine ties), spans two probed cells, and is
+    also fed repartitioned."""
+    import random
+
+    from google_sheets_etl_spark.operators import similarity as sim
+
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(60)]
+    rows += [(60, [0.0] * 6), (61, list(rows[9][1])), (62, list(rows[9][1]))]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    walks = {
+        "reach_m4": ("reach", 4, 2),
+        "reach_m6": ("reach", 6, 1),
+        "beam": ("beam", 4, 2, 8),
+        "hnsw_m4": ("hnsw", 4, 8),
+        "hnsw_m6": ("hnsw", 6, 12),
+    }
+    single = {
+        "reach": lambda m, n_entries: dict(
+            fn=sim.cosine_topk_nsw, m_neighbors=m, n_entries=n_entries),
+        "beam": lambda m, n_entries, ef: dict(
+            fn=sim.cosine_topk_nsw_beam, m_neighbors=m,
+            n_entries=n_entries, ef=ef),
+        "hnsw": lambda m, ef: dict(
+            fn=sim.cosine_topk_hnsw, m_neighbors=m, ef=ef),
+    }
+
+    def rows_of(df):
+        return sorted(
+            tuple(float.hex(v) if isinstance(v, float) else v for v in r)
+            for r in df.collect()
+        )
+
+    for q_parts, c_parts in ((None, None), (3, 5)):
+        q = vecs.filter("vec_id % 7 = 0")
+        c = vecs.filter("vec_id % 7 != 0 or vec_id = 60")
+        if q_parts:
+            q, c = q.repartition(q_parts), c.repartition(c_parts)
+        common = dict(k=4, n_cells=2, n_probe=2)
+        for stats in (False, True):
+            multi = sim._graph_walks(
+                q, c, walks, include_stats=stats, **common
+            )
+            got = rows_of(multi)
+            plan = multi._jdf.queryExecution().executedPlan().toString()
+            final = plan.split("== Initial Plan ==")[0]
+            assert final.count("FlatMapCoGroupsInPandas") == 1, plan
+            for name, (kind, *args) in walks.items():
+                kw = single[kind](*args)
+                want = rows_of(kw.pop("fn")(
+                    q, c, include_stats=stats, **common, **kw
+                ))
+                assert want, name
+                assert [r[1:] for r in got if r[0] == name] == want, name
+
+
 def test_graph_build_cell_size_guard(spark):
     """The NSW/beam/HNSW graph build rejects a cell larger than
     max_cell_nodes with the fix named (raise n_cells / pre-band) —

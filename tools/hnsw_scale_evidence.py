@@ -5,11 +5,15 @@ beam; the claimed asymptotic win needs a >=10^4-node cell. The sf0.1
 embeddings table tops out at 2 000 rows, so this run builds a
 deterministic 16 384-node corpus (seeded numpy, dim 64 — the same shape
 as the testdata embeddings; NOT a driver query input) and runs BOTH
-searchers through the real operators at n_cells=1.
+searchers through the graph-ANN kernel at n_cells=1: one multi-walk
+call (``similarity._graph_walks``) builds the graph once and runs all
+six (method, ef) walks over it — each walk returns exactly what its
+public operator (``cosine_topk_nsw_beam``, ``cosine_topk_hnsw``) would.
 
 Prints a markdown table of (method, ef, recall@10, mean visited
-fraction, mean nodes scored) ready for SCALE.md. Evidence only — not a
-bench row, not registered.
+fraction, mean nodes scored) ready for SCALE.md, then the wall time of
+the one build-and-walk pass. Evidence only — not a bench row, not
+registered.
 
 Usage: python tools/hnsw_scale_evidence.py [n_nodes] [n_queries]
 """
@@ -23,12 +27,12 @@ import numpy as np
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, Window
+from pyspark.sql import functions as F
 
 from google_sheets_etl_spark.operators.similarity import (
+    _graph_walks,
     cosine_topk_bruteforce,
-    cosine_topk_hnsw,
-    cosine_topk_nsw_beam,
     recall_at_k,
 )
 
@@ -70,42 +74,44 @@ def main() -> None:
     exact = cosine_topk_bruteforce(qdf, cdf, k=K).cache()
     exact.count()
 
-    print(f"corpus={N} nodes, dim={DIM}, {NQ} queries, k={K}, n_cells=1, m=6")
-    print("| method | ef | recall@10 | mean visited frac | mean nodes scored | wall s |")
-    print("|---|---|---|---|---|---|")
-    for fn, label in ((cosine_topk_nsw_beam, "flat beam"), (cosine_topk_hnsw, "hnsw")):
-        for ef in EFS:
-            t0 = time.time()
-            res = fn(
-                qdf, cdf, k=K, n_cells=1, n_probe=1, ef=ef,
-                include_stats=True, max_cell_nodes=N,
-            ).cache()
-            stats = (
-                res.groupBy("query_id")
-                .agg({"n_visited": "max", "cell_n": "max"})
-                .collect()
-            )
-            wall = time.time() - t0
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
+    # the public operators' defaults: m=6, and 2 entries for the beam
+    walks = {f"flat beam/{ef}": ("beam", 6, 2, ef) for ef in EFS}
+    walks.update({f"hnsw/{ef}": ("hnsw", 6, ef) for ef in EFS})
+    t0 = time.time()
+    res = _graph_walks(
+        qdf, cdf, walks, k=K, n_cells=1, n_probe=1, include_stats=True,
+        max_cell_nodes=N,
+    ).cache()
+    stats = (
+        res.groupBy("walk", "query_id")
+        .agg(F.max("n_visited").alias("v"), F.max("cell_n").alias("n"))
+        .collect()
+    )
+    wall = time.time() - t0
 
-            ranked = res.withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(
-                        F.col("cos").desc(), F.col("neighbor_id")
-                    )
-                ),
-            )
-            rec = recall_at_k(exact, ranked, K)
-            visited = np.array([r[1] for r in stats], dtype=float)
-            celln = np.array([r[2] for r in stats], dtype=float)
-            res.unpersist()
-            print(
-                f"| {label} | {ef} | {rec:.3f} | "
-                f"{float((visited / celln).mean()):.4f} | "
-                f"{float(visited.mean()):.0f} | {wall:.1f} |"
-            )
+    print(f"corpus={N} nodes, dim={DIM}, {NQ} queries, k={K}, n_cells=1, m=6")
+    print("| method | ef | recall@10 | mean visited frac | mean nodes scored |")
+    print("|---|---|---|---|---|")
+    for name in walks:
+        label, ef = name.split("/")
+        ranked = res.filter(F.col("walk") == name).withColumn(
+            "rank",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col("cos").desc(), F.col("neighbor_id")
+                )
+            ),
+        )
+        rec = recall_at_k(exact, ranked, K)
+        visited = np.array([r["v"] for r in stats if r["walk"] == name], dtype=float)
+        celln = np.array([r["n"] for r in stats if r["walk"] == name], dtype=float)
+        print(
+            f"| {label} | {ef} | {rec:.3f} | "
+            f"{float((visited / celln).mean()):.4f} | "
+            f"{float(visited.mean()):.0f} |"
+        )
+    print(f"one graph build, six walks: {wall:.1f} s")
+    res.unpersist()
     spark.stop()
 
 
