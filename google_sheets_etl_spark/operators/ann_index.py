@@ -43,7 +43,6 @@ id-keyed upsert, never a corpus rescan.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -54,15 +53,14 @@ from pyspark.sql.types import (
 )
 
 from ..plans.state_table import StateTable
+from ..session import arrow_rows
 from .similarity import (
-    _pq_adc_rank,
+    _at_least_one,
+    _encode_codes,
+    _one_variant,
     _pq_codebooks,
-    _probe_assign,
-    _ranked_topk,
     _seeded_centroid_matrix,
-    _sub_d2,
-    _unit_rows,
-    cosine_similarity,
+    _shortlist_knobs,
 )
 
 CENTROIDS_SCHEMA = StructType([
@@ -95,43 +93,9 @@ def _tables(spark: SparkSession, path: str, id_field):
 def _encode(
     df: DataFrame, cents, codebooks, id_col: str, vec_col: str
 ) -> DataFrame:
-    """One Arrow pass: coarse-cell argmax (stable — ties cell ASC,
-    the _probe_assign contract) + per-subspace PQ argmin (ties code
-    ASC) — the exact corpus kernel of ``_ivf_adc_topk``, factored so
-    build-time and admission-time encoding CANNOT drift."""
-    import numpy as np
-    import pandas as pd
-
-    n_sub, _, dsub = codebooks.shape
-    schema = _codes_schema(df.schema[id_col])
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = _unit_rows(
-                np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            )
-            sims = mat @ cents.T
-            cell = np.argsort(-sims, axis=1, kind="stable")[:, 0]
-            codes = np.stack(
-                [
-                    np.argmin(
-                        _sub_d2(mat[:, m * dsub:(m + 1) * dsub],
-                                codebooks[m]),
-                        axis=1,
-                    )
-                    for m in range(n_sub)
-                ],
-                axis=1,
-            )
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "cell": cell.astype(np.int64),
-                "codes": list(codes.astype(np.int32)),
-            })
-
-    return df.select(id_col, vec_col).mapInPandas(kernel, schema)
+    """The code table's rows for ``df``: the IVF pipeline's corpus
+    encode (``similarity._encode_codes``) with the coarse cell."""
+    return _encode_codes(df, {"codes": codebooks}, id_col, vec_col, cents=cents)
 
 
 def ann_index_build(
@@ -147,46 +111,43 @@ def ann_index_build(
 ) -> None:
     """Fit both quantizers on ``corpus`` (md5-seeded samples — the
     exact-SQL-twin discipline of ivf_pq_topk) and persist centroids,
-    codebooks and the corpus code table."""
+    codebooks and the corpus code table. The quantizers are metadata,
+    committed from the driver; the codes are written by Spark."""
+    _at_least_one(
+        "ann_index_build", n_cells=n_cells, n_subspaces=n_subspaces,
+        n_codes=n_codes,
+    )
     cents = _seeded_centroid_matrix(corpus, n_cells, id_col, vec_col, seed)
     cbs = _pq_codebooks(corpus, n_subspaces, n_codes, id_col, vec_col, seed)
     ct, bt, kt = _tables(spark, path, corpus.schema[id_col])
-    ct.overwrite(
-        spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
-            CENTROIDS_SCHEMA,
-        )
-    )
-    bt.overwrite(
-        spark.createDataFrame(
-            [
-                (m, j, [float(x) for x in cbs[m, j]])
-                for m in range(cbs.shape[0])
-                for j in range(cbs.shape[1])
-            ],
-            CODEBOOKS_SCHEMA,
-        )
-    )
+    ct.overwrite(arrow_rows(
+        [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
+        CENTROIDS_SCHEMA,
+    ))
+    bt.overwrite(arrow_rows(
+        [
+            (m, j, [float(x) for x in cbs[m, j]])
+            for m in range(cbs.shape[0])
+            for j in range(cbs.shape[1])
+        ],
+        CODEBOOKS_SCHEMA,
+    ))
     kt.overwrite(_encode(corpus, cents, cbs, id_col, vec_col))
 
 
 def _load_quantizers(spark: SparkSession, path: str, id_field):
-    """Rebuild the numpy quantizer matrices from the stored tables —
-    metadata-bounded collects (n_cells + n_subspaces·n_codes rows);
-    float64 round-trips parquet losslessly, so stored-quantizer
-    encoding is bit-identical to build-time encoding."""
+    """The numpy quantizers from the stored tables' driver-side
+    snapshots (metadata rows, no Spark job); float64 round-trips
+    parquet losslessly, so stored-quantizer encoding is bit-identical
+    to build-time encoding."""
     import numpy as np
 
     ct, bt, _ = _tables(spark, path, id_field)
-    crows = ct.read().orderBy("cell").collect()
-    cents = np.array([r["cv"] for r in crows], dtype=np.float64)
-    brows = bt.read().orderBy("m", "j").collect()
-    n_sub = max(r["m"] for r in brows) + 1
-    n_codes = max(r["j"] for r in brows) + 1
-    cbs = np.zeros((n_sub, n_codes, len(brows[0]["sub"])), dtype=np.float64)
-    for r in brows:
-        cbs[r["m"], r["j"]] = r["sub"]
-    return cents, cbs
+    cents = ct.snapshot().sort_by("cell")["cv"].to_pylist()
+    books = bt.snapshot().sort_by([("m", "ascending"), ("j", "ascending")])
+    subs = np.array(books["sub"].to_pylist(), dtype=np.float64)
+    n_sub = max(books["m"].to_pylist()) + 1
+    return np.array(cents, dtype=np.float64), subs.reshape(n_sub, -1, subs.shape[1])
 
 
 def ann_index_admit(
@@ -233,36 +194,18 @@ def ann_index_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Serve top-k from the STORED index: probe the stored centroids
-    (queries broadcast), join the stored code table on cell (codes
-    never shuffle), exact integer micro-unit ADC shortlist
-    (``_pq_adc_rank`` — the certified kernel), exact cosine re-rank
-    against ``corpus``'s vectors. Returns
-    ``(query_id, neighbor_id, rank, cosine_r4)``."""
+    """Serve top-k from the STORED index — the IVF-PQ pipeline
+    (``similarity._quantized_topk``) over the stored quantizers and
+    code table: probe (queries broadcast, codes never shuffle), exact
+    micro-unit ADC shortlist, exact cosine re-rank against
+    ``corpus``'s vectors. Returns ``(query_id, neighbor_id, rank,
+    cosine_r4)``."""
+    _shortlist_knobs("ann_index_search", k, shortlist, n_probe=n_probe)
     id_field = queries.schema[id_col]
     cents, cbs = _load_quantizers(spark, path, id_field)
     _, _, kt = _tables(spark, path, id_field)
-    codes = kt.read().withColumnRenamed(id_col, "neighbor_id")
-    qprobe = _probe_assign(
-        queries, cents, "query_id", "qv", n_probe, id_col, vec_col
+    return _one_variant(
+        queries, corpus, cbs, n_probe, True, k=k, shortlist=shortlist,
+        id_col=id_col, vec_col=vec_col, centroids=cents,
+        codes=kt.read().withColumnRenamed(id_col, "neighbor_id"),
     )
-    joined = F.broadcast(qprobe).join(codes, "cell")
-    short = _pq_adc_rank(joined, cbs, shortlist).select(
-        "query_id", "neighbor_id"
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    scored = (
-        short.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_similarity(F.col("qv"), F.col("cv")).alias("cos"),
-        )
-    )
-    return _ranked_topk(scored, k)

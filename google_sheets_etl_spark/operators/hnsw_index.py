@@ -67,6 +67,7 @@ from pyspark.sql.types import (
 )
 
 from ..plans.state_table import StateTable
+from ..session import arrow_rows
 from .similarity import (
     _at_least_one,
     _hnsw_build_adj,
@@ -179,33 +180,32 @@ def hnsw_index_build(
             F.count(F.lit(1)).alias("n")
         ).collect()
     }
-    import numpy as np
-
-    ct.overwrite(
-        spark.createDataFrame(
-            [
+    # the cells are metadata: committed from the driver, no Spark job
+    ct.overwrite(arrow_rows(
+        [
+            (
+                c,
+                [float(x) for x in cents[c]],
                 (
-                    c,
-                    [float(x) for x in cents[c]],
-                    (
-                        max(0, int(np.log2(sizes.get(c, 0))))
-                        if sizes.get(c, 0) > 1
-                        else 0
-                    ),
-                )
-                for c in range(cents.shape[0])
-            ],
-            CELLS_SCHEMA,
-        )
-    )
+                    max(0, int(np.log2(sizes.get(c, 0))))
+                    if sizes.get(c, 0) > 1
+                    else 0
+                ),
+            )
+            for c in range(cents.shape[0])
+        ],
+        CELLS_SCHEMA,
+    ))
     nt.overwrite(nodes)
 
 
 def _load_cells(spark: SparkSession, path: str, id_field):
+    """Centroids and frozen caps from the cells table's driver-side
+    snapshot (no Spark job)."""
     import numpy as np
 
     ct, _ = _tables(spark, path, id_field)
-    rows = ct.read().orderBy("cell").collect()
+    rows = ct.snapshot().sort_by("cell").to_pylist()
     cents = np.array([r["cv"] for r in rows], dtype=np.float64)
     caps = {r["cell"]: r["lvl_cap"] for r in rows}
     return cents, caps

@@ -43,22 +43,23 @@ def _recall_rows(
     variants' order; recall = hits / n_exact against ``exact`` (the
     pair :func:`_exact_top5` returns). Each ``(name, make)`` item's
     ``make()`` builds the top-5 frame; a tuple of names marks a
-    MULTI-WALK frame (``similarity._graph_walks``) whose ``walk``
-    column names each row's variant, so its graph is built once and
-    its hits are grouped by walk. Items overlap on driver threads.
+    MULTI-VARIANT frame (``similarity._graph_walks``,
+    ``similarity._quantized_topk``) whose ``variant`` column names
+    each row's variant, so its index is built once and its hits are
+    grouped by variant. Items overlap on driver threads.
 
     A single frame's hits are a ``left_semi`` count of the exact
-    pairs it returns. A multi-walk frame's hits are its rows that hit
-    an exact pair, per walk (a walk's pairs are unique: each neighbor
-    lives in one cell). With ``visited`` (multi-walk frames only),
+    pairs it returns. A multi-variant frame's hits are its rows that
+    hit an exact pair, per variant (a variant's pairs are unique).
+    With ``visited`` (multi-variant graph frames only),
     each frame also carries the per-query ``n_visited``/``cell_n``
     stats, and the row gains ``visited_frac``: hits and visited
     fraction then fall out of ONE grouped pass (two actions would
     cost two driver round trips). The left join keeps every stats
     row (``n_visited``/``cell_n`` are constant per query), so per
-    (walk, query) ``sum(_hit)`` counts its exact-pair matches and the
-    ``first()`` ratio is its visited fraction; the outer aggregate
-    sums and averages per walk."""
+    (variant, query) ``sum(_hit)`` counts its exact-pair matches and
+    the ``first()`` ratio is its visited fraction; the outer aggregate
+    sums and averages per variant."""
     truth, n_exact = exact
     keys = ["query_id", "neighbor_id"]
 
@@ -71,22 +72,23 @@ def _recall_rows(
             hits = truth.join(approx.select(*keys), keys, "left_semi").count()
             return [(names, 5, recall(hits))]
         stats = ["n_visited", "cell_n"] if visited else []
-        hit = approx.select("walk", *keys, *stats).join(
+        hit = approx.select("variant", *keys, *stats).join(
             truth.withColumn("_hit", F.lit(1)), keys, "left"
         )
         aggs = [F.sum("_hit").alias("_hits")]
         if visited:
-            hit = hit.groupBy("walk", "query_id").agg(
+            hit = hit.groupBy("variant", "query_id").agg(
                 F.sum("_hit").alias("_hit"),
                 (F.first("n_visited") / F.first("cell_n")).alias("_vf"),
             )
             aggs.append(F.avg("_vf").alias("_avg"))
         got = {
-            r["walk"]: r for r in hit.groupBy("walk").agg(*aggs).collect()
+            r["variant"]: r
+            for r in hit.groupBy("variant").agg(*aggs).collect()
         }
         out = []
         for name in names:
-            r = got.get(name)  # None: the walk returned no rows
+            r = got.get(name)  # None: the variant returned no rows
             out.append((name, 5, recall(int(r["_hits"] or 0) if r else 0)))
             if visited:
                 out[-1] += (round(r["_avg"], 4) if r else None,)
@@ -317,7 +319,7 @@ def sq8_encode_codes(spark: SparkSession, sf: str) -> DataFrame:
     driver canonicalizer contract)."""
     emb = t(spark, sf, "embeddings")
     c = emb.filter(F.col("vec_id") >= 10)
-    bounds = similarity.sq8_bounds(c, 64)
+    bounds = similarity.sq8_bounds(c)
     return similarity.sq8_encode(c, bounds).select(
         "vec_id",
         F.posexplode("codes").alias("d", "code"),
@@ -344,7 +346,7 @@ def sq8_topk_adc(spark: SparkSession, sf: str) -> DataFrame:
     return similarity.sq8_topk_adc(
         emb.filter(F.col("vec_id") < 10),
         emb.filter(F.col("vec_id") >= 10),
-        k=5, dim=64,
+        k=5,
     )
 
 
@@ -945,7 +947,7 @@ def ivf_sq8_search(spark: SparkSession, sf: str) -> DataFrame:
     quantization restricts HOW MUCH per vector (1 B/dim, nearly
     rank-preserving — the practical middle of the compression curve),
     integer micro-unit ADC shortlists, exact cosine re-ranks. Same
-    shared _ivf_adc_topk machinery as IVF-PQ with the uniform grid in
+    quantized pipeline (_quantized_topk) as IVF-PQ with the uniform grid in
     place of k-means codebooks, and the oracle is the same
     ALGORITHMIC-TWIN discipline: bounds, grid, both quantizers,
     probe, bounded ranking, and re-rank all rebuilt in SQL."""
@@ -953,7 +955,7 @@ def ivf_sq8_search(spark: SparkSession, sf: str) -> DataFrame:
     return similarity.ivf_sq8_topk(
         emb.filter(F.col("vec_id") < 10),
         emb.filter(F.col("vec_id") >= 10),
-        k=5, n_cells=16, n_probe=4, shortlist=100, dim=64,
+        k=5, n_cells=16, n_probe=4, shortlist=100,
     )
 
 
@@ -985,19 +987,21 @@ def pq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c = emb.filter(F.col("vec_id") >= 10)
-    # train ONCE and share: adc_trained and rerank_trained refine the
-    # same codebooks from the same corpus with the same seed/iters —
-    # identical arrays by construction, so computing them twice was
-    # pure waste (r12; 3 driver-round-trip k-means actions saved)
-    cb_trained = similarity.pq_train_codebooks(c, n_iter=2)
+    # one frame: the corpus encodes once under both codebook sets,
+    # and adc_trained and rerank_trained share one ADC scoring
+    codebooks = {
+        "seeded": similarity._pq_codebooks(c, 8, 128, "vec_id", "embedding", 42),
+        "trained": similarity.pq_train_codebooks(c, n_iter=2),
+    }
+    variants = {
+        "adc_seeded": ("seeded", None, False),
+        "adc_trained": ("trained", None, False),
+        "rerank_trained": ("trained", None, True),
+    }
     return _recall_rows(spark, _exact_top5(q_, c), [
-        ("adc_seeded", lambda: similarity.pq_topk_adc(q_, c, k=5)),
-        ("adc_trained",
-         lambda: similarity.pq_topk_adc(q_, c, k=5, codebooks=cb_trained)),
-        ("rerank_trained",
-         lambda: similarity.pq_topk_rerank(
-             q_, c, k=5, shortlist=100, codebooks=cb_trained
-         )),
+        (tuple(variants), lambda: similarity._quantized_topk(
+            q_, c, codebooks, variants, k=5, shortlist=100,
+        )),
     ])
 
 
@@ -1071,15 +1075,16 @@ def opq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
         cb_seed = f_seed.result()
     qr = rot.filter(F.col("vec_id") < 10)
     cr = rot.filter(F.col("vec_id") >= 10)
+    rotated = {
+        "adc_rotated": ("rotated", None, False),
+        "rerank_rotated": ("rotated", None, True),
+    }
     return _recall_rows(spark, exact, [
         ("adc_seeded",
          lambda: similarity.pq_topk_adc(q_, c, k=5, codebooks=cb_seed)),
-        ("adc_rotated",
-         lambda: similarity.pq_topk_adc(qr, cr, k=5, codebooks=cb_rot)),
-        ("rerank_rotated",
-         lambda: similarity.pq_topk_rerank(
-             qr, cr, k=5, shortlist=100, codebooks=cb_rot
-         )),
+        (tuple(rotated), lambda: similarity._quantized_topk(
+            qr, cr, {"rotated": cb_rot}, rotated, k=5, shortlist=100,
+        )),
     ])
 
 
@@ -1109,17 +1114,19 @@ def sq8_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c = emb.filter(F.col("vec_id") >= 10)
+    # one frame: one bounds pass, one centroid pick, one encode pass
+    # tagging cells; sq8_adc and probe_all score every pair, probe4
+    # the pairs whose cell is among the query's 4 nearest
+    grid = similarity.sq8_grid_codebooks(similarity.sq8_bounds(c))
+    variants = {
+        "sq8_adc": ("sq8", None, False),
+        "ivf_sq8_probe4": ("sq8", 4, True),
+        "ivf_sq8_probe_all": ("sq8", 16, True),
+    }
     return _recall_rows(spark, _exact_top5(q_, c), [
-        ("sq8_adc",
-         lambda: similarity.sq8_topk_adc(q_, c, k=5, dim=64)),
-        ("ivf_sq8_probe4",
-         lambda: similarity.ivf_sq8_topk(
-             q_, c, k=5, n_cells=16, n_probe=4, shortlist=100, dim=64,
-         )),
-        ("ivf_sq8_probe_all",
-         lambda: similarity.ivf_sq8_topk(
-             q_, c, k=5, n_cells=16, n_probe=16, shortlist=100, dim=64,
-         )),
+        (tuple(variants), lambda: similarity._quantized_topk(
+            q_, c, {"sq8": grid}, variants, k=5, shortlist=100, n_cells=16,
+        )),
     ])
 
 
@@ -1866,7 +1873,7 @@ def ann_index_build_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     under BUILD-slice quantizers over the GROWN corpus — equality
     certifies that admission under stored quantizers IS the
     from-scratch encoding (quantizer persistence is lossless and the
-    two encode paths cannot drift)."""
+    admission runs the build's own encode)."""
     import tempfile
 
     from ..operators import ann_index as ai

@@ -2526,7 +2526,7 @@ def test_sq8_contracts(spark):
         (r["query_id"], r["neighbor_id"])
         for r in sim.cosine_topk_bruteforce(q, c, k=5).collect()
     }
-    sq = sim.sq8_topk_adc(q, c, k=5, dim=16)
+    sq = sim.sq8_topk_adc(q, c, k=5)
     got = {(r["query_id"], r["neighbor_id"]) for r in sq.collect()}
     hits = len(exact & got)
     assert hits >= 23, f"SQ8 recall@5 too low: {hits}/25"
@@ -2534,7 +2534,7 @@ def test_sq8_contracts(spark):
     shuffled = {
         (r["query_id"], r["neighbor_id"], r["rank"], r["adc_u6"])
         for r in sim.sq8_topk_adc(
-            q.repartition(7), c.repartition(13), k=5, dim=16
+            q.repartition(7), c.repartition(13), k=5
         ).collect()
     }
     base = {
@@ -2543,14 +2543,14 @@ def test_sq8_contracts(spark):
     }
     assert shuffled == base
 
-    bounds = sim.sq8_bounds(c, 16)
+    bounds = sim.sq8_bounds(c)
     # dim 15 is constant 0.5 pre-normalization but varies after
     # normalization; plant a truly constant dim via a tiny frame
     const = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [1.0, 0.0])],
         "vec_id long, embedding array<double>",
     )
-    b2 = sim.sq8_bounds(const, 2)
+    b2 = sim.sq8_bounds(const)
     assert b2[0, 1] == b2[1, 1] == 0.0
     codes = {
         r["vec_id"]: r["codes"]
@@ -2559,6 +2559,145 @@ def test_sq8_contracts(spark):
     assert codes[1] == codes[2]
     assert codes[1][1] == 0  # zero-span dim → lowest code, no NaN
     assert bounds.shape == (2, 16)
+
+
+def test_quantized_variants_equal_single_variant_calls(spark):
+    """One multi-variant call (``similarity._quantized_topk``) returns,
+    per variant, exactly what the single-variant public function
+    returns — ids, ranks, ``adc_u6`` and bit-equal cosines — over two
+    PQ codebook sets and the SQ8 grid, flat and IVF (n_probe 2 and
+    every cell), in a frame mixing ADC and re-rank variants, a
+    flat-only and an IVF-only one. The corpus and the queries carry a
+    zero-norm vector, the corpus duplicate vectors (ADC and cosine
+    ties), and both are also fed repartitioned 7/13. The persisted
+    index's admitted codes equal the pipeline's encode of the same
+    batch under the stored quantizers."""
+    import random
+    import tempfile
+
+    from google_sheets_etl_spark.operators import ann_index as ai
+    from google_sheets_etl_spark.operators import similarity as sim
+
+    rng = random.Random(11)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(80)]
+    rows += [(80, [0.0] * 8), (81, list(rows[9][1])), (82, list(rows[9][1])),
+             (83, [0.0] * 8)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q0 = vecs.filter("vec_id % 9 = 0 or vec_id = 83")
+    c0 = vecs.filter("vec_id % 9 != 0 and vec_id != 83")
+    k, shortlist, n_cells = 4, 12, 4
+    books = {
+        "a": sim._pq_codebooks(c0, 2, 8, "vec_id", "embedding", 42),
+        "b": sim._pq_codebooks(c0, 4, 16, "vec_id", "embedding", 42),
+        "sq8": sim.sq8_grid_codebooks(sim.sq8_bounds(c0)),
+    }
+    ivf = dict(k=k, n_cells=n_cells, shortlist=shortlist)
+    single = {
+        "flat_a": (("a", None, False), lambda q, c: sim.pq_topk_adc(
+            q, c, k=k, codebooks=books["a"])),
+        "flat_b_rerank": (("b", None, True), lambda q, c: sim.pq_topk_rerank(
+            q, c, k=k, shortlist=shortlist, codebooks=books["b"])),
+        "flat_sq8": (("sq8", None, False), lambda q, c: sim.sq8_topk_adc(
+            q, c, k=k)),
+        "ivf_a_probe2": (("a", 2, True), lambda q, c: sim.ivf_pq_topk(
+            q, c, n_probe=2, n_subspaces=2, n_codes=8, **ivf)),
+        "ivf_b_all": (("b", n_cells, True), lambda q, c: sim.ivf_pq_topk(
+            q, c, n_probe=n_cells, n_subspaces=4, n_codes=16, **ivf)),
+        "ivf_sq8_probe2": (("sq8", 2, True), lambda q, c: sim.ivf_sq8_topk(
+            q, c, n_probe=2, **ivf)),
+    }
+
+    def key(values):
+        return tuple(float.hex(v) if isinstance(v, float) else v for v in values)
+
+    for q, c in ((q0, c0), (q0.repartition(7), c0.repartition(13))):
+        want = {}
+        for name, (_, call) in single.items():
+            df = call(q, c)
+            want[name] = (df.columns, sorted(key(r) for r in df.collect()))
+            assert want[name][1], name
+        for names in (list(single), list(single)[:3], list(single)[3:]):
+            multi = sim._quantized_topk(
+                q, c, books, {n: single[n][0] for n in names}, **ivf
+            ).collect()
+            for name in names:
+                cols, rows_want = want[name]
+                got = sorted(
+                    key(r[col] for col in cols)
+                    for r in multi if r["variant"] == name
+                )
+                assert got == rows_want, (name, names)
+
+    path = tempfile.mkdtemp(prefix="annix_eq_")
+    build, batch = c0.filter("vec_id % 2 = 0"), c0.filter("vec_id % 2 = 1")
+    ai.ann_index_build(spark, build, path, n_cells=n_cells, n_subspaces=2,
+                       n_codes=8)
+    ai.ann_index_admit(spark, path, batch)
+    cents = sim._seeded_centroid_matrix(build, n_cells, "vec_id", "embedding", 42)
+    cbs = sim._pq_codebooks(build, 2, 8, "vec_id", "embedding", 42)
+    encoded = sim._encode_codes(
+        batch, {"codes": cbs}, "vec_id", "embedding", cents=cents
+    )
+    kt = ai._tables(spark, path, c0.schema["vec_id"])[2]
+    stored = kt.read().filter("vec_id % 2 = 1")
+    assert {(r.vec_id, r.cell, tuple(r.codes)) for r in stored.collect()} == {
+        (r.vec_id, r.cell, tuple(r.codes)) for r in encoded.collect()
+    }
+
+
+def test_quantized_ann_rejects_counts_below_one(spark):
+    """Every count knob of the quantized-ANN family is refused below
+    1, and a re-rank shortlist below k, with the public function and
+    the parameter named: these used to return no rows, fewer than k
+    rows per query, or a numpy error. More probes than cells still
+    clamp to probing every cell."""
+    import pytest
+
+    from google_sheets_etl_spark.operators import ann_index as ai
+    from google_sheets_etl_spark.operators import similarity as sim
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, 0.5, 2.0]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    path = "/nonexistent/ann_index"
+    for fn, call, names in (
+        (sim.pq_topk_adc, lambda **kw: sim.pq_topk_adc(vecs, vecs, **kw),
+         ["k", "n_subspaces", "n_codes"]),
+        (sim.pq_topk_rerank, lambda **kw: sim.pq_topk_rerank(vecs, vecs, **kw),
+         ["k", "shortlist", "n_subspaces", "n_codes"]),
+        (sim.sq8_topk_adc, lambda **kw: sim.sq8_topk_adc(vecs, vecs, **kw),
+         ["k"]),
+        (sim.ivf_pq_topk, lambda **kw: sim.ivf_pq_topk(vecs, vecs, **kw),
+         ["k", "n_cells", "n_probe", "shortlist", "n_subspaces", "n_codes"]),
+        (sim.ivf_sq8_topk, lambda **kw: sim.ivf_sq8_topk(vecs, vecs, **kw),
+         ["k", "n_cells", "n_probe", "shortlist"]),
+        (sim.pq_train_codebooks,
+         lambda **kw: sim.pq_train_codebooks(vecs, **kw),
+         ["n_subspaces", "n_codes"]),
+        (ai.ann_index_build,
+         lambda **kw: ai.ann_index_build(spark, vecs, path, **kw),
+         ["n_cells", "n_subspaces", "n_codes"]),
+        (ai.ann_index_search,
+         lambda **kw: ai.ann_index_search(spark, path, vecs, vecs, **kw),
+         ["k", "n_probe", "shortlist"]),
+    ):
+        for name in names:
+            for value in (0, -1):
+                with pytest.raises(
+                    ValueError,
+                    match=f"{fn.__name__}: {name} must be >= 1, got {value}",
+                ):
+                    call(**{name: value})
+        if "shortlist" in names:
+            with pytest.raises(
+                ValueError,
+                match=rf"{fn.__name__}: shortlist \(2\) must be >= k \(5\)",
+            ):
+                call(k=5, shortlist=2)
+    args = dict(k=2, n_cells=2, shortlist=4, n_subspaces=2, n_codes=4)
+    assert sorted(sim.ivf_pq_topk(vecs, vecs, n_probe=9, **args).collect()) \
+        == sorted(sim.ivf_pq_topk(vecs, vecs, n_probe=2, **args).collect())
 
 
 def test_wav_hadamard_bands_parseval(spark):

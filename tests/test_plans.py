@@ -507,7 +507,7 @@ def test_sq8_bounds_partial_agg_and_encode_narrow(spark, sf_dir):
     assert "partial_min" in bounds_plan
     assert "partial_max" in bounds_plan
 
-    bounds = similarity.sq8_bounds(c, 64)
+    bounds = similarity.sq8_bounds(c)
     enc_plan = explain_str(similarity.sq8_encode(c, bounds))
     assert "Exchange" not in enc_plan
 

@@ -83,7 +83,7 @@ def main() -> None:
         max_cell_nodes=N,
     ).cache()
     stats = (
-        res.groupBy("walk", "query_id")
+        res.groupBy("variant", "query_id")
         .agg(F.max("n_visited").alias("v"), F.max("cell_n").alias("n"))
         .collect()
     )
@@ -94,7 +94,7 @@ def main() -> None:
     print("|---|---|---|---|---|")
     for name in walks:
         label, ef = name.split("/")
-        ranked = res.filter(F.col("walk") == name).withColumn(
+        ranked = res.filter(F.col("variant") == name).withColumn(
             "rank",
             F.row_number().over(
                 Window.partitionBy("query_id").orderBy(
@@ -103,8 +103,8 @@ def main() -> None:
             ),
         )
         rec = recall_at_k(exact, ranked, K)
-        visited = np.array([r["v"] for r in stats if r["walk"] == name], dtype=float)
-        celln = np.array([r["n"] for r in stats if r["walk"] == name], dtype=float)
+        visited = np.array([r["v"] for r in stats if r["variant"] == name], dtype=float)
+        celln = np.array([r["n"] for r in stats if r["variant"] == name], dtype=float)
         print(
             f"| {label} | {ef} | {rec:.3f} | "
             f"{float((visited / celln).mean()):.4f} | "
