@@ -118,9 +118,9 @@ def hnsw_index_build(
     vec_col: str = "embedding",
     max_cell_nodes: int = 16384,
 ) -> None:
-    """Build and persist the full graph: seeded centroids + frozen
-    per-cell caps, then one per-cell Arrow task building every
-    layer's adjacency with the shared insertion rule."""
+    """Build and persist the full graph: seeded centroids, one
+    per-cell Arrow task building every layer's adjacency with the
+    shared insertion rule, then the cells with their frozen caps."""
     import numpy as np
     import pandas as pd
 
@@ -172,11 +172,13 @@ def hnsw_index_build(
             })
         return pd.DataFrame(rows)
 
-    nodes = assigned.groupBy("cell").applyInPandas(cell_kernel, schema)
-    # frozen caps come from build-time cell sizes — counted once here
+    nt.overwrite(assigned.groupBy("cell").applyInPandas(cell_kernel, schema))
+    # frozen caps come from build-time cell sizes, counted off the
+    # written nodes (one node per assigned vector): the assignment
+    # kernel runs once per build
     sizes = {
         r["cell"]: r["n"]
-        for r in assigned.groupBy("cell").agg(
+        for r in nt.read().groupBy("cell").agg(
             F.count(F.lit(1)).alias("n")
         ).collect()
     }
@@ -196,7 +198,6 @@ def hnsw_index_build(
         ],
         CELLS_SCHEMA,
     ))
-    nt.overwrite(nodes)
 
 
 def _load_cells(spark: SparkSession, path: str, id_field):

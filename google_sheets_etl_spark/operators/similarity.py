@@ -2253,17 +2253,26 @@ def pq_train_codebooks(
 
     Returns the trained numpy array, same shape/contract as
     :func:`_pq_codebooks`."""
-    import numpy as np
-    import pandas as pd
-
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
     _at_least_one(
         "pq_train_codebooks", n_subspaces=n_subspaces, n_codes=n_codes
     )
-    cb = _pq_codebooks(
-        candidates, n_subspaces, n_codes, id_col, vec_col, seed
+    return _pq_refine(
+        candidates,
+        _pq_codebooks(candidates, n_subspaces, n_codes, id_col, vec_col, seed),
+        vec_col,
+        n_iter,
     )
+
+
+def _pq_refine(candidates: DataFrame, cb, vec_col: str, n_iter: int):
+    """``n_iter`` k-means rounds of :func:`pq_train_codebooks` from the
+    init codebooks ``cb`` (left unchanged): a caller that already holds
+    the seeded set passes it instead of sampling it again."""
+    import numpy as np
+    import pandas as pd
+
     n_sub, _, dsub = cb.shape
     src = candidates.select(vec_col)
     for _ in range(n_iter):

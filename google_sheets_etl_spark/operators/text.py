@@ -8,6 +8,8 @@ DuckDB equivalent lives in ``queries.py`` oracles.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -1124,6 +1126,208 @@ def sliding_chunks(
     )
 
 
+class _NgramLM(NamedTuple):
+    """A frozen word n-gram LM (:func:`_lm_fit`): its count tables in
+    join order, each localCheckpointed and vocabulary-bounded, and the
+    driver-held scalars its probability needs. ``smooth`` is
+    ``"add_k"`` (``param`` = k) or ``"kn"`` (``param`` = D, ``t`` = row
+    count of the order-2 table)."""
+
+    n: int
+    smooth: str
+    param: float
+    v: int
+    t: int
+    tables: tuple
+
+
+def _ngrams(
+    df: DataFrame, n: int, text_col: str, lead: list | None = None
+) -> DataFrame:
+    """Adjacent-token n-grams ``(w1, …, wn)`` per row, optionally
+    keeping lead columns; rows with fewer than ``n`` tokens yield
+    nothing (and dodge Spark's DESCENDING ``sequence(1, 0)``)."""
+    from .typed_views import ensure_parallelism
+
+    lead = lead or []
+    t = ensure_parallelism(df).select(
+        *lead, F.split(F.col(text_col), " ").alias("_t")
+    ).filter(F.size("_t") >= n)
+    return t.select(
+        *lead,
+        F.explode(F.sequence(F.lit(1), F.size("_t") - (n - 1))).alias("_i"),
+        "_t",
+    ).select(
+        *lead,
+        *[
+            F.element_at("_t", F.col("_i") + j if j else F.col("_i"))
+            .alias(f"w{j + 1}")
+            for j in range(n)
+        ],
+    )
+
+
+def _lm_fit(
+    trains: list, n: int, smooth: str, param: float, text_col: str, name: str
+) -> list:
+    """Fit one frozen order-``n`` model per train split, every split's
+    Spark actions in ONE driver DAG (guide §2.6): the vocabulary count
+    needs only the split, each context table and the bottom table need
+    only the level they group, so each runs on a helper thread as soon
+    as its input is checkpointed. Level j (j = n … 2) is keyed by the
+    last j words of ``w1 … wn``:
+
+    * ``_c{j}``: the top level's raw counts; below it (Kneser-Ney),
+      continuation counts: how many distinct words precede the j
+      words in the level above;
+    * its context table: ``_x{j}`` = Σ ``_c{j}`` and ``_f{j}`` =
+      N1+(context, ·), the distinct follow types;
+    * the Kneser-Ney bottom ``_np`` = N1+(·w), with T = the order-2
+      table's row count.
+
+    Add-k keeps only the top level and its context. Raises
+    ``ValueError`` naming ``name`` for a knob outside the range where
+    the model is normalized, and for a train split with no tokens
+    (V = 0 divides by zero inside a task otherwise)."""
+    if smooth == "add_k" and not param > 0:
+        raise ValueError(f"{name}: k_smooth must be > 0, got {param}")
+    if smooth == "kn" and not 0 < param <= 1:
+        raise ValueError(
+            f"{name}: discount must be in (0, 1], where interpolated "
+            f"Kneser-Ney is normalized, got {param}"
+        )
+
+    def ckpt(df):
+        return df.localCheckpoint(eager=True)
+
+    def n_rows(alias):
+        return F.count(F.lit(1)).alias(alias)
+
+    with overlap(trains[0].sparkSession, 4 * len(trains)) as submit:
+
+        def fit(train):
+            v = submit(
+                lambda: train.select(
+                    F.explode(F.split(F.col(text_col), " ")).alias("w")
+                )
+                .distinct()
+                .count()
+            )
+            keys = [f"w{i}" for i in range(1, n + 1)]
+            level = ckpt(_ngrams(train, n, text_col).groupBy(*keys).agg(
+                n_rows(f"_c{n}")
+            ))
+            tables, t = [], 0
+            for j in range(n, 1, -1):
+                tables += [level, submit(ckpt, level.groupBy(*keys[:-1]).agg(
+                    F.sum(f"_c{j}").alias(f"_x{j}"), n_rows(f"_f{j}")
+                ))]
+                if smooth == "add_k":
+                    break
+                if j > 2:
+                    keys = keys[1:]
+                    level = ckpt(
+                        level.groupBy(*keys).agg(n_rows(f"_c{j - 1}"))
+                    )
+                else:
+                    tables.append(submit(
+                        ckpt, level.groupBy(keys[-1]).agg(n_rows("_np"))
+                    ))
+                    t = level.count()
+            return v, t, tables
+
+        # the chains submit their own helpers: wait for them before the
+        # pool closes
+        fitted = [f.result() for f in [submit(fit, tr) for tr in trains]]
+    models = [
+        _NgramLM(n, smooth, float(param), v.result(), t, tuple(
+            x if isinstance(x, DataFrame) else x.result() for x in tables
+        ))
+        for v, t, tables in fitted
+    ]
+    if any(m.v == 0 for m in models):
+        raise ValueError(f"{name}: the train split has no tokens (V = 0)")
+    return models
+
+
+def _lm_prob(m: _NgramLM, sfx: str) -> Column:
+    """P(wn | w1 … wn−1) under ``m``, over its table columns suffixed
+    ``sfx``. Each expression keeps the operation order of the DuckDB
+    oracles, so the bits are bit-equal across engines:
+
+    * add-k: ``(c + k)/(ctx + k·V)``;
+    * Kneser-Ney: the bottom ``(N1+(·w) + 0.5)/(T + 0.5·V)``, then
+      per level ``max(c − D, 0)/ctx + D·nf/ctx·lower``, or ``lower``
+      alone for an unseen context."""
+
+    def c(col):
+        return F.col(col + sfx)
+
+    if m.smooth == "add_k":
+        return (F.coalesce(c("_c2"), F.lit(0)) + F.lit(m.param)) / (
+            F.coalesce(c("_x2"), F.lit(0)) + F.lit(m.param * m.v)
+        )
+    d = m.param
+    p = (F.coalesce(c("_np"), F.lit(0)) + F.lit(0.5)) / F.lit(m.t + 0.5 * m.v)
+    for j in range(2, m.n + 1):
+        p = F.when(c(f"_x{j}").isNull(), p).otherwise(
+            F.greatest(
+                F.coalesce(c(f"_c{j}"), F.lit(0)) - F.lit(d), F.lit(0.0)
+            ) / c(f"_x{j}")
+            + F.lit(d) * c(f"_f{j}") / c(f"_x{j}") * p
+        )
+    return p
+
+
+def _lm_score(
+    docs: DataFrame,
+    models: list,
+    text_col: str,
+    id_col: str,
+    n_col: str,
+    bits_col: str,
+    sum_col: str | None = None,
+) -> DataFrame:
+    """Score every document off ONE n-gram stream under ``models``:
+    each model table joins the stream once, and each n-gram's −log2 p
+    rounds half-up to integer micro-units (``floor(x·1e6 + 0.5)``,
+    SQL ``round`` for x ≥ 0) before the per-document sum, so the
+    aggregate is exact integer arithmetic, summation-order-free. One
+    model scores its micro-units; two score the first's minus the
+    second's (Moore-Lewis). Returns ``(id, n_col[, sum_col],
+    bits_col)`` with bits = round(sum/1e6/count, 4); documents with
+    fewer than n tokens carry no evidence and are excluded. The model
+    tables are vocabulary-bounded and BROADCAST, so the corpus never
+    shuffles until the one uniform doc-key aggregate."""
+    scored = _ngrams(docs, models[0].n, text_col, [F.col(id_col)])
+    u6 = []
+    for i, m in enumerate(models):
+        sfx = f"_{i}"
+        for tbl in m.tables:
+            keys = [c for c in tbl.columns if c[0] != "_"]
+            vals = [
+                F.col(c).alias(c + sfx) for c in tbl.columns if c[0] == "_"
+            ]
+            # the family's one model-table join (class (ii): the hint
+            # stays until the join-policy sweep decides it)
+            scored = scored.join(
+                F.broadcast(tbl.select(*keys, *vals)), keys, "left"
+            )
+        u6.append(
+            F.floor(-F.log2(_lm_prob(m, sfx)) * F.lit(1e6) + F.lit(0.5))
+            .cast("long")
+        )
+    nll = u6[0] if len(u6) == 1 else u6[0] - u6[1]
+    aggs = [F.count(F.lit(1)).alias(n_col)]
+    if sum_col:
+        aggs.append(F.sum("_u6").alias(sum_col))
+    aggs.append(
+        F.round(F.sum("_u6") / F.lit(1e6) / F.count(F.lit(1)), 4)
+        .alias(bits_col)
+    )
+    return scored.select(id_col, nll.alias("_u6")).groupBy(id_col).agg(*aggs)
+
+
 def bigram_lm_bits(
     docs: DataFrame,
     train: DataFrame,
@@ -1145,25 +1349,13 @@ def bigram_lm_bits(
     conditional sums to 1 over the train vocabulary) and V = distinct
     train tokens. Unseen w1 degrades to the uniform 1/V; unseen w2
     under a seen w1 gets the additive floor (OOV mass leaks slightly
-    — the UNK-token refinement — documented, not modeled). Documents
-    with fewer than 2 tokens carry no bigram evidence and are
-    excluded from the output.
+    — the UNK-token refinement — documented, not modeled).
 
-    CROSS-ENGINE EXACTNESS (the PQ micro-unit discipline): each
-    bigram's -log2(p) is rounded HALF-UP to integer micro-units
-    before the per-document sum, so the sum is exact integer
-    arithmetic — immune to FP summation-order drift — and only ~V²
-    distinct probability values ever meet the rounding boundary.
-    Every literal stays double; counts are exact longs.
-
-    Scale shape: the model is vocabulary-bounded (≤V² bigram rows —
-    driver/broadcast-scale for any real token vocabulary), built by
-    one partial-aggregated pass over the train split; scoring is two
-    BROADCAST joins on the bigram stream (the corpus never shuffles)
-    followed by one uniform-key groupBy(doc). Returns
-    ``(id, n_bigrams, bits_per_bigram)``.
-    """
-    model = bigram_lm_fit(train, k_smooth, text_col)
+    Exactness and scale shape: :func:`_lm_score`. Returns
+    ``(id, n_bigrams, bits_per_bigram)``."""
+    (model,) = _lm_fit(
+        [train], 2, "add_k", k_smooth, text_col, "bigram_lm_bits"
+    )
     return bigram_lm_score(docs, model, text_col, id_col)
 
 
@@ -1182,84 +1374,20 @@ def kn_bigram_lm_bits(
                    + D·N1+(w1,·)/c(w1) · P_cont(w2)
 
     with absolute discount D = 0.75 (Ney/Kneser's canonical value —
-    exactly representable in binary, so no literal noise) and the
-    CONTINUATION probability P_cont(w2) ∝ how many distinct contexts
-    w2 follows — the insight that separates KN from add-k: "Francisco"
-    is frequent but follows only "San", so its unigram backoff weight
-    should be tiny. P_cont is add-0.5 smoothed over the train vocab
-    (``(N1+(·,w2) + 0.5)/(T + 0.5·V)``, T = distinct bigram types) so
-    unseen events keep positive mass; an unseen context w1 backs off
-    to P_cont entirely.
-
-    Exactness: every model quantity is an exact integer count (c2,
-    c1, follow-type and precede-type counts, T, V); the probability
-    expression is written with the IDENTICAL operation order in both
-    engines, and each bigram's −log2 p rounds HALF-UP to integer
-    micro-units before the per-document sum (the bigram_lm_bits /
-    PQ discipline), so doc aggregates are exact integer arithmetic.
-
-    Scale shape: model tables are vocab-bounded (≤T bigram rows) and
-    BROADCAST; scoring is three broadcast joins on the corpus bigram
-    stream + one uniform doc-key aggregate — the corpus never
-    shuffles until that final groupBy. Returns
-    ``(id, n_bigrams, bits_per_bigram_kn)``; <2-token docs carry no
-    bigram evidence and are excluded (the bigram_lm_bits contract)."""
-    # same dependency-DAG overlap as the trigram fit (guide §2.6):
-    # v needs only train; c1/right/n_types need only c2
-    with overlap(train.sparkSession, 3) as submit:
-        f_v = submit(
-            lambda: train.select(
-                F.explode(F.split(F.col(text_col), " ")).alias("w")
-            )
-            .distinct()
-            .count()
-        )
-        c2 = (
-            _bigram_pairs(train, text_col)
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("_c2"))
-            .localCheckpoint(eager=True)
-        )
-        f_c1 = submit(
-            lambda: c2.groupBy("w1").agg(
-                F.sum("_c2").alias("_c1"),
-                F.count(F.lit(1)).alias("_nf"),   # N1+(w1, ·): follow types
-            ).localCheckpoint(eager=True)
-        )
-        f_right = submit(
-            lambda: c2.groupBy("w2").agg(
-                F.count(F.lit(1)).alias("_np"),   # N1+(·, w2): precede types
-            ).localCheckpoint(eager=True)
-        )
-        n_types = c2.count()
-        c1, right, v = f_c1.result(), f_right.result(), f_v.result()
-    d = float(discount)
-    pcont = (F.coalesce(F.col("_np"), F.lit(0)) + F.lit(0.5)) / F.lit(
-        n_types + 0.5 * v
+    exactly representable in binary, so no literal noise; D must lie
+    in (0, 1]) and the CONTINUATION probability P_cont(w2) ∝ how many
+    distinct contexts w2 follows — the insight that separates KN from
+    add-k: "Francisco" is frequent but follows only "San", so its
+    unigram backoff weight should be tiny. P_cont is add-0.5 smoothed
+    over the train vocab (``(N1+(·,w2) + 0.5)/(T + 0.5·V)``, T =
+    distinct bigram types) so unseen events keep positive mass; an
+    unseen context w1 backs off to P_cont entirely. Returns
+    ``(id, n_bigrams, bits_per_bigram_kn)``."""
+    (model,) = _lm_fit(
+        [train], 2, "kn", discount, text_col, "kn_bigram_lm_bits"
     )
-    p = F.when(F.col("_c1").isNull(), pcont).otherwise(
-        F.greatest(
-            F.coalesce(F.col("_c2"), F.lit(0)) - F.lit(d), F.lit(0.0)
-        ) / F.col("_c1")
-        + F.lit(d) * F.col("_nf") / F.col("_c1") * pcont
-    )
-    scored = (
-        _bigram_pairs(docs, text_col, [F.col(id_col)])
-        .join(F.broadcast(c2), ["w1", "w2"], "left")
-        .join(F.broadcast(c1), "w1", "left")
-        .join(F.broadcast(right), "w2", "left")
-        .select(
-            id_col,
-            F.floor(-F.log2(p) * F.lit(1e6) + F.lit(0.5))
-            .cast("long")
-            .alias("_nll_u6"),
-        )
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.round(
-            F.sum("_nll_u6") / F.lit(1e6) / F.count(F.lit(1)), 4
-        ).alias("bits_per_bigram_kn"),
+    return _lm_score(
+        docs, [model], text_col, id_col, "n_bigrams", "bits_per_bigram_kn"
     )
 
 
@@ -1270,165 +1398,26 @@ def kn_trigram_lm_bits(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Interpolated KNESER-NEY TRIGRAM scoring — the full
-    Chen & Goodman recursion :func:`kn_bigram_lm_bits` bottoms out
-    of, i.e. the order KenLM ships by default (CCNet trains 5-gram
-    KN; 3 is where the recursion's defining trick first appears
-    twice):
+    """Interpolated KNESER-NEY TRIGRAM scoring — the full Chen &
+    Goodman recursion :func:`kn_bigram_lm_bits` bottoms out of, at
+    the order KenLM ships by default:
 
         P(w3|w1,w2) = max(c(w1w2w3) − D, 0)/c(w1w2)
                       + D·N1+(w1w2,·)/c(w1w2) · P_mid(w3|w2)
         P_mid(w3|w2) = max(N1+(·w2w3) − D, 0)/N1+(·w2·)
                       + D·N1+c(w2,·)/N1+(·w2·) · P_cont(w3)
 
-    The MIDDLE order uses CONTINUATION counts, not raw counts
-    (Kneser-Ney's core move): N1+(·w2w3) = how many distinct w1
-    precede the bigram, so a bigram frequent in only one context
-    contributes little backoff mass. P_cont(w3) = (N1+(··w3) + 0.5)
-    / (T + 0.5·V) with T = distinct continuation-bigram types —
-    add-0.5 smoothed exactly like the bigram operator, so unseen
-    events keep positive mass. Unseen (w1,w2) context backs off to
-    P_mid entirely; unseen w2 context backs off to P_cont.
-
-    Exactness contract: every model quantity is an exact integer
-    count; D = 0.75 is binary-exact; identical operation order in
-    both engines; each trigram's −log2 p rounds half-up to integer
-    micro-units before the per-doc sum. Scale shape: all model
-    tables are vocab-bounded (≤ trigram types) BROADCASTs; scoring
-    is four broadcast joins on the corpus trigram stream + one
-    uniform doc-key aggregate — the corpus never shuffles before it.
-    Returns ``(id, n_trigrams, bits_per_trigram_kn)``; <3-token docs
-    carry no trigram evidence and are excluded."""
-    # the model-table derivations form a dependency DAG, not a chain:
-    # v needs only train; ctx12/cc need only c3; ccctx/np3/n_types
-    # need only cc. Overlap each independent level on driver threads
-    # (guide §2.6) instead of paying 7 sequential job barriers.
-    def _ckpt(df):
-        return df.localCheckpoint(eager=True)
-
-    with overlap(train.sparkSession, 3) as submit:
-        f_v = submit(
-            lambda: train.select(
-                F.explode(F.split(F.col(text_col), " ")).alias("w")
-            )
-            .distinct()
-            .count()
-        )
-        c3 = _ckpt(
-            _trigram_triples(train, text_col)
-            .groupBy("w1", "w2", "w3")
-            .agg(F.count(F.lit(1)).alias("_c3"))
-        )
-        f_ctx12 = submit(
-            _ckpt,
-            c3.groupBy("w1", "w2").agg(
-                F.sum("_c3").alias("_c12"),
-                F.count(F.lit(1)).alias("_nf12"),  # N1+(w1 w2, ·)
-            ),
-        )
-        cc = _ckpt(
-            c3.groupBy("w2", "w3").agg(
-                F.count(F.lit(1)).alias("_cc"),    # N1+(· w2 w3)
-            )
-        )
-        f_ccctx = submit(
-            _ckpt,
-            cc.groupBy("w2").agg(
-                F.sum("_cc").alias("_ccs"),        # N1+(· w2 ·)
-                F.count(F.lit(1)).alias("_nf2"),   # continuation follow types
-            ),
-        )
-        f_np3 = submit(
-            _ckpt,
-            cc.groupBy("w3").agg(
-                F.count(F.lit(1)).alias("_np"),    # N1+(· · w3)
-            ),
-        )
-        n_types = cc.count()
-        ctx12, ccctx, np3 = f_ctx12.result(), f_ccctx.result(), f_np3.result()
-        v = f_v.result()
-    d = float(discount)
-    pcont = (F.coalesce(F.col("_np"), F.lit(0)) + F.lit(0.5)) / F.lit(
-        n_types + 0.5 * v
+    The MIDDLE order uses CONTINUATION counts (Kneser-Ney's core
+    move): N1+(·w2w3) = how many distinct w1 precede the bigram.
+    P_cont(w3) = (N1+(··w3) + 0.5)/(T + 0.5·V), T = distinct
+    continuation-bigram types; an unseen context backs off to the
+    order below entirely. Returns
+    ``(id, n_trigrams, bits_per_trigram_kn)``."""
+    (model,) = _lm_fit(
+        [train], 3, "kn", discount, text_col, "kn_trigram_lm_bits"
     )
-    pmid = F.when(F.col("_ccs").isNull(), pcont).otherwise(
-        F.greatest(
-            F.coalesce(F.col("_cc"), F.lit(0)) - F.lit(d), F.lit(0.0)
-        ) / F.col("_ccs")
-        + F.lit(d) * F.col("_nf2") / F.col("_ccs") * pcont
-    )
-    p = F.when(F.col("_c12").isNull(), pmid).otherwise(
-        F.greatest(
-            F.coalesce(F.col("_c3"), F.lit(0)) - F.lit(d), F.lit(0.0)
-        ) / F.col("_c12")
-        + F.lit(d) * F.col("_nf12") / F.col("_c12") * pmid
-    )
-    scored = (
-        _trigram_triples(docs, text_col, [F.col(id_col)])
-        .join(F.broadcast(c3), ["w1", "w2", "w3"], "left")
-        .join(F.broadcast(ctx12), ["w1", "w2"], "left")
-        .join(F.broadcast(cc), ["w2", "w3"], "left")
-        .join(F.broadcast(ccctx), "w2", "left")
-        .join(F.broadcast(np3), "w3", "left")
-        .select(
-            id_col,
-            F.floor(-F.log2(p) * F.lit(1e6) + F.lit(0.5))
-            .cast("long")
-            .alias("_nll_u6"),
-        )
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_trigrams"),
-        F.round(
-            F.sum("_nll_u6") / F.lit(1e6) / F.count(F.lit(1)), 4
-        ).alias("bits_per_trigram_kn"),
-    )
-
-
-def _trigram_triples(
-    df: DataFrame, text_col: str, lead: list | None = None
-) -> DataFrame:
-    """Adjacent-token triples ``(w1, w2, w3)`` per row, optionally
-    keeping lead columns; <3-token rows yield nothing (the
-    :func:`_bigram_pairs` contract one order up)."""
-    from .typed_views import ensure_parallelism
-
-    lead = lead or []
-    t = ensure_parallelism(df).select(
-        *lead, F.split(F.col(text_col), " ").alias("_t")
-    ).filter(F.size("_t") >= 3)
-    return t.select(
-        *lead,
-        F.explode(F.sequence(F.lit(1), F.size("_t") - 2)).alias("_i"),
-        "_t",
-    ).select(
-        *lead,
-        F.element_at("_t", F.col("_i")).alias("w1"),
-        F.element_at("_t", F.col("_i") + 1).alias("w2"),
-        F.element_at("_t", F.col("_i") + 2).alias("w3"),
-    )
-
-
-def _bigram_pairs(
-    df: DataFrame, text_col: str, lead: list | None = None
-) -> DataFrame:
-    """Adjacent-token pairs ``(w1, w2)`` per row, optionally keeping
-    lead columns; <2-token rows yield nothing (and dodge Spark's
-    DESCENDING ``sequence(1, 0)``)."""
-    from .typed_views import ensure_parallelism
-
-    lead = lead or []
-    t = ensure_parallelism(df).select(
-        *lead, F.split(F.col(text_col), " ").alias("_t")
-    ).filter(F.size("_t") >= 2)
-    return t.select(
-        *lead,
-        F.explode(F.sequence(F.lit(1), F.size("_t") - 1)).alias("_i"),
-        "_t",
-    ).select(
-        *lead,
-        F.element_at("_t", F.col("_i")).alias("w1"),
-        F.element_at("_t", F.col("_i") + 1).alias("w2"),
+    return _lm_score(
+        docs, [model], text_col, id_col, "n_trigrams", "bits_per_trigram_kn"
     )
 
 
@@ -1437,45 +1426,13 @@ def bigram_lm_fit(
     k_smooth: float = 0.5,
     text_col: str = "text",
 ):
-    """Train the add-k bigram LM ONCE and freeze it: returns a
-    ``(c2, c1, v, k)`` model tuple whose count tables are eagerly
-    materialized (localCheckpoint) — vocab-bounded state a deployed
-    pipeline fits offline and reuses across batches/micro-batches
-    instead of re-counting the train split per consumer."""
-    if k_smooth <= 0:
-        raise ValueError("k_smooth must be > 0")
-
-    def _counts():
-        c2 = (
-            _bigram_pairs(train, text_col)
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("_c2"))
-            .localCheckpoint(eager=True)
-        )
-        c1 = (
-            c2.groupBy("w1")
-            .agg(F.sum("_c2").alias("_c1"))
-            .localCheckpoint(eager=True)
-        )
-        return c2, c1
-
-    def _vocab():
-        # vocab size: one metadata-scale action (the count a tokenizer
-        # ships with its model card)
-        return (
-            train.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
-            .select("w")
-            .distinct()
-            .count()
-        )
-
-    # the count chain and the vocab count are independent actions over
-    # the same train split — overlap them on driver threads (guide
-    # §2.6) instead of paying three sequential job barriers
-    with overlap(train.sparkSession, 2) as submit:
-        f_counts, f_v = submit(_counts), submit(_vocab)
-        (c2, c1), v = f_counts.result(), f_v.result()
-    return c2, c1, v, float(k_smooth)
+    """Train the add-k bigram LM ONCE and freeze it: returns an opaque
+    model whose count tables are eagerly materialized
+    (localCheckpoint) — vocab-bounded state a deployed pipeline fits
+    offline and reuses across batches/micro-batches through
+    :func:`bigram_lm_score` instead of re-counting the train split
+    per consumer."""
+    return _lm_fit([train], 2, "add_k", k_smooth, text_col, "bigram_lm_fit")[0]
 
 
 def bigram_lm_score(
@@ -1484,35 +1441,10 @@ def bigram_lm_score(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Score documents under a frozen :func:`bigram_lm_fit` model:
-    two broadcast joins on the bigram stream + one uniform doc-key
-    aggregate. Returns ``(id, n_bigrams, bits_per_bigram)``."""
-    c2, c1, v, kd = model
-    scored = (
-        _bigram_pairs(docs, text_col, [F.col(id_col)])
-        .join(F.broadcast(c2), ["w1", "w2"], "left")
-        .join(F.broadcast(c1), "w1", "left")
-        .select(
-            id_col,
-            (
-                (F.coalesce(F.col("_c2"), F.lit(0)) + F.lit(kd))
-                / (F.coalesce(F.col("_c1"), F.lit(0)) + F.lit(kd * v))
-            ).alias("_p"),
-        )
-        # half-up micro-units on the POSITIVE nll: floor(x*1e6 + 0.5)
-        # equals SQL round() for x >= 0 (the _sub_d2 rule)
-        .select(
-            id_col,
-            F.floor(-F.log2("_p") * F.lit(1e6) + F.lit(0.5))
-            .cast("long")
-            .alias("_nll_u6"),
-        )
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.round(
-            F.sum("_nll_u6") / F.lit(1e6) / F.count(F.lit(1)), 4
-        ).alias("bits_per_bigram"),
+    """Score documents under a frozen :func:`bigram_lm_fit` model.
+    Returns ``(id, n_bigrams, bits_per_bigram)``."""
+    return _lm_score(
+        docs, [model], text_col, id_col, "n_bigrams", "bits_per_bigram"
     )
 
 
@@ -1533,51 +1465,17 @@ def moore_lewis_bits(
 
     so documents the TARGET model finds easier than the RAW model
     score positive and get selected. Both models are the frozen add-k
-    bigram LM of :func:`bigram_lm_fit` (same smoothing, same
-    vocab-bounded broadcast tables), scored off ONE shared bigram
-    stream — four broadcast joins, one uniform doc-key aggregate;
-    the corpus never shuffles before it.
-
-    Exactness: each bigram's −log2 p rounds half-up to integer
-    micro-units under EACH model first, and the score is the exact
-    int64 sum of differences — summation-order-free, hash-stable.
-    Returns ``(id, n_bigrams, ml_u6, ml_bits_per_bigram)``; <2-token
-    docs carry no evidence and are excluded."""
-    # the target and raw fits are fully independent jobs — overlap
-    # them on driver threads (guide §2.6; each fit internally overlaps
-    # its own counts/vocab actions too)
-    with overlap(docs.sparkSession, 2) as submit:
-        f_t = submit(bigram_lm_fit, target, k_smooth, text_col)
-        f_r = submit(bigram_lm_fit, raw, k_smooth, text_col)
-        tc2, tc1, tv, kd = f_t.result()
-        rc2, rc1, rv, _ = f_r.result()
-    tc2 = tc2.withColumnRenamed("_c2", "_tc2")
-    tc1 = tc1.withColumnRenamed("_c1", "_tc1")
-    rc2 = rc2.withColumnRenamed("_c2", "_rc2")
-    rc1 = rc1.withColumnRenamed("_c1", "_rc1")
-    pt = (F.coalesce(F.col("_tc2"), F.lit(0)) + F.lit(kd)) / (
-        F.coalesce(F.col("_tc1"), F.lit(0)) + F.lit(kd * tv)
+    bigram LM of :func:`bigram_lm_fit`, fitted in one driver DAG and
+    scored off ONE shared bigram stream. The score is the exact int64
+    sum of per-bigram micro-unit differences — summation-order-free,
+    hash-stable. Returns ``(id, n_bigrams, ml_u6,
+    ml_bits_per_bigram)``."""
+    models = _lm_fit(
+        [raw, target], 2, "add_k", k_smooth, text_col, "moore_lewis_bits"
     )
-    pr = (F.coalesce(F.col("_rc2"), F.lit(0)) + F.lit(kd)) / (
-        F.coalesce(F.col("_rc1"), F.lit(0)) + F.lit(kd * rv)
-    )
-    u6 = lambda p: F.floor(  # noqa: E731 — the bigram_lm_score rule
-        -F.log2(p) * F.lit(1e6) + F.lit(0.5)
-    ).cast("long")
-    scored = (
-        _bigram_pairs(docs, text_col, [F.col(id_col)])
-        .join(F.broadcast(tc2), ["w1", "w2"], "left")
-        .join(F.broadcast(tc1), "w1", "left")
-        .join(F.broadcast(rc2), ["w1", "w2"], "left")
-        .join(F.broadcast(rc1), "w1", "left")
-        .select(id_col, (u6(pr) - u6(pt)).alias("_ml_u6"))
-    )
-    return scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.sum("_ml_u6").alias("ml_u6"),
-        F.round(
-            F.sum("_ml_u6") / F.lit(1e6) / F.count(F.lit(1)), 4
-        ).alias("ml_bits_per_bigram"),
+    return _lm_score(
+        docs, models, text_col, id_col, "n_bigrams", "ml_bits_per_bigram",
+        sum_col="ml_u6",
     )
 
 

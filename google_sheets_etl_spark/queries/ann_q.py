@@ -987,11 +987,14 @@ def pq_recall_at_k(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     q_ = emb.filter(F.col("vec_id") < 10)
     c = emb.filter(F.col("vec_id") >= 10)
+    seeded = similarity._pq_codebooks(c, 8, 128, "vec_id", "embedding", 42)
     # one frame: the corpus encodes once under both codebook sets,
-    # and adc_trained and rerank_trained share one ADC scoring
+    # and adc_trained and rerank_trained share one ADC scoring; the
+    # trained set is pq_train_codebooks(c, n_iter=2) refined from the
+    # seeded set already held
     codebooks = {
-        "seeded": similarity._pq_codebooks(c, 8, 128, "vec_id", "embedding", 42),
-        "trained": similarity.pq_train_codebooks(c, n_iter=2),
+        "seeded": seeded,
+        "trained": similarity._pq_refine(c, seeded, "embedding", 2),
     }
     variants = {
         "adc_seeded": ("seeded", None, False),
